@@ -1,28 +1,36 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
+"""Benchmark harness: headline queries plus the flat transcripts→triples
+pipeline at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], all in one
+Spark session. The last stdout line is ONE JSON object:
 
-    {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-     "pipeline": {"turns": N, "turns_per_sec": N},
-     "scaling": {"n_cores": .., "throughput_n": .., "4n_cores": ..,
-                 "throughput_4n": .., "efficiency": ..}}
+    {"metric": "bench_total", "unit": "sec", "sf": ..., "value": N,
+     "queries": {<query>: sec, ..., "pipeline_triples": sec},
+     "pipeline": {"turns": N, "turns_per_sec": N}}
 
-The scaling block is the sandbox proxy for the north rule's N→4N executor
-criterion, measured as EXECUTOR REPLICAS of constant width: one local[W]
-process over the full input (N = W cores) vs four concurrent local[W]
-processes over disjoint conv-hash shards of the same input (4N cores),
-barrier-started, fresh JVM each; efficiency = (throughput_4N /
-throughput_N) / 4. Constant per-process width keeps the JVM/Python
-sidecar spill identical per executor in both configs (the in-JVM
-local[N]→local[4N] variant measures wider EXECUTORS, a different axis —
-see BASELINE.md round-3 forensics). Disable with SPARK_GRAFT_SCALING=0.
+``value`` is the sum of ``queries``. Each entry is timed to the noop
+sink after a table and Python-worker warmup; ``pipeline_triples`` times
+``streaming.stream.triples_micro_batch`` (no catalog: extract → exact
+link → canonicalize → emit) over a cached synthetic input.
+
+Usage:
+    python bench.py [--queries a,b,pipeline_triples] [--reps N]
+                    [--plans-dir DIR] [--scale N]
+
+``--reps N`` reports each entry's minimum over N runs. ``--plans-dir``
+writes each entry's ``explain("formatted")`` to ``DIR/<name>.txt``.
+``--scale N`` unions N id-shifted copies of the SF tables into a cached
+directory first, approximating a larger SF for scale-sensitivity checks.
+Layer-by-layer measurements of the shipped pipeline, the stream and the
+queries live in ``perfbench/``.
 """
 
 from __future__ import annotations
 
+import argparse
+import hashlib
 import json
 import os
-import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -52,6 +60,23 @@ BENCH_QUERIES = [
     # semi-structured join → ORDER/LIMIT (~1s at sf0.1)
     "sparql_subquery",
 ]
+PIPELINE = "pipeline_triples"
+
+# (table, id column shifted per copy by --scale; None = copied as is)
+SCALE_TABLES = (
+    ("documents", "doc_id"),
+    ("embeddings", "vec_id"),
+    ("events", "event_id"),
+    ("lineitem", "l_orderkey"),
+    ("orders", "o_orderkey"),
+    ("customer", None),
+    ("supplier", None),
+    ("part", None),
+    ("nation", None),
+    ("region", None),
+)
+WARM_TABLES = ("region", "nation", "customer", "orders", "lineitem",
+               "documents", "embeddings", "events")
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -63,12 +88,8 @@ def _sf_from_dir(sf_dir: str) -> float:
 
 
 def _pipeline_sizes(sf: float) -> tuple[int, int]:
-    # sized so the Python+shuffle work dominates fixed job overhead while
-    # the whole bench (queries + pipeline + scaling rounds) stays within
-    # the per-round budget: ~3k / ~30k / ~1.24M turns. The 520k job used
-    # through round 3 spent ~half its 32-core wall on the ~5s fixed
-    # per-job cost and read as misleadingly low turns/sec (the 2-core
-    # replica study measures ~27k turns/s PER CORE once F amortizes)
+    # (n_convs, avg_turns): ~3k / ~30k / ~1.24M turns, sized so the
+    # Python+shuffle work dominates the fixed per-job cost
     if sf <= 0.001:
         return 200, 12
     if sf <= 0.01:
@@ -76,924 +97,170 @@ def _pipeline_sizes(sf: float) -> tuple[int, int]:
     return 60000, 17
 
 
-def _steal_jiffies() -> int:
-    """Cumulative hypervisor-steal jiffies (USER_HZ=100) from /proc/stat;
-    0 if unreadable."""
-    try:
-        with open("/proc/stat") as fh:
-            # fields after 'cpu': user nice system idle iowait irq
-            # softirq STEAL guest guest_nice → steal is split()[8]
-            return int(fh.readline().split()[8])
-    except Exception:
-        return 0
+def bench_result(sf: float, timings: dict[str, float],
+                 turns: int | None = None) -> dict:
+    """The final JSON line's dict: ``pipeline`` appears iff the
+    ``pipeline_triples`` entry ran (``turns`` is its input size)."""
+    result = {"metric": "bench_total", "unit": "sec", "sf": sf,
+              "value": round(sum(timings.values()), 3),
+              "queries": dict(timings)}
+    if PIPELINE in timings:
+        result["pipeline"] = {
+            "turns": turns,
+            "turns_per_sec": round(turns / timings[PIPELINE], 1),
+        }
+    return result
 
 
-def _salvage_json(stdout) -> dict | None:
-    """Best COMPLETED rep from a killed subprocess's buffered stdout
-    (pipeline jobs emit one JSON line per finished rep)."""
-    if isinstance(stdout, bytes):
-        stdout = stdout.decode(errors="replace")
-    for line in reversed((stdout or "").strip().splitlines()):
-        try:
-            return json.loads(line)
-        except ValueError:
-            continue
-    return None
+def scale_cache_dir(sf_dir: str, scale: int) -> str:
+    """Where ``--scale`` caches its tables: keyed on the scale AND the
+    source directory, so another SF dir never reuses stale copies."""
+    digest = hashlib.sha1(os.path.realpath(sf_dir).encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(),
+                        f"sg_scaled_{scale}x_{digest}")
 
 
-def resolve_scaling_artifact(
-    scaling_result: dict, cache_entries: list, config_key: dict,
-    now: float | None = None,
-) -> tuple[dict, list]:
-    """Round-end artifact policy (pure function, pytest-covered):
-
-    * a CLEAN pair ships as measured (source=live) and is APPENDED to the
-      cache; if a cached clean pair of the same config is stronger, it is
-      surfaced beside the live one under ``best_clean`` (never replacing
-      the in-window measurement).
-    * a DIRTY/skipped result is replaced by the BEST cached clean pair of
-      the same config (source=cached_clean, dirty live pair embedded
-      under ``live_dirty``) — best, not newest, because hypervisor noise
-      is strictly additive, making the fastest gate-passing measurement
-      of the same plan the least contaminated (the pair-level min
-      statistic); with no cached match it ships as-is (source=live).
-    * the full ``clean_history`` of the config ships either way, so the
-      selection is auditable.
-
-    Returns (shipped_scaling_block, updated_cache_entries).
-    """
-    now = time.time() if now is None else now
-    cache_entries = list(cache_entries)
-
-    def matches():
-        return [e for e in cache_entries
-                if e.get("config") == config_key
-                and e.get("scaling", {}).get("clean_pair")]
-
-    def best_of(entries):
-        return max(entries, key=lambda e: (
-            e["scaling"].get("efficiency", 0), e.get("ts", 0)))
-
-    if scaling_result.get("clean_pair"):
-        scaling_result = dict(scaling_result)
-        scaling_result["source"] = "live"
-        cache_entries.append({
-            "ts": now,
-            "ts_utc": time.strftime(
-                "%Y-%m-%dT%H:%M:%SZ", time.gmtime(now)),
-            "config": config_key,
-            "scaling": {k: v for k, v in scaling_result.items()
-                        if k != "source"},
-        })
-    else:
-        m = matches()
-        if m:
-            pick_c = best_of(m)
-            live_dirty = scaling_result
-            scaling_result = dict(pick_c["scaling"])
-            scaling_result["source"] = "cached_clean"
-            scaling_result["cached_at"] = pick_c.get("ts_utc")
-            scaling_result["live_dirty"] = live_dirty
-        else:
-            scaling_result = dict(scaling_result)
-            scaling_result["source"] = "live"
-
-    m = matches()
-    if m:
-        scaling_result["clean_history"] = [
-            {"ts_utc": e.get("ts_utc"),
-             "efficiency": e.get("scaling", {}).get("efficiency")}
-            for e in m
-        ]
-        best_e = best_of(m)
-        if (scaling_result.get("source") == "live"
-                and scaling_result.get("clean_pair")
-                and (best_e["scaling"].get("efficiency") or 0)
-                > (scaling_result.get("efficiency") or 0)):
-            scaling_result["best_clean"] = {
-                "ts_utc": best_e.get("ts_utc"),
-                "efficiency": best_e["scaling"].get("efficiency"),
-                "throughput_n": best_e["scaling"].get("throughput_n"),
-                "throughput_4n": best_e["scaling"].get("throughput_4n"),
-                "runs_n": best_e["scaling"].get("runs_n"),
-                "runs_4n": best_e["scaling"].get("runs_4n"),
-            }
-    return scaling_result, cache_entries
-
-
-def compact_result(result: dict, full_path: str = "BENCH_FULL.json") -> dict:
-    """Shrink the final ``bench_total`` dict to what the round driver can
-    actually read. The driver keeps only the LAST ~2,000 chars of stdout
-    and parses the last JSON line out of that tail — round 4's line
-    embedded the full scaling ledgers (``live_dirty`` per-replica runs,
-    ``clean_history``, ``best_clean``) and blew past the tail, so the
-    driver recorded ``parsed: null``: zero machine-readable perf numbers
-    for the round. The compact line keeps totals, per-query seconds, and
-    a scaling summary (efficiency / clean_pair / source / gates) and
-    points at ``full_path`` where main() writes the COMPLETE result, so
-    the audit trail survives without riding in the stdout tail.
-    Pure function; ``tests/test_bench_policy.py`` pins the size cap
-    against a worst-case payload."""
-    out = {k: v for k, v in result.items() if k != "scaling"}
-    sc = result.get("scaling")
-    if sc is not None:
-        keep = (
-            "n_cores", "throughput_n", "4n_cores", "throughput_4n",
-            "efficiency", "turns", "clean_pair", "gates_failed",
-            "suspect_regression", "source", "cached_at", "skipped",
-        )
-        csc = {k: sc[k] for k in keep if k in sc}
-        ld = sc.get("live_dirty")
-        if ld is not None:
-            csc["live_dirty"] = {
-                k: ld[k]
-                for k in ("efficiency", "clean_pair", "gates_failed",
-                          "skipped")
-                if k in ld
-            }
-        if "clean_history" in sc:
-            csc["n_clean_history"] = len(sc["clean_history"])
-        bc = sc.get("best_clean")
-        if bc is not None:
-            csc["best_clean_efficiency"] = bc.get("efficiency")
-        csc["detail"] = os.path.basename(full_path)
-        out["scaling"] = csc
-    return out
-
-
-N_SHARDS = 4  # executor-replica count of the scaling study's config B
-
-
-def synth_input_parquet(out_dir: str, n_convs: int, avg_turns: int,
-                        cores: int = 16) -> None:
-    """Materialize the scaling-study input ONCE as parquet, PARTITIONED
-    by conv-hash shard. Both configs read the same files — config A all
-    shards, each config-B replica exactly one `shard=i/` directory via
-    partition pruning (without it every replica decoded the FULL input
-    just to filter 3/4 away, and four concurrent full-input reads blew
-    through the barrier lead). The saved per-sample wall buys retries
-    and a bigger job; shards stay disjoint and exhaustive by
-    construction."""
+def build_scaled(spark, sf_dir: str, scale: int) -> str:
+    """Union ``scale`` id-shifted copies of each SF table into the cache
+    directory; ``_DONE`` is written only after every table is copied, and
+    a directory without it is rebuilt from scratch."""
     import shutil
 
     from pyspark.sql import functions as F
 
-    from nametag3_spark.data.synth import synth_transcripts
-    from nametag3_spark.session import get_spark
-
+    out_dir = scale_cache_dir(sf_dir, scale)
+    done = os.path.join(out_dir, "_DONE")
+    if os.path.exists(done):
+        return out_dir
     shutil.rmtree(out_dir, ignore_errors=True)
-    spark = get_spark(
-        app_name="bench_synth_input", master=f"local[{cores}]",
-        shuffle_partitions=cores,
-    )
-    (
-        synth_transcripts(
-            spark, n_convs=n_convs, avg_turns=avg_turns, partitions=32
-        )
-        .withColumn("shard", F.pmod(F.xxhash64("conv_id"), F.lit(N_SHARDS)))
-        .write.partitionBy("shard")
-        .parquet(out_dir)
-    )
+    os.makedirs(out_dir)
+    for table, id_col in SCALE_TABLES:
+        df = out = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        if id_col is not None:
+            n = df.agg(F.max(id_col)).first()[0] + 1
+            for i in range(1, scale):
+                out = out.unionByName(
+                    df.withColumn(id_col, F.col(id_col) + i * n))
+        # coalesce(1): the SF tables are ONE file with few row groups — a
+        # multi-file copy would overstate scan parallelism and hide
+        # single-task-scan bottlenecks
+        out.coalesce(1).write.mode("overwrite").parquet(
+            f"{out_dir}/{table}.parquet")
+    open(done, "w").close()
+    return out_dir
 
 
-def run_pipeline_job(
-    master_cores: int, n_convs: int, avg_turns: int, repeats: int = 1,
-    input_dir: str | None = None, shard: str | None = None,
-    start_at: float | None = None, barrier_dir: str | None = None,
-    replica_id: int = 0,
-) -> dict:
-    """Flagship pipeline dataflow (no snapshot writes — pure throughput),
-    returns {turns, elapsed_sec, steal_sec, reps} with elapsed = MIN
-    over reps. Min-of-N matters on this sandbox: the hypervisor throttles
-    sustained wide usage in bursts — sometimes visible as steal (367
-    stolen CPU-seconds measured during ONE 8-core run, 6 during the
-    2-core run next to it), sometimes not (a 71s run with 1.4s steal
-    right after a 13s run with 16s steal). Elapsed time is the ground
-    truth of delivered compute, so the fastest rep is the capability
-    measurement; each rep's /proc/stat steal delta ships alongside as
-    diagnostic evidence. Exactly ``repeats`` reps run — no adaptive
-    extras: under a storm, longer subprocesses just get killed by the
-    caller's wall budget and the whole sample is lost."""
-    from pyspark.sql import functions as F
+def _write_plan(spark, df, path: str) -> None:
+    with open(path, "w") as fh:
+        fh.write(df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode
+            .fromString("formatted")))
 
-    from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
-    from nametag3_spark.operators.canonicalize import canonicalize_mentions
-    from nametag3_spark.operators.infer import extract_mentions_flat
-    from nametag3_spark.operators.linking import link_mentions
-    from nametag3_spark.operators.triples import emit_triples
-    from nametag3_spark.session import get_spark
 
-    # replicate a real W-core executor container: without
-    # ActiveProcessorCount the JVM sizes GC/JIT/netty pools for the
-    # 32-core HOST in every replica, and four replicas' oversized pools
-    # thrash each other (measured 1.9x mutual slowdown vs isolation at
-    # identical task parallelism); OMP=1 keeps numpy inside the Python
-    # workers from fanning out the same way
-    os.environ.setdefault("OMP_NUM_THREADS", "1")
-    os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
-    spark = get_spark(
-        app_name=f"bench_pipeline_{master_cores}",
-        master=f"local[{master_cores}]",
-        shuffle_partitions=max(master_cores, 8),
-        extra_conf={
-            "spark.driver.extraJavaOptions":
-                f"-XX:ActiveProcessorCount={master_cores}",
-            # per-replica scratch on tmpfs: concurrent replicas otherwise
-            # serialize on the single shared virtual disk for shuffle
-            # files — a real cluster gives every executor its own local
-            # disk, so the shared-spindle stall is a proxy artifact
-            "spark.local.dir": f"/dev/shm/sg_scratch_{os.getpid()}",
-        },
-    )
-    if input_dir:
-        # pre-materialized parquet (synth_input_parquet): identical bytes
-        # at every width; coalesce (no shuffle) to a per-width partition
-        # count so task granularity matches the in-process synth path
-        transcripts = spark.read.parquet(input_dir)
-        if shard:
-            # "i:n" → this executor-replica processes shard i of n. When
-            # the input is partitioned by a `shard` column
-            # (synth_input_parquet), the filter is a partition-column
-            # predicate — directory pruning reads ONLY this replica's
-            # quarter; otherwise fall back to the conv-hash filter over
-            # a full scan (disjoint and exhaustive either way).
-            i, nsh = map(int, shard.split(":"))
-            if "shard" in transcripts.columns:
-                transcripts = transcripts.where(F.col("shard") == i)
-            else:
-                transcripts = transcripts.where(
-                    F.pmod(F.xxhash64("conv_id"), F.lit(nsh)) == i
-                )
-        if "shard" in transcripts.columns:
-            transcripts = transcripts.drop("shard")
-        transcripts = transcripts.coalesce(max(master_cores * 4, 16)).cache()
-    else:
-        transcripts = synth_transcripts(
-            spark, n_convs=n_convs, avg_turns=avg_turns,
-            partitions=max(master_cores * 2, 8),
-        ).cache()
-    n_turns = transcripts.count()  # materialize input outside the timing
-
-    # warmup on a small slice: spawns the Python worker pool and JITs the
-    # codegen paths so the timed run measures steady-state throughput
-    # (what a long-running cluster job sees), not worker cold-start.
-    # The repartition matters: limit() collapses to ONE partition, which
-    # would warm a single worker — spread the slice so EVERY worker slot
-    # pays its spawn+import cost here, not inside the timed run.
-    warm = extract_mentions_flat(
-        transcripts.limit(4000).repartition(master_cores * 2)
-    ).persist()
-    emit_triples(
-        canonicalize_mentions(link_mentions(warm, gazetteer_df(spark), fuzzy=False))
-    ).write.format("noop").mode("overwrite").save()
-    warm.unpersist()
-
-    gaz = gazetteer_df(spark)
-    barrier_late = 0.0
-    if barrier_dir is not None:
-        # READINESS barrier (round-4 fix): a fixed start_at lead guessed
-        # at startup cost and lost the round-3 sample to one replica 84.5s
-        # late under storm. Now each replica signals readiness AFTER its
-        # warmup, and the parent releases the epoch only once every
-        # replica is ready (or its own deadline forces the issue), so the
-        # start alignment no longer depends on predicting storm-inflated
-        # startup. barrier_late stays the diagnostic for the forced case.
-        open(os.path.join(barrier_dir, f"ready_{replica_id}"), "w").close()
-        go_path = os.path.join(barrier_dir, "go")
-        poll_deadline = time.time() + 300.0
-        start_at = None
-        while time.time() < poll_deadline:
-            if os.path.exists(go_path):
-                try:
-                    start_at = float(open(go_path).read().strip())
-                    break
-                except ValueError:  # mid-write; atomic rename makes this rare
-                    pass
-            time.sleep(0.2)
-        if start_at is None:
-            start_at = time.time()  # parent gone: run unaligned, flagged late
-    if start_at is not None:
-        # every replica begins its timed rep at the same instant, so
-        # concurrent replicas genuinely contend for the whole window
-        # (staggered starts would overlap only partially and understate
-        # contention). A replica that starts past the epoch reports how
-        # late it began — misaligned windows mean the sample measured
-        # startup contention, not steady-state scaling
-        barrier_late = max(0.0, time.time() - start_at)
-        time.sleep(max(0.0, start_at - time.time()))
-    samples: list[tuple[float, float]] = []  # (elapsed, steal_sec)
-
-    def result() -> dict:
-        elapsed, steal_sec = min(samples)
-        return {
-            "turns": n_turns,
-            "elapsed_sec": elapsed,
-            "steal_sec": steal_sec,
-            "barrier_late_sec": round(barrier_late, 1),
-            "reps": [
-                {"elapsed_sec": round(e, 2), "steal_sec": round(st, 1)}
-                for e, st in samples
-            ],
-        }
-
-    for attempt in range(max(repeats, 1)):
-        s0 = _steal_jiffies()
-        start = time.perf_counter()
-        # persist ONLY the mentions (the expensive Python scoring output;
-        # every downstream branch re-reads this cache). canonical is NOT
-        # persisted: emit_triples scans it just 2× since the type+anchor
-        # fusion, and each scan is only a broadcast join over the mention
-        # cache — round-3 measurement: caching canonical (a second full
-        # materialized copy of every mention row) cost ~3s at 4 cores,
-        # more than the join recompute it saved
-        mentions = extract_mentions_flat(transcripts).persist()
-        linked = link_mentions(mentions, gaz, fuzzy=False)
-        canonical = canonicalize_mentions(linked)
-        triples = emit_triples(canonical)
-        triples.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - start
-        steal_sec = (_steal_jiffies() - s0) / 100.0
-        samples.append((elapsed, steal_sec))
-        mentions.unpersist()
-        # PROGRESSIVE emission (round-4): one JSON line per completed rep
-        # so a caller whose wall budget kills this subprocess mid-rep can
-        # salvage the best COMPLETED rep from the buffered stdout instead
-        # of losing the whole sample (a timed-out A with rep 1 done cost
-        # the scaling study its live pair this round)
-        print(json.dumps(result()), flush=True)
-    return result()
+def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Time the headline queries and the triples pipeline; "
+                    "print one JSON line.")
+    ap.add_argument("--queries", default=",".join(BENCH_QUERIES + [PIPELINE]),
+                    help="comma-separated entries to time, in order")
+    ap.add_argument("--reps", type=int, default=1,
+                    help="runs per entry; the minimum is reported")
+    ap.add_argument("--plans-dir", default=None,
+                    help="write each entry's formatted plan here")
+    ap.add_argument("--scale", type=int, default=1,
+                    help="union N id-shifted copies of the SF tables first")
+    return ap.parse_args(argv)
 
 
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--pipeline-job":
-        # subprocess mode for the scaling study (fresh JVM per level);
-        # arg 8 is the barrier: a path = readiness-barrier dir (current),
-        # a float = legacy fixed start_at epoch
-        cores, n_convs, avg_turns = map(int, sys.argv[2:5])
-        repeats = int(sys.argv[5]) if len(sys.argv) > 5 else 1
-        input_dir = sys.argv[6] if len(sys.argv) > 6 else None
-        shard = (sys.argv[7] if len(sys.argv) > 7 and sys.argv[7] != "-"
-                 else None)
-        start_at, barrier_dir = None, None
-        if len(sys.argv) > 8:
-            if sys.argv[8].startswith("/"):
-                barrier_dir = sys.argv[8]
-            else:
-                start_at = float(sys.argv[8])
-        replica_id = int(sys.argv[9]) if len(sys.argv) > 9 else 0
-        print(json.dumps(
-            run_pipeline_job(cores, n_convs, avg_turns, repeats, input_dir,
-                             shard, start_at, barrier_dir, replica_id)
-        ))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--synth-input":
-        out_dir, n_convs, avg_turns = sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
-        synth_input_parquet(out_dir, n_convs, avg_turns)
-        return
+    args = _parse_args()
+    names = [n.strip() for n in args.queries.split(",") if n.strip()]
 
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "540"))
-    wall_start = time.perf_counter()
-    sf = _sf_from_dir(SF_DIR)
-    timings: dict[str, float] = {}
-
-    # reap tmpfs scratch left by subprocesses a previous bench killed
-    # mid-run (Spark removes local dirs only on clean shutdown)
-    import glob
-    import shutil
-    for stale in glob.glob("/dev/shm/sg_scratch_*"):
-        shutil.rmtree(stale, ignore_errors=True)
-
-    # ---- scaling study FIRST, on a fresh host ----------------------------
-    # Round-3 lesson (upgrading round 2's "run before the pipeline"): the
-    # hypervisor throttles CREDIT-STYLE — sustained load degrades later
-    # phases, so whichever heavy phase runs last gets crushed (observed:
-    # the query phase ran clean at 32 cores, then the scaling reps right
-    # after it measured 5-7× their clean-window elapsed, four full-bench
-    # attempts in a row). The scaling pair is the one BASELINE.json target
-    # the machine artifacts can fail, so it runs FIRST — before the
-    # 32-core query session burns the credit budget — keeping a reserve
-    # for the query phase and the pipeline block; it RETRIES a width
-    # while its best rep is steal-polluted or implausible.
-    # SPARK_GRAFT_SCALING_ONLY=1: run just the scaling study (full budget
-    # to it, JSON with only the scaling block) — the cheap path for
-    # re-attempting a clean pair in a calm window to seed the cache
-    SCALING_ONLY = os.environ.get("SPARK_GRAFT_SCALING_ONLY") == "1"
-    # reserves sized from measured clean-run actuals (~60s each incl.
-    # startup/warmups) + margin — oversizing them starved the scaling
-    # study's min-of-2 stability pass of its budget
-    PIPELINE_RESERVE = 0.0 if SCALING_ONLY else 90.0
-    QUERIES_RESERVE = 0.0 if SCALING_ONLY else 80.0
-    # a rep is clean when its EFFECTIVE steal — host-wide steal scaled by
-    # the share of host CPUs the job occupies (cores/32) — is under 5s:
-    # /proc/stat steal sums over all host CPUs, so raw steal systematically
-    # overstates what a narrow job's threads actually lost
-    CLEAN_EFF_STEAL_SEC = 5.0
-    HOST_CPUS = os.cpu_count() or 32
-    scaling_result: dict | None = None
-    clean_pair = False
-    if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        # N→4N EXECUTOR proxy, round-3 final design: the two parallelism
-        # levels are EXECUTOR REPLICAS of identical width — config A is
-        # ONE local[W] process over the full input (N = W cores); config
-        # B is FOUR concurrent local[W] processes, each over a disjoint
-        # conv-hash quarter of the same input (4N = 4W cores), released
-        # on a shared time barrier so they contend for the whole window.
-        #
-        # WHY replicas instead of one JVM at local[N] vs local[4N]
-        # (round-3 forensics, BASELINE.md): local[N] bounds concurrent
-        # TASKS, not CPUs — JVM GC/shuffle/Arrow threads and the separate
-        # Python worker processes spill onto unmetered host cores, and
-        # that spare silicon subsidizes the narrow run disproportionately
-        # (measured: pure 4-process Python scales at ~1.0 on this box
-        # while the in-JVM 1→4 pair tops out at ~0.77 with a per-task
-        # inflation term PROPORTIONAL to work — an artifact of the proxy,
-        # not the plan; pinning local[4] to exactly 4 CPUs drops it to
-        # 0.57 because the sidecars then fight the task threads, which is
-        # a WIDER-executor question, not the north rule's). Replicas hold
-        # per-process width constant, so the sidecar spill is identical
-        # per executor in both configs and cancels — which is exactly how
-        # a real cluster scales N→4N executors: more executors, same
-        # executor. Honest caveat, also in BASELINE.md: each replica is
-        # its own driver, so shuffles stay replica-local; cross-executor
-        # network traffic is not modeled (no local proxy models it).
-        W = int(os.environ.get("SPARK_GRAFT_SCALING_WIDTH", "2"))
-        N_REPL = N_SHARDS  # one replica per pre-partitioned input shard
-        sc_convs = int(os.environ.get("SPARK_GRAFT_SCALING_CONVS", "270000"))
-        sc_turns = int(os.environ.get("SPARK_GRAFT_SCALING_TURNS", "17"))
-        # defaults ≈ 5.6M turns (round-5 bump from 3.73M): each replica's
-        # quarter must dwarf the fixed per-process cost F≈4-5s (Catalyst
-        # planning, CC edge pull, commit latency) or F masquerades as
-        # anti-scaling. At 3.73M the fixed-cost model (w≈13s scalable
-        # work per quarter at local[2], F≈4.5s) caps ZERO-NOISE
-        # efficiency near 0.81 — the ≥0.8 target was reachable only in
-        # perfectly calm windows (round-4 clean-pair distribution:
-        # 0.61-0.834, median 0.72). At 1.5× work (w≈19.5s) the model
-        # bound rises to ≈0.86, putting typical calm windows above 0.8.
-        # Budget consequence: one A+B round now fills most of the
-        # round-end scaling reserve, so in-window retries are rare and
-        # the clean-pair cache (banked via SPARK_GRAFT_SCALING_ONLY runs
-        # in calm windows) is the storm fallback; A drops to min-of-1
-        # automatically when the reserve is squeezed (reps gate below)
-        # and per-rep progressive emission salvages timed-out samples.
-        samples: dict[str, list[dict]] = {"A": [], "B": []}
-
-        # one-time input prep (shared parquet): removes the per-sample
-        # synth+cache cost from every sample and makes all configs read
-        # byte-identical input (shards partition it exhaustively)
-        input_dir: str | None = "/tmp/spark_graft_scaling_input"
-        try:
-            subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--synth-input",
-                 input_dir, str(sc_convs), str(sc_turns)],
-                capture_output=True, text=True, check=True,
-                timeout=max(min(180.0, budget / 3), 60),
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            )
-        except (subprocess.TimeoutExpired, subprocess.CalledProcessError) as exc:
-            print(f"[scaling] input prep failed ({type(exc).__name__}); "
-                  "replica study needs the shared parquet — skipping",
-                  file=sys.stderr)
-            input_dir = None
-
-        def scaling_left() -> float:
-            return (budget - (time.perf_counter() - wall_start)
-                    - PIPELINE_RESERVE - QUERIES_RESERVE)
-
-        def hard_left() -> float:
-            # absolute wall remaining (minus a safety margin for teardown
-            # + JSON emit) — NO subprocess may outlive this, floor or not:
-            # an overshooting sample starves the pipeline block AND risks
-            # the caller's outer timeout killing bench before it prints
-            return budget - (time.perf_counter() - wall_start) - 15.0
-
-        def best(cfg: str) -> dict | None:
-            return (min(samples[cfg], key=lambda j: j["elapsed_sec"])
-                    if samples[cfg] else None)
-
-        def eff_steal(cfg: str, rep: dict) -> float:
-            # host-wide steal scaled by the share of host CPUs the config
-            # occupies; for B the replicas overlap one window, so the max
-            # of their (host-wide) steal readings is the window's storm
-            cores = W if cfg == "A" else W * N_REPL
-            return rep.get("steal_sec", 0.0) * cores / HOST_CPUS
-
-        def needs_retry(cfg: str) -> bool:
-            b = best(cfg)
-            if b is None or eff_steal(cfg, b) >= CLEAN_EFF_STEAL_SEC:
-                return True
-            other = best("A" if cfg == "B" else "B")
-            if other is None:
-                return False
-            if cfg == "B":
-                # a replica that missed the start barrier measured
-                # startup contention, not steady-state scaling
-                if b.get("barrier_late_sec", 0.0) > 10.0:
-                    return True
-                # 4 replicas each doing a quarter can never legitimately
-                # be slower than one replica doing everything; and under
-                # 2× speedup contradicts the measured capability ratio
-                # (~3-3.5× with per-replica F) — the invisible-throttle
-                # signature, so spend retries on it
-                if b["elapsed_sec"] > other["elapsed_sec"]:
-                    return True
-                if b["elapsed_sec"] * 2.0 > other["elapsed_sec"]:
-                    return True
-            else:
-                # a storm-inflated A OVERSTATES efficiency while its
-                # effective steal stays small — beyond 4.2× the B wall is
-                # physically implausible (perfect scaling + F would be
-                # < 4×), so retry A
-                if b["elapsed_sec"] > 4.2 * other["elapsed_sec"]:
-                    return True
-            return False
-
-        salvage = _salvage_json
-
-        def run_a(left: float) -> dict | None:
-            # min-of-2 in the SAME subprocess when the budget affords it
-            # (synth/warmup amortized, ~1 extra rep of wall): config B
-            # replicas already take min-of-2 as the speculative-execution
-            # analog, and an asymmetric A would let invisible zero-steal
-            # slowdowns inflate the reported efficiency (round-3 ADVICE).
-            # Storm-squeezed retries drop back to 1 rep to save wall.
-            reps = 2 if left > 260 else 1
-            try:
-                out = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__),
-                     "--pipeline-job", str(W), str(sc_convs),
-                     str(sc_turns), str(reps), input_dir],
-                    capture_output=True, text=True, check=True,
-                    timeout=max(min(left, hard_left()), 30),
-                    cwd=os.path.dirname(os.path.abspath(__file__)),
-                )
-                job = json.loads(out.stdout.strip().splitlines()[-1])
-            except subprocess.TimeoutExpired as exc:
-                # rep 2 (or a storm-stretched rep 1) overran the wall —
-                # the per-rep progressive lines mean a completed rep is
-                # still a valid sample (round-4 salvage)
-                job = salvage(exc.stdout)
-                if job is None:
-                    print(f"[scaling] config A failed: TimeoutExpired, "
-                          f"no completed rep (left={left:.0f}s)",
-                          file=sys.stderr)
-                    return None
-                print("[scaling] config A timed out; salvaged "
-                      f"{len(job.get('reps', []))} completed rep(s)",
-                      file=sys.stderr)
-            except (subprocess.CalledProcessError,
-                    ValueError, IndexError, KeyError) as exc:
-                print(f"[scaling] config A failed: {type(exc).__name__} "
-                      f"(left={left:.0f}s)", file=sys.stderr)
-                return None
-            return {"turns": job["turns"],
-                    "elapsed_sec": job["elapsed_sec"],
-                    "steal_sec": job["steal_sec"],
-                    "reps": job.get("reps")}
-
-        def run_b(left: float) -> dict | None:
-            import shutil
-            import tempfile
-
-            deadline = time.time() + max(min(left, hard_left()), 30)
-            # READINESS barrier (round-4): replicas signal ready after
-            # their warmup; the epoch releases once ALL are ready, so the
-            # alignment no longer rides on predicting startup cost (the
-            # fixed 60s lead lost round 3's in-window sample to a replica
-            # 84.5s late under storm). The release is written atomically;
-            # a replica that still misses the epoch reports barrier_late.
-            bdir = tempfile.mkdtemp(prefix="sg_barrier_")
-            # TWO reps per replica, same subprocess (synth/cache/warmup
-            # amortized): each replica reports its MIN — the local analog
-            # of a cluster's speculative execution against the rotating
-            # invisible-noise straggler (measured: one random replica at
-            # ~40% slowdown with zero recorded steal while its peers run
-            # at isolation speed) — and the sample takes the MAX of the
-            # per-replica minima, the cluster-correct straggler statistic
-            procs = [
-                subprocess.Popen(
-                    [sys.executable, os.path.abspath(__file__),
-                     "--pipeline-job", str(W), str(sc_convs),
-                     str(sc_turns), "2", input_dir, f"{i}:{N_REPL}",
-                     bdir, str(i)],
-                    stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-                    text=True,
-                    cwd=os.path.dirname(os.path.abspath(__file__)),
-                )
-                for i in range(N_REPL)
-            ]
-            # release the epoch when every replica is ready, or when the
-            # wait budget forces it (stragglers then show barrier_late)
-            ready_deadline = min(time.time() + 300.0, deadline - 30.0)
-            while time.time() < ready_deadline:
-                n_ready = sum(
-                    os.path.exists(os.path.join(bdir, f"ready_{i}"))
-                    for i in range(N_REPL)
-                )
-                if n_ready == N_REPL:
-                    break
-                time.sleep(0.5)
-            tmp_go = os.path.join(bdir, "go.tmp")
-            with open(tmp_go, "w") as fh:
-                fh.write(str(time.time() + 1.0))
-            os.rename(tmp_go, os.path.join(bdir, "go"))
-            jobs = []
-            try:
-                outs: list[str] = []
-                timed_out = False
-                for p in procs:
-                    try:
-                        out, _ = p.communicate(
-                            timeout=max(deadline - time.time(), 1.0)
-                        )
-                    except subprocess.TimeoutExpired:
-                        timed_out = True
-                        p.kill()
-                        out, _ = p.communicate()
-                    outs.append(out)
-                # per-rep progressive lines: a replica killed mid-rep-2
-                # still contributes its completed rep-1 (round-4 salvage);
-                # the sample only fails if some replica finished NOTHING
-                for out in outs:
-                    job = salvage(out)
-                    if job is None:
-                        print("[scaling] config B failed: a replica "
-                              f"completed no rep (left={left:.0f}s)",
-                              file=sys.stderr)
-                        return None
-                    jobs.append(job)
-                if timed_out:
-                    print("[scaling] config B timed out; salvaged "
-                          "completed reps from all replicas",
-                          file=sys.stderr)
-            except (ValueError, IndexError, KeyError) as exc:
-                for p in procs:
-                    if p.poll() is None:
-                        p.kill()
-                        p.communicate()
-                print(f"[scaling] config B failed: {type(exc).__name__} "
-                      f"(left={left:.0f}s)", file=sys.stderr)
-                return None
-            finally:
-                shutil.rmtree(bdir, ignore_errors=True)
-            return {
-                "turns": sum(j["turns"] for j in jobs),
-                "elapsed_sec": max(j["elapsed_sec"] for j in jobs),
-                "steal_sec": max(j["steal_sec"] for j in jobs),
-                "barrier_late_sec": max(
-                    j.get("barrier_late_sec", 0.0) for j in jobs
-                ),
-                "replicas": [
-                    {"turns": j["turns"],
-                     "elapsed_sec": round(j["elapsed_sec"], 2),
-                     "steal_sec": round(j["steal_sec"], 1),
-                     "barrier_late_sec": j.get("barrier_late_sec", 0.0)}
-                    for j in jobs
-                ],
-            }
-
-        def take(cfg: str, left: float) -> None:
-            job = run_b(left) if cfg == "B" else run_a(left)
-            if job:
-                samples[cfg].append(job)
-
-        if input_dir:
-            # B first: it is both the storm canary and the cheaper wall
-            # (~100s vs ~130s); single-sample rounds bound the timeout
-            # exposure. Retries below, while the reserve holds.
-            for cfg in ("B", "A"):
-                take(cfg, max(scaling_left(), 240.0))
-            for _retry in range(4):
-                dirty = [c for c in ("B", "A") if needs_retry(c)]
-                if not dirty or scaling_left() < 100:
-                    break
-                cfg = dirty[_retry % len(dirty)]
-                print(f"[scaling] retry config {cfg}: best steal "
-                      f"{(best(cfg) or {}).get('steal_sec')}s, "
-                      f"{scaling_left():.0f}s left", file=sys.stderr)
-                take(cfg, scaling_left())
-            # stability pass: extra B samples while the pair is already
-            # clean and budget allows — the invisible straggler is often
-            # PER-PROCESS (one replica slow for its whole JVM lifetime,
-            # zero steal), so min-of-reps inside one subprocess cannot
-            # filter it; min over independent SAMPLES can. Noise is
-            # strictly additive on this host, so the fastest clean sample
-            # is the least-contaminated measurement of the plan.
-            while (scaling_left() > 120 and len(samples["B"]) < 4
-                    and not needs_retry("B") and not needs_retry("A")):
-                take("B", scaling_left())
-
-        if samples["A"] and samples["B"]:
-            pick = {c: best(c) for c in ("A", "B")}
-            tp_n = pick["A"]["turns"] / pick["A"]["elapsed_sec"]
-            tp_4n = pick["B"]["turns"] / pick["B"]["elapsed_sec"]
-            # gate breakdown instead of one opaque boolean: the 2×-speedup
-            # floor mirrors needs_retry (a B pick contradicting the
-            # measured capability is a throttled rep, not evidence about
-            # the plan) — but when it is the ONLY failed gate and steal/
-            # barrier are clean, that same signature is what a genuine
-            # plan regression would produce, so it ships distinctly
-            # flagged suspect_regression rather than folded into storm
-            # noise (round-3 ADVICE)
-            gates_failed = []
-            if eff_steal("A", pick["A"]) >= CLEAN_EFF_STEAL_SEC:
-                gates_failed.append("steal_A")
-            if eff_steal("B", pick["B"]) >= CLEAN_EFF_STEAL_SEC:
-                gates_failed.append("steal_B")
-            if pick["B"].get("barrier_late_sec", 0.0) > 10.0:
-                gates_failed.append("barrier_late")
-            if 2.0 * pick["B"]["elapsed_sec"] > pick["A"]["elapsed_sec"]:
-                gates_failed.append("speedup_floor")
-            if pick["A"]["elapsed_sec"] > 4.2 * pick["B"]["elapsed_sec"]:
-                gates_failed.append("a_implausible")
-            clean_pair = not gates_failed
-            scaling_result = {
-                "n_cores": W,
-                "throughput_n": round(tp_n, 1),
-                "4n_cores": W * N_REPL,
-                "throughput_4n": round(tp_4n, 1),
-                "efficiency": round((tp_4n / tp_n) / N_REPL, 3),
-                "turns": pick["A"]["turns"],
-                "clean_pair": clean_pair,
-                "gates_failed": gates_failed,
-                "suspect_regression": gates_failed == ["speedup_floor"],
-                "deployment": (
-                    f"1×local[{W}] executor (full input) vs "
-                    f"{N_REPL}×local[{W}] executors (disjoint conv-hash "
-                    "shards, readiness-barrier start)"
-                ),
-                "runs_n": [
-                    {"elapsed_sec": round(j["elapsed_sec"], 2),
-                     "steal_sec": round(j.get("steal_sec", 0.0), 1),
-                     "eff_steal_sec": round(eff_steal("A", j), 1),
-                     "reps": j.get("reps")}
-                    for j in samples["A"]
-                ],
-                "runs_4n": [
-                    {"elapsed_sec": round(j["elapsed_sec"], 2),
-                     "steal_sec": round(j.get("steal_sec", 0.0), 1),
-                     "eff_steal_sec": round(eff_steal("B", j), 1),
-                     "replicas": j.get("replicas")}
-                    for j in samples["B"]
-                ],
-            }
-        else:
-            scaling_result = {
-                "clean_pair": False,
-                "skipped": "wall budget exhausted (hypervisor steal storm) "
-                "or input prep failed; see BASELINE.md BENCH for the "
-                "recorded study"
-            }
-
-        # ---- clean-pair cache (round-4): the round-end window landed in
-        # a steal storm two rounds running, shipping a dirty in-window
-        # pair while a validated gate-passing pair existed from a calmer
-        # window. Every clean pair is persisted to BENCH_SCALING_CLEAN.
-        # json (full per-replica ledger + timestamp); when the live pair
-        # fails the gates, the shipped scaling block becomes the newest
-        # cached clean pair of the SAME config — explicitly labeled
-        # source=cached_clean with the dirty live pair embedded alongside,
-        # so the artifact is honest about what was measured when.
-        cache_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH_SCALING_CLEAN.json",
-        )
-        config_key = {"width": W, "n_repl": N_REPL,
-                      "convs": sc_convs, "turns": sc_turns}
-        try:
-            with open(cache_path) as fh:
-                cache_entries = json.load(fh).get("entries", [])
-        except (OSError, ValueError):
-            cache_entries = []
-        was_clean = bool(scaling_result.get("clean_pair"))
-        scaling_result, cache_entries = resolve_scaling_artifact(
-            scaling_result, cache_entries, config_key
-        )
-        if was_clean:
-            try:
-                with open(cache_path, "w") as fh:
-                    json.dump({"entries": cache_entries}, fh, indent=1)
-            except OSError as exc:
-                print(f"[scaling] cache write failed: {exc}",
-                      file=sys.stderr)
-
-    if SCALING_ONLY:
-        print(json.dumps(
-            {"metric": "scaling_only", "sf": sf, "scaling": scaling_result}
-        ))
-        return
-
-    # ---- headline queries at full parallelism ---------------------------
     import __spark_entry__ as entry_mod
+    from nametag3_spark.data.synth import synth_transcripts
     from nametag3_spark.session import get_spark
+    from nametag3_spark.streaming.stream import triples_micro_batch
 
     spark = get_spark(app_name="bench", master=f"local[{CPUS}]",
                       shuffle_partitions=CPUS)
+    sf = _sf_from_dir(SF_DIR)
+    sf_dir = build_scaled(spark, SF_DIR, args.scale) if args.scale > 1 else SF_DIR
     qs = entry_mod.queries()
+    unknown = [n for n in names if n != PIPELINE and n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {', '.join(unknown)}")
+
     # session warmup: first actions pay JVM/codegen/page-cache init that
     # would otherwise be billed to whichever query touches each table
     # first — a long-running cluster job reads warm metadata/cache too
-    for table in ("region", "nation", "customer", "orders", "lineitem",
-                  "documents", "embeddings", "events"):
-        spark.read.parquet(f"{SF_DIR}/{table}.parquet").count()
-    # spawn the Python worker pool too: serve_requests is the only
-    # Python-stage query in the list, so without this it would be billed
-    # the full per-worker spawn+import cost (~3s at 32 slots) that a
-    # long-running cluster job pays once at startup
+    for table in WARM_TABLES:
+        spark.read.parquet(f"{sf_dir}/{table}.parquet").count()
+    # spawn the Python worker pool too, so the first Python-stage query
+    # is not billed the per-worker spawn+import cost
     spark.range(CPUS * 2).repartition(CPUS).mapInPandas(
         lambda it: it, schema="id long"
     ).write.format("noop").mode("overwrite").save()
-    for name in BENCH_QUERIES:
-        start = time.perf_counter()
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - start, 3)
 
-    # ---- flagship pipeline throughput at full parallelism ---------------
-    # min-of-2 only when the scaling study already has a clean pair (or
-    # was disabled) AND the budget affords it: the widest allocation is
-    # the most throttle-exposed measurement here, but its second rep must
-    # never starve the scaling study (round-2 failure mode)
-    n_convs, avg_turns = _pipeline_sizes(sf)
-    remaining = budget - (time.perf_counter() - wall_start)
-    pipe_reps = 2 if (remaining > 150 and (clean_pair or scaling_result is None)) else 1
-    # The widest job is the most storm-exposed measurement in the whole
-    # bench (identical 32-core jobs have measured 11.8s-101.4s on this
-    # host), so it runs in a SUBPROCESS under a hard timeout — an
-    # in-process job that a storm stretches past the wall budget would
-    # kill bench before the JSON line prints (observed round 3, twice).
-    # On timeout: shrink 4× and try once (turns_per_sec stays honest, the
-    # reported turn count shrinks too); as a last resort the best 4N
-    # scaling rep stands in, flagged.
-    pipe: dict | None = None
-    for attempt_convs in (n_convs, max(n_convs // 4, 2000)):
-        left = budget - (time.perf_counter() - wall_start) - 10.0
-        if left < 30:
-            break
-        try:
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__),
-                 "--pipeline-job", str(CPUS), str(attempt_convs),
-                 str(avg_turns), str(pipe_reps)],
-                capture_output=True, text=True, check=True, timeout=left,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            )
-            pipe = json.loads(out.stdout.strip().splitlines()[-1])
-            break
-        except subprocess.TimeoutExpired as exc:
-            # a completed rep in the buffered stdout is a full-size
-            # measurement — better than shrinking the job 4x
-            pipe = _salvage_json(exc.stdout)
-            if pipe is not None:
-                print(f"[pipeline] {attempt_convs}-conv run timed out; "
-                      "salvaged a completed rep", file=sys.stderr)
-                break
-            print(f"[pipeline] {attempt_convs}-conv run failed: "
-                  "TimeoutExpired, no completed rep", file=sys.stderr)
-            pipe_reps = 1
-        except (subprocess.CalledProcessError,
-                ValueError, IndexError) as exc:
-            print(f"[pipeline] {attempt_convs}-conv run failed: "
-                  f"{type(exc).__name__}", file=sys.stderr)
-            pipe_reps = 1
+    def noop(df) -> None:
+        df.write.format("noop").mode("overwrite").save()
 
-    result = {
-        "metric": "bench_total",
-        "unit": "sec",
-        "sf": sf,
-    }
-    if pipe is not None:
-        timings["pipeline_triples"] = round(pipe["elapsed_sec"], 3)
-        result["pipeline"] = {
-            "turns": pipe["turns"],
-            "turns_per_sec": round(pipe["turns"] / pipe["elapsed_sec"], 1),
-        }
-    elif scaling_result and scaling_result.get("runs_4n"):
-        b4 = min(scaling_result["runs_4n"], key=lambda r: r["elapsed_sec"])
-        timings["pipeline_triples"] = b4["elapsed_sec"]
-        result["pipeline"] = {
-            "turns": scaling_result["turns"],
-            "turns_per_sec": round(
-                scaling_result["turns"] / b4["elapsed_sec"], 1
-            ),
-            "fallback": f"{scaling_result['4n_cores']}-core scaling rep "
-            "(widest-job run timed out under a steal storm)",
-        }
-    result["value"] = round(sum(timings.values()), 3)
-    result["queries"] = timings
-    if scaling_result is not None:
-        result["scaling"] = scaling_result
+    def shuffle_width(name: str) -> None:
+        # the pipeline leg keeps the shuffle width of its earlier
+        # standalone job, so turns_per_sec keeps its meaning
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       max(CPUS, 8) if name == PIPELINE else CPUS)
 
-    # full ledgers to a file, compact line to stdout (round-5 fix: the
-    # driver's 2,000-char stdout tail must contain the whole JSON line)
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    try:
-        with open(full_path, "w") as fh:
-            json.dump(result, fh, indent=1)
-    except OSError as exc:
-        print(f"[bench] BENCH_FULL.json write failed: {exc}",
-              file=sys.stderr)
-    print(json.dumps(compact_result(result, full_path)))
+    turns = None
+    transcripts = None
+    if PIPELINE in names:
+        shuffle_width(PIPELINE)
+        n_convs, avg_turns = _pipeline_sizes(sf)
+        transcripts = synth_transcripts(
+            spark, n_convs=n_convs, avg_turns=avg_turns,
+            partitions=max(CPUS * 2, 8),
+        ).cache()
+        turns = transcripts.count()  # materialize input outside the timing
+        # warmup on a small slice, spread so EVERY worker slot pays its
+        # spawn+import cost and the codegen paths JIT before the timer
+        triples, warm, _ = triples_micro_batch(
+            spark, transcripts.limit(4000).repartition(CPUS * 2))
+        noop(triples)
+        warm.unpersist()
+
+    def build(name: str):
+        """(DataFrame, mentions to unpersist after it is consumed)."""
+        if name == PIPELINE:
+            triples, mentions, _ = triples_micro_batch(spark, transcripts)
+            return triples, mentions
+        return qs[name](spark, sf_dir), None
+
+    if args.plans_dir:
+        os.makedirs(args.plans_dir, exist_ok=True)
+    timings: dict[str, float] = {}
+    for name in names:
+        shuffle_width(name)
+        if args.plans_dir:
+            df, mentions = build(name)
+            _write_plan(spark, df, os.path.join(args.plans_dir, f"{name}.txt"))
+            if mentions is not None:
+                mentions.unpersist()
+        times = []
+        for _ in range(max(args.reps, 1)):
+            spark.sparkContext.setJobDescription(f"bench:{name}")
+            start = time.perf_counter()
+            df, mentions = build(name)
+            noop(df)
+            times.append(round(time.perf_counter() - start, 3))
+            spark.sparkContext.setJobDescription(None)
+            if mentions is not None:
+                mentions.unpersist()
+        timings[name] = min(times)
+        print(json.dumps({"query": name, "times": times}), file=sys.stderr,
+              flush=True)
+
+    if transcripts is not None:
+        transcripts.unpersist()
+    print(json.dumps(bench_result(sf, timings, turns)))
 
 
 if __name__ == "__main__":

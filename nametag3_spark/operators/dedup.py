@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nametag3_spark.operators.skew import spread_if_narrow
+
 N_HASHES = 16
 N_BANDS = 4
 ROWS_PER_BAND = N_HASHES // N_BANDS
@@ -168,17 +170,6 @@ def minhash_signatures(
     )
 
 
-def _parallelize_if_narrow(df: DataFrame, key_col: str) -> DataFrame:
-    """Repartition by key iff the input has fewer partitions than the
-    cluster has slots (e.g. a single small parquet file): the downstream
-    shingle/signature projection is CPU-bound and must not serialize on
-    one task. At warehouse scale the input is already wide → no-op, no
-    shuffle."""
-    from nametag3_spark.operators.skew import spread_if_narrow
-
-    return spread_if_narrow(df, key_col)
-
-
 def _shingle_rows(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
@@ -197,7 +188,7 @@ def _shingle_rows(
     words = F.split(F.lower(F.col(text_col)), r"\s+")
     shingle = F.concat_ws(" ", F.slice(F.col("_w"), F.col("_i") + 1, k))
     return (
-        _parallelize_if_narrow(docs, id_col)
+        spread_if_narrow(docs, id_col)
         .select(F.col(id_col), words.alias("_w"))
         .select(
             F.col(id_col),

@@ -255,15 +255,21 @@ def _mention_batches(scorer_name: str):
             nrow = batch.num_rows
             if nrow == 0:
                 continue
-            texts = batch.column("text").to_pylist()
+            token_lists = [
+                prep_tokens(t) if isinstance(t, str) and t else []
+                for t in batch.column("text").to_pylist()
+            ]
             counts = np.empty(nrow, dtype=np.int64)
             labels_flat: list[str] = []
             starts_flat: list[int] = []
             ends_flat: list[int] = []
             surfaces_flat: list[str] = []
-            for i, text in enumerate(texts):
-                tokens = prep_tokens(text) if isinstance(text, str) and text else []
-                spans = decode_spans(scorer.label_batch([tokens])[0])
+            # one scorer call per Arrow batch, as in _annotate_batches: a
+            # model scorer pays its per-call cost once per batch, not turn
+            for i, (tokens, stacks) in enumerate(
+                zip(token_lists, scorer.label_batch(token_lists))
+            ):
+                spans = decode_spans(stacks)
                 counts[i] = len(spans)
                 for typ, s, e in spans:
                     labels_flat.append(typ)
@@ -293,9 +299,7 @@ def _mention_batches(scorer_name: str):
 
 
 def extract_mentions_flat(
-    transcripts: DataFrame,
-    scorer: str = "oracle",
-    rebalance: bool | str = "auto",
+    transcripts: DataFrame, scorer: str = "oracle"
 ) -> DataFrame:
     """Fused tokenize→score→decode→explode in ONE Python pass emitting
     flat primitive columns — no array/struct columns cross the Arrow
@@ -305,25 +309,22 @@ def extract_mentions_flat(
     materializes tokens/labels for snapshots and debugging) must produce
     identical mention rows (tested).
 
-    ``rebalance`` hash-repartitions on (conv_id, turn_idx) first: scoring
-    is per-turn independent, so turn-level hash partitioning neutralizes
-    hot-conversation skew (a conversation 20× the average would otherwise
-    pin one task per hot conv). The default ``"auto"`` (round-6
-    measurement) repartitions only when the input is NARROWER than the
-    cluster's slots: on an already-wide input the pre-Python shuffle of
-    the full text column cost ~10-20% of the pipeline wall while buying
-    nothing — with hundreds of partitions a hot conversation is confined
-    to one partition among many, which per-turn scoring tolerates.
-    ``True`` forces the shuffle (an input with pathological
-    partition-level skew), ``False`` never shuffles."""
+    An input NARROWER than the cluster's slots is first hash-repartitioned
+    on (conv_id, turn_idx): scoring is per-turn independent, so turn-level
+    hash partitioning neutralizes hot-conversation skew (a conversation
+    20× the average would otherwise pin one task per hot conv). An
+    already-wide input is left as is (round-6 measurement): there the
+    pre-Python shuffle of the full text column cost ~10-20% of the
+    pipeline wall while buying nothing — with hundreds of partitions a
+    hot conversation is confined to one partition among many, which
+    per-turn scoring tolerates."""
     from pyspark.sql import functions as F
 
-    if rebalance == "auto":
-        target = transcripts.sparkSession.sparkContext.defaultParallelism
-        rebalance = transcripts.rdd.getNumPartitions() < target
-    if rebalance:
-        n_parts = transcripts.sparkSession.sparkContext.defaultParallelism * 2
-        transcripts = transcripts.repartition(n_parts, F.col("conv_id"), F.col("turn_idx"))
+    slots = transcripts.sparkSession.sparkContext.defaultParallelism
+    if transcripts.rdd.getNumPartitions() < slots:
+        transcripts = transcripts.repartition(
+            slots * 2, F.col("conv_id"), F.col("turn_idx")
+        )
     out = transcripts.mapInArrow(_mention_batches(scorer), schema=MENTION_SCHEMA)
     return out.withColumn("mention_norm", F.lower(F.col("surface")))
 

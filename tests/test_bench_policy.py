@@ -1,173 +1,51 @@
-"""Round-end scaling-artifact policy (bench.resolve_scaling_artifact) —
-pure-function tests, no Spark. This logic runs exactly once per round,
-unrehearsed, at the driver's end-of-round bench, so every branch is
-locked here: clean→live+append, dirty→best-cached substitution with the
-live pair embedded, dirty-no-cache→as-is, clean-but-weaker→best_clean
-surfaced beside the live measurement."""
+"""bench.py's output contract — pure-function tests, no Spark. Its
+consumer keeps only a ~2,000-char stdout tail and parses the LAST JSON
+line out of it, so the line's key set and size are pinned here, plus
+the ``--scale`` cache key."""
 
 from __future__ import annotations
 
+import json
+
 import bench
 
-CFG = {"width": 2, "n_repl": 4, "convs": 180000, "turns": 17}
-OTHER_CFG = {"width": 2, "n_repl": 4, "convs": 6000, "turns": 8}
+
+def test_result_keys_and_queries():
+    timings = {name: 1.0 for name in bench.BENCH_QUERIES}
+    timings[bench.PIPELINE] = 4.0
+    res = bench.bench_result(0.01, timings, turns=31613)
+    assert set(res) == {"metric", "unit", "sf", "value", "queries",
+                        "pipeline"}
+    assert res["metric"] == "bench_total" and res["unit"] == "sec"
+    assert len(bench.BENCH_QUERIES) == 15
+    assert list(res["queries"]) == bench.BENCH_QUERIES + ["pipeline_triples"]
+    assert res["value"] == 19.0
+    assert res["pipeline"] == {"turns": 31613, "turns_per_sec": 7903.2}
 
 
-def entry(eff: float, ts: float, config=CFG, clean=True):
-    return {
-        "ts": ts,
-        "ts_utc": f"t{ts}",
-        "config": config,
-        "scaling": {
-            "efficiency": eff,
-            "clean_pair": clean,
-            "throughput_n": 1.0,
-            "throughput_4n": 4 * eff,
-            "runs_n": [],
-            "runs_4n": [],
-        },
-    }
+def test_result_without_pipeline_has_no_pipeline_block():
+    res = bench.bench_result(0.1, {"tpch_q1": 2.5, "dedup_exact": 0.5})
+    assert "pipeline" not in res and "scaling" not in res
+    assert res["value"] == 3.0
 
 
-def test_clean_pair_ships_live_and_appends():
-    live = {"efficiency": 0.81, "clean_pair": True}
-    out, cache = bench.resolve_scaling_artifact(live, [], CFG, now=100.0)
-    assert out["source"] == "live" and out["efficiency"] == 0.81
-    assert len(cache) == 1 and cache[0]["config"] == CFG
-    assert cache[0]["scaling"]["efficiency"] == 0.81
-    assert "source" not in cache[0]["scaling"]
-    assert out["clean_history"] == [{"ts_utc": cache[0]["ts_utc"],
-                                     "efficiency": 0.81}]
+def test_default_entries_are_the_headline_series():
+    args = bench._parse_args([])
+    assert args.queries.split(",") == bench.BENCH_QUERIES + [bench.PIPELINE]
+    assert args.reps == 1 and args.plans_dir is None and args.scale == 1
 
 
-def test_dirty_pair_substitutes_best_cached_clean_not_newest():
-    cache = [entry(0.8, 10.0), entry(0.652, 20.0), entry(0.7, 5.0, OTHER_CFG)]
-    live = {"efficiency": 0.31, "clean_pair": False,
-            "gates_failed": ["steal_B"]}
-    out, cache2 = bench.resolve_scaling_artifact(live, cache, CFG, now=30.0)
-    assert out["source"] == "cached_clean"
-    assert out["efficiency"] == 0.8  # best, not the newer 0.652
-    assert out["cached_at"] == "t10.0"
-    assert out["live_dirty"]["efficiency"] == 0.31
-    # history covers this config only, never the other config's entries
-    assert [h["efficiency"] for h in out["clean_history"]] == [0.8, 0.652]
-    assert len(cache2) == 3  # dirty pairs are never cached
-
-
-def test_dirty_pair_without_cached_match_ships_as_is():
-    cache = [entry(0.7, 5.0, OTHER_CFG)]
-    live = {"efficiency": 0.31, "clean_pair": False}
-    out, _ = bench.resolve_scaling_artifact(live, cache, CFG, now=30.0)
-    assert out["source"] == "live" and out["efficiency"] == 0.31
-    assert "clean_history" not in out and "live_dirty" not in out
-
-
-def test_skipped_result_substitutes_cached_clean():
-    cache = [entry(0.8, 10.0)]
-    live = {"clean_pair": False, "skipped": "budget exhausted"}
-    out, _ = bench.resolve_scaling_artifact(live, cache, CFG, now=30.0)
-    assert out["source"] == "cached_clean" and out["efficiency"] == 0.8
-    assert out["live_dirty"]["skipped"] == "budget exhausted"
-
-
-def test_weaker_clean_live_surfaces_best_clean_beside_it():
-    cache = [entry(0.8, 10.0)]
-    live = {"efficiency": 0.652, "clean_pair": True}
-    out, cache2 = bench.resolve_scaling_artifact(live, cache, CFG, now=30.0)
-    # the in-window measurement is never replaced when clean...
-    assert out["source"] == "live" and out["efficiency"] == 0.652
-    # ...but the stronger cached pair ships beside it, plus full history
-    assert out["best_clean"]["efficiency"] == 0.8
-    assert [h["efficiency"] for h in out["clean_history"]] == [0.8, 0.652]
-    assert len(cache2) == 2  # the live clean pair was appended
-
-
-def test_stronger_clean_live_has_no_best_clean_block():
-    cache = [entry(0.652, 10.0)]
-    live = {"efficiency": 0.82, "clean_pair": True}
-    out, _ = bench.resolve_scaling_artifact(live, cache, CFG, now=30.0)
-    assert out["source"] == "live" and "best_clean" not in out
-
-
-def _worst_case_result() -> dict:
-    """The bench_total payload shape that sank round 4: dirty live pair
-    substituted by a cached clean pair, a deep clean history, best_clean,
-    and full per-replica rep ledgers on every sample."""
-    rep = {"elapsed_sec": 23.36, "steal_sec": 17.3, "barrier_late_sec": 0.0}
-    run = {"elapsed_sec": 71.72, "steal_sec": 5.2, "eff_steal_sec": 0.3,
-           "reps": [rep, rep],
-           "replicas": [dict(rep, turns=934513) for _ in range(4)]}
-    scaling = {
-        "n_cores": 2, "throughput_n": 51969.8, "4n_cores": 8,
-        "throughput_4n": 173123.4, "efficiency": 0.834, "turns": 3727423,
-        "clean_pair": True, "gates_failed": [],
-        "suspect_regression": False,
-        "deployment": "1×local[2] executor (full input) vs 4×local[2] "
-                      "executors (disjoint conv-hash shards, "
-                      "readiness-barrier start)",
-        "runs_n": [run] * 4, "runs_4n": [run] * 4,
-        "source": "cached_clean", "cached_at": "2026-08-17T22:45:39Z",
-        "live_dirty": {
-            "n_cores": 2, "throughput_n": 51969.8, "4n_cores": 8,
-            "throughput_4n": 120429.0, "efficiency": 0.579,
-            "turns": 3727423, "clean_pair": False,
-            "gates_failed": ["steal_B", "barrier_late"],
-            "suspect_regression": False,
-            "runs_n": [run] * 4, "runs_4n": [run] * 4,
-        },
-        "clean_history": [
-            {"ts_utc": f"2026-08-17T2{i}:45:39Z", "efficiency": 0.6 + i / 100}
-            for i in range(24)
-        ],
-        "best_clean": {"ts_utc": "t", "efficiency": 0.834,
-                       "throughput_n": 51969.8, "throughput_4n": 173123.4,
-                       "runs_n": [run] * 4, "runs_4n": [run] * 4},
-    }
-    return {
-        "metric": "bench_total", "unit": "sec", "sf": 0.1,
-        "value": 44.985,
-        "pipeline": {"turns": 1243917, "turns_per_sec": 61830.4},
-        "queries": {f"some_longish_query_name_{i:02d}": 11.234
-                    for i in range(18)},
-        "scaling": scaling,
-    }
-
-
-def test_compact_line_fits_driver_stdout_tail():
-    """The driver keeps ~2,000 chars of stdout and parses the last JSON
-    line from that tail; round 4 shipped parsed:null because the line
-    outgrew it. Hard cap the compact line at 1,500 chars under the
-    worst-case payload and require every graded field to survive."""
-    import json
-
-    full = _worst_case_result()
-    compact = bench.compact_result(full)
-    line = json.dumps(compact)
+def test_line_fits_driver_stdout_tail():
+    timings = {f"some_longish_query_name_{i:02d}": 11.234 for i in range(18)}
+    timings[bench.PIPELINE] = 20.118
+    line = json.dumps(bench.bench_result(0.1, timings, turns=1243917))
     assert len(line) < 1500, len(line)
-    assert compact["metric"] == "bench_total"
-    assert compact["value"] == full["value"]
-    assert compact["queries"] == full["queries"]
-    assert compact["pipeline"] == full["pipeline"]
-    sc = compact["scaling"]
-    assert sc["efficiency"] == 0.834 and sc["clean_pair"] is True
-    assert sc["source"] == "cached_clean"
-    assert sc["live_dirty"] == {"efficiency": 0.579, "clean_pair": False,
-                                "gates_failed": ["steal_B", "barrier_late"]}
-    assert sc["n_clean_history"] == 24
-    assert sc["best_clean_efficiency"] == 0.834
-    assert sc["detail"] == "BENCH_FULL.json"
-    # the bulky ledgers must NOT ride in the stdout line
-    assert "runs_n" not in sc and "clean_history" not in sc
-    # and the original result is untouched (main() writes it to file)
-    assert "runs_n" in full["scaling"]
+    assert json.loads(line)["pipeline"]["turns"] == 1243917
 
 
-def test_compact_line_skipped_scaling_passthrough():
-    import json
-
-    res = {"metric": "bench_total", "unit": "sec", "sf": 0.1,
-           "value": 1.0, "queries": {"q": 1.0},
-           "scaling": {"clean_pair": False, "skipped": "budget exhausted"}}
-    compact = bench.compact_result(res)
-    assert compact["scaling"]["skipped"] == "budget exhausted"
-    assert len(json.dumps(compact)) < 1500
+def test_scale_cache_is_keyed_on_scale_and_source_dir(tmp_path):
+    a, b = tmp_path / "sf0.01", tmp_path / "sf0.1"
+    assert bench.scale_cache_dir(str(a), 2) != bench.scale_cache_dir(str(b), 2)
+    assert bench.scale_cache_dir(str(a), 2) != bench.scale_cache_dir(str(a), 3)
+    assert bench.scale_cache_dir(str(a), 2) == bench.scale_cache_dir(
+        str(a) + "/", 2)

@@ -139,3 +139,17 @@ def test_query_names_are_stable_identifiers():
     e = _entry()
     for name in e.queries():
         assert name.isidentifier() and name == name.lower()
+
+
+def test_live_round_index_window_keeps_oracle_first():
+    """Unpatched: the real ledger-count read returns an int and the live
+    window still runs every oracle-backed query before any rows-only one."""
+    e = _entry()
+    idx = e._driver_round_index()
+    assert isinstance(idx, int) and idx >= 0
+    o = set(e.oracle_sql())
+    window = list(e.queries())[:DRIVER_WINDOW]
+    assert window[: len(e._PINNED)] == e._PINNED
+    flags = [name in o for name in window]
+    if False in flags:
+        assert not any(flags[flags.index(False):])
