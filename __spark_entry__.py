@@ -38,18 +38,24 @@ def _synth_sizes(sf_dir: str) -> tuple[int, int]:
 # flagship
 # ---------------------------------------------------------------------------
 
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: transcripts → mentions → linked → canonical → SPO triples."""
+def _synth_triples(spark: SparkSession, n_convs: int, avg_turns: int) -> DataFrame:
+    """Synthetic transcripts → mentions → linked → canonical → SPO triples
+    (oracle scorer, exact linking)."""
     from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
     from nametag3_spark.operators.canonicalize import canonicalize_mentions
     from nametag3_spark.operators.infer import annotate_turns
     from nametag3_spark.operators.linking import link_mentions
     from nametag3_spark.operators.triples import emit_triples, extract_mentions
 
-    transcripts = synth_transcripts(spark, n_convs=20, avg_turns=8)
+    transcripts = synth_transcripts(spark, n_convs=n_convs, avg_turns=avg_turns)
     mentions = extract_mentions(annotate_turns(transcripts, scorer="oracle"))
     linked = link_mentions(mentions, gazetteer_df(spark), fuzzy=False)
     return emit_triples(canonicalize_mentions(linked))
+
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship: transcripts → mentions → linked → canonical → SPO triples."""
+    return _synth_triples(spark, n_convs=20, avg_turns=8)
 
 
 # ---------------------------------------------------------------------------
@@ -736,17 +742,8 @@ def q_pipeline_np_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
-    from nametag3_spark.operators.canonicalize import canonicalize_mentions
-    from nametag3_spark.operators.infer import annotate_turns
-    from nametag3_spark.operators.linking import link_mentions
-    from nametag3_spark.operators.triples import emit_triples, extract_mentions
-
     n_convs, avg_turns = _synth_sizes(sf_dir)
-    t = synth_transcripts(spark, n_convs=n_convs, avg_turns=avg_turns)
-    mentions = extract_mentions(annotate_turns(t))
-    linked = link_mentions(mentions, gazetteer_df(spark), fuzzy=False)
-    return emit_triples(canonicalize_mentions(linked))
+    return _synth_triples(spark, n_convs, avg_turns)
 
 
 def q_pipeline_span_eval(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,7 +7,10 @@ functions (no Python in the hot path):
 * exact: hash-groupBy on the normalized text; keeps min doc_id.
 * MinHash-LSH: word-shingle signatures via ``xxhash64`` with per-
   permutation salts, banded; doc pairs sharing a band bucket are
-  candidates, verified by true shingle Jaccard. One shuffle on band keys.
+  candidates, verified by Jaccard on the shingle-hash sets. One shuffle
+  on band keys. ``minhash_sigs`` + ``lsh_bands`` are the package's one
+  MinHash/LSH primitive: entity linking's fuzzy tier
+  (``linking.lsh_candidates``) feeds them char-3-gram hash rows.
 * SimHash: 64-bit sign-aggregated token hashes; near-dups = identical
   simhash prefix buckets (Hamming verification on candidates).
 * n-gram Jaccard: direct verified similarity for candidate pairs.
@@ -26,7 +29,6 @@ from nametag3_spark.operators.skew import spread_if_narrow
 
 N_HASHES = 16
 N_BANDS = 4
-ROWS_PER_BAND = N_HASHES // N_BANDS
 
 # Modulus for the "portable" hash family: 2^31-1 (Mersenne prime). Every
 # intermediate of (a*h + b) % P with a, h, b < P stays under 2^62, so the
@@ -114,62 +116,6 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def minhash_signature_expr(
-    hashed_col, n_hashes: int = N_HASHES, portable: bool = False
-):
-    """MinHash signature over PRE-HASHED shingles (array<long>):
-    ``transform(0..n-1, p -> array_min(transform(hs, h -> xxhash64(h, p))))``.
-
-    Two-level hashing: each shingle STRING is hashed once upstream
-    (``_hs = transform(sh, s -> xxhash64(s))``); the n permutations mix
-    the 8-byte hash, not the string — n× less string hashing, the
-    standard MinHash trick. One nested expression, not n parallel
-    subtrees: a flat ``array(min0, min1, …)`` codegens an n×-bigger
-    method and dominates compile time. (The inner lambda takes ONE arg on
-    purpose: 2-arg F.transform lambdas mean (element, index), which would
-    rebind the permutation id.)
-
-    ``portable=True`` swaps the xxhash64 mixer for the classic affine
-    permutation family ``(a_p*h + b_p) % P`` over P=2^31-1 — byte-for-
-    byte reproducible in DuckDB SQL, so the whole signature (and the
-    banding built on it) gets an oracle twin. xxhash64 stays the 100 TB
-    fast path (JVM intrinsic, no modular arithmetic)."""
-    if portable:
-        P = PORTABLE_PRIME
-
-        def perm(p):
-            # sequence() yields 32-bit ints — widen BEFORE multiplying,
-            # or (p+1)*1103515245 overflows int under ANSI mode
-            p64 = p.cast("long")
-            a = ((p64 + 1) * F.lit(1103515245) + 12345) % P
-            b = ((p64 + 1) * F.lit(12345) + 67890) % P
-            return lambda h: (a * h + b) % P
-
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-            lambda p: F.array_min(F.transform(hashed_col, perm(p))),
-        )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda p: F.array_min(F.transform(hashed_col, lambda h: F.xxhash64(h, p))),
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    hs = F.transform(F.col("_sh"), lambda s: F.xxhash64(s))
-    return (
-        docs.withColumn("_sh", _word_shingles(text_col, k))
-        .where(F.size("_sh") > 0)
-        .select(
-            F.col(id_col),
-            F.col("_sh"),
-            minhash_signature_expr(hs).alias("sig"),
-        )
-    )
-
-
 def _shingle_rows(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
@@ -220,30 +166,32 @@ def _shingle_hash_rows(
 
 
 def _portable_perm_consts(p: int) -> tuple[int, int]:
-    """The classic affine family's (a_p, b_p) — same arithmetic as the
-    Spark-expression form in ``minhash_signature_expr`` (and the DuckDB
-    oracle twins), precomputed driver-side so the per-row work is one
-    multiply-add-mod instead of re-deriving the constants per element."""
+    """The classic affine family's (a_p, b_p) — the same arithmetic as the
+    DuckDB oracle twins, precomputed driver-side so the per-row work is
+    one multiply-add-mod instead of re-deriving the constants per
+    element."""
     a = ((p + 1) * 1103515245 + 12345) % PORTABLE_PRIME
     b = ((p + 1) * 12345 + 67890) % PORTABLE_PRIME
     return a, b
 
 
-def _hashed_sigs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    portable: bool,
-    n_hashes: int = N_HASHES,
+def minhash_sigs(
+    rows: DataFrame, id_cols: list[str], n_hashes: int, portable: bool = False
 ) -> DataFrame:
-    """One row per doc: (id, _hs: distinct shingle-hash set, _m0.._m{n-1}:
-    MinHash signature minima) — computed in ONE codegen'd hash aggregate
-    over the exploded shingle rows. The per-permutation hash runs as a
-    plain expression inside partial (map-side) aggregation, so the heavy
-    hashing is spread over every scan/repartition task and the exchange
-    carries only one pre-aggregated row per (doc, partition)."""
-    rows = _shingle_hash_rows(docs, id_col, text_col, k, portable)
+    """``(id_cols…, _h)`` shingle-hash rows → one row per id:
+    ``(id_cols…, _hs, _m0.._m{n_hashes-1})`` — the distinct shingle-hash
+    set (the Jaccard verify payload) and the MinHash signature minima,
+    computed in ONE codegen'd hash aggregate.
+
+    Two-level hashing: each shingle string is hashed once upstream into
+    ``_h``; the permutations mix the 8-byte hash, not the string. The
+    per-permutation hash runs as a plain expression inside partial
+    (map-side) aggregation, so the heavy hashing is spread over every
+    scan/repartition task and the exchange carries only one
+    pre-aggregated row per (id, partition). Duplicate ``_h`` rows are
+    harmless: minima ignore multiplicity and ``collect_set`` dedups.
+    ``portable=True`` swaps the xxhash64 mixer for the affine family
+    ``(a_p*h + b_p) % P`` that DuckDB evaluates identically."""
     if portable:
         mins = []
         for p in range(n_hashes):
@@ -257,9 +205,49 @@ def _hashed_sigs(
             F.min(F.xxhash64(F.col("_h"), F.lit(p))).alias(f"_m{p}")
             for p in range(n_hashes)
         ]
-    return rows.groupBy(id_col).agg(
-        F.collect_set("_h").alias("_hs"), *mins
-    )
+    return rows.groupBy(*id_cols).agg(F.collect_set("_h").alias("_hs"), *mins)
+
+
+def lsh_bands(
+    sigs: DataFrame,
+    cols: list[str],
+    n_hashes: int,
+    n_bands: int,
+    portable: bool = False,
+) -> DataFrame:
+    """``minhash_sigs`` rows → ``(cols…, band_idx, band_hash)``, one row
+    per band: band ``b`` hashes minima ``_m{b*r}.._m{b*r+r-1}`` with
+    ``r = n_hashes // n_bands``. ``cols`` are the ids plus any payload
+    the caller wants on every band row. Ids sharing a ``(band_idx,
+    band_hash)`` bucket are LSH candidates; the bucket key is an
+    equi-join key AQE can split on skew. ``portable=True`` folds the
+    minima with ``acc*31 + m mod P`` instead of xxhash64
+    (DuckDB-reproducible)."""
+    per_band = n_hashes // n_bands
+
+    def band_hash(b: int):
+        rows = [F.col(f"_m{b * per_band + r}") for r in range(per_band)]
+        if portable:
+            acc = rows[0]
+            for m in rows[1:]:
+                acc = (acc * 31 + m) % PORTABLE_PRIME
+            return acc
+        return F.xxhash64(*rows)
+
+    return sigs.select(
+        *cols,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_idx"),
+                        band_hash(b).alias("band_hash"),
+                    )
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("band"),
+    ).select(*cols, "band.band_idx", "band.band_hash")
 
 
 def minhash_lsh_pairs(
@@ -307,34 +295,15 @@ def minhash_lsh_pairs(
     # one codegen'd pass: shingle rows → per-doc (hash set, 16 minima).
     # ``hashed`` (the verify payload + signature columns) is the only
     # corpus-scale intermediate and feeds three branches, so it persists.
-    hashed = _persist(_hashed_sigs(docs, id_col, text_col, k, portable))
-
-    def band_hash(b: int):
-        rows = [
-            F.col(f"_m{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)
-        ]
-        if portable:
-            acc = rows[0]
-            for m in rows[1:]:
-                acc = (acc * 31 + m) % PORTABLE_PRIME
-            return acc
-        return F.xxhash64(*rows)
-
-    bands = hashed.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        band_hash(b).alias("band_hash"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_hash")
-    bands = _persist(bands)
+    hashed = _persist(
+        minhash_sigs(
+            _shingle_hash_rows(docs, id_col, text_col, k, portable),
+            [id_col],
+            N_HASHES,
+            portable,
+        )
+    )
+    bands = _persist(lsh_bands(hashed, [id_col], N_HASHES, N_BANDS, portable))
 
     hot = (
         bands.groupBy("band_idx", "band_hash")

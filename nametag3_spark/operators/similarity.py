@@ -406,8 +406,8 @@ def _ivf_cells(vec_col: str, cents, nprobe: int):
 
     ONE nested higher-order expression (scores → struct sort → slice),
     not n_centroids parallel aggregate subtrees — a flat expression fan
-    blows up codegen size and compile time dominates (same rationale as
-    minhash_signature_expr). The 2-arg transform lambda is deliberate:
+    blows up codegen size and compile time dominates. The 2-arg
+    transform lambda is deliberate:
     it receives (element, index), and the index IS the cell id."""
     scores = F.transform(
         cents,

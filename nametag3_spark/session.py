@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(ram_bytes: int) -> str:
+    """``spark.driver.memory`` for a host with ``ram_bytes`` of physical
+    RAM: 60% of it in whole MB, capped at 24g. Large hosts keep the 24g
+    heap; a small one never promises the JVM more heap than the machine
+    has, leaving room for the Python workers and the OS."""
+    ram_mb = int(ram_bytes * 0.6) // (1024 * 1024)
+    return f"{min(24 * 1024, ram_mb)}m"
+
+
 def get_spark(
     app_name: str = "nametag3_spark",
     master: str | None = None,
@@ -25,6 +34,9 @@ def get_spark(
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cores}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -53,7 +65,7 @@ def get_spark(
         #  nametag3_server.py:437-444 — here: worker reuse + module cache)
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory)
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -31,6 +31,56 @@ from nametag3_spark.operators.linking import link_mentions
 from nametag3_spark.operators.triples import emit_triples
 
 
+# The only AnalysisException shapes that mean "empty epoch store": the
+# dir does not exist yet (first epoch) or holds no data files to infer a
+# schema from (every earlier epoch wrote nothing).
+_EMPTY_STORE_ERRORS = (
+    "PATH_NOT_FOUND",
+    "Path does not exist",
+    "UNABLE_TO_INFER_SCHEMA",
+    "Unable to infer schema",
+)
+
+
+def _earlier_epochs(
+    spark: SparkSession, store_dir: str, epoch_id: int, cols: list[str]
+) -> DataFrame | None:
+    """``cols`` of an epoch-partitioned store, from STRICTLY EARLIER
+    epochs only (on replay of epoch N its own stale partition must not
+    feed back in); None when the store is empty.
+
+    Anything but the two empty-store shapes — transient FS errors,
+    corrupt footers, permissions, a store without ``epoch_id`` — raises,
+    failing the micro-batch so the streaming query retries. Proceeding
+    store-free would silently break the cross-epoch contract (e.g.
+    re-minting already-cataloged surfaces under fresh ids)."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return (
+            spark.read.parquet(store_dir)
+            .where(F.col("epoch_id") < epoch_id)
+            .select(*cols)
+        )
+    except AnalysisException as exc:
+        if not any(s in str(exc) for s in _EMPTY_STORE_ERRORS):
+            raise
+        return None
+
+
+def _write_epoch(df: DataFrame, epoch_id: int, out_dir: str) -> None:
+    """Write ``df`` as ``out_dir``'s ``epoch_id=N`` partition with
+    dynamic partition overwrite, so a replayed epoch replaces its own
+    partition instead of appending duplicates."""
+    (
+        df.withColumn("epoch_id", F.lit(epoch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch_id")
+        .parquet(out_dir)
+    )
+
+
 def read_transcript_stream(
     spark: SparkSession, input_dir: str, max_files_per_trigger: int = 4
 ) -> DataFrame:
@@ -83,59 +133,18 @@ def start_triples_stream(
     stream = read_transcript_stream(spark, input_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         catalog = None
         if catalog_dir is not None:
-            try:
-                catalog = (
-                    spark.read.parquet(catalog_dir)
-                    # strictly-earlier epochs only: on replay of epoch N
-                    # its own stale partition must not feed back in
-                    .where(F.col("epoch_id") < epoch_id)
-                    .select("surf_node", "entity_canonical")
-                )
-            except AnalysisException as exc:
-                # ONLY the two legitimate empty-catalog shapes may proceed
-                # catalog-free: the dir does not exist yet (first epoch)
-                # or it holds no data files to infer a schema from (an
-                # earlier epoch minted nothing). Anything else — transient
-                # FS errors, corrupt footers, permissions — must FAIL the
-                # micro-batch so the streaming query retries; silently
-                # running catalog-free would re-mint already-cataloged
-                # surfaces under fresh ids and permanently break the
-                # cross-epoch id-stability contract (round-3 ADVICE).
-                msg = str(exc)
-                if not any(
-                    s in msg
-                    for s in (
-                        "PATH_NOT_FOUND",
-                        "Path does not exist",
-                        "UNABLE_TO_INFER_SCHEMA",
-                        "Unable to infer schema",
-                    )
-                ):
-                    raise
-                catalog = None
+            catalog = _earlier_epochs(
+                spark, catalog_dir, epoch_id, ["surf_node", "entity_canonical"]
+            )
         triples, mentions, new_catalog = triples_micro_batch(
             spark, batch_df, catalog
         )
         try:
-            (
-                triples.withColumn("epoch_id", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(output_dir)
-            )
+            _write_epoch(triples, epoch_id, output_dir)
             if catalog_dir is not None:
-                (
-                    new_catalog.withColumn("epoch_id", F.lit(epoch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch_id")
-                    .parquet(catalog_dir)
-                )
+                _write_epoch(new_catalog, epoch_id, catalog_dir)
         finally:
             mentions.unpersist()
 
@@ -317,8 +326,6 @@ def start_inference_stream(
     ``rounds`` steps; facts from earlier epochs are complete, so
     cross-epoch cascades need no catch-up.
     """
-    from pyspark.errors import AnalysisException
-
     from nametag3_spark.operators.bgp import _is_path_pred, _semi_naive_rounds
 
     for patterns, _ in rules:
@@ -336,27 +343,7 @@ def start_inference_stream(
     )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        known = None
-        try:
-            known = (
-                spark.read.parquet(store_dir)
-                .where(F.col("epoch_id") < epoch_id)
-                .select("subj", "pred", "obj")
-            )
-        except AnalysisException as exc:
-            # same contract as the canonical-id catalog: only the two
-            # legitimate empty-store shapes may proceed store-free
-            msg = str(exc)
-            if not any(
-                s in msg
-                for s in (
-                    "PATH_NOT_FOUND",
-                    "Path does not exist",
-                    "UNABLE_TO_INFER_SCHEMA",
-                    "Unable to infer schema",
-                )
-            ):
-                raise
+        known = _earlier_epochs(spark, store_dir, epoch_id, ["subj", "pred", "obj"])
         batch = batch_df.select("subj", "pred", "obj").distinct()
         if known is not None:
             fresh = batch.join(known, on=["subj", "pred", "obj"], how="left_anti")
@@ -371,13 +358,7 @@ def start_inference_stream(
             mat=lambda df: df.localCheckpoint(eager=True),
         )
         novel = fresh.unionByName(derived_new).distinct()
-        (
-            novel.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(store_dir)
-        )
+        _write_epoch(novel, epoch_id, store_dir)
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -420,8 +401,6 @@ def start_query_stream(
 
     ASK queries are rejected (a bool is not a view — wrap it as a
     SELECT and test emptiness downstream)."""
-    from pyspark.errors import AnalysisException
-
     from nametag3_spark.operators.sparql import execute, parse
 
     form = parse(query)["form"]
@@ -437,25 +416,7 @@ def start_query_stream(
     )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        known = None
-        try:
-            known = (
-                spark.read.parquet(store_dir)
-                .where(F.col("epoch_id") < epoch_id)
-                .select("subj", "pred", "obj")
-            )
-        except AnalysisException as exc:
-            msg = str(exc)
-            if not any(
-                s in msg
-                for s in (
-                    "PATH_NOT_FOUND",
-                    "Path does not exist",
-                    "UNABLE_TO_INFER_SCHEMA",
-                    "Unable to infer schema",
-                )
-            ):
-                raise
+        known = _earlier_epochs(spark, store_dir, epoch_id, ["subj", "pred", "obj"])
         batch = batch_df.select("subj", "pred", "obj").distinct()
         if known is not None:
             novel = batch.join(
@@ -466,21 +427,8 @@ def start_query_stream(
             novel = batch
             full = batch
         full = full.localCheckpoint(eager=True)
-        (
-            novel.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(store_dir)
-        )
-        (
-            execute(full, query)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(view_dir)
-        )
+        _write_epoch(novel, epoch_id, store_dir)
+        _write_epoch(execute(full, query), epoch_id, view_dir)
 
     return (
         stream.writeStream.foreachBatch(process)

@@ -425,6 +425,29 @@ def test_token_counts(spark):
     assert row["s"] == 6
 
 
+def _legacy_minhash_signatures(docs, n_hashes):
+    """The original per-doc array MinHash (the legacy reference): distinct
+    word-3-gram shingle array ``_sh`` plus the interpreted higher-order-
+    function signature ``transform(0..n-1, p -> array_min(transform(hs,
+    h -> xxhash64(h, p))))`` over the xxhash64'd shingles. (The inner
+    lambda takes ONE arg on purpose: 2-arg lambdas mean (element, index),
+    which would rebind the permutation id.)"""
+    from pyspark.sql import functions as F
+
+    from nametag3_spark.operators.dedup import _word_shingles
+
+    hs = F.transform(F.col("_sh"), lambda s: F.xxhash64(s))
+    sig = F.transform(
+        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
+        lambda p: F.array_min(F.transform(hs, lambda h: F.xxhash64(h, p))),
+    )
+    return (
+        docs.withColumn("_sh", _word_shingles("text", 3))
+        .where(F.size("_sh") > 0)
+        .select(F.col("doc_id"), F.col("_sh"), sig.alias("sig"))
+    )
+
+
 def test_minhash_idonly_equals_legacy_fat_join(spark):
     """The id-only band-join rewrite must emit exactly the pairs the
     original fat-payload band join emitted (same bands, same verify)."""
@@ -432,10 +455,11 @@ def test_minhash_idonly_equals_legacy_fat_join(spark):
 
     from nametag3_spark.operators.dedup import (
         N_BANDS,
-        ROWS_PER_BAND,
+        N_HASHES,
         minhash_lsh_pairs,
-        minhash_signatures,
     )
+
+    rows_per_band = N_HASHES // N_BANDS
 
     rows = [
         (i, "alpha beta gamma delta epsilon zeta eta theta " + ("x%d" % (i % 7)))
@@ -444,7 +468,7 @@ def test_minhash_idonly_equals_legacy_fat_join(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     # legacy shape: shingles ride the band join
-    sigs = minhash_signatures(docs)
+    sigs = _legacy_minhash_signatures(docs, N_HASHES)
     bands = sigs.select(
         "doc_id",
         "_sh",
@@ -454,7 +478,7 @@ def test_minhash_idonly_equals_legacy_fat_join(spark):
                     F.struct(
                         F.lit(b).alias("band_idx"),
                         F.xxhash64(
-                            *[F.col("sig")[b * ROWS_PER_BAND + r] for r in range(ROWS_PER_BAND)]
+                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
                         ).alias("band_hash"),
                     )
                     for b in range(N_BANDS)

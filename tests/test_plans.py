@@ -100,6 +100,22 @@ def test_minhash_exchanges_carry_no_shingle_payload(spark):
             assert "_hs" not in a and "_sh" not in a, (first_line, a)
 
 
+def test_fuzzy_linking_plan_has_no_interpreted_hofs(spark):
+    """Fuzzy linking's shingle → signature → band path must be the
+    explode + codegen'd aggregate form shared with dedup's MinHash — no
+    interpreted higher-order function (lambda) anywhere in the plan."""
+    from nametag3_spark.data.synth import gazetteer_df
+    from nametag3_spark.operators.linking import link_mentions
+
+    mentions = spark.createDataFrame(
+        [("c0", 0, "acme corpx", "ORG"), ("c0", 1, "prague", "LOC")],
+        "conv_id string, turn_idx int, mention_norm string, label string",
+    )
+    p = plan_of(link_mentions(mentions, gazetteer_df(spark), fuzzy=True))
+    assert "lambdafunction" not in p
+    assert "transform(" not in p
+
+
 def test_keep_list_corpus_scan_prunes_text(spark):
     """dedup_keep_list joins the corpus by id only — the documents scan
     must read doc_id alone (column pruning), never the text payload."""

@@ -285,6 +285,42 @@ def test_stream_catalog_read_errors_fail_the_batch(spark, tmp_path):
         q.awaitTermination(300)
 
 
+def test_earlier_epochs_empty_store_allow_list(spark, tmp_path):
+    """The epoch-store reader shared by every exactly-once sink: a missing
+    dir or one with no data files is the empty store (None); any other
+    AnalysisException propagates; a readable store yields only epochs
+    strictly before the current one."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from nametag3_spark.streaming.stream import _earlier_epochs, _write_epoch
+
+    cols = ["subj", "pred", "obj"]
+
+    def facts(subj):
+        return spark.createDataFrame(
+            [(subj, "p", "o")], "subj string, pred string, obj string"
+        )
+
+    assert _earlier_epochs(spark, str(tmp_path / "missing"), 3, cols) is None
+    (tmp_path / "empty").mkdir()
+    assert _earlier_epochs(spark, str(tmp_path / "empty"), 3, cols) is None
+
+    # a store without the epoch_id partition column is not an empty store
+    flat = str(tmp_path / "flat")
+    facts("a").write.parquet(flat)
+    with pytest.raises(AnalysisException):
+        _earlier_epochs(spark, flat, 3, cols)
+
+    store = str(tmp_path / "store")
+    for epoch in (0, 1, 2):
+        _write_epoch(facts(f"s{epoch}"), epoch, store)
+    # a replay of epoch 1 rewrites its own partition, not appends to it
+    _write_epoch(facts("s1"), 1, store)
+    got = [r["subj"] for r in _earlier_epochs(spark, store, 2, cols).collect()]
+    assert sorted(got) == ["s0", "s1"]
+
+
 def test_streaming_inference_matches_batch_rule_engine(spark, tmp_path):
     """Incremental semi-naive inference over a multi-micro-batch triple
     stream must converge to the same fact set as the batch rule engine
