@@ -729,15 +729,15 @@ def q_pipeline_np_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nametag3_spark.data.synth import synth_transcripts
     from nametag3_spark.operators.encode import pack_conversations
-    from nametag3_spark.operators.infer import annotate_turns
-    from nametag3_spark.operators.np_model import NpFlatNER, score_windows_np
+    from nametag3_spark.operators.infer import annotate_turns, score_windows
+    from nametag3_spark.operators.np_model import NpFlatNER
 
     ckpt = os.path.join(tempfile.gettempdir(), "npflat_ckpt_seed42.npz")
     if not os.path.exists(ckpt):
         NpFlatNER.init_random(seed=42).save(ckpt)
     n_convs, avg_turns = _synth_sizes(sf_dir)
     t = synth_transcripts(spark, n_convs=n_convs, avg_turns=avg_turns)
-    scored = score_windows_np(pack_conversations(annotate_turns(t)), ckpt)
+    scored = score_windows(pack_conversations(annotate_turns(t)), scorer="np:" + ckpt)
     return scored.groupBy("label").agg(F.count(F.lit(1)).alias("n_tokens"))
 
 

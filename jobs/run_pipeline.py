@@ -29,7 +29,7 @@ def main() -> None:
     parser.add_argument("--master", default=None)
     args = parser.parse_args()
 
-    from nametag3_spark.pipeline import PipelineRun
+    from nametag3_spark.pipeline import PipelineRun, input_fingerprint
     from nametag3_spark.session import get_spark
 
     spark = get_spark(app_name="kg_pipeline", master=args.master)
@@ -42,7 +42,7 @@ def main() -> None:
         input_fp = f"synth-seed42-{n_convs}-{avg_turns}"
     else:
         transcripts = spark.read.parquet(args.input)
-        input_fp = args.input
+        input_fp = input_fingerprint(transcripts)
 
     start = time.perf_counter()
     run = PipelineRun(

@@ -5,10 +5,12 @@ Re-expresses the query & data-processing capabilities of ufal/nametag3
 idiomatic Spark pipeline:
 
     transcripts (conv_id, turn_idx, role, text, tool, ts)
-      → tokenize (NFC + truecase + word split)          [vectorized pandas UDF]
-      → window-pack per conversation                    [applyInPandas]
-      → score (pluggable: oracle gazetteer / HF model)  [mapInPandas]
-      → decode nested spans (one shared automaton)      [pandas UDF]
+      → tokenize (NFC + truecase + word split)          ┐ ONE Arrow pass
+      → score: one Scorer.label_batch per Arrow batch   │ [mapInArrow]
+        (oracle gazetteer / HF model / NumPy model)     │
+      → decode nested spans (one shared automaton)      ┘
+        (model route: window-pack per conversation [applyInPandas]
+         → score packed windows, same Scorer          [mapInPandas])
       → mentions → (subj, pred, obj) triples            [DataFrame ops]
       → entity linking (broadcast gazetteer + MinHash-LSH blocking)
       → canonicalization (iterative connected components)

@@ -21,8 +21,10 @@ Semantics preserved exactly:
   ``(start, -end, depth)`` — outermost-first (nametag3_dataset.py:655-657).
 
 Each row decodes independently → embarrassingly parallel across turns; the
-sequential part is only within one short sentence. The Spark wrapper is a
-vectorized Arrow-batched UDF (no per-row Python at the Spark API surface).
+sequential part is only within one short sentence. This module is pure
+Python: Spark reaches it inside the inference kernel's Arrow pass
+(``infer._score_batch``), the window-path realignment and the serving
+batch, never as a UDF of its own.
 
 ``spans_to_bio`` re-renders spans to stacked BIO labels, which makes
 ``postprocess`` (IOB→BIO + bracketing + uniqueness guarantee) a
@@ -32,10 +34,6 @@ decode→render round-trip, idempotent by construction.
 from __future__ import annotations
 
 from typing import Iterable, Sequence
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _NEW_ENTITY_PREFIXES = ("B-", "U-")
 
@@ -116,37 +114,3 @@ def postprocess_stacks(stacks: Sequence[str]) -> list[str]:
     """IOB→BIO with guaranteed bracketing + uniqueness (the reference's
     ``postprocess``), per sentence. Idempotent."""
     return spans_to_bio(len(stacks), decode_spans(stacks))
-
-
-# ---------------------------------------------------------------- Spark side
-
-SPAN_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("label", T.StringType(), False),
-            T.StructField("start_tok", T.IntegerType(), False),
-            T.StructField("end_tok", T.IntegerType(), False),
-        ]
-    )
-)
-
-
-@F.pandas_udf(SPAN_TYPE)
-def decode_spans_udf(label_stacks: pd.Series) -> pd.Series:
-    """Arrow-batched decode: array<string> label stacks → array<struct spans>."""
-    return label_stacks.map(
-        lambda stacks: [
-            {"label": typ, "start_tok": s, "end_tok": e}
-            for typ, s, e in decode_spans(list(stacks))
-        ]
-        if stacks is not None
-        else []
-    )
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def postprocess_udf(label_stacks: pd.Series) -> pd.Series:
-    """Arrow-batched postprocess: stacked labels → clean stacked BIO labels."""
-    return label_stacks.map(
-        lambda stacks: postprocess_stacks(list(stacks)) if stacks is not None else []
-    )

@@ -1,5 +1,5 @@
-"""Window packing + subword encoding (SURVEY.md T1-T6) and the
-model-inference scaffold the HF scorer plugs into.
+"""Window packing + subword encoding (SURVEY.md T1-T6): the input side
+of the model-scorer route (``infer.score_windows``).
 
 The reference greedily packs consecutive sentences into ≤512-subword
 windows with [CLS]/[SEP] framing, breaking at document boundaries and
@@ -30,7 +30,6 @@ from typing import Iterable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 CLS_ID = 0
 SEP_ID = 2
@@ -305,51 +304,3 @@ def pad_batch(seqs: Iterable[list[int]], pad_value: int = BATCH_PAD) -> np.ndarr
     for i, s in enumerate(seqs):
         out[i, : len(s)] = s
     return out
-
-
-INFER_SCHEMA = (
-    "conv_id string, turn_idx int, token_idx int, label string"
-)
-
-
-def infer_windows(
-    windows: DataFrame,
-    label_fn_name: str = "mock",
-    tagset: str | None = None,
-) -> DataFrame:
-    """Per-window model scoring scaffold (mapInPandas): dynamic padding,
-    per-worker model singleton, per-word label emission keyed by
-    (conv_id, turn_idx, token_idx). The 'mock' model labels every word O
-    except word_id positions whose input id is even (deterministic), so
-    realignment is testable without torch; an HF model slots into
-    ``_MODEL_CACHE`` the same way (one instance per reused worker —
-    the reference's shared-checkpoint pattern, nametag3_server.py:437-444).
-    """
-
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            padded = pad_batch(pdf["input_ids"].tolist())  # noqa: F841 (model input)
-            out_conv, out_turn, out_tok, out_label = [], [], [], []
-            for conv_id, input_ids, word_ids, word_keys in zip(
-                pdf["conv_id"], pdf["input_ids"], pdf["word_ids"], pdf["word_keys"]
-            ):
-                ids = list(input_ids)
-                for wid, key in zip(word_ids, word_keys):
-                    first_sub = ids[wid]
-                    label = "B-EVEN" if first_sub % 2 == 0 else "O"
-                    out_conv.append(conv_id)
-                    out_turn.append(key["turn_idx"])
-                    out_tok.append(key["token_idx"])
-                    out_label.append(label)
-            yield pd.DataFrame(
-                {
-                    "conv_id": out_conv,
-                    "turn_idx": out_turn,
-                    "token_idx": out_tok,
-                    "label": out_label,
-                }
-            )
-
-    return windows.mapInPandas(fn, schema=INFER_SCHEMA)

@@ -1,9 +1,21 @@
 """Tokenize + score stage: transcripts → per-token nested label stacks.
 
 This is the reference's predict path (nametag3.py:263-269 →
-nametag3_model.py:963-1042) re-expressed as ONE ``mapInPandas`` stage:
-Arrow batches in, Arrow batches out, no per-row Python at the Spark
-surface. The scorer is pluggable:
+nametag3_model.py:963-1042) re-expressed as ONE inference core:
+
+* a scorer is anything with ``label_batch(tokens) -> stacked labels``
+  (the ``Scorer`` protocol); ``_get_scorer`` is the only registry and
+  model cache, keyed ``"oracle"``, ``"hf:<checkpoint_dir>"`` or
+  ``"np:<checkpoint.npz>"``;
+* one per-Arrow-batch kernel, ``_score_batch`` (tokenize → one
+  ``label_batch`` call → decode), serves both per-turn ``mapInArrow``
+  passes: ``annotate_turns`` (labeled turns with tokens, labels and
+  spans, the snapshot path) and ``extract_mentions_flat`` (flat mention
+  rows, the throughput path);
+* ``score_windows`` is the model-scorer route over packed subword
+  windows, behind the same protocol.
+
+The scorers:
 
 * ``OracleGazetteerScorer`` — deterministic longest-match tagger over the
   synth gazetteer, emitting CNEC-style stacked nested labels. Used for
@@ -18,6 +30,8 @@ surface. The scorer is pluggable:
   (worker-singleton model per reused Python worker — the reference's
   checkpoint-sharing pattern, nametag3_server.py:437-444 — dynamic padding,
   tagset masks) is laid out and unit-tested with a fake encoder.
+* ``np_model.NpFlatNER`` — a checkpointed NumPy flat-softmax model, the
+  torch-free real-tensor scorer.
 
 Scorers receive TRUECASED, NFC-normalized tokens — the same preprocessing
 the reference applies before its tokenizer (nametag3_dataset.py:355-366).
@@ -25,9 +39,11 @@ the reference applies before its tokenizer (nametag3_dataset.py:355-366).
 
 from __future__ import annotations
 
-from typing import Iterator, Protocol
+from typing import Callable, Iterator, Protocol
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from nametag3_spark.data.synth import GAZETTEER
@@ -39,6 +55,8 @@ LABELED_SCHEMA = (
     "ts timestamp, tokens array<string>, labels array<string>, "
     "spans array<struct<label string, start_tok int, end_tok int>>"
 )
+TURN_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
+SPAN_FIELDS = ["label", "start_tok", "end_tok"]
 
 
 class Scorer(Protocol):
@@ -177,65 +195,115 @@ class HFTransformerScorer:
         return out
 
 
-# module-level scorer cache: one instance per reused Python worker
-# (reference: models with the same path share one loaded instance,
-#  nametag3_server.py:437-444)
+# The scorer registry and cache: one instance per key per reused Python
+# worker (reference: models with the same path share one loaded instance,
+# nametag3_server.py:437-444)
 _SCORER_CACHE: dict[str, Scorer] = {}
+
+
+def scorer_loader(name: str) -> Callable[[], Scorer]:
+    """Scorer key → zero-argument loader. Resolving a key loads nothing,
+    so every DataFrame builder calls this on the driver and a bad key
+    raises ``ValueError`` there, not later inside a Python worker."""
+    kind, _, arg = name.partition(":")
+    if name == "oracle":
+        return OracleGazetteerScorer
+    if kind == "hf" and arg:
+        # "hf:<checkpoint_dir>" — the production transformer path
+        return lambda: HFTransformerScorer(arg)
+    if kind == "np" and arg:
+        # "np:<checkpoint.npz>" — the torch-free NumPy model (np_model.py)
+        from nametag3_spark.operators.np_model import NpFlatNER
+
+        return lambda: NpFlatNER.load(arg)
+    raise ValueError(
+        f"unknown scorer {name!r}: expected 'oracle', 'hf:<checkpoint_dir>' "
+        "or 'np:<checkpoint.npz>'"
+    )
 
 
 def _get_scorer(name: str) -> Scorer:
     if name not in _SCORER_CACHE:
-        if name == "oracle":
-            _SCORER_CACHE[name] = OracleGazetteerScorer()
-        elif name.startswith("hf:"):
-            # "hf:<checkpoint_dir>" — the production transformer path;
-            # one instance per checkpoint per reused Python worker (J5)
-            _SCORER_CACHE[name] = HFTransformerScorer(name[3:])
-        else:
-            raise ValueError(f"unknown scorer: {name}")
+        _SCORER_CACHE[name] = scorer_loader(name)()
     return _SCORER_CACHE[name]
 
 
-def _annotate_batches(scorer_name: str):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _score_batch(scorer: Scorer, batch):
+    """The per-turn inference kernel both Arrow passes share.
+
+    Tokenizes the batch's ``text`` column (S4 tokenization + P3
+    NFC/truncate + P4 truecase), scores every turn with ONE
+    ``label_batch`` call (a model scorer pays its per-call cost once per
+    batch, not per turn) and decodes each turn's stacks (in the same pass:
+    a second Python stage would cost a second Arrow round-trip). Returns
+    the token lists, the label stacks, the per-turn span counts and the
+    flat span columns ``(label, start_tok, end_tok)`` as Arrow arrays."""
+    token_lists = [
+        prep_tokens(t) if isinstance(t, str) and t else []
+        for t in batch.column("text").to_pylist()
+    ]
+    stacks = scorer.label_batch(token_lists)
+    counts = np.empty(len(token_lists), dtype=np.int64)
+    labels: list[str] = []
+    starts: list[int] = []
+    ends: list[int] = []
+    for i, turn_stacks in enumerate(stacks):
+        spans = decode_spans(turn_stacks)
+        counts[i] = len(spans)
+        for typ, s, e in spans:
+            labels.append(typ)
+            starts.append(s)
+            ends.append(e)
+    span_cols = [
+        pa.array(labels, type=pa.string()),
+        pa.array(starts, type=pa.int32()),
+        pa.array(ends, type=pa.int32()),
+    ]
+    return token_lists, stacks, counts, span_cols
+
+
+def _labeled_batches(scorer_name: str):
+    """Arrow pass behind ``annotate_turns``: the carried columns pass
+    through untouched, tokens and labels become list arrays, and the
+    decoded spans a list-of-struct array whose offsets are the per-turn
+    span counts."""
+
+    def fn(batches):
         scorer = _get_scorer(scorer_name)
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            # S4 tokenization + P3 NFC/truncate + P4 truecase
-            token_lists = [
-                prep_tokens(t) if isinstance(t, str) and t else []
-                for t in pdf["text"]
-            ]
-            labels = scorer.label_batch(token_lists)
-            # decode fused into the same Python pass: one Arrow round-trip
-            # for tokenize+score+decode (chaining two Python stages in one
-            # Spark plan costs a second serialization boundary)
-            spans = [
-                [
-                    {"label": typ, "start_tok": s, "end_tok": e}
-                    for typ, s, e in decode_spans(stacks)
-                ]
-                for stacks in labels
-            ]
-            out = pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]].copy()
-            out["tokens"] = token_lists
-            out["labels"] = labels
-            out["spans"] = spans
-            yield out
+            tokens, stacks, counts, span_cols = _score_batch(scorer, batch)
+            offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+            spans = pa.ListArray.from_arrays(
+                pa.array(offsets),
+                pa.StructArray.from_arrays(span_cols, names=SPAN_FIELDS),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in TURN_COLUMNS]
+                + [
+                    pa.array(tokens, type=pa.list_(pa.string())),
+                    pa.array(stacks, type=pa.list_(pa.string())),
+                    spans,
+                ],
+                names=[*TURN_COLUMNS, "tokens", "labels", "spans"],
+            )
 
     return fn
 
 
 def annotate_turns(transcripts: DataFrame, scorer: str = "oracle") -> DataFrame:
-    """transcripts → + tokens:array<string> + labels:array<string> (stacked)."""
-    return transcripts.mapInPandas(_annotate_batches(scorer), schema=LABELED_SCHEMA)
+    """transcripts → + tokens:array<string> + labels:array<string> (stacked)
+    + spans (decoded in the same Python pass)."""
+    scorer_loader(scorer)
+    return transcripts.mapInArrow(_labeled_batches(scorer), schema=LABELED_SCHEMA)
 
 
 MENTION_SCHEMA = (
     "conv_id string, turn_idx int, role string, tool string, ts timestamp, "
     "label string, start_tok int, end_tok int, surface string"
 )
+_MENTION_CARRIED = ("conv_id", "turn_idx", "role", "tool", "ts")
 
 
 def _mention_batches(scorer_name: str):
@@ -247,52 +315,26 @@ def _mention_batches(scorer_name: str):
     the 1.1M-turn bench job, rows identical)."""
 
     def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
         scorer = _get_scorer(scorer_name)
         for batch in batches:
-            nrow = batch.num_rows
-            if nrow == 0:
+            if batch.num_rows == 0:
                 continue
-            token_lists = [
-                prep_tokens(t) if isinstance(t, str) and t else []
-                for t in batch.column("text").to_pylist()
+            tokens, _stacks, counts, span_cols = _score_batch(scorer, batch)
+            rows = np.repeat(np.arange(batch.num_rows), counts)
+            surfaces = [
+                " ".join(tokens[r][s : e + 1])
+                for r, s, e in zip(
+                    rows.tolist(),
+                    span_cols[1].to_pylist(),
+                    span_cols[2].to_pylist(),
+                )
             ]
-            counts = np.empty(nrow, dtype=np.int64)
-            labels_flat: list[str] = []
-            starts_flat: list[int] = []
-            ends_flat: list[int] = []
-            surfaces_flat: list[str] = []
-            # one scorer call per Arrow batch, as in _annotate_batches: a
-            # model scorer pays its per-call cost once per batch, not turn
-            for i, (tokens, stacks) in enumerate(
-                zip(token_lists, scorer.label_batch(token_lists))
-            ):
-                spans = decode_spans(stacks)
-                counts[i] = len(spans)
-                for typ, s, e in spans:
-                    labels_flat.append(typ)
-                    starts_flat.append(s)
-                    ends_flat.append(e)
-                    surfaces_flat.append(" ".join(tokens[s : e + 1]))
-            idx = pa.array(np.repeat(np.arange(nrow), counts))
-            arrs = [
-                batch.column(c).take(idx)
-                for c in ("conv_id", "turn_idx", "role", "tool", "ts")
-            ]
-            arrs += [
-                pa.array(labels_flat, type=pa.string()),
-                pa.array(starts_flat, type=pa.int32()),
-                pa.array(ends_flat, type=pa.int32()),
-                pa.array(surfaces_flat, type=pa.string()),
-            ]
+            idx = pa.array(rows)
             yield pa.RecordBatch.from_arrays(
-                arrs,
-                names=[
-                    "conv_id", "turn_idx", "role", "tool", "ts",
-                    "label", "start_tok", "end_tok", "surface",
-                ],
+                [batch.column(c).take(idx) for c in _MENTION_CARRIED]
+                + span_cols
+                + [pa.array(surfaces, type=pa.string())],
+                names=[*_MENTION_CARRIED, *SPAN_FIELDS, "surface"],
             )
 
     return fn
@@ -320,6 +362,7 @@ def extract_mentions_flat(
     per-turn scoring tolerates."""
     from pyspark.sql import functions as F
 
+    scorer_loader(scorer)
     slots = transcripts.sparkSession.sparkContext.defaultParallelism
     if transcripts.rdd.getNumPartitions() < slots:
         transcripts = transcripts.repartition(
@@ -364,6 +407,10 @@ def score_windows(windows: DataFrame, scorer: str = "oracle") -> DataFrame:
     oversized turn). Memory stays O(one turn): only the open tail is
     buffered, never a partition.
 
+    ``scorer`` is any registry key; ``"np:<checkpoint.npz>"`` runs the
+    NumPy model (one padded forward per turn segment, labels gathered at
+    each word's first subword).
+
     Precondition: windows of one conversation are CONTIGUOUS and ordered
     within their partition — true by construction for
     ``pack_conversations`` output (``groupBy(conv_id).applyInPandas``
@@ -372,6 +419,7 @@ def score_windows(windows: DataFrame, scorer: str = "oracle") -> DataFrame:
     re-shuffle the merge degrades gracefully to independent segment
     scoring (the pre-round-4 behavior).
     """
+    scorer_loader(scorer)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sc = _get_scorer(scorer)

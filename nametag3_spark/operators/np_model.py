@@ -1,5 +1,5 @@
-"""Real-tensor inference path without torch: a NumPy flat-softmax NER
-head over packed subword windows.
+"""Real-tensor inference without torch: a NumPy flat-softmax NER model
+behind the ``Scorer`` protocol.
 
 The reference's production scorer is an XLM-R encoder with a flat-BIO
 softmax head (nametag3_model.py:786-799); torch/transformers are absent
@@ -8,16 +8,17 @@ in this container, so that exact encoder stays behind
 is everything AROUND the matmuls, with actual tensors flowing:
 
 * **S5 model/checkpoint source**: weights serialize to a single ``.npz``
-  checkpoint; workers load it lazily from a path (exactly how a torch
-  ``state_dict`` would ship) and keep ONE instance per reused Python
-  worker (J5, the reference's shared-checkpoint pattern,
-  nametag3_server.py:437-444).
-* **T6 dynamic padding**: windows pad to the batch max with
-  BATCH_PAD=-1, masked inside ``forward``.
+  checkpoint; the scorer key ``"np:<checkpoint.npz>"`` loads it lazily
+  in each worker (exactly how a torch ``state_dict`` would ship), and
+  ``infer._get_scorer`` keeps ONE instance per reused Python worker (J5,
+  the reference's shared-checkpoint pattern, nametag3_server.py:437-444).
+* **T6 dynamic padding**: ``label_batch`` pads its sentences to the batch
+  max with BATCH_PAD=-1, masked inside ``forward``.
 * **J1 realignment**: per-word labels come from the logits at each
-  word's FIRST subword (word_ids), keyed back to (conv_id, turn_idx,
-  token_idx) — the window path's key-join realignment, now driven by a
-  real ``(batch, seq, n_labels)`` logits tensor.
+  word's FIRST subword — the ``HFTransformerScorer`` contract — and
+  ``infer.score_windows`` keys them back to (conv_id, turn_idx,
+  token_idx), now driven by a real ``(batch, seq, n_labels)`` logits
+  tensor.
 
 Swapping ``NpFlatNER.forward`` for an XLM-R forward is the ONLY change
 production needs; every Spark-side contract is exercised by this model.
@@ -25,13 +26,15 @@ production needs; every Spark-side contract is exercised by this model.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 
-from nametag3_spark.operators.encode import BATCH_PAD, pad_batch
+from nametag3_spark.operators.encode import (
+    BATCH_PAD,
+    CLS_ID,
+    SEP_ID,
+    ChunkSubwordTokenizer,
+    pad_batch,
+)
 
 HASH_DIM = 4096  # hashing-trick embedding rows: row = subword_id % HASH_DIM
 EMB_DIM = 32
@@ -97,60 +100,23 @@ class NpFlatNER:
         logits = h @ self.w2 + self.b2  # (B, L, C)
         return np.where(mask[..., None], logits, 0.0).astype(np.float32)
 
-
-# one loaded model per checkpoint path per Python worker (J5)
-_MODEL_CACHE: dict[str, NpFlatNER] = {}
-
-
-def _get_model(path: str) -> NpFlatNER:
-    if path not in _MODEL_CACHE:
-        _MODEL_CACHE[path] = NpFlatNER.load(path)
-    return _MODEL_CACHE[path]
-
-
-NP_TOKEN_SCHEMA = "conv_id string, turn_idx int, token_idx int, label string"
-
-
-def score_windows_np(windows: DataFrame, checkpoint_path: str) -> DataFrame:
-    """Packed windows → per-token labels from a real logits tensor.
-
-    One ``mapInPandas`` stage per the one-Python-pass rule: dynamic pad →
-    batched forward → first-subword gather via word_ids → keyed emission.
-    ``checkpoint_path`` must be reachable from every worker (local FS in
-    this sandbox; a distributed FS / ``SparkFiles.get`` path on a real
-    cluster)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _get_model(checkpoint_path)
-        labels = model.labels
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            padded = pad_batch(pdf["input_ids"].tolist())
-            logits = model.forward(padded)
-            out_conv: list[str] = []
-            out_turn: list[int] = []
-            out_tok: list[int] = []
-            out_label: list[str] = []
-            for row, (conv_id, word_ids, word_keys) in enumerate(
-                zip(pdf["conv_id"], pdf["word_ids"], pdf["word_keys"])
-            ):
-                if len(word_ids) == 0:
-                    continue
-                first_sub = np.asarray(list(word_ids), dtype=np.int64)
-                picks = logits[row, first_sub].argmax(axis=1)
-                for key, pick in zip(word_keys, picks):
-                    out_conv.append(conv_id)
-                    out_turn.append(key["turn_idx"])
-                    out_tok.append(key["token_idx"])
-                    out_label.append(labels[int(pick)])
-            yield pd.DataFrame(
-                {
-                    "conv_id": out_conv,
-                    "turn_idx": out_turn,
-                    "token_idx": out_tok,
-                    "label": out_label,
-                }
-            )
-
-    return windows.mapInPandas(fn, schema=NP_TOKEN_SCHEMA)
+    def label_batch(self, tokens: list[list[str]]) -> list[list[str]]:
+        """The ``Scorer`` contract, as ``HFTransformerScorer`` meets it:
+        each sentence framed as [CLS] + subwords + [SEP], one padded
+        forward pass per batch, argmax at each word's FIRST subword."""
+        tokenizer = ChunkSubwordTokenizer()
+        seqs: list[list[int]] = []
+        firsts: list[list[int]] = []
+        for words in tokens:
+            ids, first = [CLS_ID], []
+            for subs in tokenizer.encode_words(words):
+                first.append(len(ids))
+                ids.extend(subs)
+            ids.append(SEP_ID)
+            seqs.append(ids)
+            firsts.append(first)
+        logits = self.forward(pad_batch(seqs))
+        return [
+            [self.labels[int(p)] for p in logits[i, first].argmax(axis=1)]
+            for i, first in enumerate(firsts)
+        ]

@@ -7,8 +7,8 @@ each decoded mention plus its turn's role/tool context becomes SPO rows
 with ``(conv_id, turn_idx)`` provenance anchors.
 
 Everything here is built-in DataFrame ops (explode / slice / join) so
-Catalyst handles pushdown and AQE handles skew; the only UDF upstream is
-the decode automaton.
+Catalyst handles pushdown and AQE handles skew; the only Python upstream
+is the inference pass, which already decoded the spans.
 """
 
 from __future__ import annotations
@@ -16,25 +16,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nametag3_spark.operators.decode import decode_spans_udf
-
 
 def extract_mentions(labeled: DataFrame) -> DataFrame:
-    """labeled turns (tokens + stacked labels) → one row per mention.
+    """labeled turns (``annotate_turns`` output: tokens + decoded spans) →
+    one row per mention.
 
-    Decode is the shared automaton (W5); uniqueness and outermost-first
+    The spans come from the shared decode automaton (W5), run in the same
+    Python pass that scored the turn; uniqueness and outermost-first
     ordering are its guarantees (U3/W6), so no extra dropDuplicates here.
-    When the scorer stage already decoded spans in the same Python pass
-    (annotate_turns does), the existing column is used — decoding here is
-    the fallback for externally-labeled inputs.
     """
-    if "spans" in labeled.columns:
-        spans = labeled
-    else:
-        spans = labeled.withColumn("spans", decode_spans_udf(F.col("labels")))
     mention = F.explode("spans").alias("mention")
     return (
-        spans.select(
+        labeled.select(
             "conv_id",
             "turn_idx",
             "role",

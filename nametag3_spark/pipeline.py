@@ -6,14 +6,16 @@ Stages (each materialized as an atomic table snapshot):
 
 Snapshot layer: Iceberg when its runtime jars are on the classpath
 (``iceberg_available()``), else a parquet-directory snapshot store with the
-same contract — atomic publish (write to tmp dir + rename), a manifest
+same contract — atomic publish (write to a tmp dir, rename the old
+snapshot aside, rename the tmp dir in), a manifest
 carrying the stage's input fingerprint, and per-partition lineage/metrics
 rows. Resume: a stage whose manifest fingerprint matches its input's is
 skipped and its snapshot read back (north rule: "checkpoints per snapshot
 so any stage resumes without recompute").
 
 The fingerprint is a hash of (stage name, config, upstream fingerprint),
-NOT wall-clock, so reruns are byte-stable.
+NOT wall-clock, so reruns are byte-stable. A file-backed input is keyed
+on its content listing (``input_fingerprint``), not its path.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from pyspark.sql import functions as F
 
 from nametag3_spark.data.synth import gazetteer_df
 from nametag3_spark.operators.canonicalize import canonicalize_mentions
-from nametag3_spark.operators.infer import annotate_turns
+from nametag3_spark.operators.infer import annotate_turns, scorer_loader
 from nametag3_spark.operators.linking import link_mentions
 from nametag3_spark.operators.triples import emit_triples, extract_mentions
 from nametag3_spark.operators.validate import validate_turns
@@ -110,14 +112,44 @@ class SnapshotStore:
         }
         with open(os.path.join(tmp_dir, "_MANIFEST.json"), "w") as fh:
             json.dump(manifest, fh, indent=1)
+        # publish: rename the old snapshot aside, move the new one in,
+        # then drop the aside — a failure before the last step leaves
+        # the previous snapshot in place
+        aside = None
         if os.path.exists(final_dir):
-            shutil.rmtree(final_dir)
-        os.replace(tmp_dir, final_dir)  # atomic publish
+            aside = final_dir + ".old-" + uuid.uuid4().hex[:8]
+            os.replace(final_dir, aside)
+        try:
+            os.replace(tmp_dir, final_dir)
+        except OSError:
+            if aside is not None:
+                os.replace(aside, final_dir)
+            shutil.rmtree(tmp_dir, ignore_errors=True)
+            raise
+        if aside is not None:
+            shutil.rmtree(aside)
         return manifest
 
 
 def _fingerprint(*parts: str) -> str:
     return sha256("|".join(parts).encode()).hexdigest()[:16]
+
+
+def input_fingerprint(df: DataFrame) -> str:
+    """Content fingerprint of a file-backed input: the sorted
+    ``(file, length, modification time)`` of ``df.inputFiles()``, stat'ed
+    through Hadoop ``FileSystem`` (any scheme Spark reads). New data
+    written to the same path changes it, so resume never reuses
+    snapshots of the old data."""
+    spark = df.sparkSession
+    hadoop_fs = spark._jvm.org.apache.hadoop.fs  # noqa: SLF001
+    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
+    entries = []
+    for name in sorted(df.inputFiles()):
+        path = hadoop_fs.Path(name)
+        status = path.getFileSystem(conf).getFileStatus(path)
+        entries.append(f"{name}:{status.getLen()}:{status.getModificationTime()}")
+    return _fingerprint("files", *entries)
 
 
 @dataclass
@@ -133,6 +165,7 @@ class PipelineRun:
     stages_skipped: list[str] = field(default_factory=list)
 
     def __post_init__(self) -> None:
+        scorer_loader(self.scorer)  # a bad key raises here, before any write
         self.store = SnapshotStore(self.warehouse)
 
     def _stage(

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from nametag3_spark.data.synth import synth_transcripts
 from nametag3_spark.operators.encode import (
     ChunkSubwordTokenizer,
-    infer_windows,
     pack_conversations,
     pack_words,
     pad_batch,
@@ -163,20 +162,6 @@ def test_left_context_default_params_covers_all_tokens(spark):
         # word_ids point at the first subword of each of the turn's words
         for wid in r["word_ids"]:
             assert 1 <= wid < len(r["input_ids"]) - 1
-
-
-def test_infer_realignment_keys(spark):
-    """Every (conv, turn, token) gets exactly one label from inference."""
-    transcripts = synth_transcripts(spark, n_convs=6, avg_turns=5)
-    labeled = annotate_turns(transcripts)
-    windows = pack_conversations(labeled, max_len=128)
-    preds = infer_windows(windows)
-    n_tokens = labeled.select(F.sum(F.size("tokens"))).collect()[0][0]
-    assert preds.count() == n_tokens
-    assert (
-        preds.groupBy("conv_id", "turn_idx", "token_idx").count()
-        .where(F.col("count") > 1).count() == 0
-    )
 
 
 def test_pack_words_effective_budget_guard():

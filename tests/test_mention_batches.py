@@ -1,12 +1,14 @@
-"""The fused Arrow mentions pass (``infer._mention_batches``) driven
-without Spark: it must score each Arrow batch with ONE ``label_batch``
-call and emit exactly the rows a turn-by-turn oracle pass yields."""
+"""The two per-turn Arrow passes (``infer._mention_batches`` and
+``infer._labeled_batches``) driven without Spark: both share one kernel,
+so each must score an Arrow batch with ONE ``label_batch`` call and
+yield exactly the mentions a turn-by-turn oracle pass yields."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 import pyarrow as pa
+import pytest
 
 from nametag3_spark.functions.text import prep_tokens
 from nametag3_spark.operators import infer
@@ -58,19 +60,49 @@ def _oracle_rows(batches: list[pa.RecordBatch]) -> list[tuple]:
     return rows
 
 
-def test_one_scorer_call_per_arrow_batch(monkeypatch):
-    scorer = CountingScorer()
-    monkeypatch.setitem(infer._SCORER_CACHE, "counting", scorer)
-    batches = [_batch(b, texts) for b, texts in enumerate(TEXTS)]
-
-    out = list(infer._mention_batches("counting")(iter(batches)))
-
-    assert scorer.calls == len(batches) == 2
-    got = [
+def _mention_rows(out: list[pa.RecordBatch]) -> list[tuple]:
+    return [
         (r["conv_id"], r["turn_idx"], r["role"], r["tool"], r["ts"],
          r["label"], r["start_tok"], r["end_tok"], r["surface"])
         for batch in out for r in batch.to_pylist()
     ]
+
+
+def _labeled_rows(out: list[pa.RecordBatch]) -> list[tuple]:
+    oracle = infer.OracleGazetteerScorer()
+    rows = []
+    for batch in out:
+        assert batch.schema.names == [
+            *infer.TURN_COLUMNS, "tokens", "labels", "spans",
+        ]
+        for r in batch.to_pylist():
+            tokens = r["tokens"]
+            assert r["labels"] == oracle.label_batch([tokens])[0]
+            for sp in r["spans"]:
+                s, e = sp["start_tok"], sp["end_tok"]
+                rows.append((r["conv_id"], r["turn_idx"], r["role"], r["tool"],
+                             r["ts"], sp["label"], s, e,
+                             " ".join(tokens[s : e + 1])))
+    return rows
+
+
+PASSES = {
+    "mentions": (infer._mention_batches, _mention_rows),
+    "annotate": (infer._labeled_batches, _labeled_rows),
+}
+
+
+@pytest.mark.parametrize("pass_name", sorted(PASSES))
+def test_one_scorer_call_per_arrow_batch(monkeypatch, pass_name):
+    make_pass, rows_of = PASSES[pass_name]
+    scorer = CountingScorer()
+    monkeypatch.setitem(infer._SCORER_CACHE, "counting", scorer)
+    batches = [_batch(b, texts) for b, texts in enumerate(TEXTS)]
+
+    out = list(make_pass("counting")(iter(batches)))
+
+    assert scorer.calls == len(batches) == 2
     expected = _oracle_rows(batches)
     assert len(expected) >= 6
-    assert got == expected
+    assert rows_of(out) == expected
+

@@ -1,5 +1,6 @@
-"""NumPy flat-softmax inference path: checkpoint source (S5), dynamic
-padding (T6), logits→word realignment (J1), worker model singleton (J5)."""
+"""NumPy flat-softmax model as a ``Scorer``: checkpoint source (S5),
+dynamic padding (T6), logits→word realignment (J1) through
+``score_windows("np:<checkpoint>")``, worker model singleton (J5)."""
 
 from __future__ import annotations
 
@@ -8,13 +9,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from nametag3_spark.data.synth import synth_transcripts
-from nametag3_spark.operators.encode import BATCH_PAD, pad_batch
-from nametag3_spark.operators.infer import annotate_turns
-from nametag3_spark.operators.encode import pack_conversations
-from nametag3_spark.operators.np_model import (
-    NpFlatNER,
-    score_windows_np,
+from nametag3_spark.operators.encode import (
+    BATCH_PAD,
+    ChunkSubwordTokenizer,
+    pack_conversations,
+    pack_words,
+    pad_batch,
 )
+from nametag3_spark.operators.infer import annotate_turns, score_windows
+from nametag3_spark.operators.np_model import NpFlatNER
 
 
 def test_checkpoint_roundtrip(tmp_path):
@@ -39,6 +42,26 @@ def test_forward_masks_padding():
     assert np.any(logits[1, 0] != 0.0)
 
 
+def test_label_batch_equals_packed_window_gather():
+    """``label_batch`` frames each sentence on its own; gathering the
+    logits of ONE packed window holding both sentences at their words'
+    first subwords gives the same labels, because ``forward`` is
+    position-independent — so the window path's labels do not depend on
+    how turns were packed."""
+    model = NpFlatNER.init_random(seed=3)
+    sents = [["Alexandra", "visited", "Prague"], ["ok"], [], ["Tiny", "x"]]
+    words = [w for s in sents for w in s]
+    keys = [(i, j) for i, s in enumerate(sents) for j in range(len(s))]
+    (window,) = pack_words(ChunkSubwordTokenizer().encode_words(words), keys)
+    logits = model.forward(pad_batch([window["input_ids"]]))
+    gathered = [model.labels[int(p)] for p in logits[0, window["word_ids"]].argmax(axis=1)]
+
+    labels = model.label_batch(sents)
+    assert [len(x) for x in labels] == [len(s) for s in sents]
+    assert [lab for x in labels for lab in x] == gathered
+    assert len(set(gathered)) > 1
+
+
 def test_score_windows_np_covers_every_token(spark, tmp_path):
     model = NpFlatNER.init_random(seed=42)
     path = str(tmp_path / "m.npz")
@@ -47,7 +70,7 @@ def test_score_windows_np_covers_every_token(spark, tmp_path):
     t = synth_transcripts(spark, n_convs=10, avg_turns=6)
     labeled = annotate_turns(t)
     windows = pack_conversations(labeled, max_len=128)
-    scored = score_windows_np(windows, path)
+    scored = score_windows(windows, scorer="np:" + path)
 
     n_tokens = labeled.select(F.sum(F.size("tokens"))).collect()[0][0]
     assert scored.count() == n_tokens
@@ -74,8 +97,9 @@ def test_score_windows_np_partitioning_invariant(spark, tmp_path):
 
     t = synth_transcripts(spark, n_convs=6, avg_turns=5)
     windows = pack_conversations(annotate_turns(t), max_len=96)
-    a = {tuple(r) for r in score_windows_np(windows.repartition(1), path).collect()}
-    b = {tuple(r) for r in score_windows_np(windows.repartition(16), path).collect()}
+    key = "np:" + path
+    a = {tuple(r) for r in score_windows(windows.repartition(1), key).collect()}
+    b = {tuple(r) for r in score_windows(windows.repartition(16), key).collect()}
     assert a == b and len(a) > 0
 
 
@@ -83,4 +107,18 @@ def test_missing_checkpoint_raises(spark, tmp_path):
     t = synth_transcripts(spark, n_convs=2, avg_turns=3)
     windows = pack_conversations(annotate_turns(t))
     with pytest.raises(Exception):
-        score_windows_np(windows, str(tmp_path / "nope.npz")).collect()
+        score_windows(windows, "np:" + str(tmp_path / "nope.npz")).collect()
+
+
+def test_pipeline_np_model_counts_pinned(spark):
+    """The ``pipeline_np_model`` entry query (seed-42 checkpoint, sf0.01
+    synth sizes) keeps the per-label token counts it had when it scored
+    with a dedicated window pass, before the model moved behind
+    ``score_windows("np:…")``."""
+    from tests.test_driver_contract import _entry
+
+    rows = _entry().queries()["pipeline_np_model"](spark, "sf0.01").collect()
+    assert {r["label"]: r["n_tokens"] for r in rows} == {
+        "B-LOC": 1570, "B-ORG": 325, "B-PER": 1260,
+        "I-LOC": 18489, "I-ORG": 709, "O": 13288,
+    }

@@ -166,6 +166,93 @@ def test_pipeline_resume(spark, tmp_path):
     assert rows1 == rows2  # byte-identical output
 
 
+def test_bad_scorer_rejected_on_driver(spark, tmp_path):
+    """An unknown scorer key raises ValueError while the DataFrame or the
+    run is being built — before any Python worker starts, any model
+    loads or any snapshot is written."""
+    import pytest
+
+    from nametag3_spark.operators.encode import pack_conversations
+    from nametag3_spark.operators.infer import (
+        extract_mentions_flat,
+        score_windows,
+    )
+
+    wh = tmp_path / "wh"
+    with pytest.raises(ValueError, match="unknown scorer"):
+        PipelineRun(spark, warehouse=str(wh), scorer="bogus")
+    assert not wh.exists()
+
+    t = synth_transcripts(spark, n_convs=2, avg_turns=3)
+    windows = pack_conversations(annotate_turns(t))
+    for bad in ("bogus", "hf:", "np:", "oracle:x"):
+        with pytest.raises(ValueError, match="unknown scorer"):
+            annotate_turns(t, scorer=bad)
+        with pytest.raises(ValueError, match="unknown scorer"):
+            extract_mentions_flat(t, scorer=bad)
+        with pytest.raises(ValueError, match="unknown scorer"):
+            score_windows(windows, scorer=bad)
+
+
+def test_failed_publish_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
+    """Failure injection between writing a snapshot and publishing it:
+    the previous data and manifest stay readable, nothing is left aside."""
+    import os
+
+    import pytest
+
+    from nametag3_spark.pipeline import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "wh"))
+    store.write(spark.range(3), "stage", "fp-old")
+
+    real_replace = os.replace
+
+    def failing_replace(src, dst):
+        if ".tmp-" in str(src):
+            raise OSError("injected publish failure")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError, match="injected"):
+        store.write(spark.range(5), "stage", "fp-new")
+
+    assert store.manifest("stage")["fingerprint"] == "fp-old"
+    assert sorted(r.id for r in store.read(spark, "stage").collect()) == [0, 1, 2]
+    assert os.listdir(tmp_path / "wh") == ["stage"]
+
+    monkeypatch.setattr(os, "replace", real_replace)
+    store.write(spark.range(5), "stage", "fp-new")
+    assert store.manifest("stage")["fingerprint"] == "fp-new"
+    assert store.read(spark, "stage").count() == 5
+    assert os.listdir(tmp_path / "wh") == ["stage"]
+
+
+def test_changed_input_at_same_path_reruns_stages(spark, tmp_path):
+    """The input fingerprint follows the files, not the path: new data
+    written over the same path re-runs every stage instead of resuming
+    the old snapshots."""
+    from nametag3_spark.pipeline import input_fingerprint
+
+    src, wh = str(tmp_path / "turns"), str(tmp_path / "wh")
+    synth_transcripts(spark, n_convs=2, avg_turns=3).write.parquet(src)
+    first = spark.read.parquet(src)
+    fp = input_fingerprint(first)
+    assert input_fingerprint(spark.read.parquet(src)) == fp  # stable
+    run1 = PipelineRun(spark, warehouse=wh, input_fingerprint=fp)
+    n1 = run1.run(first).count()
+    assert len(run1.stages_run) == 6
+
+    synth_transcripts(spark, n_convs=4, avg_turns=3).write.mode("overwrite").parquet(src)
+    second = spark.read.parquet(src)
+    fp2 = input_fingerprint(second)
+    assert fp2 != fp
+    run2 = PipelineRun(spark, warehouse=wh, input_fingerprint=fp2)
+    n2 = run2.run(second).count()
+    assert len(run2.stages_run) == 6 and not run2.stages_skipped
+    assert n2 > n1
+
+
 def test_window_path_equals_turn_path(spark):
     """The packed-window inference path (pack → score_windows → realign →
     decode) must emit exactly the mentions the per-turn path emits —
