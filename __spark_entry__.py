@@ -21,6 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nametag3_spark.session import local_frame
+
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
@@ -331,8 +333,10 @@ def q_label_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_vocab_unk_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7: frozen-vocab lookup with <unk> fallback via broadcast left join."""
     ev = _read(spark, sf_dir, "events")
-    vocab = spark.createDataFrame(
-        [("view", 1), ("click", 2), ("signup", 3)], "event_type string, label_id int"
+    vocab = local_frame(
+        spark,
+        [("view", 1), ("click", 2), ("signup", 3)],
+        "event_type string, label_id int",
     )
     return (
         ev.join(F.broadcast(vocab), "event_type", "left")

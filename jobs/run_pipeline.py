@@ -5,7 +5,7 @@
         --warehouse /path/to/warehouse --scorer oracle [--no-fuzzy]
 
 Each stage publishes an atomic snapshot with a fingerprint manifest and
-per-partition lineage rows; rerunning resumes from the last consistent
+per-task lineage rows; rerunning resumes from the last consistent
 snapshot (north rule). Build the zip with:
 
     cd /root/repo && zip -qr nametag3_spark.zip nametag3_spark

@@ -14,7 +14,7 @@ idiomatic Spark pipeline:
       → mentions → (subj, pred, obj) triples            [DataFrame ops]
       → entity linking (broadcast gazetteer + MinHash-LSH blocking)
       → canonicalization (iterative connected components)
-      → SPO tables with per-partition lineage/metrics, snapshot-resumable.
+      → SPO tables with per-task lineage rows, snapshot-resumable.
 
 Everything relational (joins, aggregations, eval metrics, sampling,
 dedup, similarity) stays in built-in pyspark.sql functions so Catalyst

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nametag3_spark.session import local_frame
+
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
@@ -308,6 +310,8 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
     for eid, etype, aliases in GAZETTEER:
         for toks, _nested in aliases:
             rows.append((eid, " ".join(toks), etype, len(toks)))
-    return spark.createDataFrame(
-        rows, "entity_id string, alias string, entity_type string, alias_ntok int"
+    return local_frame(
+        spark,
+        rows,
+        "entity_id string, alias string, entity_type string, alias_ntok int",
     ).withColumn("alias_norm", F.lower(F.col("alias")))

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nametag3_spark.session import local_frame
+
 
 DRIVER_CC_THRESHOLD = 1_000_000
 # broadcast the surface→canonical map only when the deduped edge set was
@@ -89,13 +91,11 @@ def _connected_components_sized(
     # fit, finish on the driver (union-find), else go distributed
     head = sym.limit(driver_threshold + 1).collect()
     if not head:
-        return spark.createDataFrame([], "node string, component string"), 0
+        return local_frame(spark, [], "node string, component string"), 0
     if len(head) <= driver_threshold:
         mapping = _union_find([(r["a"], r["b"]) for r in head])
         return (
-            spark.createDataFrame(
-                list(mapping.items()), "node string, component string"
-            ),
+            local_frame(spark, mapping.items(), "node string, component string"),
             len(head),
         )
     sym = sym.localCheckpoint(eager=True)
@@ -251,10 +251,13 @@ def canonicalize_mentions(
         )
     )
     if n_edges is not None and n_edges <= BROADCAST_EDGE_LIMIT:
-        # driver-CC path proved the graph tiny, but its createDataFrame
-        # output is a LocalRelation without stats — Catalyst would pick
-        # SortMergeJoin; hint the broadcast explicitly (guarded by the
-        # same edge bound as the final map join)
+        # driver-CC path proved the graph tiny. Its local_frame output is
+        # a LocalRelation with real size stats, so Catalyst often picks
+        # the broadcast unaided; the hint stays so the choice does not
+        # hang on autoBroadcastJoinThreshold (set to -1, or below the
+        # map's estimated size after the aggregate, it would plan a
+        # SortMergeJoin). Guarded by the same edge bound as the final
+        # map join.
         per_component = F.broadcast(per_component)
     canon = per_component.join(components, "component").select(
         "node",

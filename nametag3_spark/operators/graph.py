@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nametag3_spark.session import local_frame
+
 # Persisted adjacency/degree handles; same ownership contract as
 # dedup._PERSISTED — callers release after the consuming action.
 _PERSISTED: list[DataFrame] = []
@@ -119,7 +121,7 @@ def pagerank(
     deg = _persist(sym.groupBy("src").agg(F.sum("w").alias("strength")))
     n = deg.count()  # bounded driver scalar: one aggregate, no row pull
     if n == 0:
-        return edges.sparkSession.createDataFrame([], "node string, pagerank double")
+        return local_frame(edges.sparkSession, [], "node string, pagerank double")
     ranks = deg.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("rank"))
     contrib_base = sym.join(deg, on="src")  # (src, dst, w, strength), cached parents
     for _ in range(iters):
@@ -298,8 +300,8 @@ def khop_neighbors(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     )
     spark = edges.sparkSession
-    reached = spark.createDataFrame(
-        [(s, s, 0) for s in sources], "source string, node string, hops int"
+    reached = local_frame(
+        spark, [(s, s, 0) for s in sources], "source string, node string, hops int"
     )
     frontier = reached
     for hop in range(1, k + 1):

@@ -16,6 +16,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nametag3_spark.session import local_frame
+
 
 def corpus_weights(
     df: DataFrame,
@@ -153,8 +155,10 @@ def negative_triples(
     )
     n_vocab = vocab.count()  # bounded scalar: |entities|, not |triples|
     if n_vocab < 2:
-        return pos.sparkSession.createDataFrame(
-            [], f"{subj_col} long, {pred_col} long, {obj_col} long, neg_rank int"
+        return local_frame(
+            pos.sparkSession,
+            [],
+            f"{subj_col} long, {pred_col} long, {obj_col} long, neg_rank int",
         )
     j = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("j")
     drawn = pos.select("s", "p", "o", j).withColumn(

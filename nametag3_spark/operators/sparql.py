@@ -169,6 +169,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from nametag3_spark.session import local_frame
+
 
 class SparqlSyntaxError(ValueError):
     pass
@@ -1243,8 +1245,8 @@ def _common_kwargs(
     for vs, rows in spec.get("values_rows") or []:
         # multi-var VALUES: an inline binding table joined like a leg
         legs.append(
-            triples.sparkSession.createDataFrame(
-                rows, ", ".join(f"{v} string" for v in vs)
+            local_frame(
+                triples.sparkSession, rows, ", ".join(f"{v} string" for v in vs)
             )
         )
     if compose_union and spec.get("union") is not None:

@@ -8,10 +8,11 @@ Snapshot layer: Iceberg when its runtime jars are on the classpath
 (``iceberg_available()``), else a parquet-directory snapshot store with the
 same contract — atomic publish (write to a tmp dir, rename the old
 snapshot aside, rename the tmp dir in), a manifest
-carrying the stage's input fingerprint, and per-partition lineage/metrics
-rows. Resume: a stage whose manifest fingerprint matches its input's is
-skipped and its snapshot read back (north rule: "checkpoints per snapshot
-so any stage resumes without recompute").
+carrying the stage's input fingerprint, and lineage rows (rows per write
+task, read from the written part files' parquet footers). Resume: a
+stage whose manifest fingerprint matches its input's is skipped and its
+snapshot read back (north rule: "checkpoints per snapshot so any stage
+resumes without recompute").
 
 The fingerprint is a hash of (stage name, config, upstream fingerprint),
 NOT wall-clock, so reruns are byte-stable. A file-backed input is keyed
@@ -28,7 +29,6 @@ from dataclasses import dataclass, field
 from hashlib import sha256
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from nametag3_spark.data.synth import gazetteer_df
 from nametag3_spark.operators.canonicalize import canonicalize_mentions
@@ -51,6 +51,23 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
+
+
+def _written_rows(data_dir: str) -> dict[int, int]:
+    """Rows per write task of a parquet directory, from the part files'
+    footers: ``part-<task>-…`` files under ``data_dir`` (and its
+    ``partitionBy`` subdirectories), summed per task number. Reads
+    footers only, so lineage costs no Spark job."""
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for dirpath, _dirs, files in os.walk(data_dir):
+        for f in files:
+            if f.startswith("part-") and f.endswith(".parquet"):
+                task = int(f.split("-", 2)[1])
+                n = pq.read_metadata(os.path.join(dirpath, f)).num_rows
+                rows[task] = rows.get(task, 0) + n
+    return rows
 
 
 @dataclass
@@ -83,8 +100,10 @@ class SnapshotStore:
         fingerprint: str,
         partition_by: list[str] | None = None,
     ) -> dict:
-        """Materialize + publish atomically; returns the manifest (with
-        per-partition lineage/metrics rows)."""
+        """Materialize + publish atomically; returns the manifest: the
+        row count and the rows each write task wrote (``partition_id``
+        is the task number in the part file name), read from the
+        footers of the files just written."""
         final_dir = self._dir(name)
         tmp_dir = final_dir + ".tmp-" + uuid.uuid4().hex[:8]
         data_dir = os.path.join(tmp_dir, "data")
@@ -93,21 +112,14 @@ class SnapshotStore:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
 
-        spark = df.sparkSession
-        written = spark.read.parquet(data_dir)
-        # lineage/metrics: rows per physical task partition (A4 pattern)
-        part_metrics = (
-            written.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
+        partitions = _written_rows(data_dir)
         manifest = {
             "stage": name,
             "fingerprint": fingerprint,
-            "row_count": int(sum(r["rows"] for r in part_metrics)),
+            "row_count": sum(partitions.values()),
             "partitions": [
-                {"partition_id": r["partition_id"], "rows": int(r["rows"])}
-                for r in sorted(part_metrics, key=lambda r: r["partition_id"])
+                {"partition_id": task, "rows": rows}
+                for task, rows in sorted(partitions.items())
             ],
         }
         with open(os.path.join(tmp_dir, "_MANIFEST.json"), "w") as fh:

@@ -47,6 +47,7 @@ from nametag3_spark.functions.text import (
     tokenize_text,
 )
 from nametag3_spark.operators.decode import decode_spans
+from nametag3_spark.session import local_frame
 
 MAX_REQUEST_SIZE = 4096 * 1024  # reference --max_request_size default
 ACK_URL = "https://ufal.mff.cuni.cz/nametag/3#acknowledgements"
@@ -97,7 +98,8 @@ class ModelRegistry:
                 )
 
     def alias_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             self._rows,
             "alias string, canonical string, scorer string, "
             "tagset string, acknowledgements string",

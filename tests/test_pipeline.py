@@ -473,6 +473,50 @@ def test_iceberg_waiver_and_store_contract(spark, tmp_path):
     assert store.read(spark, "stage1").count() == 100
 
 
+def test_manifest_lineage_counts_the_written_part_files(spark, tmp_path):
+    """Lineage is read from what was written: ``row_count`` equals the
+    summed per-task rows and the footer rows of the published part
+    files; a ``partitionBy`` write sums each task's files."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from nametag3_spark.pipeline import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "wh"))
+    df = spark.range(0, 100, 1, 4).withColumn("k", F.col("id") % 3)
+    for name, by in (("flat", None), ("parted", ["k"])):
+        manifest = store.write(df, name, "fp", partition_by=by)
+        files = glob.glob(
+            str(tmp_path / "wh" / name / "data" / "**" / "part-*.parquet"),
+            recursive=True,
+        )
+        footer_rows = sum(pq.read_metadata(f).num_rows for f in files)
+        assert manifest["row_count"] == footer_rows == 100
+        assert manifest["partitions"] == [
+            {"partition_id": task, "rows": 25} for task in range(4)
+        ]
+        assert store.read(spark, name).count() == 100
+
+
+def test_shuffle_free_stage_write_runs_one_job(spark, tmp_path):
+    """A snapshot write of a shuffle-free stage is one Spark job: the
+    manifest needs no second pass over the data."""
+    from nametag3_spark.pipeline import SnapshotStore
+
+    sc = spark.sparkContext
+    store = SnapshotStore(str(tmp_path / "wh"))
+    df = spark.range(0, 1000, 1, 4).withColumn("y", F.col("id") * 2)
+    sc.setJobGroup("snapshot-write-jobs", "one SnapshotStore.write")
+    try:
+        manifest = store.write(df, "stage", "fp")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert manifest["row_count"] == 1000
+    assert len(sc.statusTracker().getJobIdsForGroup("snapshot-write-jobs")) == 1
+
+
 def test_merge_latest_upsert_semantics(spark):
     """merge_latest: latest order wins per key; on an exact order tie the
     UPDATES side beats existing (MERGE INTO update semantics); keys

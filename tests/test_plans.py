@@ -53,6 +53,30 @@ def test_gazetteer_link_is_broadcast_with_one_python_stage(spark):
     assert p.count(") MapInPandas") == 1
     assert p.count(") MapInArrow") == 1
     assert "ArrowEvalPython" not in p  # no extra pandas-UDF stage
+    # the Python-node counts cannot see a PythonRDD source: a gazetteer
+    # built by createDataFrame(list) scans as ExistingRDD and starts
+    # Python tasks on every execution
+    assert "ExistingRDD" not in p
+
+
+def test_driver_side_tables_scan_as_local_relations(spark):
+    """The gazetteer, the driver-CC map and the serving alias table are
+    Arrow LocalRelations (LocalTableScan), never an RDD of pickled rows
+    (Scan ExistingRDD) that re-runs a Python pass on every plan scan."""
+    from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
+    from nametag3_spark.operators.canonicalize import canonicalize_mentions
+    from nametag3_spark.operators.infer import extract_mentions_flat
+    from nametag3_spark.operators.linking import link_mentions
+    from nametag3_spark.serving import ModelRegistry
+
+    mentions = extract_mentions_flat(synth_transcripts(spark, n_convs=4, avg_turns=3))
+    linked = link_mentions(mentions, gazetteer_df(spark), fuzzy=True)
+    reg = ModelRegistry()
+    reg.register("nametag3-multilingual-250203", scorer="oracle")
+    for df in (linked, canonicalize_mentions(linked), reg.alias_df(spark)):
+        p = plan_of(df)
+        assert "LocalTableScan" in p
+        assert "ExistingRDD" not in p
 
 
 def test_partial_aggregation_present(spark):
