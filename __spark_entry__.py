@@ -41,18 +41,13 @@ def _synth_sizes(sf_dir: str) -> tuple[int, int]:
 # ---------------------------------------------------------------------------
 
 def _synth_triples(spark: SparkSession, n_convs: int, avg_turns: int) -> DataFrame:
-    """Synthetic transcripts → mentions → linked → canonical → SPO triples
+    """Synthetic transcripts → ``pipeline.kg_dataflow`` → SPO triples
     (oracle scorer, exact linking)."""
-    from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
-    from nametag3_spark.operators.canonicalize import canonicalize_mentions
-    from nametag3_spark.operators.infer import annotate_turns
-    from nametag3_spark.operators.linking import link_mentions
-    from nametag3_spark.operators.triples import emit_triples, extract_mentions
+    from nametag3_spark.data.synth import synth_transcripts
+    from nametag3_spark.pipeline import kg_dataflow
 
     transcripts = synth_transcripts(spark, n_convs=n_convs, avg_turns=avg_turns)
-    mentions = extract_mentions(annotate_turns(transcripts, scorer="oracle"))
-    linked = link_mentions(mentions, gazetteer_df(spark), fuzzy=False)
-    return emit_triples(canonicalize_mentions(linked))
+    return kg_dataflow(transcripts, fuzzy=False)["triples"]
 
 
 def entry(spark: SparkSession) -> DataFrame:

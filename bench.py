@@ -1,4 +1,4 @@
-"""Benchmark harness: headline queries plus the flat transcripts→triples
+"""Benchmark harness: headline queries plus the transcripts→triples
 pipeline at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], all in one
 Spark session. The last stdout line is ONE JSON object:
 
@@ -8,8 +8,8 @@ Spark session. The last stdout line is ONE JSON object:
 
 ``value`` is the sum of ``queries``. Each entry is timed to the noop
 sink after a table and Python-worker warmup; ``pipeline_triples`` times
-``streaming.stream.triples_micro_batch`` (no catalog: extract → exact
-link → canonicalize → emit) over a cached synthetic input.
+``pipeline.kg_dataflow`` (exact linking, no catalog, ``mentions``
+persisted as each stream epoch does) over a cached synthetic input.
 
 Usage:
     python bench.py [--queries a,b,pipeline_triples] [--reps N]
@@ -178,8 +178,8 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from nametag3_spark.data.synth import synth_transcripts
+    from nametag3_spark.pipeline import kg_dataflow, persisted_mentions
     from nametag3_spark.session import get_spark
-    from nametag3_spark.streaming.stream import triples_micro_batch
 
     spark = get_spark(app_name="bench", master=f"local[{CPUS}]",
                       shuffle_partitions=CPUS)
@@ -222,17 +222,15 @@ def main() -> None:
         turns = transcripts.count()  # materialize input outside the timing
         # warmup on a small slice, spread so EVERY worker slot pays its
         # spawn+import cost and the codegen paths JIT before the timer
-        triples, warm, _ = triples_micro_batch(
-            spark, transcripts.limit(4000).repartition(CPUS * 2))
-        noop(triples)
-        warm.unpersist()
+        with persisted_mentions() as stage:
+            noop(kg_dataflow(transcripts.limit(4000).repartition(CPUS * 2),
+                             fuzzy=False, stage=stage)["triples"])
 
-    def build(name: str):
-        """(DataFrame, mentions to unpersist after it is consumed)."""
+    def build(name: str, stage):
+        """The entry's DataFrame; ``stage`` is the pipeline's stage hook."""
         if name == PIPELINE:
-            triples, mentions, _ = triples_micro_batch(spark, transcripts)
-            return triples, mentions
-        return qs[name](spark, sf_dir), None
+            return kg_dataflow(transcripts, fuzzy=False, stage=stage)["triples"]
+        return qs[name](spark, sf_dir)
 
     if args.plans_dir:
         os.makedirs(args.plans_dir, exist_ok=True)
@@ -240,20 +238,17 @@ def main() -> None:
     for name in names:
         shuffle_width(name)
         if args.plans_dir:
-            df, mentions = build(name)
-            _write_plan(spark, df, os.path.join(args.plans_dir, f"{name}.txt"))
-            if mentions is not None:
-                mentions.unpersist()
+            with persisted_mentions() as stage:
+                _write_plan(spark, build(name, stage),
+                            os.path.join(args.plans_dir, f"{name}.txt"))
         times = []
         for _ in range(max(args.reps, 1)):
             spark.sparkContext.setJobDescription(f"bench:{name}")
-            start = time.perf_counter()
-            df, mentions = build(name)
-            noop(df)
-            times.append(round(time.perf_counter() - start, 3))
+            with persisted_mentions() as stage:
+                start = time.perf_counter()
+                noop(build(name, stage))
+                times.append(round(time.perf_counter() - start, 3))
             spark.sparkContext.setJobDescription(None)
-            if mentions is not None:
-                mentions.unpersist()
         timings[name] = min(times)
         print(json.dumps({"query": name, "times": times}), file=sys.stderr,
               flush=True)

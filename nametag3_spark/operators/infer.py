@@ -7,11 +7,11 @@ nametag3_model.py:963-1042) re-expressed as ONE inference core:
   (the ``Scorer`` protocol); ``_get_scorer`` is the only registry and
   model cache, keyed ``"oracle"``, ``"hf:<checkpoint_dir>"`` or
   ``"np:<checkpoint.npz>"``;
-* one per-Arrow-batch kernel, ``_score_batch`` (tokenize → one
-  ``label_batch`` call → decode), serves both per-turn ``mapInArrow``
-  passes: ``annotate_turns`` (labeled turns with tokens, labels and
-  spans, the snapshot path) and ``extract_mentions_flat`` (flat mention
-  rows, the throughput path);
+* one per-turn ``mapInArrow`` pass, ``annotate_turns`` (tokenize → one
+  ``label_batch`` call per Arrow batch → decode), emits labeled turns
+  with tokens, labels and spans; ``triples.extract_mentions`` explodes
+  them into mention rows JVM-side (``extract_mentions_flat`` is that
+  composition);
 * ``score_windows`` is the model-scorer route over packed subword
   windows, behind the same protocol.
 
@@ -41,7 +41,6 @@ from __future__ import annotations
 
 from typing import Callable, Iterator, Protocol
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -49,6 +48,7 @@ from pyspark.sql import DataFrame
 from nametag3_spark.data.synth import GAZETTEER
 from nametag3_spark.functions.text import prep_tokens
 from nametag3_spark.operators.decode import decode_spans
+from nametag3_spark.operators.triples import extract_mentions
 
 LABELED_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -228,56 +228,46 @@ def _get_scorer(name: str) -> Scorer:
     return _SCORER_CACHE[name]
 
 
-def _score_batch(scorer: Scorer, batch):
-    """The per-turn inference kernel both Arrow passes share.
-
-    Tokenizes the batch's ``text`` column (S4 tokenization + P3
+def _labeled_batches(scorer_name: str):
+    """The per-turn inference kernel behind ``annotate_turns``, one Arrow
+    pass: tokenizes each batch's ``text`` column (S4 tokenization + P3
     NFC/truncate + P4 truecase), scores every turn with ONE
     ``label_batch`` call (a model scorer pays its per-call cost once per
-    batch, not per turn) and decodes each turn's stacks (in the same pass:
-    a second Python stage would cost a second Arrow round-trip). Returns
-    the token lists, the label stacks, the per-turn span counts and the
-    flat span columns ``(label, start_tok, end_tok)`` as Arrow arrays."""
-    token_lists = [
-        prep_tokens(t) if isinstance(t, str) and t else []
-        for t in batch.column("text").to_pylist()
-    ]
-    stacks = scorer.label_batch(token_lists)
-    counts = np.empty(len(token_lists), dtype=np.int64)
-    labels: list[str] = []
-    starts: list[int] = []
-    ends: list[int] = []
-    for i, turn_stacks in enumerate(stacks):
-        spans = decode_spans(turn_stacks)
-        counts[i] = len(spans)
-        for typ, s, e in spans:
-            labels.append(typ)
-            starts.append(s)
-            ends.append(e)
-    span_cols = [
-        pa.array(labels, type=pa.string()),
-        pa.array(starts, type=pa.int32()),
-        pa.array(ends, type=pa.int32()),
-    ]
-    return token_lists, stacks, counts, span_cols
-
-
-def _labeled_batches(scorer_name: str):
-    """Arrow pass behind ``annotate_turns``: the carried columns pass
-    through untouched, tokens and labels become list arrays, and the
-    decoded spans a list-of-struct array whose offsets are the per-turn
-    span counts."""
+    batch, not per turn) and decodes each turn's stacks in the same pass
+    (a second Python stage would cost a second Arrow round-trip). The
+    carried columns pass through untouched, tokens and labels become
+    list arrays, and the decoded spans a list-of-struct array."""
 
     def fn(batches):
         scorer = _get_scorer(scorer_name)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            tokens, stacks, counts, span_cols = _score_batch(scorer, batch)
-            offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+            tokens = [
+                prep_tokens(t) if isinstance(t, str) and t else []
+                for t in batch.column("text").to_pylist()
+            ]
+            stacks = scorer.label_batch(tokens)
+            offsets = [0]
+            labels: list[str] = []
+            starts: list[int] = []
+            ends: list[int] = []
+            for turn_stacks in stacks:
+                for typ, s, e in decode_spans(turn_stacks):
+                    labels.append(typ)
+                    starts.append(s)
+                    ends.append(e)
+                offsets.append(len(labels))
             spans = pa.ListArray.from_arrays(
-                pa.array(offsets),
-                pa.StructArray.from_arrays(span_cols, names=SPAN_FIELDS),
+                pa.array(offsets, type=pa.int32()),
+                pa.StructArray.from_arrays(
+                    [
+                        pa.array(labels, type=pa.string()),
+                        pa.array(starts, type=pa.int32()),
+                        pa.array(ends, type=pa.int32()),
+                    ],
+                    names=SPAN_FIELDS,
+                ),
             )
             yield pa.RecordBatch.from_arrays(
                 [batch.column(c) for c in TURN_COLUMNS]
@@ -299,77 +289,13 @@ def annotate_turns(transcripts: DataFrame, scorer: str = "oracle") -> DataFrame:
     return transcripts.mapInArrow(_labeled_batches(scorer), schema=LABELED_SCHEMA)
 
 
-MENTION_SCHEMA = (
-    "conv_id string, turn_idx int, role string, tool string, ts timestamp, "
-    "label string, start_tok int, end_tok int, surface string"
-)
-_MENTION_CARRIED = ("conv_id", "turn_idx", "role", "tool", "ts")
-
-
-def _mention_batches(scorer_name: str):
-    """Arrow-native fused pass: only ``text`` is materialized into Python
-    strings (the tokenizer needs them); every carried column replicates
-    per mention via zero-copy ``Array.take`` and the output batch is
-    built directly as Arrow — no pandas round-trip on either side
-    (guide §4.2: measured ~12% warm / ~35% cold over the pandas form on
-    the 1.1M-turn bench job, rows identical)."""
-
-    def fn(batches):
-        scorer = _get_scorer(scorer_name)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tokens, _stacks, counts, span_cols = _score_batch(scorer, batch)
-            rows = np.repeat(np.arange(batch.num_rows), counts)
-            surfaces = [
-                " ".join(tokens[r][s : e + 1])
-                for r, s, e in zip(
-                    rows.tolist(),
-                    span_cols[1].to_pylist(),
-                    span_cols[2].to_pylist(),
-                )
-            ]
-            idx = pa.array(rows)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c).take(idx) for c in _MENTION_CARRIED]
-                + span_cols
-                + [pa.array(surfaces, type=pa.string())],
-                names=[*_MENTION_CARRIED, *SPAN_FIELDS, "surface"],
-            )
-
-    return fn
-
-
 def extract_mentions_flat(
     transcripts: DataFrame, scorer: str = "oracle"
 ) -> DataFrame:
-    """Fused tokenize→score→decode→explode in ONE Python pass emitting
-    flat primitive columns — no array/struct columns cross the Arrow
-    boundary, which is ~10× cheaper per turn than shipping token/label/
-    span lists and exploding JVM-side. This is the throughput path; the
-    staged ``annotate_turns`` → ``extract_mentions`` path (which
-    materializes tokens/labels for snapshots and debugging) must produce
-    identical mention rows (tested).
-
-    An input NARROWER than the cluster's slots is first hash-repartitioned
-    on (conv_id, turn_idx): scoring is per-turn independent, so turn-level
-    hash partitioning neutralizes hot-conversation skew (a conversation
-    20× the average would otherwise pin one task per hot conv). An
-    already-wide input is left as is (round-6 measurement): there the
-    pre-Python shuffle of the full text column cost ~10-20% of the
-    pipeline wall while buying nothing — with hundreds of partitions a
-    hot conversation is confined to one partition among many, which
-    per-turn scoring tolerates."""
-    from pyspark.sql import functions as F
-
-    scorer_loader(scorer)
-    slots = transcripts.sparkSession.sparkContext.defaultParallelism
-    if transcripts.rdd.getNumPartitions() < slots:
-        transcripts = transcripts.repartition(
-            slots * 2, F.col("conv_id"), F.col("turn_idx")
-        )
-    out = transcripts.mapInArrow(_mention_batches(scorer), schema=MENTION_SCHEMA)
-    return out.withColumn("mention_norm", F.lower(F.col("surface")))
+    """transcripts → one row per mention: ``annotate_turns`` followed by
+    ``triples.extract_mentions``, the same mention rows the pipeline's
+    ``mentions`` stage holds."""
+    return extract_mentions(annotate_turns(transcripts, scorer=scorer))
 
 
 # --------------------------------------------------------------------------
@@ -509,9 +435,9 @@ def mentions_from_window_tokens(token_labels: DataFrame) -> DataFrame:
     """Realign (J1): per-token window labels → per-turn decoded mentions.
 
     The shuffle key is (conv_id, turn_idx); in-group order comes from the
-    carried token_idx — stable regardless of window/partition order. The
-    flagship throughput path stays the fused single-Python-pass
-    ``extract_mentions_flat``; this is the window-path equivalence proof.
+    carried token_idx — stable regardless of window/partition order. It
+    emits the mention rows the per-turn ``annotate_turns`` path emits
+    (tested): the window path's equivalence proof.
     """
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:

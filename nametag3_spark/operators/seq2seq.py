@@ -97,7 +97,7 @@ def seq2seq_roundtrip_mentions(labeled, sublabels: list[str]):
     W7 autoregressive loop → P9 control filter → W5 span decode), teacher-
     forced: per turn, the gold stacked labels linearize into the sublabel
     script (nametag3_dataset.py:517-526) and a scripted ``step_fn`` plays
-    the model; the decoded mentions must equal the flat path's exactly
+    the model; the decoded mentions must equal the per-turn path's exactly
     (asserted by pytest and by row-count parity with ``pipeline_mentions``
     in the driver ledger). Swapping the scripted step_fn for an LSTM cell
     is the only change the production head needs.

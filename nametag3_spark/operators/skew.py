@@ -22,9 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def spread_if_narrow(df: DataFrame, key: str, factor: int = 1) -> DataFrame:
-    """Repartition by a HIGH-CARDINALITY key iff the input has fewer
-    partitions than the cluster has slots.
+def spread_if_narrow(df: DataFrame, *keys: str, factor: int = 1) -> DataFrame:
+    """Repartition by HIGH-CARDINALITY ``keys`` into ``factor`` × slots
+    partitions iff the input has fewer partitions than the cluster has
+    slots.
 
     A single-file, single-row-group parquet table scans as ONE task no
     matter what ``maxPartitionBytes`` says, so every expression chain and
@@ -36,7 +37,7 @@ def spread_if_narrow(df: DataFrame, key: str, factor: int = 1) -> DataFrame:
     key, never ``rand()``)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
-        return df.repartition(target * factor, key)
+        return df.repartition(target * factor, *keys)
     return df
 
 

@@ -1,8 +1,11 @@
 """End-to-end KG-construction pipeline with snapshot resume + lineage.
 
-Stages (each materialized as an atomic table snapshot):
+``kg_dataflow`` is the one definition of the dataflow
 
     transcripts → labeled → mentions → linked → canonical → triples
+
+and ``PipelineRun`` runs it with each stage materialized as an atomic
+table snapshot (after a ``rejected`` quarantine snapshot).
 
 Snapshot layer: Iceberg when its runtime jars are on the classpath
 (``iceberg_available()``), else a parquet-directory snapshot store with the
@@ -15,8 +18,11 @@ snapshot read back (north rule: "checkpoints per snapshot so any stage
 resumes without recompute").
 
 The fingerprint is a hash of (stage name, config, upstream fingerprint),
-NOT wall-clock, so reruns are byte-stable. A file-backed input is keyed
-on its content listing (``input_fingerprint``), not its path.
+NOT wall-clock, so reruns are byte-stable. The first upstream is the
+input's fingerprint plus a digest of the package sources
+(``code_digest``), so a code change re-runs every stage. A file-backed
+input is keyed on its content listing (``input_fingerprint``), not its
+path.
 """
 
 from __future__ import annotations
@@ -25,15 +31,20 @@ import json
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import cache
 from hashlib import sha256
+from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from nametag3_spark.data.synth import gazetteer_df
-from nametag3_spark.operators.canonicalize import canonicalize_mentions
+from nametag3_spark.operators.canonicalize import canonicalize_incremental
 from nametag3_spark.operators.infer import annotate_turns, scorer_loader
 from nametag3_spark.operators.linking import link_mentions
+from nametag3_spark.operators.skew import spread_if_narrow
 from nametag3_spark.operators.triples import emit_triples, extract_mentions
 from nametag3_spark.operators.validate import validate_turns
 
@@ -147,6 +158,20 @@ def _fingerprint(*parts: str) -> str:
     return sha256("|".join(parts).encode()).hexdigest()[:16]
 
 
+@cache
+def code_digest() -> str:
+    """Digest of this package's Python sources (sorted relative paths and
+    file bytes), computed once per process. It is part of the input
+    fingerprint, so snapshots written by other code re-run instead of
+    being reused."""
+    root = Path(__file__).parent
+    h = sha256()
+    for path in sorted(root.rglob("*.py")):
+        h.update(path.relative_to(root).as_posix().encode() + b"\0")
+        h.update(path.read_bytes() + b"\0")
+    return h.hexdigest()[:16]
+
+
 def input_fingerprint(df: DataFrame) -> str:
     """Content fingerprint of a file-backed input: the sorted
     ``(file, length, modification time)`` of ``df.inputFiles()``, stat'ed
@@ -164,9 +189,84 @@ def input_fingerprint(df: DataFrame) -> str:
     return _fingerprint("files", *entries)
 
 
+def build_now(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+    """The default ``kg_dataflow`` stage hook: build the frame, keep nothing."""
+    return build()
+
+
+@contextmanager
+def persisted_mentions():
+    """A ``kg_dataflow`` stage hook that persists ``mentions`` (linking
+    and canonicalization both scan it) until the block exits."""
+    held: list[DataFrame] = []
+
+    def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        df = build()
+        if name == "mentions":
+            df = df.persist()
+            held.append(df)
+        return df
+
+    try:
+        yield stage
+    finally:
+        for df in held:
+            df.unpersist()
+
+
+def kg_dataflow(
+    turns: DataFrame,
+    *,
+    scorer: str = "oracle",
+    fuzzy: bool = True,
+    catalog: DataFrame | None = None,
+    stage: Callable[[str, Callable[[], DataFrame]], DataFrame] = build_now,
+) -> dict[str, DataFrame | None]:
+    """The one transcripts→triples dataflow: the batch run, the stream,
+    the bench and the driver entry all call it.
+
+    Returns the frames ``labeled``, ``mentions``, ``linked``,
+    ``canonical``, ``triples`` and ``catalog`` (the surface→canonical
+    rows minted beyond ``catalog``; None when the hook did not build the
+    canonical stage). Each stage goes through ``stage(name, build)``,
+    ``build`` a zero-argument thunk, so a hook that resumes a snapshot
+    never builds it (no linking ``approx_count_distinct``, no CC
+    ``collect``).
+
+    A narrow input is hash-spread on (conv_id, turn_idx) before scoring:
+    scoring is per turn, so this neutralizes hot-conversation skew."""
+    spark = turns.sparkSession
+    labeled = stage(
+        "labeled",
+        lambda: annotate_turns(
+            spread_if_narrow(turns, "conv_id", "turn_idx", factor=2), scorer=scorer
+        ),
+    )
+    mentions = stage("mentions", lambda: extract_mentions(labeled))
+    linked = stage(
+        "linked", lambda: link_mentions(mentions, gazetteer_df(spark), fuzzy=fuzzy)
+    )
+    minted: dict[str, DataFrame] = {}
+
+    def canonicalize() -> DataFrame:
+        canonical, minted["catalog"] = canonicalize_incremental(linked, catalog)
+        return canonical
+
+    canonical = stage("canonical", canonicalize)
+    triples = stage("triples", lambda: emit_triples(canonical))
+    return {
+        "labeled": labeled,
+        "mentions": mentions,
+        "linked": linked,
+        "canonical": canonical,
+        "triples": triples,
+        "catalog": minted.get("catalog"),
+    }
+
+
 @dataclass
 class PipelineRun:
-    """Orchestrates the staged run; every stage snapshot-resumable."""
+    """Runs ``kg_dataflow`` with every stage snapshot-resumable."""
 
     spark: SparkSession
     warehouse: str
@@ -180,49 +280,29 @@ class PipelineRun:
         scorer_loader(self.scorer)  # a bad key raises here, before any write
         self.store = SnapshotStore(self.warehouse)
 
-    def _stage(
-        self,
-        name: str,
-        upstream_fp: str,
-        build,
-        partition_by: list[str] | None = None,
-    ) -> tuple[DataFrame, str]:
-        fp = _fingerprint(name, self.scorer, str(self.fuzzy_linking), upstream_fp)
-        if self.store.is_current(name, fp):
-            self.stages_skipped.append(name)
-            return self.store.read(self.spark, name), fp
-        df = build()
-        self.store.write(df, name, fp, partition_by=partition_by)
-        self.stages_run.append(name)
-        return self.store.read(self.spark, name), fp
-
     def run(self, transcripts: DataFrame) -> DataFrame:
         """transcripts → triples table; returns the triples DataFrame.
 
         Invalid turns (oversize / null keys, P10) are quarantined into
         their own ``rejected`` snapshot — never silently dropped — and
         the accepted set flows on."""
-        fp0 = _fingerprint("input", self.input_fingerprint)
+        upstream = _fingerprint("input", self.input_fingerprint, code_digest())
+
+        def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+            nonlocal upstream
+            upstream = _fingerprint(
+                name, self.scorer, str(self.fuzzy_linking), upstream
+            )
+            if self.store.is_current(name, upstream):
+                self.stages_skipped.append(name)
+            else:
+                self.store.write(build(), name, upstream)
+                self.stages_run.append(name)
+            return self.store.read(self.spark, name)
 
         accepted, rejected = validate_turns(transcripts)
-        _rej, fp0r = self._stage("rejected", fp0, lambda: rejected)
-
-        labeled, fp1 = self._stage(
-            "labeled", fp0r, lambda: annotate_turns(accepted, scorer=self.scorer)
+        stage("rejected", lambda: rejected)
+        frames = kg_dataflow(
+            accepted, scorer=self.scorer, fuzzy=self.fuzzy_linking, stage=stage
         )
-        mentions, fp2 = self._stage(
-            "mentions", fp1, lambda: extract_mentions(labeled)
-        )
-        gaz = gazetteer_df(self.spark)
-        linked, fp3 = self._stage(
-            "linked",
-            fp2,
-            lambda: link_mentions(mentions, gaz, fuzzy=self.fuzzy_linking),
-        )
-        canonical, fp4 = self._stage(
-            "canonical", fp3, lambda: canonicalize_mentions(linked)
-        )
-        triples, _fp5 = self._stage(
-            "triples", fp4, lambda: emit_triples(canonical)
-        )
-        return triples
+        return frames["triples"]

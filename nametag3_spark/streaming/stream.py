@@ -4,8 +4,9 @@ The reference has no true streaming — its closest behaviors are
 incremental batch yielding (yield_predicted_batches,
 nametag3_model.py:856-927) and the HTTP server streaming response chunks
 (nametag3_server.py:668-676). The faithful Spark mapping is
-``readStream`` on the transcripts table → ``foreachBatch`` reusing the
-IDENTICAL batch dataflow per micro-batch → epoch-partitioned sink.
+``readStream`` on the transcripts table → ``foreachBatch`` calling the
+batch dataflow's one definition, ``pipeline.kg_dataflow``, per
+micro-batch → epoch-partitioned sink.
 Exactly-once comes from the streaming checkpoint PLUS an idempotent
 write: each micro-batch overwrites its own ``epoch_id=N`` partition
 (dynamic partition overwrite), so a batch replayed after a failure
@@ -24,11 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from nametag3_spark.data.synth import TRANSCRIPT_SCHEMA, gazetteer_df
-from nametag3_spark.operators.canonicalize import canonicalize_mentions
-from nametag3_spark.operators.infer import extract_mentions_flat
-from nametag3_spark.operators.linking import link_mentions
-from nametag3_spark.operators.triples import emit_triples
+from nametag3_spark.data.synth import TRANSCRIPT_SCHEMA
+from nametag3_spark.pipeline import kg_dataflow, persisted_mentions
 
 
 # The only AnalysisException shapes that mean "empty epoch store": the
@@ -91,26 +89,6 @@ def read_transcript_stream(
     )
 
 
-def triples_micro_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    catalog: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """One micro-batch through the same operators as the batch job.
-
-    Returns (triples, mentions, new_catalog); ``mentions`` is persisted
-    (it feeds both linking and canonicalization) — the CALLER must
-    unpersist it after consuming ``triples``. ``new_catalog`` holds the
-    novel surface→canonical rows this batch minted (empty when every
-    surface was already cataloged)."""
-    from nametag3_spark.operators.canonicalize import canonicalize_incremental
-
-    mentions = extract_mentions_flat(batch_df).persist()
-    linked = link_mentions(mentions, gazetteer_df(spark), fuzzy=False)
-    canonical, new_catalog = canonicalize_incremental(linked, catalog)
-    return emit_triples(canonical), mentions, new_catalog
-
-
 def start_triples_stream(
     spark: SparkSession,
     input_dir: str,
@@ -122,6 +100,10 @@ def start_triples_stream(
     micro-batch, each written with dynamic partition OVERWRITE so replays
     are idempotent (at-least-once delivery × idempotent write =
     exactly-once output).
+
+    Each epoch runs ``pipeline.kg_dataflow`` with exact linking, its
+    ``mentions`` persisted for the epoch (linking and canonicalization
+    both scan it).
 
     ``catalog_dir`` (optional) enables CATALOG-STABLE canonical ids
     across micro-batches: each epoch reads the surface→canonical catalog
@@ -138,15 +120,13 @@ def start_triples_stream(
             catalog = _earlier_epochs(
                 spark, catalog_dir, epoch_id, ["surf_node", "entity_canonical"]
             )
-        triples, mentions, new_catalog = triples_micro_batch(
-            spark, batch_df, catalog
-        )
-        try:
-            _write_epoch(triples, epoch_id, output_dir)
+        with persisted_mentions() as stage:
+            frames = kg_dataflow(
+                batch_df, fuzzy=False, catalog=catalog, stage=stage
+            )
+            _write_epoch(frames["triples"], epoch_id, output_dir)
             if catalog_dir is not None:
-                _write_epoch(new_catalog, epoch_id, catalog_dir)
-        finally:
-            mentions.unpersist()
+                _write_epoch(frames["catalog"], epoch_id, catalog_dir)
 
     return (
         stream.writeStream.foreachBatch(process)

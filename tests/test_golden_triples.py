@@ -20,17 +20,11 @@ N_CONVS, AVG_TURNS = 6, 5
 
 
 def _current_triples(spark) -> list[list]:
-    from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
-    from nametag3_spark.operators.canonicalize import canonicalize_mentions
-    from nametag3_spark.operators.infer import extract_mentions_flat
-    from nametag3_spark.operators.linking import link_mentions
-    from nametag3_spark.operators.triples import emit_triples
+    from nametag3_spark.data.synth import synth_transcripts
+    from nametag3_spark.pipeline import kg_dataflow
 
     t = synth_transcripts(spark, n_convs=N_CONVS, avg_turns=AVG_TURNS)
-    linked = link_mentions(
-        extract_mentions_flat(t), gazetteer_df(spark), fuzzy=False
-    )
-    triples = emit_triples(canonicalize_mentions(linked))
+    triples = kg_dataflow(t, fuzzy=False)["triples"]
     return sorted(
         [r["subj"], r["pred"], r["obj"], r["conv_id"], int(r["turn_idx"])]
         for r in triples.collect()

@@ -1,6 +1,5 @@
-"""The two per-turn Arrow passes (``infer._mention_batches`` and
-``infer._labeled_batches``) driven without Spark: both share one kernel,
-so each must score an Arrow batch with ONE ``label_batch`` call and
+"""The per-turn Arrow pass (``infer._labeled_batches``) driven without
+Spark: it must score an Arrow batch with ONE ``label_batch`` call and
 yield exactly the mentions a turn-by-turn oracle pass yields."""
 
 from __future__ import annotations
@@ -8,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pyarrow as pa
-import pytest
 
 from nametag3_spark.functions.text import prep_tokens
 from nametag3_spark.operators import infer
@@ -60,14 +58,6 @@ def _oracle_rows(batches: list[pa.RecordBatch]) -> list[tuple]:
     return rows
 
 
-def _mention_rows(out: list[pa.RecordBatch]) -> list[tuple]:
-    return [
-        (r["conv_id"], r["turn_idx"], r["role"], r["tool"], r["ts"],
-         r["label"], r["start_tok"], r["end_tok"], r["surface"])
-        for batch in out for r in batch.to_pylist()
-    ]
-
-
 def _labeled_rows(out: list[pa.RecordBatch]) -> list[tuple]:
     oracle = infer.OracleGazetteerScorer()
     rows = []
@@ -86,23 +76,14 @@ def _labeled_rows(out: list[pa.RecordBatch]) -> list[tuple]:
     return rows
 
 
-PASSES = {
-    "mentions": (infer._mention_batches, _mention_rows),
-    "annotate": (infer._labeled_batches, _labeled_rows),
-}
-
-
-@pytest.mark.parametrize("pass_name", sorted(PASSES))
-def test_one_scorer_call_per_arrow_batch(monkeypatch, pass_name):
-    make_pass, rows_of = PASSES[pass_name]
+def test_one_scorer_call_per_arrow_batch(monkeypatch):
     scorer = CountingScorer()
     monkeypatch.setitem(infer._SCORER_CACHE, "counting", scorer)
     batches = [_batch(b, texts) for b, texts in enumerate(TEXTS)]
 
-    out = list(make_pass("counting")(iter(batches)))
+    out = list(infer._labeled_batches("counting")(iter(batches)))
 
     assert scorer.calls == len(batches) == 2
     expected = _oracle_rows(batches)
     assert len(expected) >= 6
-    assert rows_of(out) == expected
-
+    assert _labeled_rows(out) == expected

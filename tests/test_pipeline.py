@@ -55,24 +55,6 @@ def test_span_precision_recall_vs_gold(spark):
     assert precision == 1.0 and recall == 1.0
 
 
-def test_flat_and_staged_paths_identical(spark):
-    """extract_mentions_flat (throughput path, fused Python pass) must
-    produce exactly the rows of annotate_turns → extract_mentions
-    (staged/snapshot path)."""
-    from nametag3_spark.operators.infer import extract_mentions_flat
-
-    transcripts = synth_transcripts(spark, n_convs=15, avg_turns=6)
-    staged = extract_mentions(annotate_turns(transcripts)).select(
-        "conv_id", "turn_idx", "start_tok", "end_tok", "label", "surface",
-        "mention_norm", "role", "tool",
-    )
-    flat = extract_mentions_flat(transcripts).select(
-        "conv_id", "turn_idx", "start_tok", "end_tok", "label", "surface",
-        "mention_norm", "role", "tool",
-    )
-    assert sorted(map(tuple, staged.collect())) == sorted(map(tuple, flat.collect()))
-
-
 def test_per_turn_text_equality_invariant(spark):
     """input_hint invariant: the labeled stage preserves every turn's text
     byte-for-byte under stable (conv_id, turn_idx) ordering."""
@@ -164,6 +146,90 @@ def test_pipeline_resume(spark, tmp_path):
     rows2 = [tuple(r) for r in t2.collect()]
     assert len(run2.stages_skipped) == 6 and not run2.stages_run
     assert rows1 == rows2  # byte-identical output
+
+
+def test_resume_keys_on_code_version(spark, tmp_path, monkeypatch):
+    """Snapshots written by other code re-run instead of being reused:
+    the package-source digest is part of the input fingerprint."""
+    from nametag3_spark import pipeline
+
+    transcripts = synth_transcripts(spark, n_convs=3, avg_turns=3)
+    wh = str(tmp_path / "wh")
+    assert pipeline.code_digest() == pipeline.code_digest()
+    PipelineRun(spark, warehouse=wh).run(transcripts)
+
+    monkeypatch.setattr(pipeline, "code_digest", lambda: "other-code")
+    changed = PipelineRun(spark, warehouse=wh)
+    changed.run(transcripts)
+    assert len(changed.stages_run) == 6 and not changed.stages_skipped
+
+    same = PipelineRun(spark, warehouse=wh)
+    same.run(transcripts)
+    assert len(same.stages_skipped) == 6 and not same.stages_run
+
+
+def test_callers_of_the_dataflow_agree(spark, tmp_path):
+    """PipelineRun, kg_dataflow's default hook and the triples stream
+    run one dataflow: over the same files the two batch callers emit
+    identical rows and the stream the same (pred, conv_id, turn_idx)
+    multiset. A fully-current resume runs no more jobs than one schema
+    read per snapshot."""
+    from collections import Counter
+
+    from nametag3_spark.pipeline import kg_dataflow
+    from nametag3_spark.streaming.stream import start_triples_stream
+
+    in_dir = str(tmp_path / "in")
+    synth_transcripts(spark, n_convs=8, avg_turns=5).repartition(4).write.parquet(in_dir)
+    turns = spark.read.parquet(in_dir)
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx"]
+
+    wh = str(tmp_path / "wh")
+    run = PipelineRun(spark, warehouse=wh, fuzzy_linking=False)
+    staged = sorted(map(tuple, run.run(turns).select(*cols).collect()))
+    direct = sorted(
+        map(tuple, kg_dataflow(turns, fuzzy=False)["triples"].select(*cols).collect())
+    )
+    assert staged == direct and len(direct) > 0
+
+    out_dir = str(tmp_path / "out")
+    start_triples_stream(
+        spark, in_dir, out_dir, str(tmp_path / "ckpt"),
+        catalog_dir=str(tmp_path / "catalog"),
+    ).awaitTermination(300)
+    streamed = Counter(
+        tuple(r) for r in spark.read.parquet(out_dir)
+        .select("pred", "conv_id", "turn_idx").collect()
+    )
+    assert streamed == Counter((p, c, t) for _s, p, _o, c, t in direct)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("fully-current-resume", "resume")
+    try:
+        resumed = PipelineRun(spark, warehouse=wh, fuzzy_linking=False)
+        resumed.run(turns)
+        jobs = sc.statusTracker().getJobIdsForGroup("fully-current-resume")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(resumed.stages_skipped) == 6
+    assert len(jobs) <= 6, jobs
+
+
+def test_only_pipeline_chains_the_dataflow():
+    """Outside tests and perfbench, only pipeline.py calls link_mentions
+    or emit_triples: every caller goes through kg_dataflow."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "bench.py", root / "__spark_entry__.py"]
+    for sub in ("nametag3_spark", "jobs", "tools"):
+        files += sorted((root / sub).rglob("*.py"))
+    call = re.compile(r"(?<!def )\b(link_mentions|emit_triples)\(")
+    callers = {
+        f.relative_to(root).as_posix() for f in files if call.search(f.read_text())
+    }
+    assert callers == {"nametag3_spark/pipeline.py"}
 
 
 def test_bad_scorer_rejected_on_driver(spark, tmp_path):

@@ -39,17 +39,15 @@ def test_dim_joins_are_broadcast(spark):
 
 
 def test_gazetteer_link_is_broadcast_with_one_python_stage(spark):
-    from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
-    from nametag3_spark.operators.infer import extract_mentions_flat
-    from nametag3_spark.operators.linking import link_exact
+    from nametag3_spark.data.synth import synth_transcripts
+    from nametag3_spark.pipeline import kg_dataflow
 
     t = synth_transcripts(spark, n_convs=4, avg_turns=3)
-    mentions = extract_mentions_flat(t)
-    p = plan_of(link_exact(mentions, gazetteer_df(spark)))
+    p = plan_of(kg_dataflow(t, fuzzy=False)["linked"])
     assert "BroadcastHashJoin" in p
     # exactly TWO Python nodes: the synth generator (MapInPandas) + the
-    # fused scorer (MapInArrow since the round-6 Arrow-native rewrite) —
-    # a third would mean decode split back into its own chained stage
+    # fused scorer (MapInArrow) — a third would mean decode split back
+    # into its own chained stage
     assert p.count(") MapInPandas") == 1
     assert p.count(") MapInArrow") == 1
     assert "ArrowEvalPython" not in p  # no extra pandas-UDF stage
@@ -63,17 +61,14 @@ def test_driver_side_tables_scan_as_local_relations(spark):
     """The gazetteer, the driver-CC map and the serving alias table are
     Arrow LocalRelations (LocalTableScan), never an RDD of pickled rows
     (Scan ExistingRDD) that re-runs a Python pass on every plan scan."""
-    from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
-    from nametag3_spark.operators.canonicalize import canonicalize_mentions
-    from nametag3_spark.operators.infer import extract_mentions_flat
-    from nametag3_spark.operators.linking import link_mentions
+    from nametag3_spark.data.synth import synth_transcripts
+    from nametag3_spark.pipeline import kg_dataflow
     from nametag3_spark.serving import ModelRegistry
 
-    mentions = extract_mentions_flat(synth_transcripts(spark, n_convs=4, avg_turns=3))
-    linked = link_mentions(mentions, gazetteer_df(spark), fuzzy=True)
+    frames = kg_dataflow(synth_transcripts(spark, n_convs=4, avg_turns=3))
     reg = ModelRegistry()
     reg.register("nametag3-multilingual-250203", scorer="oracle")
-    for df in (linked, canonicalize_mentions(linked), reg.alias_df(spark)):
+    for df in (frames["linked"], frames["canonical"], reg.alias_df(spark)):
         p = plan_of(df)
         assert "LocalTableScan" in p
         assert "ExistingRDD" not in p
@@ -157,15 +152,11 @@ def test_comention_path_has_no_sort_merge_join(spark):
     """emit_triples' co-mention pairs come from one groupBy + array
     expansion — the plan must not contain a SortMergeJoin (the pre-round-2
     self-join shape that cost ~3s regardless of core count)."""
-    from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
-    from nametag3_spark.operators.canonicalize import canonicalize_mentions
-    from nametag3_spark.operators.infer import extract_mentions_flat
-    from nametag3_spark.operators.linking import link_mentions
-    from nametag3_spark.operators.triples import emit_triples
+    from nametag3_spark.data.synth import synth_transcripts
+    from nametag3_spark.pipeline import kg_dataflow
 
     t = synth_transcripts(spark, n_convs=5, avg_turns=4)
-    linked = link_mentions(extract_mentions_flat(t), gazetteer_df(spark), fuzzy=False)
-    plan = plan_of(emit_triples(canonicalize_mentions(linked)))
+    plan = plan_of(kg_dataflow(t, fuzzy=False)["triples"])
     assert "SortMergeJoin" not in plan
     assert "ObjectHashAggregate" in plan or "HashAggregate" in plan  # the groupBy
 

@@ -4,11 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nametag3_spark.data.synth import gazetteer_df, synth_transcripts
-from nametag3_spark.operators.canonicalize import canonicalize_mentions
-from nametag3_spark.operators.infer import extract_mentions_flat
-from nametag3_spark.operators.linking import link_mentions
-from nametag3_spark.operators.triples import emit_triples
+from nametag3_spark.data.synth import synth_transcripts
+from nametag3_spark.pipeline import kg_dataflow
 from nametag3_spark.streaming.stream import (
     read_transcript_stream,
     start_triples_stream,
@@ -31,9 +28,7 @@ def test_stream_triples_match_batch(spark, tmp_path):
 
     streamed = spark.read.parquet(out_dir).drop("epoch_id")
 
-    mentions = extract_mentions_flat(transcripts)
-    linked = link_mentions(mentions, gazetteer_df(spark), fuzzy=False)
-    batch = emit_triples(canonicalize_mentions(linked))
+    batch = kg_dataflow(transcripts, fuzzy=False)["triples"]
 
     # micro-batching splits conversations across batches, so canonical ids
     # may differ only for surfaces never linked; compare the linked subset
