@@ -666,25 +666,25 @@ def q_pipeline_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed inference path (T1/T3/T6 + J1): transcripts → subword
-    window packing → per-window scoring → key-join realignment → decoded
-    mentions. Must emit EXACTLY the rows `pipeline_mentions` emits (the
-    per-turn unpacked path) — asserted by pytest
+    """Windowed path (T1/T3 + J1): transcripts → per-turn scoring →
+    subword window packing → key-based unpacking → each span's surface
+    read back through the unpacked windows. Must emit EXACTLY the rows
+    `pipeline_mentions` emits — asserted by pytest
     test_pipeline.py::test_window_path_equals_turn_path and visible here
     as identical row counts in the CORRECTNESS ledger."""
     from nametag3_spark.data.synth import synth_transcripts
-    from nametag3_spark.operators.encode import pack_conversations
-    from nametag3_spark.operators.infer import (
-        annotate_turns,
-        mentions_from_window_tokens,
-        score_windows,
-    )
+    from nametag3_spark.operators.encode import pack_conversations, unpack_windows
+    from nametag3_spark.operators.infer import annotate_turns
+    from nametag3_spark.operators.triples import extract_mentions
 
     n_convs, avg_turns = _synth_sizes(sf_dir)
     t = synth_transcripts(spark, n_convs=n_convs, avg_turns=avg_turns)
-    windows = pack_conversations(annotate_turns(t), max_len=512)
-    mentions = mentions_from_window_tokens(score_windows(windows))
-    return mentions.select(
+    labeled = annotate_turns(t)
+    windows = pack_conversations(labeled, max_len=512)
+    realigned = labeled.drop("tokens").join(
+        unpack_windows(windows), ["conv_id", "turn_idx"]
+    )
+    return extract_mentions(realigned).select(
         "conv_id", "turn_idx", "start_tok", "end_tok", "label", "surface"
     )
 
@@ -719,16 +719,15 @@ def q_pipeline_seq2seq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_np_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpoint-sourced NumPy model inference over packed windows
-    (S5/T6/J1/J5 with real tensors): weights load from an .npz per
-    worker, windows dynamically pad, labels gather at first subwords.
-    Output: per-label token counts (stable for a fixed seed)."""
+    """Checkpoint-sourced NumPy model inference (S5/T6/J1/J5 with real
+    tensors) through the per-turn Arrow pass: weights load from an .npz
+    per worker, each batch dynamically pads, labels gather at first
+    subwords. Output: per-label token counts (stable for a fixed seed)."""
     import os
     import tempfile
 
     from nametag3_spark.data.synth import synth_transcripts
-    from nametag3_spark.operators.encode import pack_conversations
-    from nametag3_spark.operators.infer import annotate_turns, score_windows
+    from nametag3_spark.operators.infer import annotate_turns
     from nametag3_spark.operators.np_model import NpFlatNER
 
     ckpt = os.path.join(tempfile.gettempdir(), "npflat_ckpt_seed42.npz")
@@ -736,8 +735,10 @@ def q_pipeline_np_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         NpFlatNER.init_random(seed=42).save(ckpt)
     n_convs, avg_turns = _synth_sizes(sf_dir)
     t = synth_transcripts(spark, n_convs=n_convs, avg_turns=avg_turns)
-    scored = score_windows(pack_conversations(annotate_turns(t)), scorer="np:" + ckpt)
-    return scored.groupBy("label").agg(F.count(F.lit(1)).alias("n_tokens"))
+    labels = annotate_turns(t, scorer="np:" + ckpt).select(
+        F.explode("labels").alias("label")
+    )
+    return labels.groupBy("label").agg(F.count(F.lit(1)).alias("n_tokens"))
 
 
 def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:

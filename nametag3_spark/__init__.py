@@ -9,8 +9,8 @@ idiomatic Spark pipeline:
       → score: one Scorer.label_batch per Arrow batch   │ [mapInArrow]
         (oracle gazetteer / HF model / NumPy model)     │
       → decode nested spans (one shared automaton)      ┘
-        (model route: window-pack per conversation [applyInPandas]
-         → score packed windows, same Scorer          [mapInPandas])
+        (T3/T4 window packing per conversation [applyInPandas]
+         sits downstream; windows map back to turns by key [JVM])
       → mentions → (subj, pred, obj) triples            [DataFrame ops]
       → entity linking (broadcast gazetteer + MinHash-LSH blocking)
       → canonicalization (iterative connected components)

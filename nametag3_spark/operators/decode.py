@@ -23,8 +23,8 @@ Semantics preserved exactly:
 Each row decodes independently → embarrassingly parallel across turns; the
 sequential part is only within one short sentence. This module is pure
 Python: Spark reaches it inside the inference kernel's Arrow pass
-(``infer._labeled_batches``), the window-path realignment and the serving
-batch, never as a UDF of its own.
+(``infer._labeled_batches``) and the serving batch, never as a UDF of its
+own.
 
 ``spans_to_bio`` re-renders spans to stacked BIO labels, which makes
 ``postprocess`` (IOB→BIO + bracketing + uniqueness guarantee) a

@@ -1,5 +1,5 @@
-"""Window packing + subword encoding (SURVEY.md T1-T6): the input side
-of the model-scorer route (``infer.score_windows``).
+"""Window packing + subword encoding (SURVEY.md T1-T6): the packers and
+their relational inverse.
 
 The reference greedily packs consecutive sentences into ≤512-subword
 windows with [CLS]/[SEP] framing, breaking at document boundaries and
@@ -7,15 +7,16 @@ splitting over-long sentences into continuation windows
 (nametag3_dataset.py:273-306,355-417); prediction then walks window/
 sentence indices to realign labels (nametag3_model.py:963-1042). Our
 design carries ``(conv_id, turn_idx, token_idx)`` keys through every
-window explicitly, so realignment is a relational join/explode instead of
-an order-sensitive index walk — the reference's fiddliest code becomes a
-schema invariant.
+window explicitly, so realignment is a relational explode + keyed
+``collect_list`` (``unpack_windows``) instead of an order-sensitive index
+walk — the reference's fiddliest code becomes a schema invariant.
+Scoring itself stays per turn (``infer.annotate_turns``); the windows map
+back onto those turns by key.
 
 Per-conversation packing is order-dependent sequential folding →
 ``applyInPandas`` over ``groupBy(conv_id)`` with an in-group sort. Across
 conversations it's embarrassingly parallel; hot conversations produce
-many windows but the fold itself is linear, and downstream inference is
-per-window (rebalanceable).
+many windows but the fold itself is linear.
 
 Subword tokenization is pluggable: ``ChunkSubwordTokenizer`` is the
 deterministic dependency-free stand-in (≤4-char chunks); the HF tokenizer
@@ -30,6 +31,7 @@ from typing import Iterable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 CLS_ID = 0
 SEP_ID = 2
@@ -207,6 +209,31 @@ def pack_conversations(labeled: DataFrame, max_len: int = 512) -> DataFrame:
         labeled.select("conv_id", "turn_idx", "tokens")
         .groupBy("conv_id")
         .applyInPandas(_pack_group(max_len), schema=WINDOW_SCHEMA)
+    )
+
+
+def unpack_windows(windows: DataFrame) -> DataFrame:
+    """Packed windows → (conv_id, turn_idx, tokens): the inverse of the
+    packers (J1 realignment), JVM-only. Every word carries its
+    ``(turn_idx, token_idx)`` key, so the words of a turn split across
+    continuation windows regroup by key and order by ``token_idx`` —
+    whatever the window or partition order. Turns without words have no
+    window and no row."""
+    word = F.explode(F.arrays_zip("word_keys", "words")).alias("w")
+    return (
+        windows.select("conv_id", word)
+        .groupBy("conv_id", F.col("w.word_keys.turn_idx").alias("turn_idx"))
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(
+                        F.col("w.word_keys.token_idx").alias("token_idx"),
+                        F.col("w.words").alias("word"),
+                    )
+                )
+            ).alias("keyed")
+        )
+        .select("conv_id", "turn_idx", F.col("keyed.word").alias("tokens"))
     )
 
 

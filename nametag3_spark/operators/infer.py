@@ -11,9 +11,9 @@ nametag3_model.py:963-1042) re-expressed as ONE inference core:
   ``label_batch`` call per Arrow batch → decode), emits labeled turns
   with tokens, labels and spans; ``triples.extract_mentions`` explodes
   them into mention rows JVM-side (``extract_mentions_flat`` is that
-  composition);
-* ``score_windows`` is the model-scorer route over packed subword
-  windows, behind the same protocol.
+  composition). Every scorer, model or oracle, runs through this one
+  pass; the subword windows of ``encode.py`` are built downstream of it
+  and map back to turns by their carried keys (``encode.unpack_windows``).
 
 The scorers:
 
@@ -39,9 +39,8 @@ the reference applies before its tokenizer (nametag3_dataset.py:355-366).
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Protocol
+from typing import Callable, Protocol
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
@@ -137,7 +136,7 @@ class HFTransformerScorer:
             raise NotImplementedError(
                 "HFTransformerScorer needs torch+transformers (not in this "
                 "container). Use OracleGazetteerScorer for the verifiable "
-                "dataflow; the packing/inference plumbing is in encode.py."
+                "dataflow; the 'np:<checkpoint.npz>' scorer runs real tensors."
             ) from exc
         self.torch = torch
         self.checkpoint_dir = checkpoint_dir
@@ -188,8 +187,9 @@ class HFTransformerScorer:
             i = next(rows)
             picks = logits[i][first[i]].argmax(axis=-1)
             labs = [self.id2label[int(p)] for p in picks]
-            # truncation can only drop TAIL words (the packer keeps
-            # windows under the model budget, so this is defensive)
+            # annotate_turns and serving hand over WHOLE turns/sentences,
+            # so a turn past the model's max length loses its tail words
+            # to truncation; they are labeled O
             labs += ["O"] * (len(t) - len(labs))
             out.append(labs)
         return out
@@ -296,175 +296,3 @@ def extract_mentions_flat(
     ``triples.extract_mentions``, the same mention rows the pipeline's
     ``mentions`` stage holds."""
     return extract_mentions(annotate_turns(transcripts, scorer=scorer))
-
-
-# --------------------------------------------------------------------------
-# Windowed inference path (T1/T3/T4/T6 + J1): score PACKED windows, realign
-# per-word labels back to turns via the carried (turn_idx, token_idx) keys.
-# This is the production shape for a transformer scorer — the model sees
-# ≤max_len subword windows, not turns — and must produce exactly the same
-# mentions as the per-turn path (reference packing nametag3_dataset.py:
-# 273-306 + realignment nametag3_model.py:963-1042, re-expressed as a
-# relational key join instead of an index walk).
-# --------------------------------------------------------------------------
-
-WINDOW_TOKEN_SCHEMA = (
-    "conv_id string, turn_idx int, token_idx int, word string, label string"
-)
-
-
-def score_windows(windows: DataFrame, scorer: str = "oracle") -> DataFrame:
-    """Packed windows → per-token labels keyed by (conv_id, turn_idx,
-    token_idx).
-
-    Windows pack WHOLE turns (continuations only for oversized turns), so
-    labeling runs per turn-segment inside each window — the per-window
-    batch is what a transformer forward pass would consume (input_ids are
-    in the window; the oracle scorer consumes the carried word strings).
-
-    Continuation merging: a turn longer than the window budget splits
-    into continuation windows; scoring those segments INDEPENDENTLY would
-    let a context-sensitive scorer tag a boundary-spanning entity
-    inconsistently across the split. So the trailing segment of each
-    window is held PENDING and merged with the next window's leading
-    segment when it continues the same (conv_id, turn_idx) — ``label_
-    batch`` then sees the whole turn, and window-path output equals the
-    per-turn path even past the window budget (pytest-locked with an
-    oversized turn). Memory stays O(one turn): only the open tail is
-    buffered, never a partition.
-
-    ``scorer`` is any registry key; ``"np:<checkpoint.npz>"`` runs the
-    NumPy model (one padded forward per turn segment, labels gathered at
-    each word's first subword).
-
-    Precondition: windows of one conversation are CONTIGUOUS and ordered
-    within their partition — true by construction for
-    ``pack_conversations`` output (``groupBy(conv_id).applyInPandas``
-    emits each group's windows consecutively, in window_idx order, and
-    ``mapInPandas`` streams partition rows in order). Under an arbitrary
-    re-shuffle the merge degrades gracefully to independent segment
-    scoring (the pre-round-4 behavior).
-    """
-    scorer_loader(scorer)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sc = _get_scorer(scorer)
-        # open tail of the previous window: may continue in the next one
-        pend_conv: str | None = None
-        pend_turn: int = -1
-        pend_words: list[str] = []
-        pend_toks: list[int] = []
-
-        def make_frame(out):
-            return pd.DataFrame(
-                {
-                    "conv_id": out[0],
-                    "turn_idx": out[1],
-                    "token_idx": out[2],
-                    "word": out[3],
-                    "label": out[4],
-                }
-            )
-
-        def flush(out) -> None:
-            nonlocal pend_conv, pend_words, pend_toks
-            if pend_conv is None:
-                return
-            labels = sc.label_batch([pend_words])[0]
-            for w, tok, lab in zip(pend_words, pend_toks, labels):
-                out[0].append(pend_conv)
-                out[1].append(pend_turn)
-                out[2].append(tok)
-                out[3].append(w)
-                out[4].append(lab)
-            pend_conv, pend_words, pend_toks = None, [], []
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out: tuple[list, list, list, list, list] = ([], [], [], [], [])
-            for conv_id, word_keys, words in zip(
-                pdf["conv_id"], pdf["word_keys"], pdf["words"]
-            ):
-                # consecutive same-turn runs = turn segments
-                seg_start = 0
-                nkeys = len(word_keys)
-                for i in range(1, nkeys + 1):
-                    if (
-                        i < nkeys
-                        and word_keys[i]["turn_idx"]
-                        == word_keys[seg_start]["turn_idx"]
-                    ):
-                        continue
-                    turn_idx = int(word_keys[seg_start]["turn_idx"])
-                    seg_words = list(words[seg_start:i])
-                    seg_toks = [
-                        int(word_keys[p]["token_idx"])
-                        for p in range(seg_start, i)
-                    ]
-                    if pend_conv == conv_id and pend_turn == turn_idx:
-                        pend_words.extend(seg_words)
-                        pend_toks.extend(seg_toks)
-                    else:
-                        flush(out)
-                        pend_conv, pend_turn = conv_id, turn_idx
-                        pend_words, pend_toks = seg_words, seg_toks
-                    # a turn followed by another segment in the SAME
-                    # window is closed — only the window's tail can
-                    # continue into the next window
-                    if i < nkeys:
-                        flush(out)
-                    seg_start = i
-            if out[0]:
-                yield make_frame(out)
-        out = ([], [], [], [], [])
-        flush(out)
-        if out[0]:
-            yield make_frame(out)
-
-    return windows.mapInPandas(fn, schema=WINDOW_TOKEN_SCHEMA)
-
-
-WINDOW_MENTION_SCHEMA = (
-    "conv_id string, turn_idx int, label string, start_tok int, "
-    "end_tok int, surface string"
-)
-
-
-def mentions_from_window_tokens(token_labels: DataFrame) -> DataFrame:
-    """Realign (J1): per-token window labels → per-turn decoded mentions.
-
-    The shuffle key is (conv_id, turn_idx); in-group order comes from the
-    carried token_idx — stable regardless of window/partition order. It
-    emits the mention rows the per-turn ``annotate_turns`` path emits
-    (tested): the window path's equivalence proof.
-    """
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("token_idx")
-        tokens = pdf["word"].tolist()
-        labels = pdf["label"].tolist()
-        conv_id = pdf["conv_id"].iloc[0]
-        turn_idx = int(pdf["turn_idx"].iloc[0])
-        rows = []
-        for typ, s, e in decode_spans(labels):
-            rows.append(
-                {
-                    "conv_id": conv_id,
-                    "turn_idx": turn_idx,
-                    "label": typ,
-                    "start_tok": s,
-                    "end_tok": e,
-                    "surface": " ".join(tokens[s : e + 1]),
-                }
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "conv_id", "turn_idx", "label", "start_tok", "end_tok", "surface",
-            ],
-        )
-
-    return token_labels.groupBy("conv_id", "turn_idx").applyInPandas(
-        fn, schema=WINDOW_MENTION_SCHEMA
-    )

@@ -15,10 +15,10 @@ is everything AROUND the matmuls, with actual tensors flowing:
 * **T6 dynamic padding**: ``label_batch`` pads its sentences to the batch
   max with BATCH_PAD=-1, masked inside ``forward``.
 * **J1 realignment**: per-word labels come from the logits at each
-  word's FIRST subword — the ``HFTransformerScorer`` contract — and
-  ``infer.score_windows`` keys them back to (conv_id, turn_idx,
-  token_idx), now driven by a real ``(batch, seq, n_labels)`` logits
-  tensor.
+  word's FIRST subword — the ``HFTransformerScorer`` contract — driven
+  by a real ``(batch, seq, n_labels)`` logits tensor; the scorer key
+  runs through ``infer.annotate_turns``' per-turn Arrow pass like every
+  other scorer, so the labels land on their turn's tokens in order.
 
 Swapping ``NpFlatNER.forward`` for an XLM-R forward is the ONLY change
 production needs; every Spark-side contract is exercised by this model.

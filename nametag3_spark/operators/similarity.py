@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nametag3_spark.operators.dedup import _persist
+from nametag3_spark.operators.skew import spread_if_narrow
 
 
 def _dot(a, b):
@@ -189,10 +190,7 @@ def embedding_near_dup_pairs(
     table feeds three branches (hot scan + both join sides) and the
     hyperplane projections are the CPU-heavy part, so it is computed on
     full parallelism and persisted — once, not per branch."""
-    target = vectors.sparkSession.sparkContext.defaultParallelism
-    src = vectors
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target, id_col)
+    src = spread_if_narrow(vectors, id_col)
     buckets = _persist(
         _bucketize_ids(src, id_col, vec_col, n_planes, n_tables, plane_hash)
     )

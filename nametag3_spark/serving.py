@@ -15,19 +15,21 @@ reads, re-expressed over a DataFrame where each row is one request:
   over word forms (nametag3_server.py:565, 604)
 * input parsing: untokenized | vertical | conllu, with the conllu
   multiword-token skip (nametag3_server.py:595-610)
-* batched scoring through the shared per-worker model instance, then
-  per-format rendering: xml | vertical | conll | conllu-ne, with the
-  request-global vertical token counter and the weblicht raw-CoNLL-U
-  content type (nametag3_server.py:612-700)
+* batched scoring (one ``label_batch`` call per request) through the
+  shared per-worker instance of the model the request's alias resolved
+  to, then per-format rendering: xml | vertical | conll | conllu-ne,
+  with the request-global vertical token counter and the weblicht
+  raw-CoNLL-U content type (nametag3_server.py:612-700)
 
 Execution shape (the 100 TB design): requests are row-independent, so the
 whole parse→score→decode→render chain runs in ONE fused ``mapInPandas``
-pass — a single Arrow boundary, no shuffle anywhere, no second Python
-stage in the plan (chaining two Python stages costs a serialization
-boundary; measured 30× on this host). Validation and response-envelope
-assembly are pure column expressions; the registry join is a broadcast
-of a tiny alias table. Request size is bounded by the 413 guard, so no
-single row can skew a partition.
+pass for every registered model — a single Arrow boundary, no shuffle
+anywhere, no second Python stage and no per-model union in the plan
+(chaining two Python stages costs a serialization boundary; measured 30×
+on this host). Validation and response-envelope assembly are pure
+column expressions; the registry join is a broadcast of a tiny alias
+table. Request size is bounded by the 413 guard, so no single row can
+skew a partition.
 """
 
 from __future__ import annotations
@@ -218,58 +220,63 @@ def _render_request(
     return body, n_entities
 
 
-def _serve_batches(scorer_name: str):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from nametag3_spark.operators.infer import _get_scorer
+def _serve_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The fused serving pass: each request runs the model its resolved
+    alias registered (``scorer`` column), loaded once per key per worker
+    by the scorer cache."""
+    from nametag3_spark.operators.infer import _get_scorer
 
-        scorer = _get_scorer(scorer_name)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_rows = []
-            for req_id, data, input_fmt, output_fmt, endpoint, canonical, ack in zip(
-                pdf["request_id"], pdf["data"], pdf["input"],
-                pdf["output"], pdf["endpoint"],
-                pdf["canonical"], pdf["acknowledgements"],
-            ):
-                data = unicodedata.normalize("NFC", data or "")
-                sentences = _parse_sentences(data, input_fmt)
-                billing = _billing_chars(data, input_fmt)
-                if endpoint == "tokenize" or not sentences:
-                    spans: list[list[dict]] = [[] for _ in sentences]
-                    stacks: list[list[str]] = [
-                        ["O"] * len(s) for s in sentences
-                    ]
-                else:
-                    # ONE label_batch call per request: the scorer batches
-                    # internally; per-worker instance is shared (J5)
-                    stacks = scorer.label_batch(
-                        [_prep_for_scoring(s) for s in sentences]
-                    )
-                    spans = [
-                        [
-                            {"label": t, "start_tok": s, "end_tok": e}
-                            for t, s, e in decode_spans(st)
-                        ]
-                        for st in stacks
-                    ]
-                result, n_entities = _render_request(
-                    sentences, spans, stacks, output_fmt
-                )
-                out_rows.append(
-                    (req_id, result, billing, len(sentences), n_entities,
-                     endpoint, output_fmt, canonical, ack)
-                )
-            yield pd.DataFrame(
-                out_rows,
-                columns=[
-                    "request_id", "result", "billing_nfc_len",
-                    "n_sentences", "n_entities",
-                    "endpoint", "output", "canonical", "acknowledgements",
-                ],
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        out_rows = []
+        for req_id, data, input_fmt, output_fmt, endpoint, canonical, ack, key in zip(
+            pdf["request_id"], pdf["data"], pdf["input"],
+            pdf["output"], pdf["endpoint"],
+            pdf["canonical"], pdf["acknowledgements"], pdf["scorer"],
+        ):
+            data = unicodedata.normalize("NFC", data or "")
+            sentences = _parse_sentences(data, input_fmt)
+            # the word forms are the sentences just parsed, except for
+            # conllu, which bills its word lines, not the surface tokens
+            billing = (
+                _billing_chars(data, input_fmt)
+                if input_fmt == "conllu"
+                else sum(len(t) for sent in sentences for t in sent)
             )
-
-    return fn
+            if endpoint == "tokenize" or not sentences:
+                spans: list[list[dict]] = [[] for _ in sentences]
+                stacks: list[list[str]] = [
+                    ["O"] * len(s) for s in sentences
+                ]
+            else:
+                # ONE label_batch call per request: the scorer batches
+                # internally; per-worker instance is shared (J5)
+                stacks = _get_scorer(key).label_batch(
+                    [_prep_for_scoring(s) for s in sentences]
+                )
+                spans = [
+                    [
+                        {"label": t, "start_tok": s, "end_tok": e}
+                        for t, s, e in decode_spans(st)
+                    ]
+                    for st in stacks
+                ]
+            result, n_entities = _render_request(
+                sentences, spans, stacks, output_fmt
+            )
+            out_rows.append(
+                (req_id, result, billing, len(sentences), n_entities,
+                 endpoint, output_fmt, canonical, ack)
+            )
+        yield pd.DataFrame(
+            out_rows,
+            columns=[
+                "request_id", "result", "billing_nfc_len",
+                "n_sentences", "n_entities",
+                "endpoint", "output", "canonical", "acknowledgements",
+            ],
+        )
 
 
 _SERVE_SCHEMA = (
@@ -282,7 +289,6 @@ _SERVE_SCHEMA = (
 def process_requests(
     requests: DataFrame,
     registry: ModelRegistry,
-    scorer: str | None = None,
     max_request_size: int = MAX_REQUEST_SIZE,
 ) -> DataFrame:
     """Requests (request_id, endpoint, data, model, input, output) →
@@ -291,9 +297,9 @@ def process_requests(
 
     ``endpoint`` ∈ recognize | tokenize | weblicht/recognize (the three
     data paths of do_GET). Null model/input/output take the server's
-    defaults. ``scorer`` overrides the registry's scorer key for every
-    request (tests use this); production leaves it None so each request
-    runs the model its resolved alias registered.
+    defaults. Each request runs the model its resolved alias registered:
+    the alias table's ``scorer`` key rides into the one fused pass, so N
+    registered models still plan one Python stage.
     """
     spark = requests.sparkSession
     aliases = F.broadcast(registry.alias_df(spark))
@@ -391,38 +397,22 @@ def process_requests(
         F.col("_err.message").alias("body"),
     )
 
-    valid = req.where(F.col("_err").isNull())
-    if scorer is None:
-        # one fused pass per scorer key so each pass loads one model; the
-        # key set comes from the driver-side registry (no Spark action)
-        scorer_keys = sorted({row[2] for row in registry._rows})
-    else:
-        scorer_keys = None
-
-    def run_pass(df: DataFrame, scorer_key: str) -> DataFrame:
-        # metadata columns ride THROUGH the fused pass and come back out,
-        # so no post-scoring join is needed — the whole valid path is one
-        # Python stage with zero shuffles. (Measured, not changed this
-        # round: a narrow-input repartition before the Python stage is a
-        # net LOSS here — the 200-request pass itself is ~0.3s, and the
-        # `.rdd` narrowness probe re-plans the whole validation subtree,
-        # costing seconds cold. A deployment feeding a huge single-file
-        # request batch should repartition upstream of this call.)
-        return df.select(
+    # metadata columns ride THROUGH the fused pass and come back out, so
+    # no post-scoring join is needed — the whole valid path is one Python
+    # stage with zero shuffles, whatever the number of models. (Measured:
+    # a narrow-input repartition before the Python stage is a net LOSS
+    # here — the 200-request pass itself is ~0.3s, and the `.rdd`
+    # narrowness probe re-plans the whole validation subtree, costing
+    # seconds cold. A deployment feeding a huge single-file
+    # request batch should repartition upstream of this call.)
+    ok = (
+        req.where(F.col("_err").isNull())
+        .select(
             "request_id", "data", "input", "output", "endpoint",
-            "canonical", "acknowledgements",
-        ).mapInPandas(_serve_batches(scorer_key), schema=_SERVE_SCHEMA)
-
-    if scorer_keys is None:
-        ok = run_pass(valid, scorer)
-    else:
-        parts = [
-            run_pass(valid.where(F.col("scorer") == key), key)
-            for key in scorer_keys
-        ]
-        ok = parts[0]
-        for p in parts[1:]:
-            ok = ok.unionByName(p)
+            "canonical", "acknowledgements", "scorer",
+        )
+        .mapInPandas(_serve_batches, schema=_SERVE_SCHEMA)
+    )
 
     is_weblicht = F.col("endpoint") == "weblicht/recognize"
     result_with_header = F.when(

@@ -12,6 +12,7 @@ from nametag3_spark.operators.encode import (
     pack_conversations,
     pack_words,
     pad_batch,
+    unpack_windows,
 )
 from nametag3_spark.operators.infer import annotate_turns
 
@@ -99,6 +100,40 @@ def test_pack_conversations_covers_all_tokens(spark):
     # budget respected (long turns force continuation windows)
     assert windows.where(F.size("input_ids") > 128).count() == 0
     assert windows.groupBy("conv_id").count().count() == 8
+
+
+def test_unpack_windows_inverts_both_packers(spark):
+    """Unpacking windows by their carried keys gives back every non-empty
+    turn's tokens in order — across continuation windows (max_len=16
+    splits long turns) and across left-context windows, which keep a turn
+    whole when it fits the frame and its head when it alone does not."""
+    from nametag3_spark.operators.encode import pack_with_left_context
+
+    labeled = annotate_turns(synth_transcripts(spark, n_convs=6, avg_turns=5))
+    turns = {
+        (r["conv_id"], r["turn_idx"]): list(r["tokens"])
+        for r in labeled.collect()
+        if r["tokens"]
+    }
+
+    def unpacked(windows):
+        return {
+            (r["conv_id"], r["turn_idx"]): list(r["tokens"])
+            for r in unpack_windows(windows).collect()
+        }
+
+    packed = pack_conversations(labeled, max_len=16)
+    assert packed.count() > packed.select("conv_id").distinct().count()
+    assert unpacked(packed) == turns
+
+    ctx = unpacked(pack_with_left_context(labeled))  # 512-subword frame
+    assert ctx.keys() == turns.keys()
+    tok = ChunkSubwordTokenizer()
+    for key, toks in turns.items():
+        if sum(map(len, tok.encode_words(toks))) + 2 < 512:
+            assert ctx[key] == toks, key
+        else:
+            assert ctx[key] == toks[: len(ctx[key])], key
 
 
 def test_left_context_packing(spark):

@@ -174,53 +174,44 @@ def test_hf_scorer_first_subword_gather(fake_hf_on_driver):
     assert any(len(w) > 4 and w[0].islower() for s in batch for w in s)
 
 
-def test_hf_scorer_window_path_end_to_end(spark, fake_hf_dir):
-    """pack_conversations → score_windows("hf:…") → realign to mentions,
-    with the fake modules shipped to executors via addPyFile — the full
-    production window path, reference nametag3_model.py:963-1042."""
+def test_hf_scorer_turn_path_end_to_end(spark, fake_hf_dir):
+    """annotate_turns(t, "hf:…") → extract_mentions, with the fake
+    modules shipped to executors via addPyFile — the full production
+    path, reference nametag3_model.py:963-1042. Each Arrow batch is ONE
+    padded forward over many turns, so the pads of the shorter turns
+    carry the poison label too."""
     from nametag3_spark.data.synth import synth_transcripts
     from nametag3_spark.operators.decode import decode_spans
-    from nametag3_spark.operators.encode import pack_conversations
-    from nametag3_spark.operators.infer import (
-        annotate_turns,
-        mentions_from_window_tokens,
-        score_windows,
-    )
+    from nametag3_spark.operators.infer import annotate_turns
+    from nametag3_spark.operators.triples import extract_mentions
 
     for fname in ("torch.py", "transformers.py"):
         spark.sparkContext.addPyFile(os.path.join(fake_hf_dir, fname))
 
     transcripts = synth_transcripts(spark, n_convs=6, avg_turns=5)
-    windows = pack_conversations(annotate_turns(transcripts, scorer="oracle"))
-    tok = score_windows(windows, scorer="hf:any-checkpoint-dir")
-    rows = tok.collect()
-    assert len(rows) > 0
-    for r in rows:
-        assert r["label"] == _expected_label(r["word"]), r
+    labeled = annotate_turns(transcripts, scorer="hf:any-checkpoint-dir")
+    turns = labeled.collect()
+    words = [(w, lab) for r in turns for w, lab in zip(r["tokens"], r["labels"])]
+    assert len(words) > 0
+    for r in turns:
+        assert len(r["labels"]) == len(r["tokens"]), r
+    for w, lab in words:
+        assert lab == _expected_label(w), (w, lab)
     # both classes and a multi-subword capitalized word must occur
-    assert {r["label"] for r in rows} == {"O", "B-PER"}
-    assert any(len(r["word"]) > 4 and r["label"] == "B-PER" for r in rows)
+    assert {lab for _, lab in words} == {"O", "B-PER"}
+    assert any(len(w) > 4 and lab == "B-PER" for w, lab in words)
 
-    # realign: mentions must equal a driver-side decode of the same
-    # token-label streams (group by turn, order by token_idx)
-    per_turn: dict = {}
-    for r in rows:
-        per_turn.setdefault((r["conv_id"], r["turn_idx"]), []).append(
-            (r["token_idx"], r["word"], r["label"])
-        )
-    expected = set()
-    for (conv_id, turn_idx), toks in per_turn.items():
-        toks.sort()
-        labels = [t[2] for t in toks]
-        words = [t[1] for t in toks]
-        for typ, s, e in decode_spans(labels):
-            expected.add(
-                (conv_id, turn_idx, typ, s, e, " ".join(words[s : e + 1]))
-            )
+    # mentions must equal a driver-side decode of the same token-label
+    # streams
+    expected = {
+        (r["conv_id"], r["turn_idx"], typ, s, e, " ".join(r["tokens"][s : e + 1]))
+        for r in turns
+        for typ, s, e in decode_spans(list(r["labels"]))
+    }
     got = {
         (m["conv_id"], m["turn_idx"], m["label"], m["start_tok"],
          m["end_tok"], m["surface"])
-        for m in mentions_from_window_tokens(tok).collect()
+        for m in extract_mentions(labeled).collect()
     }
     assert got == expected
     assert len(got) > 0

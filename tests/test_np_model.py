@@ -1,6 +1,6 @@
 """NumPy flat-softmax model as a ``Scorer``: checkpoint source (S5),
 dynamic padding (T6), logits→word realignment (J1) through
-``score_windows("np:<checkpoint>")``, worker model singleton (J5)."""
+``annotate_turns(t, "np:<checkpoint>")``, worker model singleton (J5)."""
 
 from __future__ import annotations
 
@@ -12,11 +12,10 @@ from nametag3_spark.data.synth import synth_transcripts
 from nametag3_spark.operators.encode import (
     BATCH_PAD,
     ChunkSubwordTokenizer,
-    pack_conversations,
     pack_words,
     pad_batch,
 )
-from nametag3_spark.operators.infer import annotate_turns, score_windows
+from nametag3_spark.operators.infer import annotate_turns
 from nametag3_spark.operators.np_model import NpFlatNER
 
 
@@ -46,8 +45,8 @@ def test_label_batch_equals_packed_window_gather():
     """``label_batch`` frames each sentence on its own; gathering the
     logits of ONE packed window holding both sentences at their words'
     first subwords gives the same labels, because ``forward`` is
-    position-independent — so the window path's labels do not depend on
-    how turns were packed."""
+    position-independent — so scoring whole turns gives the labels a
+    packed-window forward would."""
     model = NpFlatNER.init_random(seed=3)
     sents = [["Alexandra", "visited", "Prague"], ["ok"], [], ["Tiny", "x"]]
     words = [w for s in sents for w in s]
@@ -62,52 +61,51 @@ def test_label_batch_equals_packed_window_gather():
     assert len(set(gathered)) > 1
 
 
-def test_score_windows_np_covers_every_token(spark, tmp_path):
+def test_annotate_turns_np_covers_every_token(spark, tmp_path):
     model = NpFlatNER.init_random(seed=42)
     path = str(tmp_path / "m.npz")
     model.save(path)
 
     t = synth_transcripts(spark, n_convs=10, avg_turns=6)
-    labeled = annotate_turns(t)
-    windows = pack_conversations(labeled, max_len=128)
-    scored = score_windows(windows, scorer="np:" + path)
+    scored = annotate_turns(t, scorer="np:" + path)
 
-    n_tokens = labeled.select(F.sum(F.size("tokens"))).collect()[0][0]
-    assert scored.count() == n_tokens
-    dups = (
-        scored.groupBy("conv_id", "turn_idx", "token_idx")
-        .count()
-        .where(F.col("count") > 1)
-        .count()
-    )
-    assert dups == 0
+    # one label per token, every turn scored once
+    assert scored.where(F.size("labels") != F.size("tokens")).count() == 0
+    assert scored.count() == t.count()
+    assert scored.select("conv_id", "turn_idx").distinct().count() == t.count()
+    labels = scored.select(F.explode("labels").alias("label"))
+    n_tokens = scored.select(F.sum(F.size("tokens"))).collect()[0][0]
+    assert labels.count() == n_tokens > 0
     # labels come from the model vocab
-    assert {r["label"] for r in scored.select("label").distinct().collect()} <= set(
-        model.labels
-    )
+    assert {r["label"] for r in labels.distinct().collect()} <= set(model.labels)
 
 
-def test_score_windows_np_partitioning_invariant(spark, tmp_path):
+def test_annotate_turns_np_partitioning_invariant(spark, tmp_path):
     """Same checkpoint + same input ⇒ identical keyed labels regardless of
-    how windows are partitioned (the cluster-layout invariance a
-    checkpointed scorer must have)."""
+    how turns are partitioned, and so batched (the cluster-layout
+    invariance a checkpointed scorer must have)."""
     model = NpFlatNER.init_random(seed=1)
     path = str(tmp_path / "m.npz")
     model.save(path)
 
     t = synth_transcripts(spark, n_convs=6, avg_turns=5)
-    windows = pack_conversations(annotate_turns(t), max_len=96)
     key = "np:" + path
-    a = {tuple(r) for r in score_windows(windows.repartition(1), key).collect()}
-    b = {tuple(r) for r in score_windows(windows.repartition(16), key).collect()}
+
+    def keyed(df):
+        return {
+            (r["conv_id"], r["turn_idx"], tuple(r["labels"]))
+            for r in annotate_turns(df, key).collect()
+        }
+
+    a = keyed(t.repartition(1))
+    b = keyed(t.repartition(16))
     assert a == b and len(a) > 0
 
 
 def test_missing_checkpoint_raises(spark, tmp_path):
     t = synth_transcripts(spark, n_convs=2, avg_turns=3)
-    windows = pack_conversations(annotate_turns(t))
     with pytest.raises(Exception):
-        score_windows(windows, "np:" + str(tmp_path / "nope.npz")).collect()
+        annotate_turns(t, "np:" + str(tmp_path / "nope.npz")).collect()
 
 
 def test_pipeline_np_model_counts_pinned(spark):

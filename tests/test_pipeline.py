@@ -232,17 +232,32 @@ def test_only_pipeline_chains_the_dataflow():
     assert callers == {"nametag3_spark/pipeline.py"}
 
 
+def test_only_the_two_scoring_passes_call_label_batch():
+    """Outside tests and perfbench, ``.label_batch(`` is called only by
+    the per-turn Arrow kernel (operators/infer.py) and the fused serving
+    pass (serving.py): a third scoring path fails this. Scorer
+    ``def label_batch`` definitions are not calls."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "bench.py", root / "__spark_entry__.py"]
+    for sub in ("nametag3_spark", "jobs", "tools"):
+        files += sorted((root / sub).rglob("*.py"))
+    call = re.compile(r"\.label_batch\(")
+    callers = {
+        f.relative_to(root).as_posix() for f in files if call.search(f.read_text())
+    }
+    assert callers == {"nametag3_spark/operators/infer.py", "nametag3_spark/serving.py"}
+
+
 def test_bad_scorer_rejected_on_driver(spark, tmp_path):
     """An unknown scorer key raises ValueError while the DataFrame or the
     run is being built — before any Python worker starts, any model
     loads or any snapshot is written."""
     import pytest
 
-    from nametag3_spark.operators.encode import pack_conversations
-    from nametag3_spark.operators.infer import (
-        extract_mentions_flat,
-        score_windows,
-    )
+    from nametag3_spark.operators.infer import extract_mentions_flat
 
     wh = tmp_path / "wh"
     with pytest.raises(ValueError, match="unknown scorer"):
@@ -250,14 +265,11 @@ def test_bad_scorer_rejected_on_driver(spark, tmp_path):
     assert not wh.exists()
 
     t = synth_transcripts(spark, n_convs=2, avg_turns=3)
-    windows = pack_conversations(annotate_turns(t))
     for bad in ("bogus", "hf:", "np:", "oracle:x"):
         with pytest.raises(ValueError, match="unknown scorer"):
             annotate_turns(t, scorer=bad)
         with pytest.raises(ValueError, match="unknown scorer"):
             extract_mentions_flat(t, scorer=bad)
-        with pytest.raises(ValueError, match="unknown scorer"):
-            score_windows(windows, scorer=bad)
 
 
 def test_failed_publish_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
@@ -319,18 +331,31 @@ def test_changed_input_at_same_path_reruns_stages(spark, tmp_path):
     assert n2 > n1
 
 
+def _window_path_mentions(labeled, windows):
+    """Each scored span's surface read back through the unpacked windows
+    (the ``pipeline_windows`` entry query's shape)."""
+    from nametag3_spark.operators.encode import unpack_windows
+
+    realigned = labeled.drop("tokens").join(
+        unpack_windows(windows), ["conv_id", "turn_idx"]
+    )
+    return {
+        tuple(r)
+        for r in extract_mentions(realigned)
+        .select("conv_id", "turn_idx", "start_tok", "end_tok", "label", "surface")
+        .collect()
+    }
+
+
 def test_window_path_equals_turn_path(spark):
-    """The packed-window inference path (pack → score_windows → realign →
-    decode) must emit exactly the mentions the per-turn path emits —
-    closing the T1/T3/T6/J1 correctness gap (reference packing
-    nametag3_dataset.py:273-306, realignment nametag3_model.py:963-1042)."""
+    """Packing turns into subword windows and unpacking them by their
+    carried (turn_idx, token_idx) keys must give back every turn's tokens
+    in order, so the mentions realigned through the windows equal the
+    per-turn path's (reference packing nametag3_dataset.py:273-306,
+    realignment nametag3_model.py:963-1042)."""
     from nametag3_spark.data.synth import synth_transcripts
     from nametag3_spark.operators.encode import pack_conversations
-    from nametag3_spark.operators.infer import (
-        annotate_turns,
-        mentions_from_window_tokens,
-        score_windows,
-    )
+    from nametag3_spark.operators.infer import annotate_turns
     from nametag3_spark.operators.triples import extract_mentions
 
     t = synth_transcripts(spark, n_convs=12, avg_turns=8)
@@ -345,30 +370,20 @@ def test_window_path_equals_turn_path(spark):
     # max_len=64 forces multi-window conversations (turn-boundary splits)
     windows = pack_conversations(labeled, max_len=64)
     assert windows.groupBy("conv_id").count().agg({"count": "max"}).collect()[0][0] > 1
-    window_path = {
-        tuple(r)
-        for r in mentions_from_window_tokens(score_windows(windows))
-        .select("conv_id", "turn_idx", "start_tok", "end_tok", "label", "surface")
-        .collect()
-    }
-    assert window_path == turn_path
+    assert _window_path_mentions(labeled, windows) == turn_path
     assert len(turn_path) > 0
 
 
 def test_window_path_merges_oversized_turn_continuations(spark):
     """A turn LONGER than the window budget splits into continuation
-    windows; score_windows must merge those segments back into one
-    label_batch call so the window path equals the per-turn path even
-    past the budget. The fixture plants 'Mary Jones' EXACTLY at the
-    split: 12 one-subword fillers fill window 0 to 13 words ('Mary' is
-    word 13), so 'Jones' lands in window 1 — unmerged segment scoring
-    would tag the standalone-alias 'Mary' instead of 'Mary Jones'."""
+    windows; unpacking must merge those segments back into one turn so
+    the window path equals the per-turn path even past the budget. The
+    fixture plants 'Mary Jones' EXACTLY at the split: 12 one-subword
+    fillers fill window 0 to 13 words ('Mary' is word 13), so 'Jones'
+    lands in window 1 — a realignment that lost the continuation would
+    cut the surface to 'Mary'."""
     from nametag3_spark.data.synth import TRANSCRIPT_SCHEMA
     from nametag3_spark.operators.encode import pack_conversations
-    from nametag3_spark.operators.infer import (
-        mentions_from_window_tokens,
-        score_windows,
-    )
 
     text = " ".join(["zzzz"] * 12 + ["Mary", "Jones"] + ["zzzz"] * 10)
     t = spark.createDataFrame(
@@ -384,14 +399,8 @@ def test_window_path_merges_oversized_turn_continuations(spark):
     turn_path = {
         tuple(r) for r in extract_mentions(labeled).select(*cols).collect()
     }
-    window_path = {
-        tuple(r)
-        for r in mentions_from_window_tokens(score_windows(windows))
-        .select(*cols)
-        .collect()
-    }
     assert ("c1", 0, 12, 13, "PER", "Mary Jones") in turn_path
-    assert window_path == turn_path
+    assert _window_path_mentions(labeled, windows) == turn_path
 
 
 def test_cc_long_chain_distributed_pointer_jumping(spark):

@@ -179,7 +179,28 @@ def test_serving_valid_path_has_no_shuffle(spark):
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
     assert "Exchange hashpartitioning" not in p
     assert "SortMergeJoin" not in p
-    # one fused Python stage per scorer key (here: exactly one)
+    # one fused Python stage
+    assert p.count(") MapInPandas") == 1
+
+
+def test_serving_plans_one_pass_for_many_models(spark):
+    """Requests for models under different scorer keys share the one
+    fused pass: each request carries its alias's scorer key into it, so
+    the plan has one Python stage and no per-model union."""
+    from nametag3_spark.serving import ModelRegistry, process_requests
+
+    reg = ModelRegistry()
+    reg.register("gaz-model", scorer="oracle")
+    reg.register("cap-model", scorer="hf:fake-ckpt")
+    reqs = spark.createDataFrame(
+        [
+            ("g1", "recognize", "Paris .", "gaz-model", None, "xml"),
+            ("h1", "recognize", "Paris .", "cap-model", None, "xml"),
+        ],
+        "request_id string, endpoint string, data string, model string, "
+        "input string, output string",
+    )
+    p = plan_of(process_requests(reqs, reg))
     assert p.count(") MapInPandas") == 1
 
 
