@@ -1946,7 +1946,8 @@ def _serve_responses(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize requests derived deterministically from the documents table
     (doc_id arithmetic picks endpoint/output and injects the reference's
     error paths: unknown model, missing data), processed through
-    serving.process_requests in one fused Python pass."""
+    serving.process_requests, whose one Python pass handles every
+    request, valid or not."""
     from nametag3_spark.serving import ModelRegistry, process_requests
 
     registry = ModelRegistry()
@@ -2010,10 +2011,10 @@ def q_serve_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_serve_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The serving surface's VALIDATION cascade, cross-engine-verified:
-    status code, content type, and resolved canonical model name are pure
-    relational logic (error-precedence when-chain + broadcast alias join
-    + error/ok union), so DuckDB recomputes them from the same doc_id
+    """The serving surface's VALIDATION outcome, cross-engine-verified:
+    status code, content type, and resolved canonical model name follow
+    from the request fields by the reference's error precedence and the
+    alias lookup alone, so DuckDB recomputes them from the same doc_id
     arithmetic — oracle-green coverage for the half of serving.py that is
     SQL-expressible (the scored bodies stay in ``serve_requests``)."""
     return _serve_responses(spark, sf_dir).select(

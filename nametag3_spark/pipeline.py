@@ -7,10 +7,9 @@
 and ``PipelineRun`` runs it with each stage materialized as an atomic
 table snapshot (after a ``rejected`` quarantine snapshot).
 
-Snapshot layer: Iceberg when its runtime jars are on the classpath
-(``iceberg_available()``), else a parquet-directory snapshot store with the
-same contract — atomic publish (write to a tmp dir, rename the old
-snapshot aside, rename the tmp dir in), a manifest
+Snapshot layer: ``SnapshotStore``, a parquet-directory store — atomic
+publish (write to a tmp dir, rename the old snapshot aside, rename the
+tmp dir in), a manifest
 carrying the stage's input fingerprint, and lineage rows (rows per write
 task, read from the written part files' parquet footers). Resume: a
 stage whose manifest fingerprint matches its input's is skipped and its
@@ -47,21 +46,6 @@ from nametag3_spark.operators.linking import link_mentions
 from nametag3_spark.operators.skew import spread_if_narrow
 from nametag3_spark.operators.triples import emit_triples, extract_mentions
 from nametag3_spark.operators.validate import validate_turns
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True iff the Iceberg runtime is actually on the JVM classpath.
-
-    Must use ``Class.forName``: a bare ``spark._jvm.org.apache.iceberg.X``
-    attribute access never raises (py4j returns a JavaPackage stub for
-    unknown names), which would make the probe always-truthy."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.Snapshot"
-        )
-        return True
-    except Exception:
-        return False
 
 
 def _written_rows(data_dir: str) -> dict[int, int]:

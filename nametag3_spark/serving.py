@@ -7,9 +7,9 @@ reads, re-expressed over a DataFrame where each row is one request:
 
 * model-alias resolution with progressive suffix-stripping and
   shared-instance registration (Models.__init__,
-  nametag3_server.py:423-453)
-* parameter validation with the reference's error texts and codes,
-  including the 413 request-size guard (do_GET,
+  nametag3_server.py:423-453): a dict lookup per request
+* parameter validation in the reference's order with its error texts
+  and codes, including the 413 request-size guard (do_GET,
   nametag3_server.py:497-516, 566-590)
 * whole-request NFC normalization + the X-Billing-Input-NFC-Len count
   over word forms (nametag3_server.py:565, 604)
@@ -20,22 +20,24 @@ reads, re-expressed over a DataFrame where each row is one request:
   to, then per-format rendering: xml | vertical | conll | conllu-ne,
   with the request-global vertical token counter and the weblicht
   raw-CoNLL-U content type (nametag3_server.py:612-700)
+* the conllu-ne generator header and the JSON response envelope
+  (nametag3_server.py:700-717)
 
-Execution shape (the 100 TB design): requests are row-independent, so the
-whole parse→score→decode→render chain runs in ONE fused ``mapInPandas``
-pass for every registered model — a single Arrow boundary, no shuffle
-anywhere, no second Python stage and no per-model union in the plan
-(chaining two Python stages costs a serialization boundary; measured 30×
-on this host). Validation and response-envelope assembly are pure
-column expressions; the registry join is a broadcast of a tiny alias
-table. Request size is bounded by the 413 guard, so no single row can
-skew a partition.
+Execution shape (the 100 TB design): requests are row-independent, so one
+routine, ``_handle_request`` (the counterpart of do_GET), runs everything
+above for a request inside ONE ``mapInPandas`` pass. The plan is a
+projection plus that pass: one Arrow boundary, no join, union or shuffle,
+whatever the number of models or error rows (chaining two Python stages
+costs a serialization boundary; measured 30× on a 4-core host). The
+projection is the 413 guard: it flags an oversize request and nulls its
+``data``, so such a payload never crosses into Python.
 """
 
 from __future__ import annotations
 
+import json
 import unicodedata
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -49,13 +51,22 @@ from nametag3_spark.functions.text import (
     tokenize_text,
 )
 from nametag3_spark.operators.decode import decode_spans
-from nametag3_spark.session import local_frame
 
 MAX_REQUEST_SIZE = 4096 * 1024  # reference --max_request_size default
 ACK_URL = "https://ufal.mff.cuni.cz/nametag/3#acknowledgements"
 VALID_INPUTS = ("untokenized", "vertical", "conllu")
 BASE_OUTPUTS = ("xml", "vertical")
 RECOGNIZE_OUTPUTS = ("xml", "vertical", "conll", "conllu-ne")
+TOO_LARGE = (
+    "The request is too large (HTTP 413).\n\nFix: Split your input on "
+    "sentence boundaries into smaller\nparts and send each part as a "
+    "separate request,\nthen concatenate the results.\n"
+)
+CONLLU_NE_HEADER = (
+    "# generator = NameTag 3, https://lindat.mff.cuni.cz/services/nametag\n"
+    "# nametag_model = {model}\n"
+    "# nametag_model_licence = CC BY-NC-SA\n"
+)
 
 
 def expand_aliases(name: str) -> list[str]:
@@ -63,6 +74,13 @@ def expand_aliases(name: str) -> list[str]:
     trailing-part strip (nametag3_server.py:430-433)."""
     parts = name.split("-")
     return ["-".join(parts[: None if not i else -i]) for i in range(len(parts))]
+
+
+class RegisteredModel(NamedTuple):
+    canonical: str
+    scorer: str
+    tagset: str | None
+    acknowledgements: str
 
 
 class ModelRegistry:
@@ -73,8 +91,7 @@ class ModelRegistry:
     in operators/infer.py provides the sharing; J5)."""
 
     def __init__(self, default_model: str | None = None):
-        self._rows: list[tuple[str, str, str, str | None, str]] = []
-        self._taken: set[str] = set()
+        self.aliases: dict[str, RegisteredModel] = {}
         self.canonical_names: list[str] = []
         self.default_model = default_model
 
@@ -90,22 +107,10 @@ class ModelRegistry:
         self.canonical_names.append(canonical)
         if self.default_model is None:
             self.default_model = canonical
+        model = RegisteredModel(canonical, scorer, tagset, acknowledgements)
         for name in name_list:
             for alias in expand_aliases(name):
-                if alias in self._taken:  # setdefault: first wins
-                    continue
-                self._taken.add(alias)
-                self._rows.append(
-                    (alias, canonical, scorer, tagset, acknowledgements)
-                )
-
-    def alias_df(self, spark) -> DataFrame:
-        return local_frame(
-            spark,
-            self._rows,
-            "alias string, canonical string, scorer string, "
-            "tagset string, acknowledgements string",
-        )
+                self.aliases.setdefault(alias, model)
 
     def models_response(self) -> dict:
         """The /models endpoint payload (nametag3_server.py:556-563)."""
@@ -220,70 +225,115 @@ def _render_request(
     return body, n_entities
 
 
-def _serve_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """The fused serving pass: each request runs the model its resolved
-    alias registered (``scorer`` column), loaded once per key per worker
-    by the scorer cache."""
-    from nametag3_spark.operators.infer import _get_scorer
+def _handle_request(
+    registry: ModelRegistry,
+    request_id: str,
+    endpoint: str,
+    data: str | None,
+    too_large: bool,
+    model_req: str | None,
+    input_fmt: str | None,
+    output_fmt: str | None,
+) -> tuple:
+    """One request → one response row (_RESPONSE_SCHEMA), in do_GET's
+    order: endpoint defaults, validation, parse, predict, render, wrap."""
+    model_req = registry.default_model if model_req is None else model_req
+    model = registry.aliases.get(model_req)
+    weblicht = endpoint == "weblicht/recognize"
+    if endpoint == "tokenize":
+        input_fmt = "untokenized"
+    elif weblicht:
+        input_fmt, output_fmt = "conllu", "conllu-ne"
+    input_fmt = input_fmt or "untokenized"
+    output_fmt = output_fmt or "xml"
 
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        out_rows = []
-        for req_id, data, input_fmt, output_fmt, endpoint, canonical, ack, key in zip(
-            pdf["request_id"], pdf["data"], pdf["input"],
-            pdf["output"], pdf["endpoint"],
-            pdf["canonical"], pdf["acknowledgements"], pdf["scorer"],
-        ):
-            data = unicodedata.normalize("NFC", data or "")
-            sentences = _parse_sentences(data, input_fmt)
-            # the word forms are the sentences just parsed, except for
-            # conllu, which bills its word lines, not the surface tokens
-            billing = (
-                _billing_chars(data, input_fmt)
-                if input_fmt == "conllu"
-                else sum(len(t) for sent in sentences for t in sent)
-            )
-            if endpoint == "tokenize" or not sentences:
-                spans: list[list[dict]] = [[] for _ in sentences]
-                stacks: list[list[str]] = [
-                    ["O"] * len(s) for s in sentences
-                ]
-            else:
-                # ONE label_batch call per request: the scorer batches
-                # internally; per-worker instance is shared (J5)
-                stacks = _get_scorer(key).label_batch(
-                    [_prep_for_scoring(s) for s in sentences]
-                )
-                spans = [
-                    [
-                        {"label": t, "start_tok": s, "end_tok": e}
-                        for t, s, e in decode_spans(st)
-                    ]
-                    for st in stacks
-                ]
-            result, n_entities = _render_request(
-                sentences, spans, stacks, output_fmt
-            )
-            out_rows.append(
-                (req_id, result, billing, len(sentences), n_entities,
-                 endpoint, output_fmt, canonical, ack)
-            )
-        yield pd.DataFrame(
-            out_rows,
-            columns=[
-                "request_id", "result", "billing_nfc_len",
-                "n_sentences", "n_entities",
-                "endpoint", "output", "canonical", "acknowledgements",
-            ],
+    message = None
+    if too_large:
+        message = TOO_LARGE
+    elif data is None:
+        message = "The parameter 'data' is required."
+    elif model is None:
+        message = f"The requested model '{model_req}' does not exist."
+    elif input_fmt not in VALID_INPUTS:
+        message = f"The requested input '{input_fmt}' does not exist."
+    elif output_fmt not in (
+        BASE_OUTPUTS if endpoint == "tokenize" else RECOGNIZE_OUTPUTS
+    ):
+        message = f"The requested output '{output_fmt}' does not exist."
+    if message is not None:
+        status = 413 if too_large else 400
+        return (request_id, status, "text/plain", None, None, None, None, message)
+
+    data = unicodedata.normalize("NFC", data)
+    sentences = _parse_sentences(data, input_fmt)
+    # the word forms are the sentences just parsed, except for conllu,
+    # which bills its word lines, not the surface tokens
+    billing = (
+        _billing_chars(data, input_fmt)
+        if input_fmt == "conllu"
+        else sum(len(t) for sent in sentences for t in sent)
+    )
+    if endpoint == "tokenize" or not sentences:
+        spans: list[list[dict]] = [[] for _ in sentences]
+        stacks: list[list[str]] = [["O"] * len(s) for s in sentences]
+    else:
+        from nametag3_spark.operators.infer import _get_scorer
+
+        # ONE label_batch call per request: the scorer batches
+        # internally; the per-worker instance is shared (J5)
+        stacks = _get_scorer(model.scorer).label_batch(
+            [_prep_for_scoring(s) for s in sentences]
         )
+        spans = [
+            [
+                {"label": t, "start_tok": s, "end_tok": e}
+                for t, s, e in decode_spans(st)
+            ]
+            for st in stacks
+        ]
+    result, n_entities = _render_request(sentences, spans, stacks, output_fmt)
+
+    if weblicht:
+        content_type, body = "application/conllu", result
+    else:
+        if output_fmt == "conllu-ne":
+            result = CONLLU_NE_HEADER.format(model=model.canonical) + result
+        content_type = "application/json"
+        body = json.dumps(
+            {
+                "model": model.canonical,
+                "acknowledgements": [ACK_URL, model.acknowledgements],
+                "result": result,
+            },
+            ensure_ascii=False,
+            separators=(",", ":"),
+        )
+    return (
+        request_id, 200, content_type, billing, model.canonical,
+        len(sentences), n_entities, body,
+    )
 
 
-_SERVE_SCHEMA = (
-    "request_id string, result string, billing_nfc_len bigint, "
-    "n_sentences int, n_entities int, endpoint string, output string, "
-    "canonical string, acknowledgements string"
+_RESPONSE_SCHEMA = (
+    "request_id string, status int, content_type string, "
+    "billing_nfc_len bigint, model string, n_sentences int, "
+    "n_entities int, body string"
 )
+
+
+def _serve_batches(
+    batches: Iterator[pd.DataFrame], registry: ModelRegistry
+) -> Iterator[pd.DataFrame]:
+    columns = [f.split()[0] for f in _RESPONSE_SCHEMA.split(", ")]
+    for pdf in batches:
+        if len(pdf):
+            yield pd.DataFrame(
+                [
+                    _handle_request(registry, *req)
+                    for req in pdf.itertuples(index=False)
+                ],
+                columns=columns,
+            )
 
 
 def process_requests(
@@ -297,158 +347,24 @@ def process_requests(
 
     ``endpoint`` ∈ recognize | tokenize | weblicht/recognize (the three
     data paths of do_GET). Null model/input/output take the server's
-    defaults. Each request runs the model its resolved alias registered:
-    the alias table's ``scorer`` key rides into the one fused pass, so N
-    registered models still plan one Python stage.
+    defaults. Every request, valid or not, goes through the one
+    ``mapInPandas`` pass, which runs the model its alias resolved to;
+    the registry rides into the pass with the function.
     """
-    spark = requests.sparkSession
-    aliases = F.broadcast(registry.alias_df(spark))
-
-    req = (
-        requests.withColumn(
-            "model_req", F.coalesce(F.col("model"), F.lit(registry.default_model))
+    if not registry.aliases:
+        raise ValueError(
+            "process_requests needs a ModelRegistry with at least one "
+            "registered model"
         )
-        .withColumn(
-            "input",
-            F.when(F.col("endpoint") == "tokenize", F.lit("untokenized"))
-            .when(
-                F.col("endpoint") == "weblicht/recognize", F.lit("conllu")
-            )
-            .otherwise(F.coalesce(F.col("input"), F.lit("untokenized"))),
-        )
-        .withColumn(
-            "output",
-            F.when(
-                F.col("endpoint") == "weblicht/recognize", F.lit("conllu-ne")
-            ).otherwise(F.coalesce(F.col("output"), F.lit("xml"))),
-        )
-        .join(aliases, F.col("model_req") == aliases["alias"], "left")
+    too_large = (
+        F.octet_length(F.coalesce(F.col("data"), F.lit(""))) > max_request_size
     )
-
-    # validation cascade — reference order and texts (do_GET)
-    err = (
-        F.when(
-            F.octet_length(F.coalesce(F.col("data"), F.lit(""))) > max_request_size,
-            F.struct(
-                F.lit(413).alias("status"),
-                F.lit(
-                    "The request is too large (HTTP 413).\n\nFix: Split your "
-                    "input on sentence boundaries into smaller\nparts and send "
-                    "each part as a separate request,\nthen concatenate the "
-                    "results.\n"
-                ).alias("message"),
-            ),
-        )
-        .when(
-            F.col("data").isNull(),
-            F.struct(
-                F.lit(400).alias("status"),
-                F.lit("The parameter 'data' is required.").alias("message"),
-            ),
-        )
-        .when(
-            F.col("canonical").isNull(),
-            F.struct(
-                F.lit(400).alias("status"),
-                F.concat(
-                    F.lit("The requested model '"),
-                    F.col("model_req"),
-                    F.lit("' does not exist."),
-                ).alias("message"),
-            ),
-        )
-        .when(
-            ~F.col("input").isin(*VALID_INPUTS),
-            F.struct(
-                F.lit(400).alias("status"),
-                F.concat(
-                    F.lit("The requested input '"),
-                    F.col("input"),
-                    F.lit("' does not exist."),
-                ).alias("message"),
-            ),
-        )
-        .when(
-            (
-                (F.col("endpoint") == "tokenize")
-                & ~F.col("output").isin(*BASE_OUTPUTS)
-            )
-            | ~F.col("output").isin(*RECOGNIZE_OUTPUTS),
-            F.struct(
-                F.lit(400).alias("status"),
-                F.concat(
-                    F.lit("The requested output '"),
-                    F.col("output"),
-                    F.lit("' does not exist."),
-                ).alias("message"),
-            ),
-        )
+    # the columns in _handle_request's order; an oversize payload stops
+    # here, only its flag enters Python
+    return requests.select(
+        "request_id", "endpoint", F.when(~too_large, F.col("data")).alias("data"),
+        too_large.alias("too_large"), "model", "input", "output",
+    ).mapInPandas(
+        lambda batches: _serve_batches(batches, registry),
+        schema=_RESPONSE_SCHEMA,
     )
-    req = req.withColumn("_err", err)
-
-    errors = req.where(F.col("_err").isNotNull()).select(
-        "request_id",
-        F.col("_err.status").alias("status"),
-        F.lit("text/plain").alias("content_type"),
-        F.lit(None).cast("bigint").alias("billing_nfc_len"),
-        F.lit(None).cast("string").alias("model"),
-        F.lit(None).cast("int").alias("n_sentences"),
-        F.lit(None).cast("int").alias("n_entities"),
-        F.col("_err.message").alias("body"),
-    )
-
-    # metadata columns ride THROUGH the fused pass and come back out, so
-    # no post-scoring join is needed — the whole valid path is one Python
-    # stage with zero shuffles, whatever the number of models. (Measured:
-    # a narrow-input repartition before the Python stage is a net LOSS
-    # here — the 200-request pass itself is ~0.3s, and the `.rdd`
-    # narrowness probe re-plans the whole validation subtree, costing
-    # seconds cold. A deployment feeding a huge single-file
-    # request batch should repartition upstream of this call.)
-    ok = (
-        req.where(F.col("_err").isNull())
-        .select(
-            "request_id", "data", "input", "output", "endpoint",
-            "canonical", "acknowledgements", "scorer",
-        )
-        .mapInPandas(_serve_batches, schema=_SERVE_SCHEMA)
-    )
-
-    is_weblicht = F.col("endpoint") == "weblicht/recognize"
-    result_with_header = F.when(
-        (F.col("output") == "conllu-ne") & ~is_weblicht,
-        F.concat(
-            F.lit(
-                "# generator = NameTag 3, "
-                "https://lindat.mff.cuni.cz/services/nametag\n"
-            ),
-            F.lit("# nametag_model = "), F.col("canonical"), F.lit("\n"),
-            F.lit("# nametag_model_licence = CC BY-NC-SA\n"),
-            F.col("result"),
-        ),
-    ).otherwise(F.col("result"))
-
-    body = F.when(is_weblicht, F.col("result")).otherwise(
-        F.to_json(
-            F.struct(
-                F.col("canonical").alias("model"),
-                F.array(
-                    F.lit(ACK_URL), F.col("acknowledgements")
-                ).alias("acknowledgements"),
-                result_with_header.alias("result"),
-            )
-        )
-    )
-    ok = ok.select(
-        "request_id",
-        F.lit(200).alias("status"),
-        F.when(is_weblicht, F.lit("application/conllu"))
-        .otherwise(F.lit("application/json"))
-        .alias("content_type"),
-        "billing_nfc_len",
-        F.col("canonical").alias("model"),
-        "n_sentences",
-        "n_entities",
-        body.alias("body"),
-    )
-    return ok.unionByName(errors)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import importlib.util
 import sys
+from pathlib import Path
 
 DRIVER_WINDOW = 50
 
@@ -30,7 +31,8 @@ def _entry():
     if "_spark_entry_module" in sys.modules:
         return sys.modules["_spark_entry_module"]
     spec = importlib.util.spec_from_file_location(
-        "_spark_entry_module", "/root/repo/__spark_entry__.py"
+        "_spark_entry_module",
+        Path(__file__).resolve().parent.parent / "__spark_entry__.py",
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -5,7 +5,7 @@ canonicalize → emit fails this test with a diff.
 
 Regenerate (only after an INTENDED semantic change) with:
 
-    PYTHONPATH=/root/repo python tests/test_golden_triples.py
+    PYTHONPATH=. python tests/test_golden_triples.py
 
 which rewrites tests/golden_triples.json from the current code.
 """

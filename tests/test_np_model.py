@@ -112,7 +112,7 @@ def test_pipeline_np_model_counts_pinned(spark):
     """The ``pipeline_np_model`` entry query (seed-42 checkpoint, sf0.01
     synth sizes) keeps the per-label token counts it had when it scored
     with a dedicated window pass, before the model moved behind
-    ``score_windows("np:…")``."""
+    ``annotate_turns(t, "np:…")``."""
     from tests.test_driver_contract import _entry
 
     rows = _entry().queries()["pipeline_np_model"](spark, "sf0.01").collect()

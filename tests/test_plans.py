@@ -58,17 +58,14 @@ def test_gazetteer_link_is_broadcast_with_one_python_stage(spark):
 
 
 def test_driver_side_tables_scan_as_local_relations(spark):
-    """The gazetteer, the driver-CC map and the serving alias table are
-    Arrow LocalRelations (LocalTableScan), never an RDD of pickled rows
-    (Scan ExistingRDD) that re-runs a Python pass on every plan scan."""
+    """The gazetteer and the driver-CC map are Arrow LocalRelations
+    (LocalTableScan), never an RDD of pickled rows (Scan ExistingRDD) that
+    re-runs a Python pass on every plan scan."""
     from nametag3_spark.data.synth import synth_transcripts
     from nametag3_spark.pipeline import kg_dataflow
-    from nametag3_spark.serving import ModelRegistry
 
     frames = kg_dataflow(synth_transcripts(spark, n_convs=4, avg_turns=3))
-    reg = ModelRegistry()
-    reg.register("nametag3-multilingual-250203", scorer="oracle")
-    for df in (frames["linked"], frames["canonical"], reg.alias_df(spark)):
+    for df in (frames["linked"], frames["canonical"]):
         p = plan_of(df)
         assert "LocalTableScan" in p
         assert "ExistingRDD" not in p
@@ -162,10 +159,9 @@ def test_comention_path_has_no_sort_merge_join(spark):
 
 
 def test_serving_valid_path_has_no_shuffle(spark):
-    """The serving surface's valid-request path is one fused Python pass:
-    the registry join must be a broadcast and NOTHING may shuffle —
-    request-level parallelism survives any cluster size only if the plan
-    has no Exchange hashpartitioning."""
+    """The serving surface's valid-request path is one fused Python pass
+    and NOTHING may shuffle — request-level parallelism survives any
+    cluster size only if the plan has no Exchange hashpartitioning."""
     from nametag3_spark.serving import ModelRegistry, process_requests
 
     reg = ModelRegistry()
@@ -176,7 +172,6 @@ def test_serving_valid_path_has_no_shuffle(spark):
         "input string, output string",
     )
     p = plan_of(process_requests(reqs, reg))
-    assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
     assert "Exchange hashpartitioning" not in p
     assert "SortMergeJoin" not in p
     # one fused Python stage
@@ -202,6 +197,30 @@ def test_serving_plans_one_pass_for_many_models(spark):
     )
     p = plan_of(process_requests(reqs, reg))
     assert p.count(") MapInPandas") == 1
+
+
+def test_serving_plan_is_one_pass_without_union_join_or_exchange(spark):
+    """Valid and invalid requests alike go through the one request
+    handler: the plan is the requests scan, one projection (the 413 guard)
+    and one MapInPandas — no error leg unioned back, no alias join and no
+    shuffle."""
+    from nametag3_spark.serving import ModelRegistry, process_requests
+
+    reg = ModelRegistry()
+    reg.register("nametag3-multilingual-250203:nametag3-english", scorer="oracle")
+    reqs = spark.createDataFrame(
+        [
+            ("r1", "recognize", "Paris .", "nametag3-english", None, "xml"),
+            ("r2", "recognize", "Paris .", "no-such-model", None, None),
+            ("r3", "tokenize", None, None, None, None),
+        ],
+        "request_id string, endpoint string, data string, model string, "
+        "input string, output string",
+    )
+    p = plan_of(process_requests(reqs, reg))
+    assert p.count(") MapInPandas") == 1
+    for node in ("Union", "Join", "Exchange"):
+        assert node not in p, node
 
 
 def test_ivf_corpus_side_has_no_explode(spark):

@@ -52,7 +52,7 @@ def test_alias_expansion_matches_reference_expression():
 
 
 def test_registry_first_registration_wins(registry):
-    rows = {alias: canonical for alias, canonical, *_ in registry._rows}
+    rows = {alias: model.canonical for alias, model in registry.aliases.items()}
     # "nametag3" is a prefix alias of BOTH models; the first registered wins
     assert rows["nametag3"] == "nametag3-multilingual-250203"
     assert rows["nametag3-czech-cnec2.0"] == "nametag3-czech-cnec2.0"
@@ -88,6 +88,17 @@ def test_validation_errors_and_isolation(spark, registry):
     assert out["ok"]["status"] == 200
     assert "John Smith" not in out["ok"]["body"]  # greedy matched "John" alone
     assert "PER" in out["ok"]["body"]
+
+
+def test_empty_registry_rejected_on_driver(spark):
+    """A registry with no model has no default to fall back on, so a
+    request with a null model could only get an error without a text:
+    the call fails on the driver instead, before any plan is built."""
+    df = spark.createDataFrame(
+        [("r1", "recognize", "Paris .", None, None, None)], REQ_SCHEMA
+    )
+    with pytest.raises(ValueError, match="registered model"):
+        process_requests(df, ModelRegistry())
 
 
 def test_recognize_xml_nested_and_envelope(spark, registry):

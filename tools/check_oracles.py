@@ -10,10 +10,13 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script sits in, so the driver and the Python workers
+# import the same tree
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
