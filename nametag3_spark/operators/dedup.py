@@ -15,6 +15,11 @@ functions (no Python in the hot path):
   simhash prefix buckets (Hamming verification on candidates).
 * n-gram Jaccard: direct verified similarity for candidate pairs.
 
+Every near-dup pair builder here and in ``similarity`` blocks through
+one join, ``bucket_pairs`` (hot-bucket cap, ids-only self-join, id_a <
+id_b, one pair dedup); ``with_pair_payload`` then re-joins each side's
+verify payload by id.
+
 At 100 TB the LSH path is the scale path: signatures are computed in one
 projection pass, the band join is an equi-join AQE can split on skew, and
 verification touches only candidate pairs.
@@ -250,6 +255,80 @@ def lsh_bands(
     ).select(*cols, "band.band_idx", "band.band_hash")
 
 
+def check_hash_family(param: str, value: str, accepted=("xxhash64", "portable")):
+    """Raise on an unknown hash-family name: a typo must not silently run
+    the default family (a DuckDB comparison would compare other hashes)."""
+    if value not in accepted:
+        raise ValueError(f"{param}={value!r}: expected one of {accepted}")
+
+
+def jaccard(a, b):
+    """|a ∩ b| / |a ∪ b| of two array columns (names or Columns)."""
+    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
+
+
+def drop_hot_buckets(
+    rows: DataFrame, bucket_cols: list[str], cap: int
+) -> DataFrame:
+    """``rows`` minus every bucket holding more than ``cap`` rows — the
+    standard LSH skew cap (such buckets are degenerate, e.g. boilerplate;
+    true near-dups in them almost always share another, smaller bucket).
+    The hot key set is tiny by construction → broadcast anti-join."""
+    hot = rows.groupBy(*bucket_cols).count().where(F.col("count") > cap)
+    return rows.join(
+        F.broadcast(hot.select(*bucket_cols)), bucket_cols, "left_anti"
+    )
+
+
+def bucket_pairs(
+    rows: DataFrame,
+    id_col: str,
+    bucket_cols: list[str],
+    bucket_cap: int | None = None,
+    carry: list[str] | None = None,
+) -> DataFrame:
+    """The one blocking join: ``(id, bucket_cols…, carry…)`` rows → the
+    distinct pairs ``(id_a, id_b, <carry>_a…, <carry>_b…)``, id_a < id_b,
+    of ids sharing a bucket. Only ids, bucket keys and the (fixed-width)
+    ``carry`` ride the shuffle; fat payloads re-join afterwards through
+    ``with_pair_payload``. ``bucket_cap=None`` keeps every bucket, so an
+    exact blocking stays exact. ``rows`` feeds the hot-key scan and both
+    join sides: callers pass a persisted table."""
+    carry = carry or []
+    if bucket_cap is not None:
+        rows = drop_hot_buckets(rows, bucket_cols, bucket_cap)
+
+    def side(s: str) -> DataFrame:
+        return rows.select(
+            *bucket_cols,
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return (
+        side("a")
+        .join(side("b"), bucket_cols)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *[f"{c}_{s}" for s in "ab" for c in carry])
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def with_pair_payload(
+    pairs: DataFrame, payload: DataFrame, id_col: str, col: str
+) -> DataFrame:
+    """Re-join each side's ``col`` of ``payload`` (keyed by ``id_col``)
+    onto ``(id_a, id_b, …)`` pairs as ``<col>_a`` / ``<col>_b``."""
+    for s in "ab":
+        pairs = pairs.join(
+            payload.select(
+                F.col(id_col).alias(f"id_{s}"), F.col(col).alias(f"{col}_{s}")
+            ),
+            f"id_{s}",
+        )
+    return pairs
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -261,18 +340,10 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard) via banded MinHash.
 
-    Scale shape (the part that survives 100 TB):
-
-    * the band self-join and the pair-dedup carry ONLY
-      ``(band_idx, band_hash, id)`` — 24-byte rows. Shingle sets are
-      re-joined by doc id AFTER ``dropDuplicates(id_a, id_b)``, so the
-      fat payload never rides the candidate shuffle and hot band-buckets
-      are quadratic in row COUNT, not in document size.
-    * hot-bucket guard: any ``(band_idx, band_hash)`` bucket holding more
-      than ``bucket_cap`` docs is skipped (standard LSH skew cap — such
-      buckets are degenerate, e.g. boilerplate shingles; true near-dups
-      in them almost always share another, smaller band bucket). The hot
-      key set is tiny by construction → broadcast anti-join.
+    Scale shape: the ``(band_idx, band_hash)`` buckets go through
+    ``bucket_pairs`` (24-byte id/band rows, buckets above ``bucket_cap``
+    docs skipped) and the shingle-hash sets re-join through
+    ``with_pair_payload`` after the pair dedup.
 
     ``hashed`` and ``bands`` feed multiple plan branches (hot-key scan,
     both join sides, verify re-join), so both are persisted — the
@@ -291,6 +362,7 @@ def minhash_lsh_pairs(
     DuckDB evaluates identically — the cross-engine-verification mode;
     "xxhash64" (default) is the JVM-intrinsic 100 TB fast path.
     """
+    check_hash_family("word_hash", word_hash)
     portable = word_hash == "portable"
     # one codegen'd pass: shingle rows → per-doc (hash set, 16 minima).
     # ``hashed`` (the verify payload + signature columns) is the only
@@ -304,34 +376,10 @@ def minhash_lsh_pairs(
         )
     )
     bands = _persist(lsh_bands(hashed, [id_col], N_HASHES, N_BANDS, portable))
-
-    hot = (
-        bands.groupBy("band_idx", "band_hash")
-        .count()
-        .where(F.col("count") > bucket_cap)
-        .select("band_idx", "band_hash")
-    )
-    bands = bands.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
-
-    left = bands.select("band_idx", "band_hash", F.col(id_col).alias("id_a"))
-    right = bands.select("band_idx", "band_hash", F.col(id_col).alias("id_b"))
-    cands = (
-        left.join(right, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    sh_a = hashed.select(F.col(id_col).alias("id_a"), F.col("_hs").alias("_hs_a"))
-    sh_b = hashed.select(F.col(id_col).alias("id_b"), F.col("_hs").alias("_hs_b"))
+    cands = bucket_pairs(bands, id_col, ["band_idx", "band_hash"], bucket_cap)
     return (
-        cands.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_hs_a", "_hs_b"))
-            / F.size(F.array_union("_hs_a", "_hs_b")),
-        )
+        with_pair_payload(cands, hashed, id_col, "_hs")
+        .withColumn("jaccard", jaccard("_hs_a", "_hs_b"))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -347,9 +395,10 @@ def jaccard_pairs_exact(
     """EXACT near-dup pairs (id_a < id_b, true Jaccard ≥ threshold) via
     shared-shingle inverted-index blocking — no LSH approximation.
 
-    Exactness: Jaccard ≥ t > 0 implies the pair shares ≥1 shingle, so an
-    equi-join on exploded shingles generates a candidate superset; true
-    Jaccard verification then runs only on those candidates. This is the
+    Exactness: Jaccard ≥ t > 0 implies the pair shares ≥1 shingle, so
+    ``bucket_pairs`` on exploded shingles (no hot-bucket cap) generates a
+    candidate superset; true Jaccard verification then runs only on
+    those candidates. This is the
     DuckDB-oracle-able twin of ``minhash_lsh_pairs`` and the recall
     denominator for the LSH path. Candidate volume is Σ count(shingle)²
     over shared shingles — fine at verification SFs; the LSH path is the
@@ -363,29 +412,11 @@ def jaccard_pairs_exact(
         id_col
     ).agg(F.collect_set("_s").alias("_sh"))
     shingled = _persist(shingled)
-    inv = shingled.select(
-        F.col(id_col), F.explode("_sh").alias("_shingle")
-    )
-    cands = (
-        inv.alias("a")
-        .join(inv.alias("b"), "_shingle")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh_a = shingled.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"))
-    sh_b = shingled.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"))
+    inv = shingled.select(F.col(id_col), F.explode("_sh").alias("_shingle"))
+    cands = bucket_pairs(inv, id_col, ["_shingle"])
     return (
-        cands.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_sh_a", "_sh_b"))
-            / F.size(F.array_union("_sh_a", "_sh_b")),
-        )
+        with_pair_payload(cands, shingled, id_col, "_sh")
+        .withColumn("jaccard", jaccard("_sh_a", "_sh_b"))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -496,6 +527,7 @@ def simhash(
         expressible identically in DuckDB ``CAST('0x'||substr(md5(w),1,15)
         AS BIGINT)`` — the cross-engine-verifiable path; n_bits caps at 60.
     """
+    check_hash_family("word_hash", word_hash)
     if word_hash == "portable":
         n_bits = min(n_bits, 60)
         wh = "cast(conv(substring(md5(w), 1, 15), 16, 10) as bigint)"
@@ -550,11 +582,10 @@ def simhash_pairs(
     n_bands`` shares at least one intact band, so (hot-bucket cap aside)
     candidate recall over true pairs is exact, not probabilistic.
     Candidates are then verified JVM-side with ``bit_count(a ^ b) <=
-    max_hamming``. The band self-join carries only (band_idx, band_val,
-    id, simhash) — the 8-byte fingerprint IS the verification payload, so
-    nothing document-sized rides the shuffle. Buckets above
-    ``bucket_cap`` docs (degenerate boilerplate) are dropped via
-    broadcast anti-join, same cap as the MinHash path.
+    max_hamming``. The bands go through ``bucket_pairs`` with the 8-byte
+    fingerprint as its ``carry`` — it IS the verification payload, so no
+    re-join is needed and nothing document-sized rides the shuffle.
+    Buckets above ``bucket_cap`` docs are dropped, as on the MinHash path.
     """
     if max_hamming >= n_bands:
         raise ValueError(
@@ -587,27 +618,11 @@ def simhash_pairs(
     # and recompute the per-doc fingerprint aggregate (the expensive
     # part); registered in the module cleanup registry like minhash
     banded = _persist(banded)
-    hot = (
-        banded.groupBy("band_idx", "band_val")
-        .count()
-        .where(F.col("count") > bucket_cap)
-        .select("band_idx", "band_val")
-    )
-    banded = banded.join(F.broadcast(hot), ["band_idx", "band_val"], "left_anti")
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("_sh_a"),
-        "band_idx", "band_val",
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("_sh_b"),
-        "band_idx", "band_val",
-    )
     return (
-        a.join(b, ["band_idx", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_sh_a", "_sh_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", F.expr("bit_count(_sh_a ^ _sh_b)"))
+        bucket_pairs(
+            banded, id_col, ["band_idx", "band_val"], bucket_cap, ["simhash"]
+        )
+        .withColumn("hamming", F.expr("bit_count(simhash_a ^ simhash_b)"))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -706,7 +721,6 @@ def ngram_jaccard_pairs(
         "jaccard",
         F.when(
             F.size(F.array_union("_sh_a", "_sh_b")) > 0,
-            F.size(F.array_intersect("_sh_a", "_sh_b"))
-            / F.size(F.array_union("_sh_a", "_sh_b")),
+            jaccard("_sh_a", "_sh_b"),
         ).otherwise(F.lit(0.0)),
     )

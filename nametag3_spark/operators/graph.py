@@ -52,6 +52,32 @@ def _persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def _comention_counts(
+    docs: DataFrame, lexicon: list[str] | None, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The shared half of ``comention_edges`` and ``pmi_edges``: the
+    distinct ``(_doc, surf)`` mention table and its within-doc pair
+    counts ``(src, dst, weight)`` with src < dst."""
+    mentions = docs.select(
+        F.col(id_col).alias("_doc"),
+        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("surf"),
+    )
+    if lexicon is not None:
+        mentions = mentions.where(F.col("surf").isin(list(lexicon)))
+    else:
+        mentions = mentions.where(F.col("surf") != "")
+    mentions = mentions.distinct()
+    a = mentions.alias("a")
+    b = mentions.alias("b")
+    edges = (
+        a.join(b, on=[F.col("a._doc") == F.col("b._doc"),
+                      F.col("a.surf") < F.col("b.surf")])
+        .groupBy(F.col("a.surf").alias("src"), F.col("b.surf").alias("dst"))
+        .agg(F.count(F.lit(1)).cast("long").alias("weight"))
+    )
+    return mentions, edges
+
+
 def comention_edges(
     docs: DataFrame,
     lexicon: list[str] | None,
@@ -69,23 +95,7 @@ def comention_edges(
     (per-doc pair fan-out is then distinct-token-count², so cap
     pathological docs before calling).
     """
-    mentions = docs.select(
-        F.col(id_col).alias("_doc"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("surf"),
-    )
-    if lexicon is not None:
-        mentions = mentions.where(F.col("surf").isin(list(lexicon)))
-    else:
-        mentions = mentions.where(F.col("surf") != "")
-    mentions = mentions.distinct()
-    a = mentions.alias("a")
-    b = mentions.alias("b")
-    return (
-        a.join(b, on=[F.col("a._doc") == F.col("b._doc"),
-                      F.col("a.surf") < F.col("b.surf")])
-        .groupBy(F.col("a.surf").alias("src"), F.col("b.surf").alias("dst"))
-        .agg(F.count("*").cast("long").alias("weight"))
-    )
+    return _comention_counts(docs, lexicon, id_col, text_col)[1]
 
 
 def pagerank(
@@ -413,28 +423,11 @@ def pmi_edges(
     Returns ``(src, dst, weight, src_docs, dst_docs, pmi_micro)``
     for pairs with ``weight >= min_weight``.
     """
-    mentions = docs.select(
-        F.col(id_col).alias("_doc"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("surf"),
-    )
-    if lexicon is not None:
-        mentions = mentions.where(F.col("surf").isin(list(lexicon)))
-    else:
-        mentions = mentions.where(F.col("surf") != "")
-    mentions = mentions.distinct()
-
+    mentions, edges = _comention_counts(docs, lexicon, id_col, text_col)
     surf_docs = mentions.groupBy("surf").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
-    a = mentions.alias("a")
-    b = mentions.alias("b")
-    edges = (
-        a.join(b, on=[F.col("a._doc") == F.col("b._doc"),
-                      F.col("a.surf") < F.col("b.surf")])
-        .groupBy(F.col("a.surf").alias("src"), F.col("b.surf").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("long").alias("weight"))
-        .where(F.col("weight") >= int(min_weight))
-    )
+    edges = edges.where(F.col("weight") >= int(min_weight))
     n_total = docs.count()
     sd = surf_docs  # ≤ |vocab| rows: AQE broadcasts both lookups
     edges = (

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nametag3_spark.operators.dedup import lsh_bands, minhash_sigs
+from nametag3_spark.operators.dedup import jaccard, lsh_bands, minhash_sigs
 
 N_HASHES = 12
 N_BANDS = 4  # rows per band = N_HASHES / N_BANDS
@@ -119,11 +119,7 @@ def lsh_candidates(
             F.broadcast(g_bands), ["band_idx", "band_hash"]
         )
         .dropDuplicates(["mention_norm", *g_ids])
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_hs_m", "_hs_g"))
-            / F.size(F.array_union("_hs_m", "_hs_g")),
-        )
+        .withColumn("jaccard", jaccard("_hs_m", "_hs_g"))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("mention_norm", "entity_id", "jaccard")
     )

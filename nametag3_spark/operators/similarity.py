@@ -16,6 +16,11 @@
   vectors), queries probe their ``nprobe`` nearest cells. Unlike sign-LSH
   buckets, IVF cells ADAPT to the data's cluster structure, so clustered
   embedding spaces get much better recall per candidate scored.
+
+Both ANN paths share one tail (``_bucket_topk``: candidate join and
+dedup, exact ``_cosine`` re-score, per-query ``_topk``); the near-dup
+pair builders block through dedup's one blocked-pair join
+(``bucket_pairs`` / ``drop_hot_buckets`` + ``with_pair_payload``).
 """
 
 from __future__ import annotations
@@ -23,7 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nametag3_spark.operators.dedup import _persist
+from nametag3_spark.operators.dedup import (
+    _persist,
+    bucket_pairs,
+    check_hash_family,
+    drop_hot_buckets,
+    with_pair_payload,
+)
 from nametag3_spark.operators.skew import spread_if_narrow
 
 
@@ -41,15 +52,59 @@ def _norm(a):
     )
 
 
-def with_unit_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Pre-normalize so cosine = dot (one pass, saves work in every query)."""
-    n = _norm(F.col(vec_col))
-    return df.withColumn(
-        vec_col,
-        F.when(n > 0, F.transform(F.col(vec_col), lambda v: v / n)).otherwise(
-            F.col(vec_col)
-        ),
+def _cosine(a, b):
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of ``(query_id, neighbor_id, cosine)`` rows, ties
+    broken by neighbor_id for determinism."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
     )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
+def _bucket_topk(
+    qb: DataFrame,
+    cb: DataFrame,
+    keys: list[str],
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The ANN tail: ``(query_id, keys…)`` query buckets (broadcast) ×
+    ``(neighbor_id, keys…)`` corpus buckets → distinct candidates → query
+    vectors broadcast, corpus vectors re-joined by id → exact cosine →
+    top-k. The bucket join and the candidate dedup carry ids only; the
+    big side never ships vectors through the bucket join."""
+    cands = (
+        F.broadcast(qb)
+        .join(cb, keys)
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    qv = F.broadcast(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+        )
+    )
+    cv = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
+    )
+    scored = cands.join(qv, "query_id").join(cv, "neighbor_id").select(
+        "query_id",
+        "neighbor_id",
+        _cosine(F.col("_qvec"), F.col("_cvec")).alias("cosine"),
+    )
+    return _topk(scored, k)
 
 
 def cosine_topk_bruteforce(
@@ -66,8 +121,6 @@ def cosine_topk_bruteforce(
     Output: (query_id, neighbor_id, cosine, rank), ties broken by
     neighbor_id for determinism.
     """
-    from nametag3_spark.operators.skew import spread_if_narrow
-
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
@@ -82,19 +135,9 @@ def cosine_topk_bruteforce(
     scored = q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
         "neighbor_id",
-        (
-            _dot(F.col("_qvec"), F.col("_cvec"))
-            / (_norm(F.col("_qvec")) * _norm(F.col("_cvec")))
-        ).alias("cosine"),
+        _cosine(F.col("_qvec"), F.col("_cvec")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, k)
 
 
 # affine coefficients of the PORTABLE plane-weight hash: weight(i, p, t)
@@ -109,6 +152,7 @@ PLANE_C = 2_654_435_761
 
 def _plane_weight(i, p: int, table: int, plane_hash: str):
     """Per (table, plane, dim) pseudo-random weight in [-1, 1]."""
+    check_hash_family("plane_hash", plane_hash)
     if plane_hash == "portable":
         c_pt = (p + 1) * PLANE_B + (table + 1) * PLANE_C
         h = F.pmod(
@@ -182,48 +226,22 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
     threshold): sign-LSH self-bucketing for candidates, exact cosine
     verification — the dedup-by-embedding path of a training-data
-    pipeline. Same scale shape as MinHash dedup: the ×n_tables bucket
-    explode and the pair-dedup carry IDS ONLY (vectors are re-joined by
-    id after ``dropDuplicates``), candidates come from an equi-join on
-    (table, bucket), buckets above ``bucket_cap`` are skipped (skew
-    guard), and verification touches only candidates. The id-only bucket
-    table feeds three branches (hot scan + both join sides) and the
-    hyperplane projections are the CPU-heavy part, so it is computed on
-    full parallelism and persisted — once, not per branch."""
+    pipeline. Same scale shape as MinHash dedup: the ×n_tables
+    (table, bucket) explode carries IDS ONLY and goes through
+    ``dedup.bucket_pairs`` (buckets above ``bucket_cap`` skipped); vectors
+    re-join by id through ``with_pair_payload``. The id-only bucket table
+    feeds three branches (hot scan + both join sides) and the hyperplane
+    projections are the CPU-heavy part, so it is computed on full
+    parallelism and persisted — once, not per branch."""
     src = spread_if_narrow(vectors, id_col)
     buckets = _persist(
         _bucketize_ids(src, id_col, vec_col, n_planes, n_tables, plane_hash)
     )
-    hot = (
-        buckets.groupBy("tbl", "bucket")
-        .count()
-        .where(F.col("count") > bucket_cap)
-        .select("tbl", "bucket")
-    )
-    buckets = buckets.join(F.broadcast(hot), ["tbl", "bucket"], "left_anti")
-    cands = (
-        buckets.select("tbl", "bucket", F.col(id_col).alias("id_a"))
-        .join(
-            buckets.select("tbl", "bucket", F.col(id_col).alias("id_b")),
-            ["tbl", "bucket"],
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    va = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    cands = bucket_pairs(buckets, id_col, ["tbl", "bucket"], bucket_cap)
+    va, vb = F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")
     return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                _dot(F.col("_va"), F.col("_vb"))
-                / (_norm(F.col("_va")) * _norm(F.col("_vb")))
-            ).alias("cosine"),
-        )
+        with_pair_payload(cands, vectors, id_col, vec_col)
+        .select("id_a", "id_b", _cosine(va, vb).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 
@@ -248,44 +266,15 @@ def lsh_bucket_topk(
     structure get substantially better recall at the same settings.
 
     Scale shape: the corpus-side ×n_tables bucket explode carries IDS
-    ONLY; query buckets are broadcast; vectors re-join by id after
-    candidate dedup — the big side never ships vectors through the
-    bucket join."""
-    qb = F.broadcast(
-        _bucketize_ids(
-            queries, id_col, vec_col, n_planes, n_tables, plane_hash
-        ).select(F.col(id_col).alias("query_id"), "tbl", "bucket")
-    )
+    ONLY; candidates, re-scoring and top-k are ``_bucket_topk``."""
+    qb = _bucketize_ids(
+        queries, id_col, vec_col, n_planes, n_tables, plane_hash
+    ).select(F.col(id_col).alias("query_id"), "tbl", "bucket")
     cb = _bucketize_ids(
         corpus, id_col, vec_col, n_planes, n_tables, plane_hash
     ).select(F.col(id_col).alias("neighbor_id"), "tbl", "bucket")
-    cands = (
-        qb.join(cb, ["tbl", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    qv = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
-    )
-    scored = cands.join(qv, "query_id").join(cv, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        (
-            _dot(F.col("_qvec"), F.col("_cvec"))
-            / (_norm(F.col("_qvec")) * _norm(F.col("_cvec")))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _bucket_topk(
+        qb, cb, ["tbl", "bucket"], corpus, queries, k, id_col, vec_col
     )
 
 
@@ -352,6 +341,7 @@ def train_ivf_centroids(
     DuckDB reproduces, so ``train_ivf_centroids_duckdb`` can rebuild the
     identical sample (and centroids) for cross-engine verification.
     xxhash64 stays the default fast path."""
+    check_hash_family("sample_hash", sample_hash)
     if sample_hash == "portable":
         order = F.pmod(
             F.col(id_col) * F.lit(PORTABLE_SAMPLE_A), F.lit(PORTABLE_SAMPLE_M)
@@ -407,14 +397,7 @@ def _ivf_cells(vec_col: str, cents, nprobe: int):
     blows up codegen size and compile time dominates. The 2-arg
     transform lambda is deliberate:
     it receives (element, index), and the index IS the cell id."""
-    scores = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(F.col(vec_col), c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
+    scores = F.transform(cents, lambda c: _dot(F.col(vec_col), c))
     ranked = F.array_sort(
         F.transform(
             scores,
@@ -440,12 +423,11 @@ def ivf_topk(
 
     Pass pre-trained ``centroids`` to skip training (production reuses
     one trained quantizer across queries/jobs). Scale shape mirrors
-    ``lsh_bucket_topk``: the corpus-side cell table carries IDS ONLY —
-    and unlike the LSH path's ×n_tables explode, top-1 assignment adds
-    just ONE int per corpus vector. Query cells (×nprobe) are broadcast,
-    candidates come from the cell equi-join, vectors re-join by id for
-    exact cosine re-scoring. Recall/cost dial: candidates scored per
-    query ≈ corpus × nprobe / n_centroids."""
+    ``lsh_bucket_topk`` (same ``_bucket_topk`` tail): the corpus-side
+    cell table carries IDS ONLY — and unlike the LSH path's ×n_tables
+    explode, top-1 assignment adds just ONE int per corpus vector; query
+    cells are ×nprobe. Recall/cost dial: candidates scored per query ≈
+    corpus × nprobe / n_centroids."""
     if centroids is None:
         centroids = train_ivf_centroids(corpus, n_centroids, id_col, vec_col)
     cents = _centroid_literal(centroids)
@@ -453,42 +435,11 @@ def ivf_topk(
         F.col(id_col).alias("neighbor_id"),
         F.element_at(_ivf_cells(vec_col, cents, 1), 1).alias("cell"),
     )
-    qb = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(_ivf_cells(vec_col, cents, nprobe)).alias("cell"),
-        )
+    qb = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.explode(_ivf_cells(vec_col, cents, nprobe)).alias("cell"),
     )
-    cands = (
-        qb.join(cb, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    qv = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-        )
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
-    )
-    scored = cands.join(qv, "query_id").join(cv, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        (
-            _dot(F.col("_qvec"), F.col("_cvec"))
-            / (_norm(F.col("_qvec")) * _norm(F.col("_cvec")))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _bucket_topk(qb, cb, ["cell"], corpus, queries, k, id_col, vec_col)
 
 
 def semantic_dedup_pairs(
@@ -507,13 +458,15 @@ def semantic_dedup_pairs(
 
     Scale shape: cell assignment adds ONE int per corpus vector (no
     explode); the within-cell self-join carries IDS ONLY and vectors
-    re-join by id for the cosine verify, so the quadratic term is
-    per-cell, controlled by n_centroids (SemDeDup's own knob — clusters
-    shrink as sqrt-ish of their count when you scale n_centroids with the
-    corpus). ``hot_cell_cap`` anti-joins away degenerate cells the same
-    way the LSH paths cap hot buckets: a cell above the cap is skipped
-    (and at 100 TB you raise n_centroids instead of paying n² on it).
-    Returns (id_a, id_b, cosine) with id_a < id_b.
+    re-join by id (``dedup.with_pair_payload``) for the cosine verify, so
+    the quadratic term is per-cell, controlled by n_centroids (SemDeDup's
+    own knob — clusters shrink as sqrt-ish of their count when you scale
+    n_centroids with the corpus). ``hot_cell_cap`` skips degenerate cells
+    through ``dedup.drop_hot_buckets``, as the LSH paths cap hot buckets
+    (at 100 TB you raise n_centroids instead of paying n² on a cell).
+    Unlike ``bucket_pairs`` the cell join needs no pair dedup: each id
+    sits in exactly one cell, so a pair meets once — a dedup would only
+    add a shuffle. Returns (id_a, id_b, cosine) with id_a < id_b.
     """
     if centroids is None:
         centroids = train_ivf_centroids(corpus, n_centroids, id_col, vec_col)
@@ -523,32 +476,19 @@ def semantic_dedup_pairs(
         F.element_at(_ivf_cells(vec_col, cents, 1), 1).alias("cell"),
     )
     if hot_cell_cap is not None:
-        hot = cells.groupBy("cell").count().where(F.col("count") > hot_cell_cap)
-        cells = cells.join(F.broadcast(hot.select("cell")), "cell", "left_anti")
+        cells = drop_hot_buckets(cells, ["cell"], hot_cell_cap)
     a = cells.select(F.col("_id").alias("id_a"), "cell")
     b = cells.select(F.col("_id").alias("id_b"), "cell")
     cand = a.join(b, "cell").where(F.col("id_a") < F.col("id_b")).select(
         "id_a", "id_b"
     )
-    va = corpus.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).cast("array<double>").alias("_va"),
+    vecs = corpus.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
-    vb = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).cast("array<double>").alias("_vb"),
-    )
+    va, vb = F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                _dot(F.col("_va"), F.col("_vb"))
-                / (_norm(F.col("_va")) * _norm(F.col("_vb")))
-            ).alias("cosine"),
-        )
+        with_pair_payload(cand, vecs, id_col, vec_col)
+        .select("id_a", "id_b", _cosine(va, vb).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 

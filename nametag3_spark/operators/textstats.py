@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nametag3_spark.operators.dedup import check_hash_family
+
 _STOPWORDS = {
     "en": ["the", "and", "of", "to", "is", "in", "that", "for"],
     "es": ["el", "la", "de", "que", "y", "en", "los", "una"],
@@ -109,6 +111,7 @@ def fingerprint(
       - "xxhash64": JVM-intrinsic word hash — fastest path for pure-Spark
         100 TB runs where no cross-engine twin is needed.
     """
+    check_hash_family("word_hash", word_hash, ("polynomial", "xxhash64"))
     if word_hash == "xxhash64":
         def _wh(w):
             return F.pmod(F.xxhash64(w), F.lit(mod))

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nametag3_spark.eval.spans import macro_avg_f1, per_type_prf, span_prf
+from nametag3_spark.operators import dedup, similarity, textstats
 
 
 @pytest.fixture(scope="module")
@@ -614,3 +615,87 @@ def test_quality_filter_rules_and_reasons(spark):
     # zero stopwords — both remaining rules fail, in fixed order
     assert not out[2]["keep"]
     assert out[2]["reasons"] == "word_len,low_stopword"
+
+
+@pytest.mark.parametrize("cap", [None, 4])
+@pytest.mark.parametrize("carry", [None, ["fp"]])
+def test_bucket_pairs_matches_python_blocking(spark, cap, carry):
+    """The one blocked-pair join equals a Python brute-force blocking:
+    every distinct id pair (a < b) sharing a (tbl, bucket) that holds at
+    most ``cap`` rows, with the carry column re-labelled per side."""
+    import random
+    from collections import defaultdict
+    from itertools import combinations
+
+    from nametag3_spark.operators.dedup import bucket_pairs
+
+    rng = random.Random(7)
+    rows = [
+        (i, t, rng.randrange(6), i * 7 + 1) for i in range(30) for t in range(2)
+    ]
+    df = spark.createDataFrame(rows, "id long, tbl int, bucket int, fp long")
+
+    members = defaultdict(list)
+    for i, t, b, _ in rows:
+        members[(t, b)].append(i)
+    want = set()
+    for ids in members.values():
+        if cap is None or len(ids) <= cap:
+            for a, b in combinations(sorted(ids), 2):
+                want.add((a, b, a * 7 + 1, b * 7 + 1) if carry else (a, b))
+    assert any(len(v) > 4 for v in members.values())  # the cap bites
+
+    out = bucket_pairs(df, "id", ["tbl", "bucket"], cap, carry)
+    cols = ["id_a", "id_b", "fp_a", "fp_b"] if carry else ["id_a", "id_b"]
+    assert sorted(out.columns) == sorted(cols)
+    got = [tuple(r[c] for c in cols) for r in out.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want and want
+
+
+def test_blocking_join_code_appears_once():
+    """The pair dedup, the per-query top-k window and the cosine quotient
+    each exist once in the package: a hand-copied blocking join, ANN
+    tail or cosine fails this."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "nametag3_spark"
+    src = "".join(f.read_text() for f in sorted(pkg.rglob("*.py")))
+    for snippet in (
+        '.dropDuplicates(["id_a", "id_b"])',
+        'Window.partitionBy("query_id")',
+        "/ (_norm(",
+    ):
+        assert src.count(snippet) == 1, snippet
+
+
+_UNKNOWN_FAMILY = {
+    "minhash_lsh_pairs": lambda d, e: dedup.minhash_lsh_pairs(d, word_hash="Portable"),
+    "minhash_recall": lambda d, e: dedup.minhash_recall(d, word_hash="Portable"),
+    "simhash": lambda d, e: dedup.simhash(d, word_hash="Portable"),
+    "simhash_buckets": lambda d, e: dedup.simhash_buckets(d, word_hash="xxhash"),
+    "simhash_pairs": lambda d, e: dedup.simhash_pairs(d, word_hash="Portable"),
+    "embedding_near_dup_pairs": lambda d, e: similarity.embedding_near_dup_pairs(
+        e, plane_hash="Portable"
+    ),
+    "lsh_bucket_topk": lambda d, e: similarity.lsh_bucket_topk(
+        e, e, plane_hash="Portable"
+    ),
+    "train_ivf_centroids": lambda d, e: similarity.train_ivf_centroids(
+        e, sample_hash="Portable"
+    ),
+    "fingerprint": lambda d, e: textstats.fingerprint(d, word_hash="Polynomial"),
+}
+
+
+@pytest.mark.parametrize("name", list(_UNKNOWN_FAMILY))
+def test_unknown_hash_family_rejected(spark, name):
+    """A hash-family name outside a function's two families raises on the
+    driver instead of silently running the default family."""
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="expected one of"):
+        _UNKNOWN_FAMILY[name](docs, emb)

@@ -93,27 +93,33 @@ def test_minhash_exchanges_carry_no_shingle_payload(spark):
     """The band self-join and pair-dedup must shuffle id/band columns
     only — the hashed-shingle arrays (_hs) re-join AFTER dedup. Guards
     the round-2 payload fix: every Exchange node's Output must be free
-    of _hs/_sh."""
+    of _hs/_sh. The embedding near-dup path shares the same blocked-pair
+    join, so no Exchange there partitions on the embedding vectors."""
     from nametag3_spark.operators.dedup import minhash_lsh_pairs
+    from nametag3_spark.operators.similarity import embedding_near_dup_pairs
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(minhash_lsh_pairs(docs, jaccard_threshold=0.5))
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     # formatted plan: node sections "(n) Exchange" followed by detail
     # lines incl. "Arguments: hashpartitioning(...)" / input schemas
     import re
 
-    sections = re.split(r"\n\(\d+\) ", plan)
-    exchanges = [s for s in sections if s.startswith("Exchange")]
-    assert exchanges, "expected shuffle exchanges in the LSH plan"
-    # NOTE: only the partitioning ARGUMENTS are asserted payload-free —
-    # the post-dedup verification re-join legitimately shuffles _hs once
-    # (by id), so a blanket "no exchange carries _hs" would be wrong; the
-    # invariant is that nothing ever PARTITIONS on an array payload.
-    for ex in exchanges:
-        first_line = ex.splitlines()[0]
-        args = [l for l in ex.splitlines() if l.startswith("Arguments:")]
-        for a in args:
-            assert "_hs" not in a and "_sh" not in a, (first_line, a)
+    for plan, payload in (
+        (plan_of(minhash_lsh_pairs(docs, jaccard_threshold=0.5)), ("_hs", "_sh")),
+        (plan_of(embedding_near_dup_pairs(emb, threshold=0.3)), ("embedding",)),
+    ):
+        sections = re.split(r"\n\(\d+\) ", plan)
+        exchanges = [s for s in sections if s.startswith("Exchange")]
+        assert exchanges, "expected shuffle exchanges in the LSH plan"
+        # NOTE: only the partitioning ARGUMENTS are asserted payload-free —
+        # the post-dedup verification re-join legitimately shuffles the
+        # payload once (by id), so a blanket "no exchange carries _hs" would
+        # be wrong; the invariant is that nothing ever PARTITIONS on it.
+        for ex in exchanges:
+            first_line = ex.splitlines()[0]
+            args = [l for l in ex.splitlines() if l.startswith("Arguments:")]
+            for a in args:
+                assert not any(p in a for p in payload), (first_line, a)
 
 
 def test_fuzzy_linking_plan_has_no_interpreted_hofs(spark):
