@@ -227,6 +227,11 @@ def canonicalize_mentions(
       * (surfaces sharing an entity therefore merge transitively)
     Unlinked surfaces canonicalize to their own surface key.
 
+    A linked surface canonicalizes to its component's minimum entity
+    node, which is the component id: nodes are ``e:<entity>`` and
+    ``m:<surface>|<label>``, ``"e:" < "m:"``, and every edge has an
+    ``e:`` end, so every component's minimum node is an entity node.
+
     The surface→canonical map is BROADCAST only when the deduped edge
     count proves it small (≤ BROADCAST_EDGE_LIMIT); otherwise it joins by
     shuffle and AQE picks the strategy — at 10^12 turns the distinct-
@@ -244,37 +249,18 @@ def canonicalize_mentions(
     components, n_edges = _connected_components_sized(
         edges, driver_threshold=driver_threshold
     )
-    # canonical id of a component: its min entity node if any, else min node
-    per_component = components.groupBy("component").agg(
-        F.min(F.when(F.col("node").startswith("e:"), F.col("node"))).alias(
-            "canon_entity"
-        )
+    # the component id IS the canonical id. This rests on the prefix
+    # order "e:" < "m:" (docstring): a component's minimum node is its
+    # minimum entity node
+    canon = components.select(
+        F.col("node").alias("_surf_node"),
+        F.col("component").alias("entity_canonical"),
     )
-    if n_edges is not None and n_edges <= BROADCAST_EDGE_LIMIT:
-        # driver-CC path proved the graph tiny. Its local_frame output is
-        # a LocalRelation with real size stats, so Catalyst often picks
-        # the broadcast unaided; the hint stays so the choice does not
-        # hang on autoBroadcastJoinThreshold (set to -1, or below the
-        # map's estimated size after the aggregate, it would plan a
-        # SortMergeJoin). Guarded by the same edge bound as the final
-        # map join.
-        per_component = F.broadcast(per_component)
-    canon = per_component.join(components, "component").select(
-        "node",
-        F.coalesce(F.col("canon_entity"), F.col("component")).alias(
-            "entity_canonical"
-        ),
-    )
-    canon = canon.withColumnRenamed("node", "_surf_node")
     if n_edges is not None and n_edges <= BROADCAST_EDGE_LIMIT:
         canon = F.broadcast(canon)
     return (
         linked.withColumn("_surf_node", surf)
-        .join(
-            canon,
-            "_surf_node",
-            "left",
-        )
+        .join(canon, "_surf_node", "left")
         .withColumn(
             "entity_canonical",
             F.coalesce(F.col("entity_canonical"), F.col("_surf_node")),

@@ -136,19 +136,26 @@ def link_mentions(
     Output: mentions + ``entity_id`` (nullable) + ``link_method``
     (exact | lsh | null).
 
-    The best-candidate map (one row per distinct unmatched surface) is
-    broadcast only when a cheap ``approx_count_distinct`` over the
-    unmatched side proves it under ``broadcast_surface_limit``; otherwise
-    it joins by shuffle and AQE picks the physical strategy from runtime
-    stats. Mirrors canonicalize.py's edge-bounded canonical-map guard.
+    A cheap ``approx_count_distinct`` over the unmatched side sizes the
+    fuzzy tier. At 0 (HLL++ reads 0 only when no surface was added) the
+    LSH tier is not planned and the rows are the ``fuzzy=False`` rows.
+    Otherwise the best-candidate map (one row per distinct unmatched
+    surface) is broadcast only under ``broadcast_surface_limit``; over
+    it, it joins by shuffle and AQE picks the physical strategy from
+    runtime stats. Mirrors canonicalize.py's edge-bounded map guard.
     """
     exact = link_exact(mentions, gazetteer)
-    if not fuzzy:
+    unmatched = exact.where(F.col("entity_id").isNull()).drop("entity_id")
+    # single-row partial aggregation — no shuffle of the data, one scan
+    # of the mentions input (a parquet snapshot read in PipelineRun)
+    n_unmatched = 0
+    if fuzzy:
+        n_unmatched = unmatched.agg(F.approx_count_distinct("mention_norm")).first()[0]
+    if n_unmatched == 0:
         return exact.withColumn(
             "link_method",
             F.when(F.col("entity_id").isNotNull(), F.lit("exact")),
         )
-    unmatched = exact.where(F.col("entity_id").isNull()).drop("entity_id")
     matched = exact.where(F.col("entity_id").isNotNull()).withColumn(
         "link_method", F.lit("exact")
     )
@@ -166,11 +173,6 @@ def link_mentions(
         .where(F.col("_rk") == 1)
         .select("mention_norm", "entity_id")
     )
-    # single-row partial aggregation — no shuffle of the data, one scan
-    # (cached upstream in the pipeline) — bounds the broadcast build side
-    n_unmatched = unmatched.agg(
-        F.approx_count_distinct("mention_norm").alias("n")
-    ).first()[0]
     if n_unmatched <= broadcast_surface_limit:
         best = F.broadcast(best)
     fuzzy_linked = unmatched.join(best, "mention_norm", "left").withColumn(

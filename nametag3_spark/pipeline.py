@@ -9,12 +9,13 @@ table snapshot (after a ``rejected`` quarantine snapshot).
 
 Snapshot layer: ``SnapshotStore``, a parquet-directory store — atomic
 publish (write to a tmp dir, rename the old snapshot aside, rename the
-tmp dir in), a manifest
-carrying the stage's input fingerprint, and lineage rows (rows per write
-task, read from the written part files' parquet footers). Resume: a
-stage whose manifest fingerprint matches its input's is skipped and its
-snapshot read back (north rule: "checkpoints per snapshot so any stage
-resumes without recompute").
+tmp dir in), a manifest carrying the stage's input fingerprint, the
+schema of the written files and lineage rows (rows per write task, read
+from the written part files' parquet footers). Resume: a stage whose
+manifest fingerprint matches its input's is skipped and its snapshot
+read back (north rule: "checkpoints per snapshot so any stage resumes
+without recompute"). A read-back takes its schema from the manifest, so
+it runs no Spark job.
 
 The fingerprint is a hash of (stage name, config, upstream fingerprint),
 NOT wall-clock, so reruns are byte-stable. The first upstream is the
@@ -38,6 +39,7 @@ from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from nametag3_spark.data.synth import gazetteer_df
 from nametag3_spark.operators.canonicalize import canonicalize_incremental
@@ -86,7 +88,9 @@ class SnapshotStore:
         return m is not None and m.get("fingerprint") == fingerprint
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._dir(name), "data"))
+        # the manifest's schema: parquet inference runs a footer-reading job
+        schema = StructType.fromJson(self.manifest(name)["schema"])
+        return spark.read.schema(schema).parquet(os.path.join(self._dir(name), "data"))
 
     def write(
         self,
@@ -96,9 +100,10 @@ class SnapshotStore:
         partition_by: list[str] | None = None,
     ) -> dict:
         """Materialize + publish atomically; returns the manifest: the
-        row count and the rows each write task wrote (``partition_id``
-        is the task number in the part file name), read from the
-        footers of the files just written."""
+        row count, the rows each write task wrote (``partition_id`` is
+        the task number in the part file name), read from the footers
+        of the files just written, and the files' schema (``df.schema``
+        less the ``partition_by`` columns, typed from directory names)."""
         final_dir = self._dir(name)
         tmp_dir = final_dir + ".tmp-" + uuid.uuid4().hex[:8]
         data_dir = os.path.join(tmp_dir, "data")
@@ -111,6 +116,7 @@ class SnapshotStore:
         manifest = {
             "stage": name,
             "fingerprint": fingerprint,
+            "schema": df.drop(*(partition_by or [])).schema.jsonValue(),
             "row_count": sum(partitions.values()),
             "partitions": [
                 {"partition_id": task, "rows": rows}
@@ -270,6 +276,7 @@ class PipelineRun:
         Invalid turns (oversize / null keys, P10) are quarantined into
         their own ``rejected`` snapshot — never silently dropped — and
         the accepted set flows on."""
+        self.stages_run, self.stages_skipped = [], []
         upstream = _fingerprint("input", self.input_fingerprint, code_digest())
 
         def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:

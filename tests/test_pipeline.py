@@ -148,6 +148,18 @@ def test_pipeline_resume(spark, tmp_path):
     assert rows1 == rows2  # byte-identical output
 
 
+def test_second_run_on_one_instance_reports_only_its_own_stages(spark, tmp_path):
+    """``stages_run`` / ``stages_skipped`` describe the latest ``run()``:
+    a second call on the same instance resumes all six stages and
+    reports 0 run, 6 skipped (not the first call's six on top)."""
+    transcripts = synth_transcripts(spark, n_convs=3, avg_turns=3)
+    run = PipelineRun(spark, warehouse=str(tmp_path / "wh"))
+    run.run(transcripts)
+    assert len(run.stages_run) == 6 and not run.stages_skipped
+    run.run(transcripts)
+    assert not run.stages_run and len(run.stages_skipped) == 6
+
+
 def test_resume_keys_on_code_version(spark, tmp_path, monkeypatch):
     """Snapshots written by other code re-run instead of being reused:
     the package-source digest is part of the input fingerprint."""
@@ -172,8 +184,8 @@ def test_callers_of_the_dataflow_agree(spark, tmp_path):
     """PipelineRun, kg_dataflow's default hook and the triples stream
     run one dataflow: over the same files the two batch callers emit
     identical rows and the stream the same (pred, conv_id, turn_idx)
-    multiset. A fully-current resume runs no more jobs than one schema
-    read per snapshot."""
+    multiset. A fully-current resume runs no Spark job: each snapshot is
+    read back with the schema its manifest records."""
     from collections import Counter
 
     from nametag3_spark.pipeline import kg_dataflow
@@ -212,7 +224,7 @@ def test_callers_of_the_dataflow_agree(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(resumed.stages_skipped) == 6
-    assert len(jobs) <= 6, jobs
+    assert len(jobs) == 0, jobs
 
 
 def test_only_pipeline_chains_the_dataflow():
@@ -528,6 +540,137 @@ def test_link_mentions_best_broadcast_guard_plans(spark):
     assert a == b and len(a) > 0
 
 
+def _plan_of(df) -> str:
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+LSH_TIER_NODES = ("ObjectHashAggregate", "Window", "Generate")
+
+
+def test_link_mentions_skips_the_fuzzy_tier_when_all_surfaces_match(spark):
+    """The synth surfaces all match the gazetteer exactly, so the
+    unmatched approx-distinct count reads 0: fuzzy linking plans no LSH
+    tier (no shingle explode, signature aggregate or best-candidate
+    window) and returns the ``fuzzy=False`` rows. The mentions are
+    checkpointed so the plan holds only what linking adds."""
+    mentions = _mentions(spark).localCheckpoint()
+    gaz = gazetteer_df(spark)
+    fuzzy = link_mentions(mentions, gaz, fuzzy=True)
+    plan = _plan_of(fuzzy)
+    assert not [node for node in LSH_TIER_NODES if node in plan], plan
+    exact = link_mentions(mentions, gaz, fuzzy=False)
+    assert fuzzy.columns == exact.columns
+    assert sorted(fuzzy.collect()) == sorted(exact.collect())
+
+
+def test_link_mentions_plans_the_fuzzy_tier_for_one_unmatched_surface(spark):
+    """The skip keys on an approx-distinct count of exactly 0: one
+    unmatched surface (n=1, the HyperLogLog++ boundary) must still plan
+    the whole LSH tier and route only that surface through it."""
+    mentions = _mentions(spark)
+    one = mentions.agg(F.min("mention_norm")).first()[0]
+    perturbed = mentions.withColumn(
+        "mention_norm",
+        F.when(
+            F.col("mention_norm") == one, F.concat(F.col("mention_norm"), F.lit("x"))
+        ).otherwise(F.col("mention_norm")),
+    ).localCheckpoint()
+    linked = link_mentions(perturbed, gazetteer_df(spark), fuzzy=True)
+    plan = _plan_of(linked)
+    assert all(node in plan for node in LSH_TIER_NODES), plan
+    methods = {
+        (r["mention_norm"] == one + "x", r["link_method"])
+        for r in linked.select("mention_norm", "link_method").collect()
+    }
+    assert (False, "exact") in methods
+    assert {m for hit, m in methods if hit} <= {"lsh", None}
+    assert {m for hit, m in methods if not hit} == {"exact"}
+
+
+def _reference_canonical(edges: list[tuple[str, str]]) -> dict[str, str]:
+    """The rule canonicalization used before the component id stood in
+    for it: per component, its minimum ``e:`` node, else the component."""
+    from nametag3_spark.operators.canonicalize import _union_find
+
+    component = _union_find(edges)
+    min_entity: dict[str, str] = {}
+    for node, comp in component.items():
+        if node.startswith("e:"):
+            min_entity[comp] = min(min_entity.get(comp, node), node)
+    return {node: min_entity.get(comp, comp) for node, comp in component.items()}
+
+
+def test_component_id_is_the_min_entity_node_on_random_graphs():
+    """Node ids are ``e:<entity>`` / ``m:<surface>|<label>`` and every
+    edge joins a surface to an entity, so ``"e:" < "m:"`` makes each
+    component's minimum node its minimum entity node: the union-find
+    component equals the reference rule on random bipartite graphs."""
+    import random
+
+    from nametag3_spark.operators.canonicalize import _union_find
+
+    alphabet = "aeimz09ňá |"
+    for seed in range(200):
+        rng = random.Random(seed)
+
+        def name() -> str:
+            return "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 4)))
+
+        surfaces = [f"m:{name()}|{rng.choice(['PER', 'ORG'])}" for _ in range(12)]
+        entities = [f"e:{name()}" for _ in range(8)]
+        edges = [
+            (rng.choice(surfaces), rng.choice(entities))
+            for _ in range(rng.randint(1, 20))
+        ]
+        assert _union_find(edges) == _reference_canonical(edges), edges
+
+
+def test_canonical_ids_match_the_reference_rule_on_both_cc_paths(spark):
+    """A two-entity surface ("jan" linked to E007 and E003) and an alias
+    chain (a–E200–b–E150–c–E100–d) canonicalize to the reference rule's
+    ids on the driver union-find and on the distributed loop; an
+    unlinked surface keeps its own surface key."""
+    rows = [
+        ("c1", 0, "jan", "PER", "E007"),
+        ("c1", 1, "jan", "PER", "E003"),
+        ("c1", 2, "novák", "PER", "E003"),
+        ("c2", 0, "a", "ORG", "E200"),
+        ("c2", 1, "b", "ORG", "E200"),
+        ("c2", 2, "b", "ORG", "E150"),
+        ("c2", 3, "c", "ORG", "E150"),
+        ("c2", 4, "c", "ORG", "E100"),
+        ("c2", 5, "d", "ORG", "E100"),
+        ("c3", 0, "nobody", "PER", None),
+    ]
+    linked = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, mention_norm string, label string, "
+        "entity_id string",
+    )
+    reference = _reference_canonical(
+        [(f"m:{m}|{lab}", f"e:{e}") for _c, _t, m, lab, e in rows if e is not None]
+    )
+    want = {
+        (m, reference.get(f"m:{m}|{lab}", f"m:{m}|{lab}")) for _c, _t, m, lab, _e in rows
+    }
+    assert want == {
+        ("jan", "e:E003"), ("novák", "e:E003"),
+        ("a", "e:E100"), ("b", "e:E100"), ("c", "e:E100"), ("d", "e:E100"),
+        ("nobody", "m:nobody|PER"),
+    }
+    for threshold in (1_000_000, 1):  # driver union-find, distributed loop
+        got = canonicalize_mentions(linked, driver_threshold=threshold)
+        assert {
+            tuple(r) for r in got.select("mention_norm", "entity_canonical").collect()
+        } == want, threshold
+
+
 def test_iceberg_waiver_and_store_contract(spark, tmp_path):
     """Iceberg waiver (COVERAGE.md): the snapshot layer is the parquet
     SnapshotStore, which must honor the documented manifest contract
@@ -549,13 +692,17 @@ def test_iceberg_waiver_and_store_contract(spark, tmp_path):
 def test_manifest_lineage_counts_the_written_part_files(spark, tmp_path):
     """Lineage is read from what was written: ``row_count`` equals the
     summed per-task rows and the footer rows of the published part
-    files; a ``partitionBy`` write sums each task's files."""
+    files; a ``partitionBy`` write sums each task's files. The read-back
+    takes its schema from the manifest: it runs no Spark job, and its
+    schema (nullability included) and rows equal an inferring
+    ``spark.read.parquet`` of the data directory in both layouts."""
     import glob
 
     import pyarrow.parquet as pq
 
     from nametag3_spark.pipeline import SnapshotStore
 
+    sc = spark.sparkContext
     store = SnapshotStore(str(tmp_path / "wh"))
     df = spark.range(0, 100, 1, 4).withColumn("k", F.col("id") % 3)
     for name, by in (("flat", None), ("parted", ["k"])):
@@ -570,6 +717,18 @@ def test_manifest_lineage_counts_the_written_part_files(spark, tmp_path):
             {"partition_id": task, "rows": 25} for task in range(4)
         ]
         assert store.read(spark, name).count() == 100
+
+        group = f"read-back-{name}"
+        sc.setJobGroup(group, "one SnapshotStore.read")
+        try:
+            back = store.read(spark, name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+        inferred = spark.read.parquet(str(tmp_path / "wh" / name / "data"))
+        assert back.schema == inferred.schema
+        assert sorted(back.collect()) == sorted(inferred.collect())
 
 
 def test_shuffle_free_stage_write_runs_one_job(spark, tmp_path):
