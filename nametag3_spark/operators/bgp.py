@@ -667,21 +667,17 @@ def _estimate_leg_costs(
     costs: list[float] = []
     for pat in patterns:
         s_term, p_term, o_term = pat
+        # an inverse step matches as many rows as its forward twin
+        p = p_term[1:] if p_term.startswith("^") else p_term
         if _is_var(p_term):
             c = total
-        elif p_term.startswith("!"):
+        elif p.startswith("!"):
             # negated set matches everything except the excluded labels
             excluded = sum(
-                float(pred_stats.get(a, 0.0)) for a in _alt_parts(p_term[1:])
+                float(pred_stats.get(a, 0.0)) for a in _alt_parts(p[1:])
             )
             c = max(total - excluded, 0.5)
-            for t in (s_term, o_term):
-                if not _is_var(t):
-                    c *= 0.1
-            costs.append(c)
-            continue
         else:
-            p = p_term[1:] if p_term.startswith("^") else p_term
             closure = _is_path_pred(p)
             if closure:
                 p = p[:-1]
@@ -1384,17 +1380,40 @@ def apply_rules(
             current = mat(current.unionByName(derived).distinct())
         return current
 
-    for patterns, _ in rules:
-        for pat in patterns:
-            if len(pat) == 3 and _is_path_pred(pat[1]):
-                raise ValueError(
-                    "property-path patterns are not supported with "
-                    f"semi_naive=True: {pat!r}"
-                )
     known = base.distinct()
     return _semi_naive_rounds(
         known, known, rules, rounds, path_depth, mat
     )[0]
+
+
+def _semi_naive_rules(
+    rules: list[tuple[list[tuple[str, str, str]], list[tuple[str, str, str]]]],
+) -> list[tuple[list[tuple[str, str, str]], list[tuple[str, str, str]]]]:
+    """The one rule check of semi-naive evaluation, run before any plan
+    or stream starts: sequence property paths (``a/b``) rewrite to
+    chained atomic legs over fresh internal variables, then a leg still
+    carrying a closure (``+ * ?``) raises. Per-leg delta sourcing then
+    iterates the REWRITTEN legs — exhaustive, since any new match uses
+    ≥1 new fact in some expanded leg — whereas a multi-hop closure can
+    mix old and delta edges, which per-leg sourcing misses. Compiling
+    the raw ``a/b`` instead would read it as one literal predicate and
+    silently derive nothing. Idempotent on already-expanded rules."""
+    seq_counter = itertools.count()
+    out = []
+    for patterns, template in rules:
+        pats = _expand_paths(list(patterns), seq_counter)
+        for pat in pats:
+            if (
+                len(pat) == 3
+                and isinstance(pat[1], str)
+                and _is_path_pred(pat[1])
+            ):
+                raise ValueError(
+                    "property-path (+/*/?) patterns are not supported in "
+                    f"semi-naive evaluation: {pat!r}"
+                )
+        out.append((pats, template))
+    return out
 
 
 def _semi_naive_rounds(
@@ -1411,32 +1430,7 @@ def _semi_naive_rounds(
     (new_known, all_new_facts) — the second is everything derived
     beyond the input ``known``, which is exactly what an incremental
     consumer (streaming micro-batch) appends to its store."""
-    # Sequence property paths (``a/b``) rewrite to chained atomic legs
-    # over fresh internal variables BEFORE per-leg delta sourcing:
-    # compiling the raw pattern would treat ``a/b`` as a literal
-    # predicate literally named "a/b" and silently derive nothing. The
-    # expansion lives HERE (not only in construct/apply_rules) so the
-    # streaming caller gets identical semantics, and delta sourcing
-    # then iterates the REWRITTEN legs — exhaustive, since any new
-    # match must use ≥1 new fact in some expanded leg. A leg still
-    # carrying +/* after expansion is rejected: a multi-hop closure can
-    # mix old and delta edges, which per-leg delta sourcing misses.
-    seq_counter = itertools.count()
-    expanded_rules = []
-    for patterns, template in rules:
-        pats = _expand_paths(list(patterns), seq_counter)
-        for pat in pats:
-            if (
-                len(pat) == 3
-                and isinstance(pat[1], str)
-                and _is_path_pred(pat[1])
-            ):
-                raise ValueError(
-                    "property-path (+/*/?) patterns are not supported in "
-                    f"semi-naive evaluation: {pat!r}"
-                )
-        expanded_rules.append((pats, template))
-    rules = expanded_rules
+    rules = _semi_naive_rules(rules)
     initial = known
     for _ in range(rounds):
         derived = None

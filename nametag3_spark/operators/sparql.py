@@ -109,24 +109,22 @@ Inside ``WHERE { }``:
                                  no match, per spec), and binary
                                  + - * / over double try_casts
                                  (whitespace around operators)
-    { A } UNION { B }            bag union of plain-triple branches;
-                                 composes with other patterns,
-                                 OPTIONAL/MINUS/EXISTS, subqueries,
-                                 SELECT * and aggregates — the chain
-                                 compiles to one binding-set leg whose
-                                 join surface is the variables EVERY
-                                 branch binds (≥1 required);
-                                 branch-PRIVATE variables survive
-                                 NULL-filled in the non-binding
-                                 branches (SPARQL unbound semantics) as
-                                 long as nothing else in the group
-                                 binds the same name (equality joins
-                                 would drop the NULL rows — rename or
-                                 bind in every branch); INSIDE a GRAPH
-                                 block the branches scope to the
-                                 literal graph or bind the GRAPH
-                                 variable per row (same-graph join
-                                 with the block's other patterns)
+    { A } UNION { B }            bag union of plain-triple branches,
+                                 one chain per group; it compiles to
+                                 one binding-set leg over every
+                                 variable its branches bind and joins
+                                 the group on the variables EVERY
+                                 branch binds; branch-PRIVATE
+                                 variables are NULL-filled in the
+                                 non-binding branches (SPARQL unbound
+                                 semantics; a FILTER/BIND over one
+                                 sees the NULL) as long as nothing
+                                 else in the group binds the same
+                                 name (equality joins would drop the
+                                 NULL rows — rename or bind in every
+                                 branch); INSIDE a GRAPH block the
+                                 branches scope to the literal graph
+                                 or bind the GRAPH variable per row
     { SELECT ... }               subquery: compiled to its own
                                  DataFrame (aggregates/ORDER/LIMIT
                                  allowed inside) and joined into the
@@ -135,17 +133,16 @@ Inside ``WHERE { }``:
     VALUES (?a ?b) { (x y) ... } multi-variable binding TABLE, joined
                                  like a pattern leg (row-correlated,
                                  unlike per-var lists)
-    GRAPH ?g|lit { ... }         quad scope. A SINGLE block wrapping
-                                 all triple patterns scopes the whole
-                                 query (full surface incl. a UNION
-                                 chain inside the block); multiple
-                                 blocks and default-graph triples MIX
-                                 per-block — each block compiles
-                                 against its own graph and joins the
-                                 chain on shared variables (the same
-                                 ?g across two blocks = same graph
-                                 per binding; a UNION inside a block
-                                 requires the sole-block shape).
+    GRAPH ?g|lit { ... }         quad scope: the block's body is a
+                                 group of its own (every item above,
+                                 incl. a UNION chain and literal-graph
+                                 subqueries) compiled against its
+                                 graph into one leg that joins the
+                                 enclosing group on shared variables
+                                 (the same ?g across two blocks = same
+                                 graph per binding). Items outside the
+                                 braces read the default graph, the
+                                 union of all graphs.
                                  Per-edge path kinds (inverse,
                                  sequence, alternation, negated sets)
                                  bind a graph VARIABLE; closures
@@ -153,16 +150,19 @@ Inside ``WHERE { }``:
                                  (multi-hop closures would mix
                                  graphs)
 
+Every nested group — each GRAPH block, the UNION chain, each subquery
+and each multi-var VALUES table — compiles to one binding-set leg in
+``bgp_query(extra_legs=...)``; ``_common_kwargs`` is the one recursive
+group compiler.
+
 Not covered (use the programmatic API): nested non-subquery groups,
 nested GRAPH blocks, subqueries inside a GRAPH **?variable** block
 (a literal-graph block scopes its subqueries fine; a graph variable
 would need per-graph re-evaluation — the parser accepts it and the
-compiler raises), rich content
-(OPTIONAL/FILTER/…) inside a MIXED GRAPH block (sole-wrapping blocks
-take the full surface), and a UNION branch-private variable whose
-NAME something else in the group also binds (needs a null-tolerant
-compatible-join; the engine raises rather than silently dropping the
-unbound branch's rows).
+compiler raises), and a UNION branch-private variable (or a GRAPH
+block's OPTIONAL-only variable) whose NAME something else in the group
+also binds (needs a null-tolerant compatible-join; the engine raises
+rather than silently dropping the unbound rows).
 """
 
 from __future__ import annotations
@@ -421,11 +421,6 @@ class _Parser:
             raise SparqlSyntaxError(f"empty {kind} group")
         return {"patterns": pats, "filters": flts} if flts else pats
 
-    _GROUP_KEYS = (
-        "patterns", "optional", "not_exists", "exists", "minus",
-        "binds", "filters", "subqueries", "values_rows",
-    )
-
     @staticmethod
     def _fresh_group() -> dict:
         return {
@@ -440,19 +435,13 @@ class _Parser:
             "values_rows": [],
             "union": None,
             "values": {},
-            "graph": None,
-            "graph_legs": [],
-            "graph_subqueries": [],
+            "graph_blocks": [],
         }
 
-    def _group_item(self, out: dict, graph_blocks: list | None) -> None:
-        """Parse ONE WHERE-group item into ``out``. ``graph_blocks``
-        is the collector for GRAPH blocks (None when already INSIDE a
-        block — nesting raises). A GRAPH block parses with the same
-        item grammar, so OPTIONAL/FILTER/MINUS/EXISTS/BIND/VALUES and
-        one UNION chain may sit inside it; ``group()`` resolves at the
-        end whether the block wraps the whole query (full surface,
-        whole-query scope) or mixes per-block (triples only)."""
+    def _group_item(self, out: dict, in_graph: bool) -> None:
+        """Parse ONE group item into ``out``. A GRAPH block's body is
+        a group of its own (``in_graph`` rejects a nested GRAPH),
+        appended to ``out["graph_blocks"]`` as ``(term, group)``."""
         tok = self.peek()
         if self.kw("OPTIONAL"):
             out["optional"].append(self.optional_block())
@@ -470,11 +459,7 @@ class _Parser:
             out["binds"].append(self.bind_clause())
         elif tok == "{" and self._next_is_select():
             # { SELECT ... } subquery: compiled to its own
-            # DataFrame and joined into the chain on shared vars.
-            # Inside a GRAPH block (graph_blocks is None) the subquery
-            # lands in the block's own list; group() moves it to
-            # ``graph_subqueries`` so it compiles against the SCOPED
-            # store instead of the default-graph union.
+            # DataFrame and joined into the chain on shared vars
             self.next()  # '{'
             if not self.kw("SELECT"):
                 raise SparqlSyntaxError("expected SELECT in subquery")
@@ -540,19 +525,15 @@ class _Parser:
                 self.expect("}")
                 out["values"][var[1:]] = lits
         elif self.kw("GRAPH"):
-            if graph_blocks is None:
+            if in_graph:
                 raise SparqlSyntaxError(
                     "nested GRAPH blocks are not supported"
                 )
-            blk = self._fresh_group()
-            blk["term"] = _untag(self.next())
-            self.expect("{")
-            while self.peek() is not None and self.peek() != "}":
-                self._group_item(blk, None)
-            self.expect("}")
+            term = _untag(self.next())
+            blk = self.group(in_graph=True)
             if not blk["patterns"] and blk["union"] is None:
                 raise SparqlSyntaxError("empty GRAPH block")
-            graph_blocks.append(blk)
+            out["graph_blocks"].append((term, blk))
         else:
             # plain triples until the next keyword/brace
             out["patterns"].append(
@@ -561,14 +542,10 @@ class _Parser:
             if self.peek() == ".":
                 self.next()
 
-    def group(self) -> dict:
-        """The WHERE group: returns bgp_query kwargs. GRAPH blocks
-        resolve at the end: a single block that is the only pattern
-        source wraps the whole query (its items merge into the group —
-        OPTIONAL/MINUS/EXISTS/FILTER all join the scoped chain);
-        otherwise blocks mix per-block as extra legs (triples only)."""
+    def group(self, in_graph: bool = False) -> dict:
+        """A WHERE group (or a GRAPH block's body): its items as
+        bgp_query kwargs, nested groups kept nested for the compiler."""
         out = self._fresh_group()
-        graph_blocks: list[dict] = []
         self.expect("{")
         while True:
             tok = self.peek()
@@ -576,52 +553,8 @@ class _Parser:
                 raise SparqlSyntaxError("unterminated group (missing '}')")
             if tok == "}":
                 self.next()
-                break
-            self._group_item(out, graph_blocks)
-        if graph_blocks:
-            sole = (
-                len(graph_blocks) == 1
-                and not out["patterns"]
-                and out["union"] is None
-            )
-            if sole:
-                # the single-wrapping shape keeps the whole-query
-                # scope path: block items merge with anything parsed
-                # outside the braces (same engine semantics — the
-                # scoped source feeds every sub-plan)
-                blk = graph_blocks[0]
-                out["graph"] = blk["term"]
-                out["union"] = blk["union"]
-                # block subqueries compile against the SCOPED store;
-                # subqueries parsed outside the braces stay unscoped —
-                # keep the two lists apart before the key merge
-                out["graph_subqueries"] = blk.pop("subqueries")
-                blk["subqueries"] = []
-                for k in self._GROUP_KEYS:
-                    out[k] = blk[k] + out[k]
-                out["values"] = {**blk["values"], **out["values"]}
-            else:
-                # per-block mixing: each block compiles to its own
-                # extra leg against its graph and joins the
-                # default-graph chain on shared variables (same
-                # variable name across two GRAPH ?g blocks = same
-                # graph per binding)
-                for blk in graph_blocks:
-                    rich = blk["union"] is not None or blk["values"] or any(
-                        blk[k]
-                        for k in self._GROUP_KEYS
-                        if k != "patterns"
-                    )
-                    if rich:
-                        raise SparqlSyntaxError(
-                            "non-triple items inside a GRAPH block require "
-                            "that block to be the query's only graph "
-                            "pattern"
-                        )
-                out["graph_legs"] = [
-                    (b["term"], b["patterns"]) for b in graph_blocks
-                ]
-        return out
+                return out
+            self._group_item(out, in_graph)
 
     def select_query(self) -> dict:
         """The SELECT form AFTER its keyword was consumed: select
@@ -1093,6 +1026,13 @@ def parse(query: str) -> dict:
     return spec
 
 
+# bgp_query/bgp_union keywords an engine_kwargs mapping may carry; the
+# first three are all DESCRIBE reads
+_ENGINE_KEYS = (
+    "subj_col", "pred_col", "obj_col", "graph_col", "path_depth", "pred_stats",
+)
+
+
 def _union_branch_vars(patterns: list[tuple[str, str, str]]) -> set[str]:
     return {
         t[1:]
@@ -1102,83 +1042,70 @@ def _union_branch_vars(patterns: list[tuple[str, str, str]]) -> set[str]:
     }
 
 
+def _block_vars(block) -> set[str]:
+    """The variables of an OPTIONAL/MINUS/EXISTS block (a pattern list
+    or a ``{"patterns", "filters"}`` dict)."""
+    return _union_branch_vars(
+        block["patterns"] if isinstance(block, dict) else block
+    )
+
+
+def _union_vars(
+    branches: list, graph: str | None
+) -> tuple[list[str], set[str]]:
+    """Every variable a UNION chain binds (sorted) and the branch-
+    PRIVATE ones: bound by some branch but not by every one. A GRAPH
+    variable is bound by every branch (the per-branch graph kwarg
+    forces it)."""
+    g = {graph[1:]} if graph is not None and graph.startswith("?") else set()
+    var_sets = [_union_branch_vars(b) | g for b in branches]
+    every = set.union(*var_sets)
+    return sorted(every), every - set.intersection(*var_sets)
+
+
 def _union_leg(
     triples: DataFrame,
     branches: list,
     engine_kwargs: dict,
-    graph: str | None = None,
-) -> tuple[DataFrame, list[str]]:
-    """Compile a UNION chain into ONE binding-set DataFrame so it joins
-    the rest of the WHERE group like any other leg (the same extra_legs
-    machinery subqueries use). The variables bound by EVERY branch are
-    the leg's join surface (at least one required — they are what
-    connects the chain); branch-PRIVATE variables ride along NULL-filled
-    in the branches that do not bind them (SPARQL's unbound-in-this-
-    branch semantics) and are returned so the caller can reject a
-    collision with a variable the rest of the group binds — a private
-    column doubling as a join key would need SPARQL's null-tolerant
-    compatible-join, which equality joins don't give."""
+    graph: str | None,
+) -> tuple[DataFrame, set[str]]:
+    """Compile a UNION chain into ONE binding-set DataFrame over every
+    variable its branches bind, so it joins the rest of the group like
+    any other leg. Branch-private variables ride along NULL-filled in
+    the branches that do not bind them (SPARQL's unbound-in-this-branch
+    semantics) and are returned with the leg, so ``_common_kwargs`` can
+    keep them off the join keys."""
     from nametag3_spark.operators.bgp import bgp_union
 
-    var_sets = [_union_branch_vars(b) for b in branches]
-    if graph is not None and graph.startswith("?"):
-        # a GRAPH variable is bound by EVERY branch (the per-branch
-        # graph kwarg forces it) — it joins the leg to the scoped
-        # outer patterns, keeping the whole query within one graph
-        # per binding
-        var_sets = [vs | {graph[1:]} for vs in var_sets]
-    shared = sorted(set.intersection(*var_sets))
-    if not shared:
-        raise SparqlSyntaxError(
-            "UNION branches bind no common variable — nothing to align "
-            "the union columns on"
-        )
-    all_vars = sorted(set.union(*var_sets))
-    private = [v for v in all_vars if v not in shared]
-    allowed = {
-        "path_depth", "pred_stats", "subj_col", "pred_col", "obj_col",
-        "graph_col",
-    }
-    g_kwargs = {k: v for k, v in engine_kwargs.items() if k in allowed}
-    if graph is not None:
-        g_kwargs["graph"] = graph  # literal filter or variable binding
+    every, private = _union_vars(branches, graph)
     leg = bgp_union(
         triples,
         branches,
-        select=all_vars,
+        select=every,
         allow_partial=bool(private),
-        **g_kwargs,
+        graph=graph,
+        **{k: v for k, v in engine_kwargs.items() if k in _ENGINE_KEYS},
     )
     return leg, private
-
-
-def _union_is_sole_pattern(spec: dict) -> bool:
-    """True when the UNION chain is the only graph pattern of the WHERE
-    group (FILTER/BIND/VALUES may accompany it) — the shape the direct
-    bgp_union fast path serves without an extra join."""
-    return not (
-        spec["patterns"]
-        or spec["optional"]
-        or spec["not_exists"]
-        or spec["exists"]
-        or spec["minus"]
-        or spec["subqueries"]
-        or spec["values_rows"]
-        or spec["graph"] is not None
-        or spec.get("graph_legs")
-    )
 
 
 def _common_kwargs(
     spec: dict,
     engine_kwargs: dict,
     triples: DataFrame,
-    compose_union: bool = True,
+    graph: str | None = None,
 ) -> dict:
-    """Group-level bgp_query kwargs from a spec, with subqueries
-    compiled recursively into extra_legs. ``compose_union=True`` also
-    compiles a UNION chain into an extra leg (callers taking the
-    standalone bgp_union fast path pass False)."""
+    """A group's bgp_query kwargs. Every nested group becomes one
+    binding-set leg in ``extra_legs``: each subquery, each multi-var
+    VALUES table, each GRAPH block and the UNION chain. A GRAPH block
+    compiles recursively as ``bgp_query`` over its own group with
+    ``graph=term``, so what sits inside its braces reads that graph and
+    what sits outside reads the enclosing scope (the default graph is
+    the union of all graphs)."""
+    from pyspark.sql import functions as F
+
+    from nametag3_spark.operators.bgp import bgp_query
+
     common = dict(
         optional=spec["optional"] or None,
         not_exists=spec["not_exists"] or None,
@@ -1187,110 +1114,87 @@ def _common_kwargs(
         binds=spec["binds"] or None,
         filters=spec["filters"] or None,
         values=spec["values"] or None,
-        graph=spec["graph"],
+        graph=graph,
         **engine_kwargs,
     )
-    legs = [
-        _compile_select(triples, sub, engine_kwargs)
-        for sub in spec["subqueries"]
-    ]
-    if spec.get("graph_subqueries"):
-        # a subquery INSIDE a GRAPH block compiles against the scoped
-        # store: literal graph = the quad store filtered to that graph
-        # (the filter pushes into the subquery's scans like any leg's).
-        # A GRAPH ?var would need the subquery re-run per graph with
-        # ?var joined through — not expressible as one pre-filter, so
-        # it stays rejected, loudly, at compile time.
-        g = spec["graph"]
-        if g is None or g.startswith("?"):
+    sub_src = triples
+    if spec["subqueries"] and graph is not None:
+        # a subquery inside a literal GRAPH block compiles against the
+        # quad store filtered to that graph (the filter pushes into its
+        # scans). A GRAPH ?var would need the subquery re-run per graph
+        # with ?var joined through — not one pre-filter — so it raises.
+        if graph.startswith("?"):
             raise SparqlSyntaxError(
                 "subqueries inside GRAPH require a literal graph term "
                 "(GRAPH ?var would need per-graph re-evaluation); name "
                 "the graph or move the subquery outside the block"
             )
-        from pyspark.sql import functions as F
-
         gcol = engine_kwargs.get("graph_col", "graph")
-        scoped = triples.where(F.col(gcol) == F.lit(g))
-        for sub in spec["graph_subqueries"]:
-            if sub.get("graph") is not None or sub.get("graph_legs"):
-                raise SparqlSyntaxError(
-                    "a subquery inside a GRAPH block cannot itself use "
-                    "GRAPH (the outer block already fixes the scope)"
-                )
-            legs.append(_compile_select(scoped, sub, engine_kwargs))
-    for g_term, g_pats in spec.get("graph_legs") or []:
-        # per-block GRAPH: the block compiles against its own graph
-        # (literal = pushed-down filter; variable = bound column) and
-        # joins the default-graph chain like any leg
-        from nametag3_spark.operators.bgp import bgp_query
-
-        sel = sorted(
-            _union_branch_vars(g_pats)
-            | ({g_term[1:]} if g_term.startswith("?") else set())
-        )
-        allowed = {
-            "path_depth", "pred_stats", "subj_col", "pred_col",
-            "obj_col", "graph_col",
-        }
-        legs.append(
-            bgp_query(
-                triples,
-                g_pats,
-                select=sel,
-                graph=g_term,
-                **{k: v for k, v in engine_kwargs.items() if k in allowed},
+        sub_src = triples.where(F.col(gcol) == F.lit(graph))
+    # (leg, the columns it may leave unbound, i.e. NULL)
+    legs: list[tuple[DataFrame, set[str]]] = []
+    for sub in spec["subqueries"]:
+        if graph is not None and sub["graph_blocks"]:
+            raise SparqlSyntaxError(
+                "a subquery inside a GRAPH block cannot itself use "
+                "GRAPH (the outer block already fixes the scope)"
             )
-        )
-    for vs, rows in spec.get("values_rows") or []:
-        # multi-var VALUES: an inline binding table joined like a leg
-        legs.append(
+        legs.append((_compile_select(sub_src, sub, engine_kwargs), set()))
+    for vs, rows in spec["values_rows"]:
+        legs.append((
             local_frame(
                 triples.sparkSession, rows, ", ".join(f"{v} string" for v in vs)
+            ),
+            set(),
+        ))
+    for term, blk in spec["graph_blocks"]:
+        leg = bgp_query(
+            triples,
+            blk["patterns"],
+            **_common_kwargs(blk, engine_kwargs, triples, graph=term),
+        )
+        # unbound in some block rows: its UNION's branch-private vars
+        # and (conservatively) vars only its OPTIONAL blocks bind
+        every, private = (
+            _union_vars(blk["union"], term) if blk["union"] else ([], set())
+        )
+        optional_only = set().union(
+            *(_block_vars(g) for g in blk["optional"])
+        ) - _union_branch_vars(blk["patterns"]) - set(every)
+        legs.append((leg, private | optional_only))
+    if spec["union"] is not None:
+        legs.append(_union_leg(triples, spec["union"], engine_kwargs, graph))
+    # A leg's possibly-unbound variable survives as a NULL column —
+    # legal only while nothing ELSE in the group binds the same name
+    # (the equality join would drop the NULL rows where SPARQL's
+    # compatible-join keeps them). Conservatively count OPTIONAL/MINUS/
+    # EXISTS block vars, BIND aliases and VALUES lists.
+    mentioned = (
+        _union_branch_vars(spec["patterns"])
+        | {alias for _e, alias in spec["binds"]}
+        | set(spec["values"])
+    )
+    for block in (
+        spec["optional"] + spec["minus"] + spec["not_exists"] + spec["exists"]
+    ):
+        mentioned |= _block_vars(block)
+    for i, (_leg, unbound) in enumerate(legs):
+        others = mentioned.union(
+            *(leg.columns for j, (leg, _u) in enumerate(legs) if j != i)
+        )
+        clash = sorted(unbound & others)
+        if clash:
+            raise SparqlSyntaxError(
+                f"variable(s) {['?' + c for c in clash]} may be unbound "
+                "in a nested group (UNION branch-private, or OPTIONAL-"
+                "only inside a GRAPH block) and are also bound elsewhere "
+                "in the group — an equality join would drop the rows "
+                "where the variable is unbound (SPARQL compatible-join); "
+                "bind them in every branch / outside the OPTIONAL, or "
+                "rename"
             )
-        )
-    if compose_union and spec.get("union") is not None:
-        u_leg, private = _union_leg(
-            triples, spec["union"], engine_kwargs, graph=spec.get("graph")
-        )
-        if private:
-            # A branch-private variable survives the composed UNION as
-            # a NULL-filled column — legal only while nothing ELSE in
-            # the group binds the same name (the equality join would
-            # drop the NULL rows where SPARQL's compatible-join keeps
-            # them). Conservatively include MINUS/EXISTS block vars
-            # and BIND aliases.
-            outer: set[str] = _union_branch_vars(spec["patterns"] or [])
-            for g in spec["optional"] or []:
-                pats = g.get("patterns") if isinstance(g, dict) else g
-                outer |= _union_branch_vars(pats or [])
-            for block in (
-                (spec["minus"] or [])
-                + (spec["not_exists"] or [])
-                + (spec["exists"] or [])
-            ):
-                pats = (
-                    block.get("patterns") if isinstance(block, dict) else block
-                )
-                outer |= _union_branch_vars(pats or [])
-            for vs, _rows in spec.get("values_rows") or []:
-                outer |= set(vs)
-            outer |= {alias for _e, alias in spec["binds"] or []}
-            for leg in legs:  # subquery/VALUES-table legs
-                outer |= set(leg.columns)
-            clash = sorted(set(private) & outer)
-            if clash:
-                raise SparqlSyntaxError(
-                    "UNION branch-private variable(s) "
-                    f"{['?' + c for c in clash]} are also bound elsewhere "
-                    "in the group — an equality join would drop the "
-                    "branch rows where the variable is unbound (SPARQL "
-                    "compatible-join); bind them in every branch or "
-                    "rename"
-                )
-        legs.append(u_leg)
     if legs:
-        common["extra_legs"] = legs
+        common["extra_legs"] = [leg for leg, _u in legs]
     return common
 
 
@@ -1298,27 +1202,9 @@ def _compile_select(triples: DataFrame, spec: dict, engine_kwargs: dict):
     """A parsed SELECT spec → a DataFrame (recursive via subqueries)."""
     from pyspark.sql import functions as F
 
-    from nametag3_spark.operators.bgp import (
-        bgp_aggregate,
-        bgp_query,
-        bgp_union,
-    )
+    from nametag3_spark.operators.bgp import bgp_aggregate, bgp_query
 
-    # standalone explicit-select UNION keeps the direct bgp_union path
-    # (one pass, filters/VALUES pushed into each branch); every other
-    # UNION shape — other patterns alongside it, aggregates over it,
-    # SELECT * — composes the chain as ONE extra leg joined on shared
-    # variables (the subquery machinery), so UNION now combines freely
-    # with OPTIONAL/MINUS/EXISTS/subqueries/aggregates
-    sole_union = (
-        spec["union"] is not None
-        and not spec["aggs"]
-        and spec["select"] is not None
-        and _union_is_sole_pattern(spec)
-    )
-    common = _common_kwargs(
-        spec, engine_kwargs, triples, compose_union=not sole_union
-    )
+    common = _common_kwargs(spec, engine_kwargs, triples)
     if spec["aggs"]:
         out = bgp_aggregate(
             triples,
@@ -1337,23 +1223,6 @@ def _compile_select(triples: DataFrame, spec: dict, engine_kwargs: dict):
         out = out.select(*spec["select"], *[a[2] for a in spec["aggs"]])
         if spec["distinct"]:
             out = out.dropDuplicates()
-    elif sole_union:
-        # union branches are plain-triple blocks; the group-level
-        # kwargs that require a required block don't apply here
-        for kw in (
-            "optional", "not_exists", "exists", "minus", "graph", "extra_legs",
-        ):
-            common.pop(kw, None)
-        out = bgp_union(
-            triples,
-            spec["union"],
-            select=spec["select"],
-            distinct=spec["distinct"],
-            # branch-private selected vars NULL-fill (SPARQL unbound);
-            # a FILTER/BIND over one still raises inside the branch
-            allow_partial=True,
-            **common,
-        )
     else:
         out = bgp_query(
             triples,
@@ -1392,11 +1261,10 @@ def execute(triples: DataFrame, query: str, **engine_kwargs):
     if spec["form"] == "describe":
         from nametag3_spark.operators.bgp import describe
 
-        allowed = {"subj_col", "pred_col", "obj_col"}
         return describe(
             triples,
             spec["entity"],
-            **{k: v for k, v in engine_kwargs.items() if k in allowed},
+            **{k: v for k, v in engine_kwargs.items() if k in _ENGINE_KEYS[:3]},
         )
     if spec["form"] == "select":
         return _compile_select(triples, spec, engine_kwargs)

@@ -174,14 +174,6 @@ def render_vertical(sentences_with_spans: DataFrame) -> DataFrame:
     )
 
 
-def _xml_escape(col):
-    # reference escapes & < > " (nametag3_server.py:323-325)
-    out = F.regexp_replace(col, "&", "&amp;")
-    out = F.regexp_replace(out, "<", "&lt;")
-    out = F.regexp_replace(out, ">", "&gt;")
-    return F.regexp_replace(out, '"', "&quot;")
-
-
 # ---------------------------------------------------------------------------
 # Pure per-sentence renderers. The pandas_udf wrappers below AND the batch
 # request-serving pass (serving.py) share these, so every output surface

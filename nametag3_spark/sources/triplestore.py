@@ -283,12 +283,18 @@ def from_ntriples(lines: DataFrame, base: str = _NT_BASE) -> DataFrame:
     )
 
     def unesc(c):
-        o = F.regexp_replace(c, r"\\t", "\t")
-        o = F.regexp_replace(o, r"\\r", "\r")
-        o = F.regexp_replace(o, r"\\n", "\n")
-        o = F.regexp_replace(o, r'\\"', '"')
-        o = F.regexp_replace(o, r"\\\\", r"\\")
-        return o
+        # one left-to-right pass: split on the escaped-backslash pair,
+        # unescape inside each piece, rejoin with one backslash — so
+        # the "\n" in an escaped "\\new" stays a backslash and an "n"
+        def piece(o):
+            o = F.regexp_replace(o, r"\\t", "\t")
+            o = F.regexp_replace(o, r"\\r", "\r")
+            o = F.regexp_replace(o, r"\\n", "\n")
+            return F.regexp_replace(o, r'\\"', '"')
+
+        return F.array_join(
+            F.transform(F.split(c, r"\\\\"), piece), "\\"
+        )
 
     def deiri(c):
         s = F.regexp_replace(c, "^" + base.replace(":", "\\:"), "")

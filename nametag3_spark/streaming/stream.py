@@ -306,15 +306,12 @@ def start_inference_stream(
     ``rounds`` steps; facts from earlier epochs are complete, so
     cross-epoch cascades need no catch-up.
     """
-    from nametag3_spark.operators.bgp import _is_path_pred, _semi_naive_rounds
+    from nametag3_spark.operators.bgp import (
+        _semi_naive_rounds,
+        _semi_naive_rules,
+    )
 
-    for patterns, _ in rules:
-        for pat in patterns:
-            if len(pat) == 3 and _is_path_pred(pat[1]):
-                raise ValueError(
-                    "property-path patterns are not supported in "
-                    f"streaming inference: {pat!r}"
-                )
+    rules = _semi_naive_rules(rules)  # raises before the stream starts
 
     stream = (
         spark.readStream.schema("subj string, pred string, obj string")

@@ -1216,6 +1216,21 @@ def test_bgp_negated_property_set(spark):
     assert c[0] == pytest.approx(2.0)  # (100 - 80) * 0.1
 
 
+def test_inverse_negated_set_costs_like_its_forward_twin():
+    """``^!p`` matches as many rows as ``!p``: the cost model strips
+    the inverse before it reads the negation."""
+    from nametag3_spark.operators.bgp import _estimate_leg_costs
+
+    stats = {"p": 1000, "q": 5}
+    fwd, inv, fwd2, inv2 = _estimate_leg_costs(
+        [("?x", "!p", "?y"), ("?x", "^!p", "?y"),
+         ("?x", "!(p|q)", "?y"), ("?x", "^!(p|q)", "?y")],
+        stats,
+    )
+    assert fwd == pytest.approx(5.0) and inv == pytest.approx(fwd)
+    assert fwd2 == pytest.approx(0.5) and inv2 == pytest.approx(fwd2)
+
+
 @given(
     triples=st.lists(_TRIPLE, min_size=1, max_size=8),
     patterns=st.lists(_PATTERN, min_size=1, max_size=2),

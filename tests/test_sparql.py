@@ -51,7 +51,9 @@ def test_parse_blocks_and_values():
 
 def test_parse_graph_and_construct_and_ask():
     s = parse("SELECT * WHERE { GRAPH ?g { ?s ?p ?o } }")
-    assert s["graph"] == "?g" and s["patterns"] == [("?s", "?p", "?o")]
+    assert s["patterns"] == []
+    [(term, blk)] = s["graph_blocks"]
+    assert term == "?g" and blk["patterns"] == [("?s", "?p", "?o")]
     s = parse("CONSTRUCT { ?a coworker ?b } WHERE { ?a works_at ?w . ?b works_at ?w }")
     assert s["form"] == "construct" and s["template"] == [("?a", "coworker", "?b")]
     s = parse("ASK { alice knows+ ?x }")
@@ -185,9 +187,6 @@ def test_parse_extension_errors():
     for bad in [
         # lone braced group, no UNION
         "SELECT ?x WHERE { { ?x knows ?y } }",
-        # a union inside a non-sole GRAPH block (scope mismatch)
-        "SELECT ?x WHERE { ?x t ?y . GRAPH g1 "
-        "{ { ?x likes ?y } UNION { ?x knows ?y } } }",
         # FILTER without parens or function
         "SELECT ?x WHERE { ?x knows ?y . FILTER ?x = bob }",
         # unsupported operator
@@ -477,7 +476,9 @@ def test_union_branches_need_a_shared_variable(spark):
     from nametag3_spark.operators.sparql import execute
 
     tri = _tri(spark)
-    with pytest.raises(SparqlSyntaxError, match="no common variable"):
+    # every union variable is branch-private, and both are bound by
+    # the required pattern too
+    with pytest.raises(SparqlSyntaxError, match="branch-private"):
         execute(
             tri,
             "SELECT ?p WHERE { ?p knows ?q . "
@@ -1008,14 +1009,14 @@ def test_union_branch_private_vars_null_fill(spark):
                  { ?p knows ?x } UNION { ?p works_at ?q }
                }""",
         )
-    # a FILTER over a private var inside a sole union still raises in
-    # the non-binding branch (documented: bind it or filter outside)
-    with pytest.raises(ValueError, match="not bound"):
-        execute(
-            tri,
-            "SELECT ?x ?w WHERE { { ?x knows ?y } UNION "
-            "{ ?x works_at ?w } FILTER (?w != 'acme') }",
-        )
+    # a FILTER over a private var of a lone union evaluates over the
+    # NULL-filled column: unbound compares as error → false
+    got = execute(
+        tri,
+        "SELECT ?x ?w WHERE { { ?x knows ?y } UNION "
+        "{ ?x works_at ?w } FILTER (?w != 'acme') }",
+    ).collect()
+    assert {(r.x, r.w) for r in got} == {("alice", "globex")}
 
 
 def test_execute_graph_variable_alternation(spark):
@@ -1049,8 +1050,8 @@ def test_parse_negated_property_sets_text_form():
 def test_union_under_graph(spark):
     """UNION inside the GRAPH block: branches scope to the literal
     graph, or bind the GRAPH variable per row (same-graph join with
-    the block's other patterns); a UNION outside the block still
-    raises."""
+    the block's other patterns); beside other patterns the block is one
+    leg of the chain."""
     from nametag3_spark.operators.sparql import execute
 
     quads = spark.createDataFrame(
@@ -1084,16 +1085,17 @@ def test_union_under_graph(spark):
         "SELECT ?o WHERE { GRAPH g1 { a p ?o } "
         "{ a p ?o } UNION { a q ?o } }"
     )
-    assert s["graph"] is None
-    assert s["graph_legs"] == [("g1", [("a", "p", "?o")])]
+    [(term, blk)] = s["graph_blocks"]
+    assert term == "g1" and blk["patterns"] == [("a", "p", "?o")]
     assert s["union"] == [[("a", "p", "?o")], [("a", "q", "?o")]]
-    # but a union INSIDE a block that isn't the sole graph pattern
-    # stays rejected
-    with pytest.raises(SparqlSyntaxError, match="only graph pattern"):
-        parse(
-            "SELECT ?o WHERE { ?x t ?o . "
-            "GRAPH g1 { { a p ?o } UNION { a q ?o } } }"
-        )
+    # a union INSIDE a block beside a default-graph pattern: the block
+    # (g1's p/q objects b, c) joins the default-graph t-edge subjects
+    rows = execute(
+        quads,
+        "SELECT ?o WHERE { ?o t ?x . "
+        "GRAPH g1 { { a p ?o } UNION { a q ?o } } }",
+    ).collect()
+    assert [r.o for r in rows] == ["b"]
 
 
 def test_per_block_graph_mixing(spark):
@@ -1135,10 +1137,10 @@ def test_per_block_graph_mixing(spark):
 
 
 def test_rich_graph_block_sole_shape(spark):
-    """Under the sole-wrapping shape, OPTIONAL/FILTER/MINUS live
-    INSIDE the GRAPH braces (the natural way users write it) and join
-    the scoped chain; rich content in a mixed block, nested GRAPH, and
-    subqueries inside a block raise."""
+    """OPTIONAL/FILTER/MINUS INSIDE the GRAPH braces join the block's
+    scoped chain, whether or not the block is the query's only graph
+    pattern; a subquery inside a literal block reads that graph; a
+    nested GRAPH raises."""
     from nametag3_spark.operators.sparql import execute
 
     quads = spark.createDataFrame(
@@ -1163,19 +1165,27 @@ def test_rich_graph_block_sole_shape(spark):
     ).collect()
     assert {(r.g, r.y, r.w) for r in rows} == {
         ("g1", "b", "w1"), ("g2", "c", None)}
-    with pytest.raises(SparqlSyntaxError, match="only graph pattern"):
-        parse(
-            "SELECT ?x WHERE { ?x t ?y . "
-            "GRAPH g1 { ?x p ?y . FILTER (?x != a) } }"
-        )
+    # a FILTER inside a block beside a default-graph pattern: g1 is
+    # filtered out, g2's a-p-c meets the default graph's c-q-leak
+    rows = execute(
+        quads,
+        "SELECT ?g ?y ?w WHERE { ?y q ?w . "
+        "GRAPH ?g { a p ?y . FILTER (?g != 'g1') } }",
+    ).collect()
+    assert {(r.g, r.y, r.w) for r in rows} == {("g2", "c", "leak")}
     with pytest.raises(SparqlSyntaxError, match="nested GRAPH"):
         parse("SELECT ?x WHERE { GRAPH g1 { GRAPH g2 { ?x p ?y } } }")
-    # a subquery in a MIXED block still needs the sole-block shape
-    with pytest.raises(SparqlSyntaxError, match="only graph pattern"):
-        parse(
-            "SELECT ?x WHERE { ?x t ?y . GRAPH g1 { ?x p ?y . "
-            "{ SELECT ?x WHERE { ?x q ?z } } } }"
+    # a subquery in a block beside a default-graph pattern reads the
+    # block's graph: g1 holds q-edges for b and c, g2 none
+    def q(g):
+        return (
+            f"SELECT ?y ?w WHERE {{ ?y q ?w . GRAPH {g} {{ a p ?y . "
+            "{ SELECT ?y WHERE { ?y q ?z } } } }"
         )
+
+    rows = execute(quads, q("g1")).collect()
+    assert {(r.y, r.w) for r in rows} == {("b", "w1")}
+    assert execute(quads, q("g2")).collect() == []
 
 
 def test_subquery_inside_graph_block(spark):
@@ -1219,6 +1229,67 @@ def test_subquery_inside_graph_block(spark):
             "SELECT ?y WHERE { GRAPH g1 { a p ?y . "
             "{ SELECT ?y WHERE { GRAPH g2 { ?y q ?z } } } } }",
         )
+
+
+def test_items_outside_graph_braces_read_the_default_graph(spark):
+    """An OPTIONAL written after a GRAPH block's closing brace reads
+    the default graph (the union of all graphs), not the block's."""
+    from nametag3_spark.operators.sparql import execute
+
+    quads = spark.createDataFrame(
+        [("g1", "a", "p", "b"), ("g2", "b", "q", "w2")],
+        "graph string, subj string, pred string, obj string",
+    )
+    rows = execute(
+        quads,
+        "SELECT ?y ?w WHERE { GRAPH g1 { a p ?y } OPTIONAL { ?y q ?w } }",
+    ).collect()
+    assert [(r.y, r.w) for r in rows] == [("b", "w2")]
+    # the same OPTIONAL inside the braces reads g1 only
+    rows = execute(
+        quads,
+        "SELECT ?y ?w WHERE { GRAPH g1 { a p ?y OPTIONAL { ?y q ?w } } }",
+    ).collect()
+    assert [(r.y, r.w) for r in rows] == [("b", None)]
+    # a block's OPTIONAL-only ?w joined outside the braces would drop
+    # the rows where ?w is unbound: loud, like a UNION-private clash
+    with pytest.raises(SparqlSyntaxError, match="may be unbound"):
+        execute(
+            quads,
+            "SELECT ?w WHERE { GRAPH g1 { a p ?y OPTIONAL { ?y q ?w } } "
+            "?w r ?z }",
+        )
+
+
+def test_lone_union_without_a_shared_variable(spark):
+    """A UNION that is the group's only pattern needs no shared
+    variable: each branch's rows NULL-fill the other's variables (bag
+    semantics)."""
+    from nametag3_spark.operators.sparql import execute
+
+    rows = execute(
+        _tri(spark),
+        "SELECT ?a ?b WHERE { { ?a works_at acme } UNION "
+        "{ dave knows ?b } }",
+    ).collect()
+    assert sorted(((r.a, r.b) for r in rows), key=str) == sorted(
+        [("bob", None), ("carol", None), (None, "erin")], key=str
+    )
+
+
+def test_one_group_compiler_source():
+    """Every nested group reaches bgp_query as a leg: the SPARQL front
+    end calls bgp_union once (the UNION leg) and holds no second GRAPH
+    or UNION path."""
+    import inspect
+
+    from nametag3_spark.operators import sparql
+
+    src = inspect.getsource(sparql)
+    assert src.count("bgp_union(") == 1
+    for gone in ("sole_union", "graph_legs", "graph_subqueries",
+                 "compose_union"):
+        assert gone not in src
 
 
 from hypothesis import given, settings
@@ -1303,15 +1374,17 @@ _H_QUAD = st.tuples(_H_GRAPH, _H_ENT, _H_PRED, _H_ENT)
     blk_o=st.sampled_from(["?z", "a", "c", "?x"]),
     pr=_H_PRED,
     pb=_H_PRED,
+    blk_not=st.sampled_from([None, "a", "b"]),
 )
 @settings(max_examples=10, deadline=None)
 def test_per_block_graph_differential(
-    spark, quads, req_o, blk_term, blk_o, pr, pb
+    spark, quads, req_o, blk_term, blk_o, pr, pb, blk_not
 ):
     """Per-block GRAPH mixing vs a Python evaluator: the default
     pattern scans the bag union of all graphs, the block scans its
-    graph (binding ?g per graph for a variable term), joined on the
-    shared variables — bag semantics throughout."""
+    graph (binding ?g per graph for a variable term), optionally
+    filtered inside its braces on its own ?x, joined on the shared
+    variables — bag semantics throughout."""
     from collections import Counter
 
     from tests.test_bgp import _py_bgp
@@ -1331,10 +1404,11 @@ def test_per_block_graph_differential(
     cols = sorted(
         pvars(req) | pvars(blk) | ({blk_term[1:]} if g_is_var else set())
     )
+    flt = f" FILTER (?x != '{blk_not}')" if blk_not else ""
     q = (
         "SELECT " + " ".join("?" + c for c in cols)
         + " WHERE { " + " ".join(req) + " . GRAPH " + blk_term
-        + " { " + " ".join(blk) + " } }"
+        + " { " + " ".join(blk) + flt + " } }"
     )
     got = Counter(
         tuple(r[c] for c in cols)
@@ -1347,6 +1421,8 @@ def test_per_block_graph_differential(
     for g in graphs:
         sub = [(s, p, o) for (gg, s, p, o) in store if gg == g]
         for s in _py_bgp(sub, [blk]):
+            if blk_not and s["x"] == blk_not:
+                continue
             blk_sols.append(
                 {**s, blk_term[1:]: g} if g_is_var else dict(s)
             )

@@ -385,6 +385,26 @@ def test_streaming_inference_restart_is_idempotent(spark, tmp_path):
     assert anc == {("a", "b"), ("b", "c"), ("a", "c")}
 
 
+def test_streaming_inference_rejects_closure_inside_sequence(spark, tmp_path):
+    """``p+/q`` hides a closure leg behind a sequence: the rule check
+    expands the sequence and raises before any stream starts, instead
+    of returning a query that dies in its first micro-batch."""
+    import pytest as _pytest
+
+    from nametag3_spark.streaming.stream import start_inference_stream
+
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(
+        [("a", "p", "b")], "subj string, pred string, obj string"
+    ).write.parquet(in_dir)
+    with _pytest.raises(ValueError, match="property-path"):
+        start_inference_stream(
+            spark, in_dir, str(tmp_path / "store"), str(tmp_path / "ckpt"),
+            [([("?x", "p+/q", "?y")], [("?x", "r", "?y")])],
+        )
+    assert spark.streams.active == []
+
+
 def test_compact_epochs_folds_preserves_and_repairs(spark, tmp_path):
     """Epoch compaction: folds finalized epochs into one base
     partition (rows preserved, file count shrinks), keeps the newest
@@ -528,13 +548,14 @@ def test_ntriples_roundtrip(spark, tmp_path):
         ("e:E1", "mentions", 'say "hi"\nnow'),
         ("e 2", "rel%x", "tab\there \\ back"),
         ("plain", "p", "v"),
+        ("p", "q", "C:\\new\\temp"),
     ]
     df = spark.createDataFrame(rows, "subj string, pred string, obj string")
     out = str(tmp_path / "nt")
     to_ntriples(df).write.text(out)
     lines = spark.read.text(out)
     # every emitted line is one triple terminated by ' .'
-    assert lines.count() == 3
+    assert lines.count() == len(rows)
     extra = spark.createDataFrame(
         [("# a comment",), ("",)], "value string"
     )
