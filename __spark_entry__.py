@@ -1155,22 +1155,16 @@ def q_pagerank_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactly 5 synchronous iterations with final 6-decimal rounding, so
     DuckDB recomputes the identical closed form with 5 unrolled CTE
     steps."""
-    from nametag3_spark.operators.graph import (
-        comention_edges,
-        pagerank,
-        unpersist_intermediates,
-    )
+    from nametag3_spark.operators.graph import comention_edges, pagerank
+    from nametag3_spark.operators.dedup import checkpoint_and_release
 
     docs = _read(spark, sf_dir, "documents")
     out = pagerank(
         comention_edges(docs, _GRAPH_LEXICON), iters=5, weight="weight"
     )
     # bounded result (one row per lexicon entry): materialize, then free
-    # the persisted adjacency/degree handles (same contract as dedup's
-    # checkpoint_and_release).
-    out = out.localCheckpoint(eager=True)
-    unpersist_intermediates()
-    return out
+    # the persisted adjacency/degree handles
+    return checkpoint_and_release(out)
 
 
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1178,17 +1172,12 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-mention graph (degree-ordered node-iterator) — the community-
     density signal a KG builder uses to separate true entity clusters
     from hub noise."""
-    from nametag3_spark.operators.graph import (
-        comention_edges,
-        triangle_counts,
-        unpersist_intermediates,
-    )
+    from nametag3_spark.operators.graph import comention_edges, triangle_counts
+    from nametag3_spark.operators.dedup import checkpoint_and_release
 
     docs = _read(spark, sf_dir, "documents")
     out = triangle_counts(comention_edges(docs, _GRAPH_LEXICON))
-    out = out.localCheckpoint(eager=True)
-    unpersist_intermediates()
-    return out
+    return checkpoint_and_release(out)
 
 
 def q_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1198,16 +1187,14 @@ def q_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nametag3_spark.operators.graph import (
         comention_edges,
         label_propagation,
-        unpersist_intermediates,
     )
+    from nametag3_spark.operators.dedup import checkpoint_and_release
 
     docs = _read(spark, sf_dir, "documents")
     out = label_propagation(
         comention_edges(docs, _GRAPH_LEXICON), iters=3, weight="weight"
     )
-    out = out.localCheckpoint(eager=True)
-    unpersist_intermediates()
-    return out
+    return checkpoint_and_release(out)
 
 
 def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1221,11 +1208,8 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking (propose the strong links the corpus never quite stated).
     Hub middles capped at degree 50; float sum rounded to 6 so both
     engines agree bit-for-bit."""
-    from nametag3_spark.operators.graph import (
-        adamic_adar,
-        comention_edges,
-        unpersist_intermediates,
-    )
+    from nametag3_spark.operators.graph import adamic_adar, comention_edges
+    from nametag3_spark.operators.dedup import checkpoint_and_release
 
     docs = _read(spark, sf_dir, "documents")
     edges = comention_edges(docs, None)
@@ -1233,9 +1217,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = edges.agg(F.expr("percentile(weight, 0.5)").alias("m")).collect()[0][0]
     strong = edges.where(F.col("weight") >= med)
     out = adamic_adar(strong, max_degree=50)
-    out = out.localCheckpoint(eager=True)
-    unpersist_intermediates()
-    return out
+    return checkpoint_and_release(out)
 
 
 def q_coref_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1926,19 +1908,14 @@ def q_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-hop BFS neighborhoods (minimal hop distance) from two seed
     entities over the co-mention graph — the KG neighborhood-expansion
     primitive (GNN subgraph sampling / related-entity serving)."""
-    from nametag3_spark.operators.graph import (
-        comention_edges,
-        khop_neighbors,
-        unpersist_intermediates,
-    )
+    from nametag3_spark.operators.graph import comention_edges, khop_neighbors
+    from nametag3_spark.operators.dedup import checkpoint_and_release
 
     docs = _read(spark, sf_dir, "documents")
     out = khop_neighbors(
         comention_edges(docs, _GRAPH_LEXICON), sources=["spark", "merge"], k=2
     )
-    out = out.localCheckpoint(eager=True)
-    unpersist_intermediates()
-    return out
+    return checkpoint_and_release(out)
 
 
 def _serve_responses(spark: SparkSession, sf_dir: str) -> DataFrame:

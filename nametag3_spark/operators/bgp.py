@@ -54,6 +54,16 @@ GRAPH scoping over quad stores, GROUP BY aggregation
 partials), CONSTRUCT templating (``construct``), and fixed-round
 naive/semi-naive Datalog forward chaining (``apply_rules``).
 
+One parser reads the predicate-path syntax: ``_path_step`` turns each
+(sequence-expanded) predicate term into its step — inverse, negated,
+closure operator, predicate names — and the leg compiler, the
+join-order cost model, the semi-naive rule check and the GRAPH-variable
+check all take the term's meaning from it. An atomic ``<iri>`` or bare
+``://`` IRI is read before any path operator, so ``http://x.org/p+`` is
+one literal everywhere; nested or unmatched paren groups raise.
+``_split_top`` is the one angle- and paren-aware splitter (``/`` for
+sequences, ``|`` for alternations).
+
 Scale shape (100 TB triple store): worst case is the self-join chain
 every SPARQL engine pays; the wins come from literal pushdown before
 any shuffle, id-only join columns, and letting AQE choose
@@ -64,6 +74,7 @@ broadcast/skew handling per leg. For hot star patterns, materialize
 from __future__ import annotations
 
 import itertools
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -72,14 +83,6 @@ _POS = ("subj", "pred", "obj")
 
 def _is_var(term: str) -> bool:
     return isinstance(term, str) and term.startswith("?")
-
-
-def _is_path_pred(term: str) -> bool:
-    return (
-        (not _is_var(term))
-        and len(term) > 1
-        and term.endswith(("+", "*", "?"))
-    )
 
 
 def _strip_angles(name: str) -> str:
@@ -101,32 +104,11 @@ def _is_atomic_pred(term: str) -> bool:
     ) or ("://" in term and "<" not in term)
 
 
-def _split_outside_angles(term: str, sep: str) -> list[str]:
-    """Split on ``sep`` characters that sit OUTSIDE ``<...>`` quoting."""
-    parts: list[str] = []
-    buf: list[str] = []
-    depth = 0
-    for ch in term:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth = max(0, depth - 1)
-        if ch == sep and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf))
-    return parts
-
-
-def _split_path_seq(term: str) -> list[str]:
-    """Split a sequence path on ``/`` characters that sit outside
-    BOTH ``<...>`` quoting and ``(...)`` grouping, so a group segment
-    like ``(a|b)/c`` splits into ``(a|b)`` and ``c`` while the slash
-    inside ``<http://...>`` or ``(a/b)`` stays put (the latter is
-    rejected later with a clear error — groups hold alternations
-    only)."""
+def _split_top(term: str, sep: str) -> list[str]:
+    """Split on ``sep`` characters that sit outside BOTH ``<...>``
+    quoting and ``(...)`` grouping, so ``(a|b)/c`` splits on ``/`` into
+    ``(a|b)`` and ``c`` while the slash inside ``<http://...>`` or
+    ``(a/b)`` stays put. An unmatched ``(`` or ``)`` raises."""
     parts: list[str] = []
     buf: list[str] = []
     angle = paren = 0
@@ -138,36 +120,106 @@ def _split_path_seq(term: str) -> list[str]:
         elif ch == "(" and angle == 0:
             paren += 1
         elif ch == ")" and angle == 0:
-            paren = max(0, paren - 1)
-        if ch == "/" and angle == 0 and paren == 0:
+            paren -= 1
+            if paren < 0:
+                raise ValueError(f"unmatched ')' in path: {term!r}")
+        if ch == sep and angle == 0 and paren == 0:
             parts.append("".join(buf))
             buf = []
         else:
             buf.append(ch)
+    if paren:
+        raise ValueError(f"unmatched '(' in path: {term!r}")
     parts.append("".join(buf))
     return parts
 
 
-def _alt_parts(term: str) -> list[str]:
-    """Split an alternation ``a|b`` (optionally ``(a|b)``) into plain
-    predicate names, rejecting nested path operators. Angle-quoted
-    (``<iri>``) and bare-IRI parts are atomic — operator characters
-    inside them are data, not syntax."""
-    alts = [a.strip() for a in _split_outside_angles(term.strip("()"), "|")]
-    if not all(alts):
-        raise ValueError(f"malformed alternation: {term!r}")
+class _Step(NamedTuple):
+    """One predicate-path step as ``_path_step`` reads it."""
+
+    inverse: bool  # ^: the pattern matches (o, p, s)
+    negated: bool  # !: every edge label EXCEPT ``names``
+    closure: str  # "+", "*", "?" or "" (no closure)
+    # one bare name (str), a name set (tuple: alternation, paren group
+    # or negated set), or None for a variable predicate
+    names: str | tuple[str, ...] | None
+
+
+def _name_set(text: str) -> tuple[str, ...]:
+    """The names of an alternation ``a|b`` or a group ``(a|b)``.
+    Angle-quoted (``<iri>``) and bare-IRI names are atomic — operator
+    characters inside them are data, not syntax; a nested or misplaced
+    group, an unmatched paren and a name carrying ``+ * ? ^ /`` raise."""
+    parts = _split_top(text, "|")
+    if len(parts) == 1 and text.startswith("(") and text.endswith(")"):
+        parts = _split_top(text[1:-1], "|")
     out: list[str] = []
-    for a in alts:
+    for a in (p.strip() for p in parts):
+        if not a:
+            raise ValueError(f"malformed alternation: {text!r}")
         if _is_atomic_pred(a):
             out.append(_strip_angles(a))
-            continue
-        if a.endswith(("+", "*", "?")) or a.startswith("^") or "/" in a:
+        elif "(" in a or ")" in a:
+            raise ValueError(f"nested path groups are not supported: {text!r}")
+        elif a.endswith(("+", "*", "?")) or a.startswith("^") or "/" in a:
             raise ValueError(
                 "alternation path supports plain predicates only "
-                f"(no nested +/^//): {term!r}"
+                f"(no nested +/^//): {text!r}"
             )
-        out.append(a)
-    return out
+        else:
+            out.append(a)
+    return tuple(out)
+
+
+def _path_step(term: str) -> _Step:
+    """The one reader of the predicate-path syntax: the leg compiler,
+    the cost model, the semi-naive rule check and the GRAPH-variable
+    check all take a (sequence-expanded) predicate term's meaning from
+    here. ``^`` strips first; a variable, an ``<iri>`` and a bare
+    ``://`` IRI are read before any path operator (so ``http://x/p+``
+    is one literal name); then one trailing closure operator; then a
+    negated set ``!p`` / ``!(a|b)`` (never closed), a bare alternation
+    ``a|b`` (never closed: ``a|b+`` is ambiguous), a paren group
+    ``(a|b)`` or one plain name. Malformed forms raise ``ValueError``."""
+    inverse = len(term) > 1 and term.startswith("^")
+    if inverse:
+        term = term[1:]
+    if _is_var(term):
+        return _Step(inverse, False, "", None)
+    if _is_atomic_pred(term):
+        return _Step(inverse, False, "", _strip_angles(term))
+    closure = term[-1] if len(term) > 1 and term[-1] in "+*?" else ""
+    body = term[:-1] if closure else term
+    if body.startswith("!"):
+        if closure:
+            raise ValueError(
+                f"negated property sets cannot be closed: {term!r}"
+            )
+        return _Step(inverse, True, "", _name_set(body[1:]))
+    if len(_split_top(body, "|")) > 1:
+        if closure:
+            # SPARQL precedence reads a|b+ as a|(b+), unsupported here
+            raise ValueError(
+                "ambiguous alternation+closure — parenthesize the "
+                f"alternation, e.g. (a|b){closure}: {term!r}"
+            )
+        return _Step(inverse, False, "", _name_set(body))
+    if body.startswith("(") and body.endswith(")"):
+        return _Step(inverse, False, closure, _name_set(body))
+    if "(" in body or ")" in body:
+        raise ValueError(f"malformed path group: {term!r}")
+    return _Step(inverse, False, closure, _strip_angles(body))
+
+
+def _edge_scan(src: DataFrame, step: _Step) -> DataFrame:
+    """The edges a literal step matches: ONE scan with an equality,
+    In-list or NOT-IN predicate on ``pred`` (pushed down like any
+    literal), never a union of scans."""
+    pred = F.col("pred")
+    if isinstance(step.names, str):
+        return src.where(pred == F.lit(step.names))
+    hit = pred.isin(list(step.names))
+    return src.where(~hit if step.negated else hit)
 
 
 def _expand_paths(
@@ -184,14 +236,15 @@ def _expand_paths(
     out: list[tuple[str, str, str]] = []
     for pat in patterns:
         p = pat[1] if len(pat) == 3 else None
-        if (
-            isinstance(p, str)
+        segs = (
+            [s.strip() for s in _split_top(p, "/")]
+            if isinstance(p, str)
             and (not _is_var(p))
             and "/" in p
             and not _is_atomic_pred(p)
-            and len(_split_path_seq(p)) > 1
-        ):
-            segs = [s.strip() for s in _split_path_seq(p)]
+            else []
+        )
+        if len(segs) > 1:
             if not all(segs):
                 raise ValueError(f"malformed sequence path: {p!r}")
             cur = pat[0]
@@ -482,13 +535,13 @@ def _compile_legs(
     indices (semi-naive delta evaluation compiles one leg against the
     last round's delta and the rest against the full known set).
 
-    A literal predicate ending in ``+`` (``"knows+"``) is a SPARQL
-    one-or-more property path: the leg becomes the transitive closure
-    of that predicate's edge set, depth-capped at ``path_depth``.
-    Cycle-closing matches are INCLUDED (``a knows+ a`` holds when a
-    ≥1-hop path a→…→a exists) per SPARQL arbitrary-length-path
-    semantics; the strict-ancestor variant is the ontology layer's
-    ``transitive_closure(keep_cycles=False)`` default."""
+    Each predicate term is read once by ``_path_step``. A closure step
+    (``"knows+"``) becomes the transitive closure of its edge set,
+    depth-capped at ``path_depth``. Cycle-closing matches are INCLUDED
+    (``a knows+ a`` holds when a ≥1-hop path a→…→a exists) per SPARQL
+    arbitrary-length-path semantics; the strict-ancestor variant is the
+    ontology layer's ``transitive_closure(keep_cycles=False)``
+    default."""
     from nametag3_spark.operators.ontology import transitive_closure
 
     legs: list[tuple[DataFrame, frozenset[str]]] = []
@@ -497,92 +550,23 @@ def _compile_legs(
             raise ValueError(f"pattern must be a 3-tuple: {pat!r}")
         src_i = (src_overrides or {}).get(idx, src)
         s_term, p_term, o_term = pat
-        # SPARQL inverse path: ^pred means (o, pred, s) — swap the ends
-        # and fall through to the normal/path machinery
-        if (not _is_var(p_term)) and len(p_term) > 1 and p_term.startswith("^"):
-            p_term = p_term[1:]
+        step = _path_step(p_term)
+        if step.inverse:
+            # SPARQL inverse path: ^pred means (o, pred, s)
             s_term, o_term = o_term, s_term
-            pat = (s_term, p_term, o_term)
-        if graph_var is not None and _is_path_pred(p_term):
-            raise ValueError(
-                "property-path patterns are not supported under a GRAPH "
-                f"variable (a closure would mix graphs): {pat!r}"
-            )
-        if (not _is_var(p_term)) and _is_atomic_pred(p_term):
-            # angle-quoted or bare-IRI predicate: atomic, no path
-            # interpretation — rides the plain literal machinery
-            pat = (s_term, _strip_angles(p_term), o_term)
-            leg, positions, terms = src_i, _POS, pat
+        positions, terms = ("subj", "obj"), (s_term, o_term)
+        if step.closure:
             if graph_var is not None:
-                positions = ("graph",) + positions
-                terms = ("?" + graph_var,) + tuple(terms)
-        elif (not _is_var(p_term)) and p_term.startswith("!"):
-            # negated property set !p / !(a|b): one scan with a
-            # NOT-IN predicate over the excluded edge labels
-            if _is_path_pred(p_term):
                 raise ValueError(
-                    f"negated property sets cannot be closed: {p_term!r}"
+                    "property-path patterns are not supported under a "
+                    f"GRAPH variable (a closure would mix graphs): {pat!r}"
                 )
-            excluded = _alt_parts(p_term[1:])
-            leg = src_i.where(~F.col("pred").isin(excluded))
-            positions, terms = ("subj", "obj"), (s_term, o_term)
-            if graph_var is not None:
-                # per-EDGE scan — each row carries its graph, so the
-                # graph binding rides along like the plain branch
-                # (closures stay rejected: they would mix graphs)
-                positions = ("graph",) + positions
-                terms = ("?" + graph_var,) + terms
-        elif (
-            (not _is_var(p_term))
-            and ("|" in p_term
-                 or (p_term.startswith("(") and p_term.endswith(")")))
-            and not _is_path_pred(p_term)
-        ):
-            # alternation path (a|b): ONE scan with an In-list predicate
-            # (pushed down like a literal), never a union of scans.
-            # Any paren group routes here too, so a sequence hiding
-            # inside one ((a/b)) fails loudly in _alt_parts instead of
-            # silently matching a literal named "(a/b)"
-            alts = _alt_parts(p_term)
-            leg = src_i.where(F.col("pred").isin(alts))
-            positions, terms = ("subj", "obj"), (s_term, o_term)
-            if graph_var is not None:
-                # per-EDGE scan: the graph binding rides along (only
-                # closures mix graphs and stay rejected)
-                positions = ("graph",) + positions
-                terms = ("?" + graph_var,) + terms
-        elif _is_path_pred(p_term):
-            # one-or-more path: close the edge set — one predicate's,
-            # or the union of an alternation's ((a|b)+, e.g. a
-            # broader|narrower closure) via the same In-list scan; the
-            # closure may be corpus-scale, so AQE (not a pinned
+            # close the edge set — one predicate's, or the union of an
+            # alternation's ((a|b)+, e.g. a broader|narrower closure);
+            # the closure may be corpus-scale, so AQE (not a pinned
             # broadcast) picks each doubling round's join strategy
-            inner = p_term[:-1]
-            if inner.startswith("!"):
-                raise ValueError(
-                    f"negated property sets cannot be closed: {p_term!r}"
-                )
-            if "|" in inner or (
-                inner.startswith("(") and inner.endswith(")")
-            ):
-                # closure-over-alternation REQUIRES parens: bare
-                # a|b+ is ambiguous (SPARQL precedence reads it as
-                # a|(b+), which this engine doesn't support). A
-                # paren group without | routes here too so (a/b)+
-                # raises _alt_parts' clear error
-                if not (inner.startswith("(") and inner.endswith(")")):
-                    raise ValueError(
-                        "ambiguous alternation+closure — parenthesize "
-                        f"the alternation, e.g. (a|b){p_term[-1]}: {p_term!r}"
-                    )
-                base = src_i.where(
-                    F.col("pred").isin(_alt_parts(inner))
-                ).select("subj", "obj")
-            else:
-                base = src_i.where(
-                    F.col("pred") == F.lit(_strip_angles(inner))
-                ).select("subj", "obj")
-            if p_term.endswith("?"):
+            base = _edge_scan(src_i, step).select("subj", "obj")
+            if step.closure == "?":
                 # zero-or-one: the direct edges plus the zero-length
                 # reflexive rows below — no closure at all. SPARQL
                 # path evaluation is set-semantics, and a self-loop
@@ -605,12 +589,12 @@ def _compile_legs(
                     # reflexive union below already covers every
                     # self-pair — keeping cycles there too would
                     # double-count them under bag semantics
-                    keep_cycles=p_term.endswith("+"),
+                    keep_cycles=step.closure == "+",
                 ).select(
                     F.col("child").alias("subj"),
                     F.col("ancestor").alias("obj"),
                 )
-            if p_term.endswith(("*", "?")):
+            if step.closure in ("*", "?"):
                 # zero-or-more / zero-or-one: add the reflexive rows
                 # over ALL graph terms (SPARQL's zero-length path
                 # matches every term in the graph, not just the
@@ -626,14 +610,23 @@ def _compile_legs(
                 leg = leg.unionByName(
                     nodes.select("subj", F.col("subj").alias("obj"))
                 )
-            positions, terms = ("subj", "obj"), (s_term, o_term)
+        elif isinstance(step.names, tuple):
+            # alternation, paren group or negated set: one In / NOT-IN
+            # scan over the edge labels
+            leg = _edge_scan(src_i, step)
         else:
-            leg, positions, terms = src_i, _POS, pat
-            if graph_var is not None:
-                # the graph binding rides the SAME var/literal machinery
-                # (incl. repeated-var equality if ?g also names a term)
-                positions = ("graph",) + positions
-                terms = ("?" + graph_var,) + tuple(terms)
+            # one literal name or a variable rides the term machinery
+            # below (a literal is one more pushed-down equality)
+            pred = (
+                p_term.removeprefix("^") if step.names is None else step.names
+            )
+            leg, positions, terms = src_i, _POS, (s_term, pred, o_term)
+        if graph_var is not None:
+            # per-EDGE legs carry their graph: the binding rides the
+            # SAME var/literal machinery (incl. repeated-var equality
+            # if ?g also names a term)
+            positions = ("graph",) + positions
+            terms = ("?" + graph_var,) + terms
         var_cols: dict[str, str] = {}  # var name -> first position bound
         for pos, term in zip(positions, terms):
             if _is_var(term):
@@ -645,8 +638,7 @@ def _compile_legs(
                 else:
                     var_cols[v] = pos
             else:
-                lit = _strip_angles(term) if pos == "pred" else term
-                leg = leg.where(F.col(pos) == F.lit(lit))
+                leg = leg.where(F.col(pos) == F.lit(term))
         leg = leg.select(*[F.col(p).alias(v) for v, p in var_cols.items()])
         legs.append((leg, frozenset(var_cols)))
     return legs
@@ -657,37 +649,27 @@ def _estimate_leg_costs(
     pred_stats: dict[str, int],
 ) -> list[float]:
     """Estimated cardinality per pattern from per-predicate row counts
-    (the ``kg_stats``/``triples.pred_stats`` output): a literal
-    predicate costs its stored count (0.5 when absent — an unknown
-    predicate matches nothing and makes the best seed), an alternation
-    sums its branches, a path closure gets its base count times the
-    classic expansion guess (2x), a variable predicate costs the whole
-    store; each additional literal term applies a 0.1 selectivity."""
+    (the ``kg_stats``/``triples.pred_stats`` output), over the step
+    ``_path_step`` reads: a literal predicate costs its stored count
+    (0.5 when absent — an unknown predicate matches nothing and makes
+    the best seed), a name set sums its names, a negated set costs the
+    store minus the excluded labels, a closure gets the classic 2x
+    expansion guess, a variable predicate costs the whole store; an
+    inverse costs what its forward twin does; each additional literal
+    term applies a 0.1 selectivity."""
     total = float(sum(pred_stats.values())) or 1.0
     costs: list[float] = []
-    for pat in patterns:
-        s_term, p_term, o_term = pat
-        # an inverse step matches as many rows as its forward twin
-        p = p_term[1:] if p_term.startswith("^") else p_term
-        if _is_var(p_term):
+    for s_term, p_term, o_term in patterns:
+        step = _path_step(p_term)
+        names = (step.names,) if isinstance(step.names, str) else step.names
+        if names is None:
             c = total
-        elif p.startswith("!"):
-            # negated set matches everything except the excluded labels
-            excluded = sum(
-                float(pred_stats.get(a, 0.0)) for a in _alt_parts(p[1:])
-            )
+        elif step.negated:
+            excluded = sum(float(pred_stats.get(a, 0.0)) for a in names)
             c = max(total - excluded, 0.5)
         else:
-            closure = _is_path_pred(p)
-            if closure:
-                p = p[:-1]
-            parts = (
-                _alt_parts(p)
-                if ("|" in p)
-                else [_strip_angles(p)]
-            )
-            c = sum(float(pred_stats.get(a, 0.0)) + 0.5 for a in parts)
-            if closure:
+            c = sum(float(pred_stats.get(a, 0.0)) + 0.5 for a in names)
+            if step.closure:
                 c *= 2.0
         for t in (s_term, o_term):
             if not _is_var(t):
@@ -829,9 +811,10 @@ def bgp_query(
     pruning on a graph-partitioned store); a variable (``"?g"``)
     requires all patterns of the query to match WITHIN one graph and
     binds it — the per-snapshot query shape. Per-EDGE pattern kinds
-    (plain, inverse, sequence, alternation, negated sets) all bind the
-    graph variable; CLOSURE paths (``+ * ?``) are rejected under a
-    graph VARIABLE (a multi-hop closure would mix graphs).
+    (plain, inverse, sequence, alternation, negated sets, atomic IRIs)
+    all bind the graph variable; a step the compiler CLOSES (``+ * ?``)
+    is rejected under a graph VARIABLE (a multi-hop closure would mix
+    graphs).
     """
     if not patterns and not extra_legs:
         raise ValueError("empty basic graph pattern")
@@ -1347,9 +1330,10 @@ def apply_rules(
     set (any genuinely new fact must use ≥1 delta fact, so this is
     exhaustive), then anti-joins the derivations against the known set
     so later rounds touch only the frontier. Rounds stay fixed either
-    way — the plan is data-independent and unrollable. Property-path
-    (``pred+``) patterns are rejected under semi-naive: a path can mix
-    old and delta edges, so per-leg delta sourcing would miss it.
+    way — the plan is data-independent and unrollable. Closure steps
+    (``pred+``, ``pred*``, ``pred?``) are rejected under semi-naive: a
+    path can mix old and delta edges, so per-leg delta sourcing would
+    miss it.
 
     ``materialize_rounds="local"`` eagerly ``localCheckpoint``s the
     per-round state. The lazy default nests each round's plan inside
@@ -1391,8 +1375,8 @@ def _semi_naive_rules(
 ) -> list[tuple[list[tuple[str, str, str]], list[tuple[str, str, str]]]]:
     """The one rule check of semi-naive evaluation, run before any plan
     or stream starts: sequence property paths (``a/b``) rewrite to
-    chained atomic legs over fresh internal variables, then a leg still
-    carrying a closure (``+ * ?``) raises. Per-leg delta sourcing then
+    chained atomic legs over fresh internal variables, then a leg whose
+    parsed step (``_path_step``) is a closure (``+ * ?``) raises. Per-leg delta sourcing then
     iterates the REWRITTEN legs — exhaustive, since any new match uses
     ≥1 new fact in some expanded leg — whereas a multi-hop closure can
     mix old and delta edges, which per-leg sourcing misses. Compiling
@@ -1406,7 +1390,7 @@ def _semi_naive_rules(
             if (
                 len(pat) == 3
                 and isinstance(pat[1], str)
-                and _is_path_pred(pat[1])
+                and _path_step(pat[1]).closure
             ):
                 raise ValueError(
                     "property-path (+/*/?) patterns are not supported in "

@@ -31,25 +31,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# persisted adjacency/degree handles go to dedup's registry: callers
+# release them after the consuming action (dedup.checkpoint_and_release)
+from nametag3_spark.operators.dedup import (  # noqa: F401 (re-exported)
+    _PERSISTED,
+    _persist,
+    unpersist_intermediates,
+)
 from nametag3_spark.session import local_frame
-
-# Persisted adjacency/degree handles; same ownership contract as
-# dedup._PERSISTED — callers release after the consuming action.
-_PERSISTED: list[DataFrame] = []
-
-
-def unpersist_intermediates(blocking: bool = False) -> int:
-    n = 0
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(blocking)
-        n += 1
-    return n
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
 
 
 def _comention_counts(

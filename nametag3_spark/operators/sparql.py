@@ -49,7 +49,7 @@ Inside ``WHERE { }``:
                                  ``(a|b)/c``, ``a/(b|c)+``; negated
                                  property sets ``!p`` / ``!(a|b)``
                                  (no closure/sequence tail); nested
-                                 groups stay unsupported)
+                                 groups raise)
     OPTIONAL { ... }             left-join block (triple patterns,
                                  plus inner FILTER expressions scoped
                                  to the left join per SPARQL — a
@@ -159,10 +159,13 @@ Not covered (use the programmatic API): nested non-subquery groups,
 nested GRAPH blocks, subqueries inside a GRAPH **?variable** block
 (a literal-graph block scopes its subqueries fine; a graph variable
 would need per-graph re-evaluation — the parser accepts it and the
-compiler raises), and a UNION branch-private variable (or a GRAPH
-block's OPTIONAL-only variable) whose NAME something else in the group
-also binds (needs a null-tolerant compatible-join; the engine raises
-rather than silently dropping the unbound rows).
+compiler raises), nested path groups (``(a|(b|c))``; quoted or not,
+they raise, as does an unmatched paren), and a possibly-unbound column
+of a nested group whose NAME something else in the group also binds: a
+UNION branch-private variable, a variable only a GRAPH block's or a
+subquery's OPTIONAL binds, or a subquery's non-COUNT aggregate over
+one (needs a null-tolerant compatible-join; the engine raises rather
+than silently dropping the unbound rows).
 """
 
 from __future__ import annotations
@@ -1063,6 +1066,29 @@ def _union_vars(
     return sorted(every), every - set.intersection(*var_sets)
 
 
+def _maybe_unbound(blk: dict, leg: DataFrame, graph: str | None) -> set[str]:
+    """The columns of a nested group's leg (a GRAPH block or a
+    subquery) that some rows may leave unbound, i.e. NULL: its UNION's
+    branch-private variables, (conservatively) the variables only its
+    OPTIONAL blocks bind, and for an aggregate subquery the aliases of
+    non-COUNT aggregates over one of those (an all-NULL group
+    aggregates to NULL)."""
+    every, private = (
+        _union_vars(blk["union"], graph) if blk["union"] else ([], set())
+    )
+    maybe = private | (
+        set().union(*(_block_vars(g) for g in blk["optional"]))
+        - _union_branch_vars(blk["patterns"])
+        - set(every)
+    )
+    maybe |= {
+        a[2]
+        for a in blk.get("aggs") or []
+        if a[0] not in ("count", "count_distinct") and a[1][1:] in maybe
+    }
+    return maybe & set(leg.columns)
+
+
 def _union_leg(
     triples: DataFrame,
     branches: list,
@@ -1139,7 +1165,8 @@ def _common_kwargs(
                 "a subquery inside a GRAPH block cannot itself use "
                 "GRAPH (the outer block already fixes the scope)"
             )
-        legs.append((_compile_select(sub_src, sub, engine_kwargs), set()))
+        leg = _compile_select(sub_src, sub, engine_kwargs)
+        legs.append((leg, _maybe_unbound(sub, leg, None)))
     for vs, rows in spec["values_rows"]:
         legs.append((
             local_frame(
@@ -1153,15 +1180,7 @@ def _common_kwargs(
             blk["patterns"],
             **_common_kwargs(blk, engine_kwargs, triples, graph=term),
         )
-        # unbound in some block rows: its UNION's branch-private vars
-        # and (conservatively) vars only its OPTIONAL blocks bind
-        every, private = (
-            _union_vars(blk["union"], term) if blk["union"] else ([], set())
-        )
-        optional_only = set().union(
-            *(_block_vars(g) for g in blk["optional"])
-        ) - _union_branch_vars(blk["patterns"]) - set(every)
-        legs.append((leg, private | optional_only))
+        legs.append((leg, _maybe_unbound(blk, leg, term)))
     if spec["union"] is not None:
         legs.append(_union_leg(triples, spec["union"], engine_kwargs, graph))
     # A leg's possibly-unbound variable survives as a NULL column —
@@ -1187,11 +1206,11 @@ def _common_kwargs(
             raise SparqlSyntaxError(
                 f"variable(s) {['?' + c for c in clash]} may be unbound "
                 "in a nested group (UNION branch-private, or OPTIONAL-"
-                "only inside a GRAPH block) and are also bound elsewhere "
-                "in the group — an equality join would drop the rows "
-                "where the variable is unbound (SPARQL compatible-join); "
-                "bind them in every branch / outside the OPTIONAL, or "
-                "rename"
+                "only inside a GRAPH block or subquery) and are also "
+                "bound elsewhere in the group — an equality join would "
+                "drop the rows where the variable is unbound (SPARQL "
+                "compatible-join); bind them in every branch / outside "
+                "the OPTIONAL, or rename"
             )
     if legs:
         common["extra_legs"] = [leg for leg, _u in legs]

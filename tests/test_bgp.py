@@ -1435,7 +1435,10 @@ def test_graph_variable_with_alternation_and_negated_sets(spark):
 def test_split_path_seq_units():
     """Pure-Python contract of the paren+angle-aware sequence split:
     slashes inside <IRI> quoting and (group) parens never split."""
-    from nametag3_spark.operators.bgp import _split_path_seq
+    from nametag3_spark.operators.bgp import _split_top
+
+    def _split_path_seq(term):
+        return _split_top(term, "/")
 
     assert _split_path_seq("a/b/c") == ["a", "b", "c"]
     assert _split_path_seq("(a|b)/c") == ["(a|b)", "c"]
@@ -1445,3 +1448,159 @@ def test_split_path_seq_units():
     assert _split_path_seq("(<http://x/y>|q)/r") == ["(<http://x/y>|q)", "r"]
     assert _split_path_seq("^(a|b)/c") == ["^(a|b)", "c"]
     assert _split_path_seq("plain") == ["plain"]
+
+
+# one triple per (subj, obj) pair, so every per-edge leg is a set
+_STEP_TRIPLES = [
+    ("n1", "p", "n2"),
+    ("n2", "p", "n3"),
+    ("n3", "a", "n1"),
+    ("n1", "b", "n4"),
+    ("n4", "q", "n4"),
+    ("n2", "http://x.org/p+", "n5"),
+    ("n5", "http://x.org/p", "n1"),
+    ("n3", "http://a.org/p|q", "n6"),
+    ("n6", "http://x/y", "n2"),
+]
+
+# predicate form -> the step it means: (inverse, negated, closure, names)
+_STEP_FORMS = {
+    "p": (False, False, "", "p"),
+    "<http://x/y>": (False, False, "", "http://x/y"),
+    "http://x/y": (False, False, "", "http://x/y"),
+    "^p": (True, False, "", "p"),
+    "!p": (False, True, "", ("p",)),
+    "!(a|b)": (False, True, "", ("a", "b")),
+    "^!p": (True, True, "", ("p",)),
+    "a|b": (False, False, "", ("a", "b")),
+    "(a|b)": (False, False, "", ("a", "b")),
+    "p+": (False, False, "+", "p"),
+    "p*": (False, False, "*", "p"),
+    "p?": (False, False, "?", "p"),
+    "(a|b)+": (False, False, "+", ("a", "b")),
+    "^(a|b)+": (True, False, "+", ("a", "b")),
+    # bare IRIs are atomic: their + and | are data, not path syntax
+    "http://x.org/p+": (False, False, "", "http://x.org/p+"),
+    "http://a.org/p|q": (False, False, "", "http://a.org/p|q"),
+}
+
+
+def _step_rows(step, triples):
+    """Reference evaluation of one parsed step: its (x, y) rows."""
+    inverse, negated, closure, names = step
+    names = {names} if isinstance(names, str) else set(names)
+    edges = {(s, o) for s, p, o in triples if (p in names) != negated}
+    if closure in ("+", "*"):
+        while True:
+            more = {(s, o2) for s, o in edges for o1, o2 in edges if o == o1}
+            if more <= edges:
+                break
+            edges |= more
+        if closure == "*":
+            edges = {(s, o) for s, o in edges if s != o}
+    if closure in ("*", "?"):
+        terms = {t for s, _p, o in triples for t in (s, o)}
+        edges = {(s, o) for s, o in edges if s != o} | {(t, t) for t in terms}
+    return sorted((o, s) if inverse else (s, o) for s, o in edges)
+
+
+def _step_cost(step, stats):
+    """The cost model's formula over one parsed step."""
+    _inverse, negated, closure, names = step
+    names = (names,) if isinstance(names, str) else names
+    if negated:
+        return max(sum(stats.values()) - sum(stats.get(a, 0) for a in names), 0.5)
+    c = sum(stats.get(a, 0) + 0.5 for a in names)
+    return c * 2 if closure else c
+
+
+@pytest.mark.parametrize("form", sorted(_STEP_FORMS))
+def test_every_reader_follows_the_parsed_step(spark, form):
+    """One table over every predicate form: the parser's step, the
+    compiled rows, the cost estimate, the semi-naive rule check and
+    the GRAPH-variable check all agree — a closure is costed, rejected
+    by semi-naive evaluation and rejected under ``graph="?g"`` exactly
+    when the compiler closes it."""
+    from nametag3_spark.operators.bgp import (
+        _estimate_leg_costs,
+        _path_step,
+        _semi_naive_rules,
+        bgp_query,
+    )
+
+    step = _STEP_FORMS[form]
+    assert tuple(_path_step(form)) == step
+    tri = spark.createDataFrame(
+        _STEP_TRIPLES, "subj string, pred string, obj string"
+    )
+    got = bgp_query(tri, [("?x", form, "?y")], select=["x", "y"]).collect()
+    assert sorted(map(tuple, got)) == _step_rows(step, _STEP_TRIPLES)
+    stats = {}
+    for _s, p, _o in _STEP_TRIPLES:
+        stats[p] = stats.get(p, 0) + 1
+    (cost,) = _estimate_leg_costs([("?x", form, "?y")], stats)
+    assert cost == pytest.approx(_step_cost(step, stats))
+    rule = [([("?x", form, "?y")], [("?x", "out", "?y")])]
+    quads = spark.createDataFrame(
+        [(f"g{i % 2}", *t) for i, t in enumerate(_STEP_TRIPLES)],
+        "graph string, subj string, pred string, obj string",
+    )
+    if step[2]:
+        with pytest.raises(ValueError, match="semi-naive"):
+            _semi_naive_rules(rule)
+        with pytest.raises(ValueError, match="GRAPH"):
+            bgp_query(quads, [("?x", form, "?y")], graph="?g")
+        return
+    assert _semi_naive_rules(rule) == rule
+    got = bgp_query(
+        quads, [("?x", form, "?y")], graph="?g", select=["g", "x", "y"]
+    ).collect()
+    want = [
+        (g, x, y)
+        for g in ("g0", "g1")
+        for x, y in _step_rows(
+            step,
+            [t for i, t in enumerate(_STEP_TRIPLES) if f"g{i % 2}" == g],
+        )
+    ]
+    assert sorted(map(tuple, got)) == want
+
+
+@pytest.mark.parametrize("form", ["(a|(b|c))", "a|b)", "(a|b", "((a|b))"])
+def test_malformed_path_groups_raise(spark, form):
+    """A nested group or an unmatched paren raises instead of
+    compiling an odd predicate set — through the programmatic API and
+    through quoted text-form SPARQL."""
+    from nametag3_spark.operators.bgp import _path_step, bgp_query
+    from nametag3_spark.operators.sparql import execute
+
+    with pytest.raises(ValueError, match="nested|unmatched"):
+        _path_step(form)
+    tri = spark.createDataFrame(
+        [("a", "b", "c")], "subj string, pred string, obj string"
+    )
+    with pytest.raises(ValueError, match="nested|unmatched"):
+        bgp_query(tri, [("?x", form, "?y")])
+    with pytest.raises(ValueError, match="nested|unmatched"):
+        execute(tri, f"SELECT ?x ?y WHERE {{ ?x '{form}' ?y }}")
+
+
+def test_one_path_parser_source():
+    """The compiler, the cost model and the semi-naive rule check read
+    predicate terms only through ``_path_step``: none of them scans the
+    path syntax itself, and the deleted second readers stay gone."""
+    import inspect
+
+    from nametag3_spark.operators import bgp
+
+    for fn in (
+        bgp._compile_legs, bgp._estimate_leg_costs, bgp._semi_naive_rules
+    ):
+        src = inspect.getsource(fn)
+        assert "_path_step(" in src
+        for scan in ('endswith(("+", "*", "?"))', 'startswith("!")',
+                     '"|" in'):
+            assert scan not in src, (fn.__name__, scan)
+    for gone in ("_is_path_pred", "_split_outside_angles", "_split_path_seq",
+                 "_alt_parts"):
+        assert not hasattr(bgp, gone)

@@ -155,3 +155,19 @@ def test_live_round_index_window_keeps_oracle_first():
     flags = [name in o for name in window]
     if False in flags:
         assert not any(flags[flags.index(False):])
+
+
+def test_check_oracles_rejects_unknown_query_names():
+    """A mistyped query name fails the oracle sweep (before any Spark
+    session starts) instead of checking nothing and passing."""
+    import subprocess
+
+    root = Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, str(root / "tools" / "check_oracles.py"),
+         "/nonexistent", "sparql_select", "sparql_selcet"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode != 0
+    assert "unknown queries: ['sparql_selcet']" in out.stdout
+    assert "ALL OK" not in out.stdout

@@ -115,6 +115,7 @@ def test_pagerank_deterministic_under_repartition(spark):
 def test_pagerank_releases_persisted_intermediates(spark):
     from nametag3_spark.operators import graph
 
+    graph.unpersist_intermediates()  # the registry is shared with dedup
     df = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
     out = graph.pagerank(df, iters=2)
     assert len(graph._PERSISTED) == 2  # sym + deg held until released

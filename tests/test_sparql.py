@@ -1261,6 +1261,35 @@ def test_items_outside_graph_braces_read_the_default_graph(spark):
         )
 
 
+def test_subquery_possibly_unbound_column_clash_raises(spark):
+    """A subquery's OPTIONAL-only projected column (and a non-COUNT
+    aggregate over one) may be NULL; joined on that name elsewhere in
+    the group, the equality join would drop the unbound rows where
+    SPARQL's compatible join keeps them — so it raises, like the same
+    shape under a GRAPH block."""
+    from nametag3_spark.operators.sparql import execute
+
+    tri = spark.createDataFrame(
+        [("a", "p", "b"), ("x", "r", "z")],
+        "subj string, pred string, obj string",
+    )
+    for q in (
+        "SELECT ?x ?w ?z WHERE { { SELECT ?x ?w WHERE { ?x p ?y "
+        "OPTIONAL { ?y q ?w } } } ?w r ?z }",
+        "SELECT ?x ?m ?z WHERE { { SELECT ?x (MIN(?w) AS ?m) WHERE "
+        "{ ?x p ?y OPTIONAL { ?y q ?w } } GROUP BY ?x } ?m r ?z }",
+    ):
+        with pytest.raises(SparqlSyntaxError, match="may be unbound"):
+            execute(tri, q)
+    # the NULL column joined on nothing keeps its unbound rows
+    rows = execute(
+        tri,
+        "SELECT ?x ?w WHERE { { SELECT ?x ?w WHERE { ?x p ?y "
+        "OPTIONAL { ?y q ?w } } } ?x p ?v }",
+    ).collect()
+    assert [(r.x, r.w) for r in rows] == [("a", None)]
+
+
 def test_lone_union_without_a_shared_variable(spark):
     """A UNION that is the group's only pattern needs no shared
     variable: each branch's rows NULL-fill the other's variables (bag

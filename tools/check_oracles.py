@@ -94,6 +94,13 @@ def main():
     import __spark_entry__ as entry_mod
     from nametag3_spark.session import get_spark
 
+    qs = entry_mod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        # a typo would otherwise check nothing and still pass
+        print(f"unknown queries: {unknown}")
+        sys.exit(2)
+
     spark = get_spark(
         master="local[8]", shuffle_partitions=8,
         extra_conf={"spark.driver.memory": "8g"},
@@ -106,12 +113,13 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
+    checked = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        checked += 1
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
@@ -154,7 +162,8 @@ def main():
             continue
         print(f"ok   {name}: {len(srows)} rows match")
 
-    print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
+    print(f"\n{checked} queries checked")
+    print(f"{len(failures)} failures: {failures}" if failures else "ALL OK")
     sys.exit(1 if failures else 0)
 
 
