@@ -140,9 +140,11 @@ class _Step(NamedTuple):
     inverse: bool  # ^: the pattern matches (o, p, s)
     negated: bool  # !: every edge label EXCEPT ``names``
     closure: str  # "+", "*", "?" or "" (no closure)
-    # one bare name (str), a name set (tuple: alternation, paren group
-    # or negated set), or None for a variable predicate
-    names: str | tuple[str, ...] | None
+    names: tuple[str, ...]  # the literal predicate names; () for a variable
+    # the term a plain pattern matches at its pred position (a ?p
+    # variable or one plain name); None when the leg is an edge-set
+    # scan (a closure, an alternation, a paren group or a negated set)
+    pred: str | None
 
 
 def _name_set(text: str) -> tuple[str, ...]:
@@ -177,7 +179,8 @@ def _path_step(term: str) -> _Step:
     check all take a (sequence-expanded) predicate term's meaning from
     here. ``^`` strips first; a variable, an ``<iri>`` and a bare
     ``://`` IRI are read before any path operator (so ``http://x/p+``
-    is one literal name); then one trailing closure operator; then a
+    is one literal name); then one trailing closure operator (a closed
+    ``<iri>+`` is read as that one name before any other check); then a
     negated set ``!p`` / ``!(a|b)`` (never closed), a bare alternation
     ``a|b`` (never closed: ``a|b+`` is ambiguous), a paren group
     ``(a|b)`` or one plain name. Malformed forms raise ``ValueError``."""
@@ -185,17 +188,21 @@ def _path_step(term: str) -> _Step:
     if inverse:
         term = term[1:]
     if _is_var(term):
-        return _Step(inverse, False, "", None)
+        return _Step(inverse, False, "", (), term)
     if _is_atomic_pred(term):
-        return _Step(inverse, False, "", _strip_angles(term))
+        name = _strip_angles(term)
+        return _Step(inverse, False, "", (name,), name)
     closure = term[-1] if len(term) > 1 and term[-1] in "+*?" else ""
     body = term[:-1] if closure else term
+    if _is_atomic_pred(body):
+        # a closed <iri> (its parens are data, like its / and |)
+        return _Step(inverse, False, closure, (_strip_angles(body),), None)
     if body.startswith("!"):
         if closure:
             raise ValueError(
                 f"negated property sets cannot be closed: {term!r}"
             )
-        return _Step(inverse, True, "", _name_set(body[1:]))
+        return _Step(inverse, True, "", _name_set(body[1:]), None)
     if len(_split_top(body, "|")) > 1:
         if closure:
             # SPARQL precedence reads a|b+ as a|(b+), unsupported here
@@ -203,22 +210,20 @@ def _path_step(term: str) -> _Step:
                 "ambiguous alternation+closure — parenthesize the "
                 f"alternation, e.g. (a|b){closure}: {term!r}"
             )
-        return _Step(inverse, False, "", _name_set(body))
+        return _Step(inverse, False, "", _name_set(body), None)
     if body.startswith("(") and body.endswith(")"):
-        return _Step(inverse, False, closure, _name_set(body))
+        return _Step(inverse, False, closure, _name_set(body), None)
     if "(" in body or ")" in body:
         raise ValueError(f"malformed path group: {term!r}")
-    return _Step(inverse, False, closure, _strip_angles(body))
+    name = _strip_angles(body)
+    return _Step(inverse, False, closure, (name,), None if closure else name)
 
 
 def _edge_scan(src: DataFrame, step: _Step) -> DataFrame:
-    """The edges a literal step matches: ONE scan with an equality,
-    In-list or NOT-IN predicate on ``pred`` (pushed down like any
-    literal), never a union of scans."""
-    pred = F.col("pred")
-    if isinstance(step.names, str):
-        return src.where(pred == F.lit(step.names))
-    hit = pred.isin(list(step.names))
+    """The edges a literal step matches: ONE scan with an In-list or
+    NOT-IN predicate on ``pred`` (pushed down like any literal; Catalyst
+    rewrites a one-name list to an equality), never a union of scans."""
+    hit = F.col("pred").isin(list(step.names))
     return src.where(~hit if step.negated else hit)
 
 
@@ -610,17 +615,15 @@ def _compile_legs(
                 leg = leg.unionByName(
                     nodes.select("subj", F.col("subj").alias("obj"))
                 )
-        elif isinstance(step.names, tuple):
+        elif step.pred is None:
             # alternation, paren group or negated set: one In / NOT-IN
             # scan over the edge labels
             leg = _edge_scan(src_i, step)
         else:
             # one literal name or a variable rides the term machinery
             # below (a literal is one more pushed-down equality)
-            pred = (
-                p_term.removeprefix("^") if step.names is None else step.names
-            )
-            leg, positions, terms = src_i, _POS, (s_term, pred, o_term)
+            leg, positions = src_i, _POS
+            terms = (s_term, step.pred, o_term)
         if graph_var is not None:
             # per-EDGE legs carry their graph: the binding rides the
             # SAME var/literal machinery (incl. repeated-var equality
@@ -661,14 +664,13 @@ def _estimate_leg_costs(
     costs: list[float] = []
     for s_term, p_term, o_term in patterns:
         step = _path_step(p_term)
-        names = (step.names,) if isinstance(step.names, str) else step.names
-        if names is None:
+        if not step.names:  # a variable predicate
             c = total
         elif step.negated:
-            excluded = sum(float(pred_stats.get(a, 0.0)) for a in names)
+            excluded = sum(float(pred_stats.get(a, 0.0)) for a in step.names)
             c = max(total - excluded, 0.5)
         else:
-            c = sum(float(pred_stats.get(a, 0.0)) + 0.5 for a in names)
+            c = sum(float(pred_stats.get(a, 0.0)) + 0.5 for a in step.names)
             if step.closure:
                 c *= 2.0
         for t in (s_term, o_term):

@@ -163,9 +163,11 @@ compiler raises), nested path groups (``(a|(b|c))``; quoted or not,
 they raise, as does an unmatched paren), and a possibly-unbound column
 of a nested group whose NAME something else in the group also binds: a
 UNION branch-private variable, a variable only a GRAPH block's or a
-subquery's OPTIONAL binds, or a subquery's non-COUNT aggregate over
-one (needs a null-tolerant compatible-join; the engine raises rather
-than silently dropping the unbound rows).
+subquery's OPTIONAL binds (at any depth of nesting — the set comes up
+with each leg — unless a pattern, a VALUES list or another leg always
+binds it), or a subquery's non-COUNT aggregate over one (needs a
+null-tolerant compatible-join; the engine raises rather than silently
+dropping the unbound rows).
 """
 
 from __future__ import annotations
@@ -1066,25 +1068,16 @@ def _union_vars(
     return sorted(every), every - set.intersection(*var_sets)
 
 
-def _maybe_unbound(blk: dict, leg: DataFrame, graph: str | None) -> set[str]:
+def _leg_unbound(spec: dict, unbound: set[str], leg: DataFrame) -> set[str]:
     """The columns of a nested group's leg (a GRAPH block or a
-    subquery) that some rows may leave unbound, i.e. NULL: its UNION's
-    branch-private variables, (conservatively) the variables only its
-    OPTIONAL blocks bind, and for an aggregate subquery the aliases of
-    non-COUNT aggregates over one of those (an all-NULL group
-    aggregates to NULL)."""
-    every, private = (
-        _union_vars(blk["union"], graph) if blk["union"] else ([], set())
-    )
-    maybe = private | (
-        set().union(*(_block_vars(g) for g in blk["optional"]))
-        - _union_branch_vars(blk["patterns"])
-        - set(every)
-    )
-    maybe |= {
+    subquery) that some rows may leave unbound, i.e. NULL: the group's
+    possibly-unbound variables (``_common_kwargs``) it projects, and
+    for an aggregate subquery the aliases of non-COUNT aggregates over
+    one of them (an all-NULL group aggregates to NULL)."""
+    maybe = unbound | {
         a[2]
-        for a in blk.get("aggs") or []
-        if a[0] not in ("count", "count_distinct") and a[1][1:] in maybe
+        for a in spec.get("aggs") or []
+        if a[0] not in ("count", "count_distinct") and a[1][1:] in unbound
     }
     return maybe & set(leg.columns)
 
@@ -1120,14 +1113,17 @@ def _common_kwargs(
     engine_kwargs: dict,
     triples: DataFrame,
     graph: str | None = None,
-) -> dict:
-    """A group's bgp_query kwargs. Every nested group becomes one
-    binding-set leg in ``extra_legs``: each subquery, each multi-var
-    VALUES table, each GRAPH block and the UNION chain. A GRAPH block
-    compiles recursively as ``bgp_query`` over its own group with
+) -> tuple[dict, set[str]]:
+    """A group's bgp_query kwargs, and the variables some of its rows
+    may leave unbound. Every nested group becomes one binding-set leg
+    in ``extra_legs``: each subquery, each multi-var VALUES table, each
+    GRAPH block and the UNION chain. A GRAPH block compiles
+    recursively as ``bgp_query`` over its own group with
     ``graph=term``, so what sits inside its braces reads that graph and
     what sits outside reads the enclosing scope (the default graph is
-    the union of all graphs)."""
+    the union of all graphs). A leg's possibly-unbound columns come up
+    with it at every depth, so a clash raises however deep the
+    NULL-able column was bound."""
     from pyspark.sql import functions as F
 
     from nametag3_spark.operators.bgp import bgp_query
@@ -1165,8 +1161,7 @@ def _common_kwargs(
                 "a subquery inside a GRAPH block cannot itself use "
                 "GRAPH (the outer block already fixes the scope)"
             )
-        leg = _compile_select(sub_src, sub, engine_kwargs)
-        legs.append((leg, _maybe_unbound(sub, leg, None)))
+        legs.append(_select_leg(sub_src, sub, engine_kwargs))
     for vs, rows in spec["values_rows"]:
         legs.append((
             local_frame(
@@ -1175,12 +1170,11 @@ def _common_kwargs(
             set(),
         ))
     for term, blk in spec["graph_blocks"]:
-        leg = bgp_query(
-            triples,
-            blk["patterns"],
-            **_common_kwargs(blk, engine_kwargs, triples, graph=term),
+        blk_kwargs, blk_unbound = _common_kwargs(
+            blk, engine_kwargs, triples, graph=term
         )
-        legs.append((leg, _maybe_unbound(blk, leg, term)))
+        leg = bgp_query(triples, blk["patterns"], **blk_kwargs)
+        legs.append((leg, _leg_unbound(blk, blk_unbound, leg)))
     if spec["union"] is not None:
         legs.append(_union_leg(triples, spec["union"], engine_kwargs, graph))
     # A leg's possibly-unbound variable survives as a NULL column —
@@ -1214,16 +1208,31 @@ def _common_kwargs(
             )
     if legs:
         common["extra_legs"] = [leg for leg, _u in legs]
-    return common
+    # the group's possibly-unbound variables: what its legs may leave
+    # unbound, plus (conservatively) what only its OPTIONAL blocks bind
+    # — unless a pattern, a VALUES list or a leg's bound column always
+    # binds it (VALUES filters drop the NULL rows)
+    always = (
+        _union_branch_vars(spec["patterns"])
+        | set(spec["values"])
+        | set().union(*(set(leg.columns) - u for leg, u in legs))
+    )
+    unbound = set().union(*(u for _leg, u in legs)) | (
+        set().union(*(_block_vars(g) for g in spec["optional"])) - always
+    )
+    return common, unbound
 
 
-def _compile_select(triples: DataFrame, spec: dict, engine_kwargs: dict):
-    """A parsed SELECT spec → a DataFrame (recursive via subqueries)."""
+def _select_leg(
+    triples: DataFrame, spec: dict, engine_kwargs: dict
+) -> tuple[DataFrame, set[str]]:
+    """A parsed SELECT spec → a DataFrame (recursive via subqueries),
+    with the columns some of its rows may leave unbound."""
     from pyspark.sql import functions as F
 
     from nametag3_spark.operators.bgp import bgp_aggregate, bgp_query
 
-    common = _common_kwargs(spec, engine_kwargs, triples)
+    common, unbound = _common_kwargs(spec, engine_kwargs, triples)
     if spec["aggs"]:
         out = bgp_aggregate(
             triples,
@@ -1267,7 +1276,7 @@ def _compile_select(triples: DataFrame, spec: dict, engine_kwargs: dict):
         out = out.offset(spec["offset"])
     if spec["limit"] is not None:
         out = out.limit(spec["limit"])
-    return out
+    return out, _leg_unbound(spec, unbound, out)
 
 
 def execute(triples: DataFrame, query: str, **engine_kwargs):
@@ -1286,8 +1295,8 @@ def execute(triples: DataFrame, query: str, **engine_kwargs):
             **{k: v for k, v in engine_kwargs.items() if k in _ENGINE_KEYS[:3]},
         )
     if spec["form"] == "select":
-        return _compile_select(triples, spec, engine_kwargs)
-    common = _common_kwargs(spec, engine_kwargs, triples)
+        return _select_leg(triples, spec, engine_kwargs)[0]
+    common, _unbound = _common_kwargs(spec, engine_kwargs, triples)
     if spec["form"] == "ask":
         return ask(triples, spec["patterns"], **common)
     return construct(triples, spec["patterns"], spec["template"], **common)

@@ -1461,35 +1461,48 @@ _STEP_TRIPLES = [
     ("n5", "http://x.org/p", "n1"),
     ("n3", "http://a.org/p|q", "n6"),
     ("n6", "http://x/y", "n2"),
+    ("n4", "http://x/(y)", "n6"),
+    ("n6", "http://x/(y)", "n5"),
 ]
 
-# predicate form -> the step it means: (inverse, negated, closure, names)
+# predicate form -> the step it means: (inverse, negated, closure,
+# names, pred — the term a plain pattern matches at its pred position)
 _STEP_FORMS = {
-    "p": (False, False, "", "p"),
-    "<http://x/y>": (False, False, "", "http://x/y"),
-    "http://x/y": (False, False, "", "http://x/y"),
-    "^p": (True, False, "", "p"),
-    "!p": (False, True, "", ("p",)),
-    "!(a|b)": (False, True, "", ("a", "b")),
-    "^!p": (True, True, "", ("p",)),
-    "a|b": (False, False, "", ("a", "b")),
-    "(a|b)": (False, False, "", ("a", "b")),
-    "p+": (False, False, "+", "p"),
-    "p*": (False, False, "*", "p"),
-    "p?": (False, False, "?", "p"),
-    "(a|b)+": (False, False, "+", ("a", "b")),
-    "^(a|b)+": (True, False, "+", ("a", "b")),
+    "p": (False, False, "", ("p",), "p"),
+    "?v": (False, False, "", (), "?v"),
+    "<http://x/y>": (False, False, "", ("http://x/y",), "http://x/y"),
+    "http://x/y": (False, False, "", ("http://x/y",), "http://x/y"),
+    "^p": (True, False, "", ("p",), "p"),
+    "!p": (False, True, "", ("p",), None),
+    "!(a|b)": (False, True, "", ("a", "b"), None),
+    "^!p": (True, True, "", ("p",), None),
+    "a|b": (False, False, "", ("a", "b"), None),
+    "(a|b)": (False, False, "", ("a", "b"), None),
+    "p+": (False, False, "+", ("p",), None),
+    "p*": (False, False, "*", ("p",), None),
+    "p?": (False, False, "?", ("p",), None),
+    "(a|b)+": (False, False, "+", ("a", "b"), None),
+    "^(a|b)+": (True, False, "+", ("a", "b"), None),
     # bare IRIs are atomic: their + and | are data, not path syntax
-    "http://x.org/p+": (False, False, "", "http://x.org/p+"),
-    "http://a.org/p|q": (False, False, "", "http://a.org/p|q"),
+    "http://x.org/p+": (
+        False, False, "", ("http://x.org/p+",), "http://x.org/p+"
+    ),
+    "http://a.org/p|q": (
+        False, False, "", ("http://a.org/p|q",), "http://a.org/p|q"
+    ),
+    # so are an <iri>'s parens, closed or not
+    "<http://x/(y)>": (False, False, "", ("http://x/(y)",), "http://x/(y)"),
+    "<http://x/(y)>+": (False, False, "+", ("http://x/(y)",), None),
+    "^<http://x/(y)>*": (True, False, "*", ("http://x/(y)",), None),
 }
 
 
 def _step_rows(step, triples):
     """Reference evaluation of one parsed step: its (x, y) rows."""
-    inverse, negated, closure, names = step
-    names = {names} if isinstance(names, str) else set(names)
-    edges = {(s, o) for s, p, o in triples if (p in names) != negated}
+    inverse, negated, closure, names, _pred = step
+    edges = {
+        (s, o) for s, p, o in triples if (not names or p in names) != negated
+    }
     if closure in ("+", "*"):
         while True:
             more = {(s, o2) for s, o in edges for o1, o2 in edges if o == o1}
@@ -1506,8 +1519,9 @@ def _step_rows(step, triples):
 
 def _step_cost(step, stats):
     """The cost model's formula over one parsed step."""
-    _inverse, negated, closure, names = step
-    names = (names,) if isinstance(names, str) else names
+    _inverse, negated, closure, names, _pred = step
+    if not names:  # a variable predicate: the whole store
+        return sum(stats.values())
     if negated:
         return max(sum(stats.values()) - sum(stats.get(a, 0) for a in names), 0.5)
     c = sum(stats.get(a, 0) + 0.5 for a in names)

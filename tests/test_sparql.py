@@ -1281,6 +1281,24 @@ def test_subquery_possibly_unbound_column_clash_raises(spark):
     ):
         with pytest.raises(SparqlSyntaxError, match="may be unbound"):
             execute(tri, q)
+    # the NULL-able column comes up through every depth of nesting: a
+    # subquery inside the subquery, a GRAPH block inside a subquery and
+    # a subquery inside a literal GRAPH block
+    quads = spark.createDataFrame(
+        [("g1", "a", "p", "b"), ("g1", "x", "r", "z")],
+        "graph string, subj string, pred string, obj string",
+    )
+    inner = "SELECT ?x ?w WHERE { ?x p ?y OPTIONAL { ?y q ?w } }"
+    for q in (
+        f"SELECT ?x ?w ?z WHERE {{ {{ SELECT ?x ?w WHERE {{ {{ {inner} }} "
+        "} } ?w r ?z }",
+        "SELECT ?x ?w ?z WHERE { { SELECT ?x ?w WHERE { GRAPH g1 { ?x p ?y "
+        "OPTIONAL { ?y q ?w } } } } ?w r ?z }",
+        f"SELECT ?x ?w ?z WHERE {{ GRAPH g1 {{ ?x p ?v {{ {inner} }} }} "
+        "?w r ?z }",
+    ):
+        with pytest.raises(SparqlSyntaxError, match="may be unbound"):
+            execute(quads, q)
     # the NULL column joined on nothing keeps its unbound rows
     rows = execute(
         tri,
@@ -1288,6 +1306,22 @@ def test_subquery_possibly_unbound_column_clash_raises(spark):
         "OPTIONAL { ?y q ?w } } } ?x p ?v }",
     ).collect()
     assert [(r.x, r.w) for r in rows] == [("a", None)]
+    # a column the subquery always binds — a VALUES list drops its NULL
+    # rows, a second leg binds it outright — joins like any other
+    tri = spark.createDataFrame(
+        [("a", "p", "b"), ("b", "q", "x"), ("x", "r", "z")],
+        "subj string, pred string, obj string",
+    )
+    for body in (
+        "?x p ?y OPTIONAL { ?y q ?w } VALUES ?w { x }",
+        "?x p ?y OPTIONAL { ?y q ?w } { SELECT ?y ?w WHERE { ?y q ?w } }",
+    ):
+        rows = execute(
+            tri,
+            f"SELECT ?x ?w ?z WHERE {{ {{ SELECT ?x ?w WHERE {{ {body} }} }} "
+            "?w r ?z }",
+        ).collect()
+        assert [(r.x, r.w, r.z) for r in rows] == [("a", "x", "z")]
 
 
 def test_lone_union_without_a_shared_variable(spark):
