@@ -1856,7 +1856,7 @@ def q_kg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forward-chaining rule engine in SEMI-NAIVE mode: seed `anc` from
+    """Forward-chaining rule engine (semi-naive rounds): seed `anc` from
     the subclass edges, then one transitivity round over the delta
     frontier — 2 fixed rounds close the depth-2 part hierarchy. Output:
     the derived `anc` facts only (base triples filtered out)."""
@@ -1876,7 +1876,7 @@ def q_kg_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         ([("?x", "subclass", "?y")], [("?x", "anc", "?y")]),
         ([("?x", "anc", "?y"), ("?y", "anc", "?z")], [("?x", "anc", "?z")]),
     ]
-    out = apply_rules(tri, rules, rounds=2, semi_naive=True)
+    out = apply_rules(tri, rules, rounds=2)
     return out.where(F.col("pred") == "anc").select("subj", "pred", "obj")
 
 

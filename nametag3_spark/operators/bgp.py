@@ -52,7 +52,7 @@ numerically via a double cast), VALUES (pushed-down In-lists),
 GRAPH scoping over quad stores, GROUP BY aggregation
 (``bgp_aggregate``: one-shuffle hash aggregate with map-side
 partials), CONSTRUCT templating (``construct``), and fixed-round
-naive/semi-naive Datalog forward chaining (``apply_rules``).
+semi-naive Datalog forward chaining (``apply_rules``).
 
 One parser reads the predicate-path syntax: ``_path_step`` turns each
 (sequence-expanded) predicate term into its step — inverse, negated,
@@ -60,7 +60,8 @@ closure operator, predicate names — and the leg compiler, the
 join-order cost model, the semi-naive rule check and the GRAPH-variable
 check all take the term's meaning from it. An atomic ``<iri>`` or bare
 ``://`` IRI is read before any path operator, so ``http://x.org/p+`` is
-one literal everywhere; nested or unmatched paren groups raise.
+one literal everywhere; an alternation branch that is a group of names
+flattens into the set, and deeper or unmatched paren groups raise.
 ``_split_top`` is the one angle- and paren-aware splitter (``/`` for
 sequences, ``|`` for alternations).
 
@@ -147,11 +148,14 @@ class _Step(NamedTuple):
     pred: str | None
 
 
-def _name_set(text: str) -> tuple[str, ...]:
+def _name_set(text: str, branch: bool = False) -> tuple[str, ...]:
     """The names of an alternation ``a|b`` or a group ``(a|b)``.
     Angle-quoted (``<iri>``) and bare-IRI names are atomic — operator
-    characters inside them are data, not syntax; a nested or misplaced
-    group, an unmatched paren and a name carrying ``+ * ? ^ /`` raise."""
+    characters inside them are data, not syntax. A branch that is itself
+    a group of names flattens into the set (``(a)|(b)`` and
+    ``(a|(b|c))`` are SPARQL's ``a|b`` and ``a|b|c``); a group nested
+    deeper or misplaced, an unmatched paren and a name carrying
+    ``+ * ? ^ /`` raise."""
     parts = _split_top(text, "|")
     if len(parts) == 1 and text.startswith("(") and text.endswith(")"):
         parts = _split_top(text[1:-1], "|")
@@ -161,6 +165,8 @@ def _name_set(text: str) -> tuple[str, ...]:
             raise ValueError(f"malformed alternation: {text!r}")
         if _is_atomic_pred(a):
             out.append(_strip_angles(a))
+        elif a.startswith("(") and a.endswith(")") and not branch:
+            out.extend(_name_set(a, branch=True))
         elif "(" in a or ")" in a:
             raise ValueError(f"nested path groups are not supported: {text!r}")
         elif a.endswith(("+", "*", "?")) or a.startswith("^") or "/" in a:
@@ -1308,97 +1314,51 @@ def apply_rules(
     rules: list[tuple[list[tuple[str, str, str]], list[tuple[str, str, str]]]],
     rounds: int = 3,
     path_depth: int = 8,
-    semi_naive: bool = False,
-    materialize_rounds: str | None = None,
 ) -> DataFrame:
-    """Bounded forward chaining: apply every (patterns, template) rule
-    to the accumulated triple set for a FIXED number of rounds,
-    merging derivations back each round — naive Datalog evaluation
-    with a deterministic, unrollable plan. Returns base ∪ derived.
+    """Bounded forward chaining: ``rounds`` semi-naive rounds of every
+    (patterns, template) rule (``_semi_naive_rounds``), seeded with the
+    distinct input as both the known set and the frontier. Returns
+    base ∪ derived — the facts naive evaluation (every rule over the
+    whole accumulated set, every round) derives in as many rounds.
 
     Derivations compound across rounds (a transitive rule doubles
     reachable path length per round after seeding, so ``rounds`` rounds
-    close chains of length 2^(rounds-1)). Rounds are fixed, never convergence-tested:
-    the plan shape is data-independent, which is what lets a DuckDB
-    twin unroll it and a checkpointer resume it.
-
-    Scale note (100 TB): each round costs one distinct shuffle of the
-    accumulated set plus the rule joins. Naive evaluation
-    (``semi_naive=False``) re-derives old facts every round — fine for
-    the 2-3 fixed rounds ontology-style rules need. ``semi_naive=True``
-    is the incremental path for corpora where re-derivation dominates:
-    each round joins every rule once PER LEG with that one leg sourced
-    from the previous round's DELTA and the rest from the full known
-    set (any genuinely new fact must use ≥1 delta fact, so this is
-    exhaustive), then anti-joins the derivations against the known set
-    so later rounds touch only the frontier. Rounds stay fixed either
-    way — the plan is data-independent and unrollable. Closure steps
-    (``pred+``, ``pred*``, ``pred?``) are rejected under semi-naive: a
-    path can mix old and delta edges, so per-leg delta sourcing would
-    miss it.
-
-    ``materialize_rounds="local"`` eagerly ``localCheckpoint``s the
-    per-round state. The lazy default nests each round's plan inside
-    the next (fine for the 2-3 rounds ontology rules need, and what
-    the unrollable-oracle contract assumes); transitive rules double
-    the plan per round, so for larger round counts — or any production
-    run, where each round would be an Iceberg snapshot anyway —
-    materialize to keep optimizer time flat and make rounds resumable.
-    """
+    close chains of length 2^(rounds-1)). Rounds are fixed, never
+    convergence-tested: the plan shape is data-independent, which is
+    what lets a DuckDB twin unroll it and a checkpointer resume it.
+    Every round's frontier and known set are materialized, so the
+    returned frame's plan is one checkpointed leaf whatever the round
+    count (nesting each round's plan in the next doubles a transitive
+    rule's plan per round, and its optimizer time with it)."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     if not rules:
         raise ValueError("empty rule set")
-    if materialize_rounds not in (None, "local"):
-        raise ValueError(f"unknown materialize_rounds: {materialize_rounds!r}")
-
-    def mat(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if materialize_rounds else df
-
-    base = triples.select("subj", "pred", "obj")
-    if not semi_naive:
-        current = base
-        for _ in range(rounds):
-            derived = None
-            for patterns, template in rules:
-                d = construct(current, patterns, template, path_depth=path_depth)
-                derived = d if derived is None else derived.unionByName(d)
-            current = mat(current.unionByName(derived).distinct())
-        return current
-
-    known = base.distinct()
-    return _semi_naive_rounds(
-        known, known, rules, rounds, path_depth, mat
-    )[0]
+    known = triples.select("subj", "pred", "obj").distinct()
+    return _semi_naive_rounds(known, known, rules, rounds, path_depth)[0]
 
 
 def _semi_naive_rules(
     rules: list[tuple[list[tuple[str, str, str]], list[tuple[str, str, str]]]],
-) -> list[tuple[list[tuple[str, str, str]], list[tuple[str, str, str]]]]:
-    """The one rule check of semi-naive evaluation, run before any plan
-    or stream starts: sequence property paths (``a/b``) rewrite to
-    chained atomic legs over fresh internal variables, then a leg whose
-    parsed step (``_path_step``) is a closure (``+ * ?``) raises. Per-leg delta sourcing then
-    iterates the REWRITTEN legs — exhaustive, since any new match uses
-    ≥1 new fact in some expanded leg — whereas a multi-hop closure can
-    mix old and delta edges, which per-leg sourcing misses. Compiling
-    the raw ``a/b`` instead would read it as one literal predicate and
-    silently derive nothing. Idempotent on already-expanded rules."""
+) -> list[tuple[list[tuple[str, str, str]], list[tuple[str, str, str]], bool]]:
+    """The one rule check of forward chaining, run before any plan or
+    stream starts: sequence property paths (``a/b``) rewrite to chained
+    legs over fresh internal variables, and every leg's predicate is
+    parsed (``_path_step``), so a malformed term raises here. Returns
+    ``(patterns, template, closed)`` per rule, ``closed`` when a
+    rewritten leg is a closure step (``+ * ?``). Compiling the raw
+    ``a/b`` instead would read it as one literal predicate and
+    silently derive nothing."""
     seq_counter = itertools.count()
     out = []
     for patterns, template in rules:
         pats = _expand_paths(list(patterns), seq_counter)
-        for pat in pats:
-            if (
-                len(pat) == 3
-                and isinstance(pat[1], str)
-                and _path_step(pat[1]).closure
-            ):
-                raise ValueError(
-                    "property-path (+/*/?) patterns are not supported in "
-                    f"semi-naive evaluation: {pat!r}"
-                )
-        out.append((pats, template))
+        steps = [
+            _path_step(pat[1])
+            for pat in pats
+            if len(pat) == 3 and isinstance(pat[1], str)
+        ]
+        out.append((pats, template, any(s.closure for s in steps)))
     return out
 
 
@@ -1408,23 +1368,35 @@ def _semi_naive_rounds(
     rules: list[tuple[list[tuple[str, str, str]], list[tuple[str, str, str]]]],
     rounds: int,
     path_depth: int = 8,
-    mat=lambda df: df,
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``rounds`` semi-naive rounds from an EXPLICIT frontier:
     ``known`` is the complete fact set so far, ``delta`` the facts not
     yet propagated through the rules (``delta ⊆ known``). Returns
     (new_known, all_new_facts) — the second is everything derived
     beyond the input ``known``, which is exactly what an incremental
-    consumer (streaming micro-batch) appends to its store."""
+    consumer (streaming micro-batch) appends to its store.
+
+    A closure-free rule joins once PER LEG with that one leg read from
+    the delta and the rest from the known set: any genuinely new match
+    uses ≥1 delta fact in some leg, so this is exhaustive. A closure
+    leg (``p+``, ``p*``, ``p?``) can chain old and delta edges in one
+    path, so a rule holding one joins once with every leg over the
+    known set — a superset of every delta-sourced variant, hence exact,
+    at a naive round's cost. Each round's derivations are anti-joined
+    against the known set, and the frontier and known set are
+    ``localCheckpoint``ed, so later rounds plan over one leaf each."""
     rules = _semi_naive_rules(rules)
     initial = known
     for _ in range(rounds):
         derived = None
-        for patterns, template in rules:
+        for patterns, template, closed in rules:
             needed = _template_needed(template)
-            for i in range(len(patterns)):
+            sources = (
+                [None] if closed else [{i: delta} for i in range(len(patterns))]
+            )
+            for src_overrides in sources:
                 legs = _compile_legs(
-                    known, patterns, path_depth, src_overrides={i: delta}
+                    known, patterns, path_depth, src_overrides=src_overrides
                 )
                 matches, bound = _join_connected(legs)
                 missing = [v for v in needed if v not in bound]
@@ -1437,11 +1409,9 @@ def _semi_naive_rounds(
                 )
                 derived = d if derived is None else derived.unionByName(d)
         # the frontier: facts no earlier round (or the base) produced
-        delta = mat(
-            derived.distinct().join(
-                known, on=["subj", "pred", "obj"], how="left_anti"
-            )
-        )
-        known = mat(known.unionByName(delta))
+        delta = derived.distinct().join(
+            known, on=["subj", "pred", "obj"], how="left_anti"
+        ).localCheckpoint(eager=True)
+        known = known.unionByName(delta).localCheckpoint(eager=True)
     new_facts = known.join(initial, on=["subj", "pred", "obj"], how="left_anti")
     return known, new_facts

@@ -79,6 +79,46 @@ def _write_epoch(df: DataFrame, epoch_id: int, out_dir: str) -> None:
     )
 
 
+_SPO = ["subj", "pred", "obj"]
+_SPO_SCHEMA = "subj string, pred string, obj string"
+
+
+def _start_epochs(
+    spark: SparkSession, schema: str, input_dir: str,
+    max_files_per_trigger: int, checkpoint_dir: str, process,
+) -> StreamingQuery:
+    """The one stream launcher: ``input_dir``'s parquet files as a
+    stream of micro-batches, each handed to ``process(batch_df,
+    epoch_id)``, progress kept in ``checkpoint_dir``; availableNow runs
+    every file present at start, then stops."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _grow_store(
+    spark: SparkSession, store_dir: str, batch_df: DataFrame, epoch_id: int
+) -> tuple[DataFrame, DataFrame]:
+    """The one fact-store step: ``(known ∪ novel, novel)``, both
+    materialized — novel is the batch's distinct facts absent from the
+    store's STRICTLY EARLIER epochs (a replay sees the same known set),
+    known ∪ novel the store as of this epoch."""
+    known = _earlier_epochs(spark, store_dir, epoch_id, _SPO)
+    novel = batch_df.select(*_SPO).distinct()
+    if known is None:
+        novel = novel.localCheckpoint(eager=True)
+        return novel, novel
+    novel = novel.join(known, on=_SPO, how="left_anti")
+    novel = novel.localCheckpoint(eager=True)
+    return known.unionByName(novel).localCheckpoint(eager=True), novel
+
+
 def read_transcript_stream(
     spark: SparkSession, input_dir: str, max_files_per_trigger: int = 4
 ) -> DataFrame:
@@ -112,7 +152,6 @@ def start_triples_stream(
     own ``epoch_id=N`` catalog partition (dynamic overwrite → a replayed
     epoch reconstructs the identical catalog state it saw the first
     time, keeping the exactly-once contract for the catalog too)."""
-    stream = read_transcript_stream(spark, input_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         catalog = None
@@ -128,11 +167,8 @@ def start_triples_stream(
             if catalog_dir is not None:
                 _write_epoch(frames["catalog"], epoch_id, catalog_dir)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_epochs(
+        spark, TRANSCRIPT_SCHEMA, input_dir, 4, checkpoint_dir, process
     )
 
 
@@ -289,11 +325,11 @@ def start_inference_stream(
     rounds: int = 2,
     max_files_per_trigger: int = 4,
 ) -> StreamingQuery:
-    """Streaming incremental KG inference: a stream of NEW (subj, pred,
-    obj) facts runs ``rounds`` SEMI-NAIVE forward-chaining rounds per
-    micro-batch with the batch's novel facts as the frontier and the
-    store accumulated by STRICTLY EARLIER epochs as the known set —
-    old facts are never re-derived, each epoch pays only for its delta.
+    """Streaming incremental KG inference: per micro-batch of NEW (subj,
+    pred, obj) facts, ``rounds`` rounds of ``apply_rules``' evaluator
+    (``bgp._semi_naive_rounds``, so the same rule sets, closures
+    included) with the batch's novel facts as the frontier and the
+    store as of this epoch as the known set.
 
     Exactly-once via the catalog pattern of ``start_triples_stream``:
     every epoch writes its novel facts (input ∪ derived, minus known)
@@ -304,44 +340,25 @@ def start_inference_stream(
     ``rounds`` must cover the rule set's cascade depth (a depth-d
     ontology needs d): within one epoch the frontier propagates
     ``rounds`` steps; facts from earlier epochs are complete, so
-    cross-epoch cascades need no catch-up.
+    cross-epoch cascades need no catch-up. A malformed rule raises
+    here, before the stream starts.
     """
     from nametag3_spark.operators.bgp import (
         _semi_naive_rounds,
         _semi_naive_rules,
     )
 
-    rules = _semi_naive_rules(rules)  # raises before the stream starts
-
-    stream = (
-        spark.readStream.schema("subj string, pred string, obj string")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    _semi_naive_rules(rules)  # raises before the stream starts
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        known = _earlier_epochs(spark, store_dir, epoch_id, ["subj", "pred", "obj"])
-        batch = batch_df.select("subj", "pred", "obj").distinct()
-        if known is not None:
-            fresh = batch.join(known, on=["subj", "pred", "obj"], how="left_anti")
-            seeded = known.unionByName(fresh)
-        else:
-            fresh = batch
-            seeded = batch
-        fresh = fresh.localCheckpoint(eager=True)
-        seeded = seeded.localCheckpoint(eager=True)
-        _, derived_new = _semi_naive_rounds(
-            seeded, fresh, rules, rounds,
-            mat=lambda df: df.localCheckpoint(eager=True),
-        )
-        novel = fresh.unionByName(derived_new).distinct()
-        _write_epoch(novel, epoch_id, store_dir)
+        seeded, fresh = _grow_store(spark, store_dir, batch_df, epoch_id)
+        _, derived_new = _semi_naive_rounds(seeded, fresh, rules, rounds)
+        # two disjoint sets of distinct facts: no further distinct
+        _write_epoch(fresh.unionByName(derived_new), epoch_id, store_dir)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_epochs(
+        spark, _SPO_SCHEMA, input_dir, max_files_per_trigger,
+        checkpoint_dir, process,
     )
 
 
@@ -386,32 +403,14 @@ def start_query_stream(
             f"materialized views need SELECT or CONSTRUCT, got {form!r}"
         )
 
-    stream = (
-        spark.readStream.schema("subj string, pred string, obj string")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        known = _earlier_epochs(spark, store_dir, epoch_id, ["subj", "pred", "obj"])
-        batch = batch_df.select("subj", "pred", "obj").distinct()
-        if known is not None:
-            novel = batch.join(
-                known, on=["subj", "pred", "obj"], how="left_anti"
-            )
-            full = known.unionByName(novel)
-        else:
-            novel = batch
-            full = batch
-        full = full.localCheckpoint(eager=True)
+        full, novel = _grow_store(spark, store_dir, batch_df, epoch_id)
         _write_epoch(novel, epoch_id, store_dir)
         _write_epoch(execute(full, query), epoch_id, view_dir)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_epochs(
+        spark, _SPO_SCHEMA, input_dir, max_files_per_trigger,
+        checkpoint_dir, process,
     )
 
 

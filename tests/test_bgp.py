@@ -446,37 +446,18 @@ def test_apply_rules_semi_naive_matches_naive(spark):
         ([("?x", "parent", "?y")], [("?x", "anc", "?y")]),
         ([("?x", "anc", "?y"), ("?y", "anc", "?z")], [("?x", "anc", "?z")]),
     ]
-    naive = {
-        tuple(r) for r in apply_rules(tri, rules, rounds=3).collect()
-    }
-    semi = {
-        tuple(r)
-        for r in apply_rules(tri, rules, rounds=3, semi_naive=True).collect()
-    }
-    assert semi == naive
+    semi = {tuple(r) for r in apply_rules(tri, rules, rounds=3).collect()}
+    # 3 rounds close the 4-edge chains: naive evaluation's fixpoint
+    assert semi == _py_fixpoint(set(chain + extra), rules)
     # spot-check a branch fact derived via the frontier
     assert ("n0", "anc", "m1") in semi
 
 
-def test_apply_rules_semi_naive_rejects_paths(spark):
-    from nametag3_spark.operators.bgp import apply_rules
-
-    tri = spark.createDataFrame(
-        [("a", "p", "b")], "subj string, pred string, obj string"
-    )
-    with pytest.raises(ValueError, match="property-path"):
-        apply_rules(
-            tri,
-            [([("?x", "p+", "?y")], [("?x", "q", "?y")])],
-            semi_naive=True,
-        )
-
-
 def test_apply_rules_semi_naive_expands_sequence_paths(spark):
-    """A sequence-path rule pattern (``p/q``) must derive the same facts
-    under semi-naive as under naive evaluation — before the fix it was
-    compiled as a literal predicate named "p/q" and silently derived
-    nothing (the guard only rejected +/*)."""
+    """A sequence-path rule pattern (``p/q``) derives its two-hop facts:
+    the rule check expands it into chained legs, each delta-sourced in
+    turn, instead of compiling a literal predicate named "p/q" that
+    silently derives nothing."""
     from nametag3_spark.operators.bgp import apply_rules
 
     tri = spark.createDataFrame(
@@ -485,35 +466,11 @@ def test_apply_rules_semi_naive_expands_sequence_paths(spark):
         "subj string, pred string, obj string",
     )
     rules = [([("?s", "p/q", "?o")], [("?s", "pq", "?o")])]
-    naive = {
+    got = {
         tuple(r)
         for r in apply_rules(tri, rules, rounds=2).where("pred='pq'").collect()
     }
-    semi = {
-        tuple(r)
-        for r in apply_rules(tri, rules, rounds=2, semi_naive=True)
-        .where("pred='pq'")
-        .collect()
-    }
-    assert naive == {("a", "pq", "c"), ("x", "pq", "z")}
-    assert semi == naive
-
-
-def test_apply_rules_semi_naive_rejects_path_inside_sequence(spark):
-    """``p+/q`` passes the top-level guard (it does not END in +), but
-    after sequence expansion the ``p+`` leg is a closure that can mix
-    old and delta edges — semi-naive must reject it, not mis-derive."""
-    from nametag3_spark.operators.bgp import apply_rules
-
-    tri = spark.createDataFrame(
-        [("a", "p", "b")], "subj string, pred string, obj string"
-    )
-    with pytest.raises(ValueError, match="property-path"):
-        apply_rules(
-            tri,
-            [([("?x", "p+/q", "?y")], [("?x", "r", "?y")])],
-            semi_naive=True,
-        )
+    assert got == {("a", "pq", "c"), ("x", "pq", "z")}
 
 
 def test_semi_naive_rounds_sequence_path_incremental_frontier(spark):
@@ -532,6 +489,67 @@ def test_semi_naive_rounds_sequence_path_incremental_frontier(spark):
     rules = [([("?s", "p/q", "?o")], [("?s", "pq", "?o")])]
     _, new_facts = _semi_naive_rounds(known, delta, rules, rounds=1)
     assert {tuple(r) for r in new_facts.collect()} == {("a", "pq", "c")}
+
+
+# one 9-fact input with a p-cycle, a p self-loop and q/r side edges
+_CLOSURE_FACTS = [
+    ("a", "p", "b"), ("b", "p", "c"), ("c", "p", "a"), ("c", "p", "d"),
+    ("d", "q", "e"), ("b", "q", "f"), ("f", "r", "a"), ("e", "r", "d"),
+    ("e", "p", "e"),
+]
+# rule sets holding a closure leg, alone, behind a sequence, over a
+# derived predicate and mixed with delta-sourced closure-free rules
+_CLOSURE_RULES = {
+    "p+": [([("?x", "p+", "?y")], [("?x", "pp", "?y")])],
+    "p*": [([("?x", "p*", "?y")], [("?x", "ps", "?y")])],
+    "p?": [([("?x", "p?", "?y")], [("?x", "po", "?y")])],
+    "p+/q": [([("?x", "p+/q", "?y")], [("?x", "pq", "?y")])],
+    "(p|r)+/q": [([("?x", "(p|r)+/q", "?y")], [("?x", "prq", "?y")])],
+    # d gains p edges in round 1 and q edges (through e) in round 2, so
+    # round 3's d+ chains edges of both rounds
+    "derived+": [
+        ([("?x", "p", "?y")], [("?x", "d", "?y")]),
+        ([("?x", "q", "?y")], [("?x", "e", "?y")]),
+        ([("?x", "e", "?y")], [("?x", "d", "?y")]),
+        ([("?x", "d+", "?y")], [("?x", "dd", "?y")]),
+    ],
+    "^anc+": [
+        ([("?x", "p", "?y")], [("?x", "anc", "?y")]),
+        ([("?x", "anc", "?y"), ("?y", "anc", "?z")], [("?x", "anc", "?z")]),
+        ([("?x", "^anc+", "?y"), ("?y", "q", "?z")], [("?x", "up", "?z")]),
+    ],
+}
+
+
+def _closure_golden(case: str) -> set[tuple[str, str, str]]:
+    """The facts naive evaluation (every rule over the whole accumulated
+    set, each round) derived for ``"<rule set>@<rounds>"`` on
+    ``_CLOSURE_FACTS``; pinned in ``golden_closure_rules.json``."""
+    import json
+    from pathlib import Path
+
+    path = Path(__file__).with_name("golden_closure_rules.json")
+    return {tuple(t) for t in json.loads(path.read_text())[case]}
+
+
+@pytest.mark.parametrize(
+    "case", [f"{name}@{r}" for name in _CLOSURE_RULES for r in (1, 2, 3)]
+)
+def test_closure_rules_match_naive_goldens(spark, case):
+    """One evaluator for every rule set: a rule holding a closure leg
+    joins over the whole known set each round, so rounds 1-3 of every
+    closure rule set derive exactly what naive evaluation did."""
+    from nametag3_spark.operators.bgp import apply_rules
+
+    name, rounds = case.split("@")
+    tri = spark.createDataFrame(
+        _CLOSURE_FACTS, "subj string, pred string, obj string"
+    )
+    got = {
+        tuple(r)
+        for r in apply_rules(tri, _CLOSURE_RULES[name], int(rounds)).collect()
+    }
+    assert got == set(_CLOSURE_FACTS) | _closure_golden(case)
 
 
 def _py_bgp(triples, patterns):
@@ -616,26 +634,22 @@ def test_bgp_differential_vs_bruteforce(spark, triples, patterns):
 
 
 def test_apply_rules_materialized_rounds_equal_lazy(spark):
+    """Every round is materialized: a ``p+`` rule at ``rounds=3`` returns
+    a frame whose analyzed plan is a bounded handful of leaves (nesting
+    each round's plan in the next grew it past what the optimizer could
+    plan in a 4g heap), and its facts equal the goldens pinned from the
+    lazy naive evaluator. The plan bound is asserted before anything
+    is collected."""
     from nametag3_spark.operators.bgp import apply_rules
 
-    chain = [(f"n{i}", "parent", f"n{i+1}") for i in range(4)]
-    tri = spark.createDataFrame(chain, "subj string, pred string, obj string")
-    rules = [
-        ([("?x", "parent", "?y")], [("?x", "anc", "?y")]),
-        ([("?x", "anc", "?y"), ("?y", "anc", "?z")], [("?x", "anc", "?z")]),
-    ]
-    lazy = {tuple(r) for r in apply_rules(tri, rules, rounds=3).collect()}
-    for mode_kwargs in (
-        dict(materialize_rounds="local"),
-        dict(materialize_rounds="local", semi_naive=True),
-    ):
-        got = {
-            tuple(r)
-            for r in apply_rules(tri, rules, rounds=3, **mode_kwargs).collect()
-        }
-        assert got == lazy
-    with pytest.raises(ValueError, match="materialize_rounds"):
-        apply_rules(tri, rules, materialize_rounds="tachyon")
+    tri = spark.createDataFrame(
+        _CLOSURE_FACTS, "subj string, pred string, obj string"
+    )
+    out = apply_rules(tri, _CLOSURE_RULES["p+"], rounds=3)
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves().size()
+    assert leaves <= 2, leaves
+    got = {tuple(r) for r in out.collect()}
+    assert got == set(_CLOSURE_FACTS) | _closure_golden("p+@3")
 
 
 QUADS = [
@@ -728,9 +742,8 @@ def _py_fixpoint(facts, rules):
 @given(edges=st.lists(st.tuples(_ENT, _ENT), min_size=1, max_size=4))
 @settings(max_examples=4, deadline=None)
 def test_apply_rules_differential_vs_python_fixpoint(spark, edges):
-    """Semi-naive mode vs a true (unbounded) Python fixpoint — the
-    subtlest evaluation mode gets the differential; naive/semi-naive
-    equality is pytest-locked separately."""
+    """The semi-naive evaluator vs a true (unbounded) Python fixpoint;
+    closure rule sets are pinned against naive goldens separately."""
     from nametag3_spark.operators.bgp import apply_rules
 
     facts = sorted({(s, "p", o) for s, o in edges})
@@ -744,7 +757,7 @@ def test_apply_rules_differential_vs_python_fixpoint(spark, edges):
     # <=4 distinct entities these edge lists can produce
     got = {
         tuple(r)
-        for r in apply_rules(df, rules, rounds=3, semi_naive=True).collect()
+        for r in apply_rules(df, rules, rounds=3).collect()
     }
     assert got == want
 
@@ -1350,14 +1363,10 @@ def test_bgp_zero_or_one_path(spark):
 
 
 def test_apply_rules_semi_naive_group_sequence_parity(spark):
-    """A GROUP-sequence rule pattern (``(p|r)/q``) derives identically
-    under naive and semi-naive evaluation — the paren-aware sequence
-    split chains the group's In-list leg through the fresh internal
-    variable, and per-leg delta sourcing covers both rewritten legs. A
-    CLOSED group (``(p|r)+/q``) still expands to a closure leg, which
-    semi-naive must reject loudly."""
-    import pytest as _pytest
-
+    """A GROUP-sequence rule pattern (``(p|r)/q``) derives what naive
+    evaluation does — the paren-aware sequence split chains the group's
+    In-list leg through the fresh internal variable, and per-leg delta
+    sourcing covers both rewritten legs."""
     from nametag3_spark.operators.bgp import apply_rules
 
     tri = spark.createDataFrame(
@@ -1366,21 +1375,11 @@ def test_apply_rules_semi_naive_group_sequence_parity(spark):
         "subj string, pred string, obj string",
     )
     rules = [([("?s", "(p|r)/q", "?o")], [("?s", "pq", "?o")])]
-    naive = {
+    got = {
         tuple(r)
         for r in apply_rules(tri, rules, rounds=2).where("pred='pq'").collect()
     }
-    semi = {
-        tuple(r)
-        for r in apply_rules(tri, rules, rounds=2, semi_naive=True)
-        .where("pred='pq'")
-        .collect()
-    }
-    assert naive == {("a", "pq", "c"), ("m", "pq", "c"), ("x", "pq", "z")}
-    assert semi == naive
-    closed = [([("?s", "(p|r)+/q", "?o")], [("?s", "pq", "?o")])]
-    with _pytest.raises(ValueError, match="semi-naive"):
-        apply_rules(tri, closed, rounds=1, semi_naive=True)
+    assert got == {("a", "pq", "c"), ("m", "pq", "c"), ("x", "pq", "z")}
 
 
 def test_graph_variable_with_alternation_and_negated_sets(spark):
@@ -1478,6 +1477,12 @@ _STEP_FORMS = {
     "^!p": (True, True, "", ("p",), None),
     "a|b": (False, False, "", ("a", "b"), None),
     "(a|b)": (False, False, "", ("a", "b"), None),
+    # a branch that is a group of names flattens into the set
+    "(a)|(b)": (False, False, "", ("a", "b"), None),
+    "(a|b)|q": (False, False, "", ("a", "b", "q"), None),
+    "p|(a|b)": (False, False, "", ("p", "a", "b"), None),
+    "(p|(a|b))": (False, False, "", ("p", "a", "b"), None),
+    "((a)|(b))+": (False, False, "+", ("a", "b"), None),
     "p+": (False, False, "+", ("p",), None),
     "p*": (False, False, "*", ("p",), None),
     "p?": (False, False, "?", ("p",), None),
@@ -1532,8 +1537,8 @@ def _step_cost(step, stats):
 def test_every_reader_follows_the_parsed_step(spark, form):
     """One table over every predicate form: the parser's step, the
     compiled rows, the cost estimate, the semi-naive rule check and
-    the GRAPH-variable check all agree — a closure is costed, rejected
-    by semi-naive evaluation and rejected under ``graph="?g"`` exactly
+    the GRAPH-variable check all agree — a closure is costed, marked
+    closed by the rule check and rejected under ``graph="?g"`` exactly
     when the compiler closes it."""
     from nametag3_spark.operators.bgp import (
         _estimate_leg_costs,
@@ -1555,17 +1560,15 @@ def test_every_reader_follows_the_parsed_step(spark, form):
     (cost,) = _estimate_leg_costs([("?x", form, "?y")], stats)
     assert cost == pytest.approx(_step_cost(step, stats))
     rule = [([("?x", form, "?y")], [("?x", "out", "?y")])]
+    assert _semi_naive_rules(rule) == [(*rule[0], bool(step[2]))]
     quads = spark.createDataFrame(
         [(f"g{i % 2}", *t) for i, t in enumerate(_STEP_TRIPLES)],
         "graph string, subj string, pred string, obj string",
     )
     if step[2]:
-        with pytest.raises(ValueError, match="semi-naive"):
-            _semi_naive_rules(rule)
         with pytest.raises(ValueError, match="GRAPH"):
             bgp_query(quads, [("?x", form, "?y")], graph="?g")
         return
-    assert _semi_naive_rules(rule) == rule
     got = bgp_query(
         quads, [("?x", form, "?y")], graph="?g", select=["g", "x", "y"]
     ).collect()
@@ -1580,11 +1583,13 @@ def test_every_reader_follows_the_parsed_step(spark, form):
     assert sorted(map(tuple, got)) == want
 
 
-@pytest.mark.parametrize("form", ["(a|(b|c))", "a|b)", "(a|b", "((a|b))"])
+@pytest.mark.parametrize(
+    "form", ["(a|(b|(c|d)))", "a|b)", "(a|b", "(((a|b)))", "(a)(b)"]
+)
 def test_malformed_path_groups_raise(spark, form):
-    """A nested group or an unmatched paren raises instead of
-    compiling an odd predicate set — through the programmatic API and
-    through quoted text-form SPARQL."""
+    """A group nested past one alternation branch or an unmatched paren
+    raises instead of compiling an odd predicate set — through the
+    programmatic API and through quoted text-form SPARQL."""
     from nametag3_spark.operators.bgp import _path_step, bgp_query
     from nametag3_spark.operators.sparql import execute
 
@@ -1597,6 +1602,55 @@ def test_malformed_path_groups_raise(spark, form):
         bgp_query(tri, [("?x", form, "?y")])
     with pytest.raises(ValueError, match="nested|unmatched"):
         execute(tri, f"SELECT ?x ?y WHERE {{ ?x '{form}' ?y }}")
+
+
+# a grouped alternation branch -> the ungrouped form it compiles as
+_GROUPED_BRANCHES = {
+    "(a)|(b)|(c)": "a|b|c",
+    "(a|b)|c": "a|b|c",
+    "a|(b|c)": "a|b|c",
+    "(a|(b|c))": "a|b|c",
+    "((a|b))": "a|b",
+    "((a)|(b))+": "(a|b)+",
+    "!((a)|(b))": "!(a|b)",
+}
+
+
+@pytest.mark.parametrize("form", sorted(_GROUPED_BRANCHES))
+def test_grouped_alternation_branches_flatten(spark, form):
+    """SPARQL 1.1 groups alternation branches freely: a branch that is a
+    group of names flattens into the In-list, so each form parses to
+    the step of its ungrouped twin and matches the same rows, through
+    the programmatic API and quoted text-form SPARQL."""
+    from nametag3_spark.operators.bgp import _path_step, bgp_query
+    from nametag3_spark.operators.sparql import execute
+
+    twin = _GROUPED_BRANCHES[form]
+    assert _path_step(form) == _path_step(twin)
+    tri = spark.createDataFrame(
+        [("n1", "a", "n2"), ("n2", "b", "n3"), ("n3", "c", "n1"),
+         ("n1", "d", "n3")],
+        "subj string, pred string, obj string",
+    )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    want = rows(bgp_query(tri, [("?x", twin, "?y")]))
+    assert want
+    assert rows(bgp_query(tri, [("?x", form, "?y")])) == want
+    sparql = f"SELECT ?x ?y WHERE {{ ?x '{form}' ?y }}"
+    assert rows(execute(tri, sparql)) == want
+
+
+@pytest.mark.parametrize("form", ["(a+)|(b)", "(^a)|b", "(a/b)|c"])
+def test_grouped_branch_with_operator_raises(form):
+    """Only names flatten: a grouped branch carrying a path operator
+    raises, as the same branch does ungrouped."""
+    from nametag3_spark.operators.bgp import _path_step
+
+    with pytest.raises(ValueError, match="plain predicates only"):
+        _path_step(form)
 
 
 def test_one_path_parser_source():

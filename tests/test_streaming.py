@@ -385,25 +385,51 @@ def test_streaming_inference_restart_is_idempotent(spark, tmp_path):
     assert anc == {("a", "b"), ("b", "c"), ("a", "c")}
 
 
-def test_streaming_inference_rejects_closure_inside_sequence(spark, tmp_path):
-    """``p+/q`` hides a closure leg behind a sequence: the rule check
-    expands the sequence and raises before any stream starts, instead
-    of returning a query that dies in its first micro-batch."""
+def test_streaming_inference_runs_closure_rules(spark, tmp_path):
+    """The stream takes the rule sets ``apply_rules`` takes, closures
+    included: a closure behind a sequence (``p+/q``) and one over a
+    derived predicate converge, over several micro-batches, to the
+    batch rule engine on the full input. A malformed term still raises
+    before any stream starts."""
     import pytest as _pytest
 
+    from nametag3_spark.operators.bgp import apply_rules
     from nametag3_spark.streaming.stream import start_inference_stream
 
+    tri = spark.createDataFrame(
+        [("a", "p", "b"), ("b", "p", "c"), ("c", "p", "a"), ("c", "p", "d"),
+         ("d", "q", "e"), ("b", "q", "f"), ("f", "r", "a"), ("e", "r", "d"),
+         ("e", "p", "e")],
+        "subj string, pred string, obj string",
+    )
+    rules = [
+        ([("?x", "p+/q", "?y")], [("?x", "pq", "?y")]),
+        ([("?x", "p", "?y"), ("?y", "p", "?z")], [("?x", "d", "?z")]),
+        ([("?x", "d+", "?y")], [("?x", "dd", "?y")]),
+        ([("?x", "dd", "?y"), ("?y", "q", "?z")], [("?x", "ddq", "?z")]),
+    ]
     in_dir = str(tmp_path / "in")
-    spark.createDataFrame(
-        [("a", "p", "b")], "subj string, pred string, obj string"
-    ).write.parquet(in_dir)
-    with _pytest.raises(ValueError, match="property-path"):
+    tri.repartition(3).write.parquet(in_dir)
+    store = str(tmp_path / "store")
+    with _pytest.raises(ValueError, match="unmatched"):
         start_inference_stream(
-            spark, in_dir, str(tmp_path / "store"), str(tmp_path / "ckpt"),
-            [([("?x", "p+/q", "?y")], [("?x", "r", "?y")])],
+            spark, in_dir, store, str(tmp_path / "bad"),
+            [([("?x", "(p|q/r", "?y")], [("?x", "s", "?y")])],
         )
     assert spark.streams.active == []
 
+    q = start_inference_stream(
+        spark, in_dir, store, str(tmp_path / "ckpt"), rules,
+        rounds=3, max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+    streamed = spark.read.parquet(store)
+    assert streamed.select("epoch_id").distinct().count() > 1
+    got = {(r.subj, r.pred, r.obj) for r in streamed.collect()}
+    want = {tuple(r) for r in apply_rules(tri, rules, rounds=3).collect()}
+    assert got == want
+    assert {p for _s, p, _o in got} >= {"pq", "dd", "ddq"}
+    assert streamed.count() == len(got)
 
 def test_compact_epochs_folds_preserves_and_repairs(spark, tmp_path):
     """Epoch compaction: folds finalized epochs into one base

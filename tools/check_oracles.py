@@ -1,15 +1,18 @@
 """Local stand-in for the driver's correctness gate: run each
 __spark_entry__.queries() entry on Spark and its oracle_sql() twin on
 DuckDB over the same parquet, compare row count + sorted-by-name columns +
-order-insensitive values.
+order-insensitive values. Each query's line ends with its Spark
+build+collect wall seconds; the session has ``SPARK_GRAFT_CPUS`` cores,
+as ``get_spark`` sizes it.
 
-Usage: python tools/check_oracles.py [sf_dir] [query ...]
+Usage: SPARK_GRAFT_CPUS=4 python tools/check_oracles.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
 import math
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -102,8 +105,7 @@ def main():
         sys.exit(2)
 
     spark = get_spark(
-        master="local[8]", shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "8g"},
+        shuffle_partitions=8, extra_conf={"spark.driver.memory": "8g"}
     )
 
     con = duckdb.connect()
@@ -120,16 +122,19 @@ def main():
         if only and name not in only:
             continue
         checked += 1
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as exc:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL {name}: spark error: {exc}")
+            print(f"FAIL {name}: spark error: {exc} "
+                  f"[spark {time.perf_counter() - t0:.2f} s]")
             continue
+        secs = f"[spark {time.perf_counter() - t0:.2f} s]"
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows)")
+            print(f"ok   {name}: rows-only ({len(srows)} rows) {secs}")
             continue
         try:
             arrow_tbl = con.execute(oracles[name]).arrow()
@@ -139,28 +144,30 @@ def main():
             ]
         except Exception as exc:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL {name}: duckdb error: {exc}")
+            print(f"FAIL {name}: duckdb error: {exc} {secs}")
             continue
         if sorted(scols) != sorted(dcols):
             failures.append(name)
-            print(f"FAIL {name}: columns {sorted(scols)} vs {sorted(dcols)}")
+            print(
+                f"FAIL {name}: columns {sorted(scols)} vs {sorted(dcols)} {secs}"
+            )
             continue
         type_bad = _type_family_mismatch(sdf.dtypes, arrow_tbl.schema)
         if type_bad:
             failures.append(name)
-            print(f"FAIL {name}: type identity: {type_bad}")
+            print(f"FAIL {name}: type identity: {type_bad} {secs}")
             continue
         if len(srows) != len(drows):
             failures.append(name)
-            print(f"FAIL {name}: rowcount {len(srows)} vs {len(drows)}")
+            print(f"FAIL {name}: rowcount {len(srows)} vs {len(drows)} {secs}")
             continue
         cs, cd = canon(srows, scols), canon(drows, dcols)
         if cs != cd:
             failures.append(name)
             diff = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
-            print(f"FAIL {name}: value mismatch, first diffs: {diff}")
+            print(f"FAIL {name}: value mismatch, first diffs: {diff} {secs}")
             continue
-        print(f"ok   {name}: {len(srows)} rows match")
+        print(f"ok   {name}: {len(srows)} rows match {secs}")
 
     print(f"\n{checked} queries checked")
     print(f"{len(failures)} failures: {failures}" if failures else "ALL OK")
