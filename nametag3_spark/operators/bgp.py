@@ -46,10 +46,11 @@ contain the path operator characters ``/`` and ``|`` — compose with
 every path form — FILTER EXISTS / NOT EXISTS (semi-/anti-join on
 the witness key), MINUS (anti-join on the shared variables; a
 MINUS group sharing no variable removes nothing, per SPARQL
-compatibility semantics), FILTER expressions (comparisons and
-string predicates over bound variables; numeric literals compare
-numerically via a double cast), VALUES (pushed-down In-lists),
-GRAPH scoping over quad stores, GROUP BY aggregation
+compatibility semantics), one expression language for FILTER,
+HAVING, BIND and sort keys (``_compile_expr``: comparisons, ``&& ||
+!``, arithmetic, string and numeric builtins; a comparison with a
+number or a numeric operand compares via a double try_cast), VALUES
+(pushed-down In-lists), GRAPH scoping over quad stores, GROUP BY aggregation
 (``bgp_aggregate``: one-shuffle hash aggregate with map-side
 partials), CONSTRUCT templating (``construct``), and fixed-round
 semi-naive Datalog forward chaining (``apply_rules``).
@@ -153,9 +154,10 @@ def _name_set(text: str, branch: bool = False) -> tuple[str, ...]:
     Angle-quoted (``<iri>``) and bare-IRI names are atomic — operator
     characters inside them are data, not syntax. A branch that is itself
     a group of names flattens into the set (``(a)|(b)`` and
-    ``(a|(b|c))`` are SPARQL's ``a|b`` and ``a|b|c``); a group nested
-    deeper or misplaced, an unmatched paren and a name carrying
-    ``+ * ? ^ /`` raise."""
+    ``(a|(b|c))`` are SPARQL's ``a|b`` and ``a|b|c``); a name repeated
+    in the set counts once, in first-seen order. A group nested deeper
+    or misplaced, an unmatched paren and a name carrying ``+ * ? ^ /``
+    raise."""
     parts = _split_top(text, "|")
     if len(parts) == 1 and text.startswith("(") and text.endswith(")"):
         parts = _split_top(text[1:-1], "|")
@@ -176,7 +178,7 @@ def _name_set(text: str, branch: bool = False) -> tuple[str, ...]:
             )
         else:
             out.append(a)
-    return tuple(out)
+    return tuple(dict.fromkeys(out))
 
 
 def _path_step(term: str) -> _Step:
@@ -272,265 +274,194 @@ def _expand_paths(
     return out
 
 
-_FILTER_OPS = ("=", "==", "!=", "<", "<=", ">", ">=")
-_FILTER_FUNCS = ("contains", "strstarts", "strends", "regex")
+_COMPARE = ("=", "==", "!=", "<", "<=", ">", ">=")
+
+# every expression operator and builtin: name -> (min args, max args
+# (None: any number), what it yields — "bool", "num" or "" for a string
+# or any other value). The SPARQL parser reads its call names from here.
+_EXPR_OPS: dict[str, tuple[int, int | None, str]] = {
+    "or": (2, None, "bool"),
+    "and": (2, None, "bool"),
+    "not": (1, 1, "bool"),
+    **{op: (2, 2, "bool") for op in _COMPARE},
+    "in": (2, 2, "bool"),
+    **{op: (2, 2, "num") for op in ("+", "-", "*", "/")},
+    "bound": (1, 1, "bool"),
+    **{fn: (2, 2, "bool") for fn in ("contains", "strstarts", "strends", "regex")},
+    **{fn: (1, 1, "num") for fn in ("strlen", "abs", "round", "floor", "ceil")},
+    **{fn: (1, 1, "") for fn in ("ucase", "lcase", "str")},
+    "concat": (1, None, ""),
+    "coalesce": (2, None, ""),
+    "substr": (2, 3, ""),
+    "replace": (3, 3, ""),
+    "strbefore": (2, 2, ""),
+    "strafter": (2, 2, ""),
+    "if": (3, 3, ""),
+}
 
 
-def _filter_vars(flt) -> frozenset[str]:
-    """Every ``?var`` name a FILTER node references (lhs always; rhs
-    when it is itself a variable), recursing through ``and/or/not``
-    compounds. Used to classify a sub-group filter as local (only the
-    group's own variables) vs correlated (references an outer one)."""
-    if (
-        isinstance(flt, (tuple, list))
-        and flt
-        and isinstance(flt[0], str)
-        and flt[0] in ("and", "or", "not")
-    ):
-        out: frozenset[str] = frozenset()
-        for a in flt[1:]:
-            out = out | _filter_vars(a)
-        return out
-    try:
-        lhs, _op, rhs = flt
-    except (TypeError, ValueError):
-        raise ValueError(f"filter must be a (lhs, op, rhs) triple: {flt!r}")
-    out = frozenset({lhs[1:]}) if _is_var(lhs) else frozenset()
-    if isinstance(rhs, str) and _is_var(rhs):
-        out = out | {rhs[1:]}
-    return out
+def _is_number(e) -> bool:
+    return isinstance(e, (int, float)) and not isinstance(e, bool)
 
 
-def _compile_filter(bound: frozenset[str], flt, col_of=F.col) -> F.Column:
-    """One FILTER expression → a boolean Column over the bound
-    variables. ``flt`` is ``(lhs, op, rhs)``: lhs a ``?var``; op a
-    comparison (``= == != < <= > >=``) or string predicate
-    (``contains strstarts strends regex``); rhs a ``?var``, string
-    literal,
-    or number (numbers compare numerically via a double cast —
-    non-numeric values become NULL and the row drops, SPARQL's
-    type-error-is-false semantics). The op ``bound`` maps SPARQL's
-    ``BOUND(?v)`` / ``!BOUND(?v)``: rhs True keeps rows where the
-    variable matched (IS NOT NULL after an OPTIONAL left join), rhs
-    False keeps the unmatched rows — the negation idiom SPARQL uses
-    to query for ABSENT facts.
+def _yields(e) -> str:
+    """What a node yields (the ``_EXPR_OPS`` kind); a number leaf is
+    "num", any other leaf ""."""
+    if isinstance(e, (tuple, list)) and e and e[0] in _EXPR_OPS:
+        return _EXPR_OPS[e[0]][2]
+    return "num" if _is_number(e) else ""
 
-    Compound nodes compose recursively: ``("and", f1, f2, ...)``,
-    ``("or", f1, f2, ...)``, ``("not", f)`` — SPARQL's ``&&  ||  !``.
-    Spark's three-valued NULL logic coincides with SPARQL's
-    error-propagation table for filter purposes (``error || true`` is
-    true, ``error && x`` and ``!error`` stay error → the row drops),
-    so the composition is a plain boolean expression."""
-    if (
-        isinstance(flt, (tuple, list))
-        and flt
-        and isinstance(flt[0], str)
-        and flt[0] in ("and", "or", "not")
-    ):
-        op, *args = flt
+
+def _expr_vars(e) -> frozenset[str]:
+    """Every ``?var`` name an expression node references — classifies a
+    sub-group filter as local (only the group's own variables) or
+    correlated (it references an outer one)."""
+    if isinstance(e, (tuple, list)):
+        return frozenset().union(*(_expr_vars(a) for a in e[1:]))
+    return frozenset({e[1:]}) if _is_var(e) else frozenset()
+
+
+def _compile_expr(
+    bound: frozenset[str], e, col_of=F.col, boolean: bool = False
+) -> F.Column:
+    """One expression node → a Column; the one compiler behind FILTER,
+    HAVING, BIND, ``(expr AS ?v)``, ORDER BY keys and IF conditions.
+
+    Leaves: a ``?var`` (must be in ``bound``; ``col_of`` resolves its
+    column, e.g. to a renamed witness column in a correlated ON
+    condition), a string literal or a number. Every other node is a
+    prefix tuple ``(op, *args)`` over the ``_EXPR_OPS`` table:
+    ``and``/``or`` (n-ary) and ``not``; comparisons ``= == != < <= >
+    >=`` — numeric when either side is a number or a numeric node
+    (``+ - * / strlen abs round floor ceil``), both sides then
+    ``try_cast`` to double (a non-numeric value becomes NULL and the
+    row drops, SPARQL's type-error-is-false), else a string compare;
+    ``("in", x, ("a", "b"))`` — one In predicate Catalyst pushes into
+    the scan (values compare as stored strings); ``("bound", "?v")``
+    (IS NOT NULL after an OPTIONAL left join); ``contains strstarts
+    strends regex`` string predicates; arithmetic ``+ - * /`` over
+    double try_casts; ``ucase lcase strlen str``; ``substr`` (1-based,
+    optional length); ``replace`` (regex); ``concat``; ``coalesce``
+    (first non-NULL, compared as strings); ``abs round floor ceil``
+    over double try_casts; ``strbefore``/``strafter`` ('' on no match,
+    per spec); ``("if", cond, then, else)`` — a NULL/error condition
+    takes the else branch, SPARQL's effective-boolean-value coercion.
+
+    ``boolean=True`` (FILTER, HAVING, an IF condition) raises on a node
+    that is not boolean-valued. Spark's three-valued NULL logic
+    coincides with SPARQL's error-propagation table for filter purposes
+    (``error || true`` is true, ``error && x`` and ``!error`` stay
+    error → the row drops), so ``&& || !`` compose as plain booleans;
+    a boolean node in a BIND yields a boolean column."""
+    if isinstance(e, (tuple, list)) and e and e[0] not in _EXPR_OPS:
+        raise ValueError(f"unsupported expression operator: {e[0]!r}")
+    if boolean and _yields(e) != "bool":
+        raise ValueError(f"expected a boolean expression: {e!r}")
+    if _is_var(e):
+        if e[1:] not in bound:
+            raise ValueError(f"expression variable not bound by any pattern: {e}")
+        return col_of(e[1:])
+    if isinstance(e, str) or _is_number(e):
+        return F.lit(e)
+    if not isinstance(e, (tuple, list)) or not e:
+        raise ValueError(f"unsupported expression term: {e!r}")
+    op, *args = e
+    lo, hi, _kind = _EXPR_OPS[op]
+    if len(args) < lo or (hi is not None and len(args) > hi):
+        raise ValueError(f"{op!r} takes {lo}..{hi or 'n'} arguments: {e!r}")
+
+    def sub(a, boolean: bool = False) -> F.Column:
+        return _compile_expr(bound, a, col_of, boolean)
+
+    if op in ("and", "or", "not"):
+        cols = [sub(a, boolean=True) for a in args]
         if op == "not":
-            if len(args) != 1:
-                raise ValueError(f"'not' takes exactly one operand: {flt!r}")
-            return ~_compile_filter(bound, args[0], col_of)
-        if len(args) < 2:
-            raise ValueError(f"{op!r} needs at least two operands: {flt!r}")
-        cols = [_compile_filter(bound, a, col_of) for a in args]
+            return ~cols[0]
         out = cols[0]
         for c in cols[1:]:
             out = (out & c) if op == "and" else (out | c)
         return out
-    try:
-        lhs, op, rhs = flt
-    except (TypeError, ValueError):
-        raise ValueError(f"filter must be a (lhs, op, rhs) triple: {flt!r}")
-    if not _is_var(lhs):
-        raise ValueError(f"filter lhs must be a ?variable: {lhs!r}")
-    v = lhs[1:]
-    if v not in bound:
-        raise ValueError(f"filter variable not bound by any pattern: {lhs}")
-    col = col_of(v)
     if op == "bound":
-        if not isinstance(rhs, bool):
-            raise ValueError(f"bound filter needs a True/False rhs: {rhs!r}")
-        return col.isNotNull() if rhs else col.isNull()
+        if not _is_var(args[0]):
+            raise ValueError(f"bound needs a ?variable: {args[0]!r}")
+        return sub(args[0]).isNotNull()
     if op == "in":
-        # SPARQL IN over an inline literal list: one In predicate
-        # Catalyst can push into the scan (values compare as stored
-        # strings, matching the all-string triple store); NOT IN
-        # arrives as ("not", (..., "in", ...))
+        rhs = args[1]
         if (
             not isinstance(rhs, (list, tuple))
             or not rhs
             or not all(isinstance(x, str) and not _is_var(x) for x in rhs)
         ):
-            raise ValueError(
-                f"in filter needs a non-empty literal list rhs: {rhs!r}"
+            raise ValueError(f"in needs a non-empty literal list: {rhs!r}")
+        return sub(args[0]).isin(list(rhs))
+    if op == "if":
+        # a NULL condition is not-true → the else branch
+        then_c, else_c = (sub(a).cast("string") for a in args[1:])
+        return F.when(sub(args[0], boolean=True), then_c).otherwise(else_c)
+    if op in _COMPARE:
+        if "num" in (_yields(args[0]), _yields(args[1])):
+            # try_cast, not cast: ANSI mode would THROW on a non-numeric
+            # value; SPARQL's type error semantics drop the row instead
+            left, right = (
+                F.lit(float(a)) if _is_number(a) else sub(a).try_cast("double")
+                for a in args
             )
-        return col.isin(list(rhs))
-    if op in _FILTER_FUNCS:
-        if not isinstance(rhs, str) or _is_var(rhs):
-            raise ValueError(f"{op} needs a string literal rhs: {rhs!r}")
+        else:
+            left, right = sub(args[0]), sub(args[1])
         return {
-            "contains": col.contains,
-            "strstarts": col.startswith,
-            "strends": col.endswith,
-            "regex": col.rlike,
-        }[op](rhs)
-    if op not in _FILTER_OPS:
-        raise ValueError(f"unsupported filter operator: {op!r}")
-    if isinstance(rhs, (int, float)) and not isinstance(rhs, bool):
-        # try_cast, not cast: ANSI mode would THROW on a non-numeric
-        # value; SPARQL's type error semantics drop the row instead
-        left: F.Column = col.try_cast("double")
-        right: F.Column = F.lit(float(rhs))
-    elif isinstance(rhs, str) and _is_var(rhs):
-        rv = rhs[1:]
-        if rv not in bound:
-            raise ValueError(f"filter variable not bound by any pattern: {rhs}")
-        left, right = col, col_of(rv)
-    elif isinstance(rhs, str):
-        left, right = col, F.lit(rhs)
-    else:
-        raise ValueError(f"unsupported filter rhs: {rhs!r}")
+            "=": left == right,
+            "==": left == right,
+            "!=": left != right,
+            "<": left < right,
+            "<=": left <= right,
+            ">": left > right,
+            ">=": left >= right,
+        }[op]
+    cols = [sub(a) for a in args]
+    if op in ("+", "-", "*", "/"):
+        x, y = (c.try_cast("double") for c in cols)
+        # try_divide: a zero divisor is SPARQL's error → unbound, where
+        # ANSI division would throw
+        return {"+": x + y, "-": x - y, "*": x * y, "/": F.try_divide(x, y)}[op]
+    if op in ("abs", "round", "floor", "ceil"):
+        # ROUND is half-up away from zero per the XPath fn:round SPARQL
+        # inherits — Spark's F.round matches; FLOOR/CEIL keep the double
+        # type (SPARQL returns the argument's numeric type)
+        c = cols[0].try_cast("double")
+        return {
+            "abs": F.abs(c),
+            "round": F.round(c, 0),
+            "floor": F.floor(c).cast("double"),
+            "ceil": F.ceil(c).cast("double"),
+        }[op]
+    strs = [c.cast("string") for c in cols]
+    if op == "coalesce":
+        return F.coalesce(*strs)
+    if op == "concat":
+        return F.concat(*strs)
+    if op == "substr":
+        length = cols[2].try_cast("int") if len(cols) == 3 else F.lit(2147483647)
+        return F.substring(strs[0], cols[1].try_cast("int"), length)
+    if op == "replace":
+        return F.regexp_replace(*strs)
+    if op in ("strbefore", "strafter"):
+        # '' when the separator does not occur (NOT null): substring_index
+        # gives the whole string on no match, so gate on a contains()
+        # test; call_function passes the Column delimiter through
+        n = F.lit(1) if op == "strbefore" else F.lit(-1)
+        val = F.call_function("substring_index", strs[0], strs[1], n)
+        return F.when(strs[0].contains(strs[1]), val).otherwise(F.lit(""))
+    if op == "str":
+        return strs[0]
     return {
-        "=": left == right,
-        "==": left == right,
-        "!=": left != right,
-        "<": left < right,
-        "<=": left <= right,
-        ">": left > right,
-        ">=": left >= right,
-    }[op]
-
-
-_EXPR_FUNCS = ("concat", "ucase", "lcase", "strlen", "str")
-_EXPR_NUMERIC = ("abs", "round", "floor", "ceil")
-_EXPR_ARITH = ("+", "-", "*", "/")
-
-
-def _compile_expr(bound: frozenset[str], e) -> F.Column:
-    """A small BIND expression language → a Column. Terms: ``?var``
-    (must be bound), string literal, number. Composites (prefix
-    tuples): ``("concat", a, b, ...)`` string concatenation,
-    ``("+"|"-"|"*"|"/", a, b)`` arithmetic over double try_casts
-    (non-numeric → NULL, SPARQL's type-error-is-unbound),
-    ``("ucase"|"lcase"|"strlen"|"str", a)`` string functions,
-    ``("substr", s, start[, len])`` 1-based substring and
-    ``("replace", s, pat, rep)`` regex replacement,
-    ``("coalesce", a, b, ...)`` first non-NULL (the OPTIONAL-default
-    idiom — values are compared as strings, matching the all-string
-    triple store), ``("abs"|"round"|"floor"|"ceil", x)`` numeric
-    builtins over double try_casts, ``("strbefore"|"strafter", s,
-    sep)`` ('' on no match, per spec), and ``("if", cond, then,
-    else)`` where ``cond`` is
-    a FILTER node (see ``_compile_filter``) — a NULL/error condition
-    takes the else branch, SPARQL's effective-boolean-value
-    coercion."""
-    if isinstance(e, str) and _is_var(e):
-        v = e[1:]
-        if v not in bound:
-            raise ValueError(f"expression variable not bound: {e}")
-        return F.col(v)
-    if isinstance(e, str):
-        return F.lit(e)
-    if isinstance(e, (int, float)) and not isinstance(e, bool):
-        return F.lit(e)
-    if isinstance(e, (tuple, list)) and e:
-        op, *args = e
-        if op == "if":
-            # args[0] is a FILTER node, not an expression
-            if len(args) != 3:
-                raise ValueError(f"if needs (cond, then, else): {e!r}")
-            cond = _compile_filter(bound, args[0])
-            then_c = _compile_expr(bound, args[1]).cast("string")
-            else_c = _compile_expr(bound, args[2]).cast("string")
-            # a NULL condition is not-true → the else branch, which is
-            # SPARQL's effective-boolean-value coercion of an error
-            return F.when(cond, then_c).otherwise(else_c)
-        cols = [_compile_expr(bound, a) for a in args]
-        if op == "coalesce":
-            if len(cols) < 2:
-                raise ValueError(f"coalesce needs >= 2 arguments: {e!r}")
-            return F.coalesce(*[c.cast("string") for c in cols])
-        if op == "concat":
-            if not cols:
-                raise ValueError("concat needs at least one argument")
-            return F.concat(*[c.cast("string") for c in cols])
-        if op in _EXPR_ARITH:
-            if len(cols) != 2:
-                raise ValueError(f"{op} needs exactly two arguments: {e!r}")
-            lo, hi = (c.try_cast("double") for c in cols)
-            return {
-                "+": lo + hi,
-                "-": lo - hi,
-                "*": lo * hi,
-                "/": lo / hi,
-            }[op]
-        if op == "substr":
-            # ("substr", s, start[, length]) — 1-based like SPARQL
-            if len(cols) not in (2, 3):
-                raise ValueError(f"substr needs (s, start[, len]): {e!r}")
-            length = (
-                cols[2].try_cast("int")
-                if len(cols) == 3
-                else F.lit(2147483647)
-            )
-            return F.substring(
-                cols[0].cast("string"), cols[1].try_cast("int"), length
-            )
-        if op == "replace":
-            # ("replace", s, pattern, replacement) — regex semantics,
-            # like SPARQL REPLACE
-            if len(cols) != 3:
-                raise ValueError(f"replace needs (s, pat, rep): {e!r}")
-            return F.regexp_replace(
-                cols[0].cast("string"),
-                cols[1].cast("string"),
-                cols[2].cast("string"),
-            )
-        if op in _EXPR_NUMERIC:
-            # SPARQL numeric builtins over the all-string store:
-            # try_cast like the arithmetic ops (non-numeric → NULL =
-            # unbound). ROUND is half-up away from zero per the XPath
-            # fn:round SPARQL inherits — Spark's F.round matches;
-            # FLOOR/CEIL keep the double type (SPARQL returns the
-            # argument's numeric type; the store is untyped anyway).
-            if len(cols) != 1:
-                raise ValueError(f"{op} needs exactly one argument: {e!r}")
-            c = cols[0].try_cast("double")
-            return {
-                "abs": F.abs(c),
-                "round": F.round(c, 0),
-                "floor": F.floor(c).cast("double"),
-                "ceil": F.ceil(c).cast("double"),
-            }[op]
-        if op in ("strbefore", "strafter"):
-            # SPARQL STRBEFORE/STRAFTER: '' when the separator does
-            # not occur (NOT null) — substring_index gives the whole
-            # string on no match, so gate on a contains() test
-            if len(cols) != 2:
-                raise ValueError(f"{op} needs (s, sep): {e!r}")
-            src_c = cols[0].cast("string")
-            sep_c = cols[1].cast("string")
-            hit = src_c.contains(sep_c)
-            # F.substring_index's python wrapper wants a str delim;
-            # call_function passes the Column through to the SQL
-            # function, which accepts expressions
-            n = F.lit(1) if op == "strbefore" else F.lit(-1)
-            val = F.call_function("substring_index", src_c, sep_c, n)
-            return F.when(hit, val).otherwise(F.lit(""))
-        if op in ("ucase", "lcase", "strlen", "str"):
-            if len(cols) != 1:
-                raise ValueError(f"{op} needs exactly one argument: {e!r}")
-            c = cols[0]
-            return {
-                "ucase": F.upper(c),
-                "lcase": F.lower(c),
-                "strlen": F.length(c),
-                "str": c.cast("string"),
-            }[op]
-        raise ValueError(f"unsupported expression function: {op!r}")
-    raise ValueError(f"unsupported expression term: {e!r}")
+        "ucase": F.upper,
+        "lcase": F.lower,
+        "strlen": F.length,
+        "contains": F.contains,
+        "strstarts": F.startswith,
+        "strends": F.endswith,
+        "regex": F.rlike,
+    }[op](*cols)
 
 
 def _compile_legs(
@@ -786,13 +717,15 @@ def bgp_query(
     type error, false, a group that matches nothing — and the MINUS
     silently removes nothing; the raise is the loud version.
     ``binds``: SPARQL BIND — ``(expr, alias)`` pairs evaluated in
-    order after the joins (see ``_compile_expr`` for the expression
-    language); each alias becomes a selectable/filterable variable.
-    ``filters``: FILTER expressions as ``(lhs, op, rhs)`` triples —
-    see ``_compile_filter``; applied after OPTIONAL joins and BINDs,
-    so a filter on an optional-only variable drops unmatched rows
-    (NULL-comparison-is-false), matching SPARQL, and may reference
-    BIND aliases.
+    order after the joins; each alias becomes a selectable/filterable
+    variable. ``filters``: FILTER expressions, each a boolean-valued
+    node of the one expression language (prefix ``(op, *args)``
+    tuples over ``?var``, string and number leaves, e.g. ``(">",
+    ("+", "?a", "?b"), 10)`` or ``("not", ("bound", "?w"))``; see
+    ``_compile_expr``, which also compiles every bind); applied after
+    OPTIONAL joins and BINDs, so a filter on an optional-only variable
+    drops unmatched rows (NULL-comparison-is-false), matching SPARQL,
+    and may reference BIND aliases.
     A literal predicate may also be a sequence path (``a/b``:
     rewritten to chained patterns over internal variables), an
     inverse step (``^p``) or an alternation (``a|b``: one scan with
@@ -892,7 +825,7 @@ def bgp_query(
             return F.col("__w_" + name) if name in g_vars else F.col(name)
 
         for flt in corr:
-            c = _compile_filter(bound | g_vars, flt, col_of)
+            c = _compile_expr(bound | g_vars, flt, col_of, boolean=True)
             cond = c if cond is None else cond & c
         return cond
 
@@ -920,7 +853,7 @@ def bgp_query(
         g_joined, g_vars = _join_connected(*_group_plan(group))
         corr: list[tuple] = []
         for flt in g_filters:
-            fvars = _filter_vars(flt)
+            fvars = _expr_vars(flt)
             missing = fvars - g_vars - bound
             if missing:
                 raise ValueError(
@@ -928,7 +861,9 @@ def bgp_query(
                     f"around the {kind} group: ?{sorted(missing)[0]}"
                 )
             if fvars <= g_vars:
-                g_joined = g_joined.where(_compile_filter(g_vars, flt))
+                g_joined = g_joined.where(
+                    _compile_expr(g_vars, flt, boolean=True)
+                )
             else:
                 corr.append(flt)
         return g_joined, g_vars, group, corr
@@ -1018,7 +953,7 @@ def bgp_query(
         bound = bound | {a}
 
     for flt in filters or []:
-        joined = joined.where(_compile_filter(bound, flt))
+        joined = joined.where(_compile_expr(bound, flt, boolean=True))
 
     for var, allowed in (values or {}).items():
         v = var.lstrip("?")
@@ -1215,11 +1150,11 @@ def bgp_aggregate(
     bindings (the OPTIONAL-aware SPARQL semantics). Numeric funcs
     (sum/avg) try_cast the string binding to double — non-numeric
     bindings are ignored, SPARQL's silent-error aggregation.
-    ``having``: post-aggregation filters in the same ``(lhs, op,
-    rhs)`` shape as ``filters``, where lhs names a group key or an
-    aggregate ALIAS (Catalyst evaluates them after the aggregate;
-    numeric rhs compares numerically — aggregate outputs are already
-    numeric, so the try_cast is a no-op there).
+    ``having``: post-aggregation filters, boolean nodes of the same
+    expression language as ``filters`` (``_compile_expr``) over the
+    group keys and aggregate ALIASES (Catalyst evaluates them after the
+    aggregate; a number operand compares numerically — aggregate
+    outputs are already numeric, so the try_cast is a no-op there).
     ``bgp_kwargs`` pass to ``bgp_query`` (filters, optional, ...);
     ``select``/``distinct`` are owned by the aggregation."""
     for kw in ("select", "distinct"):
@@ -1274,7 +1209,7 @@ def bgp_aggregate(
     out = matches.groupBy(*keys).agg(*cols)
     out_names = frozenset(keys) | {a[2].lstrip("?") for a in aggs}
     for flt in having or []:
-        out = out.where(_compile_filter(out_names, flt))
+        out = out.where(_compile_expr(out_names, flt, boolean=True))
     return out
 
 

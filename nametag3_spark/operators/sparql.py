@@ -12,18 +12,17 @@ the same Catalyst plans the compiler already plan-guards:
     DESCRIBE entity
     SELECT [DISTINCT] (*|?var...|(FUNC([DISTINCT] ?v|*) AS ?alias)...
                        |(expr AS ?alias)...)
-        WHERE { ... } [GROUP BY ?v...] [HAVING (?alias op val)...]
-        [ORDER BY (?v|expr|ASC(?v|expr)|DESC(?v|expr))...]
-        [LIMIT n] [OFFSET n] — expr is the BIND expression grammar
-        (e.g. ORDER BY DESC(STRLEN(?x)) ?x)
+        WHERE { ... } [GROUP BY ?v...] [HAVING (expr)...]
+        [ORDER BY (?v|(expr)|CALL(...)|ASC(expr)|DESC(expr))...]
+        [LIMIT n] [OFFSET n] — expr is the one expression grammar
+        below (e.g. HAVING (?n >= 15), ORDER BY DESC(STRLEN(?x)) ?x)
       aggregates: COUNT/SUM/AVG/MIN/MAX/SAMPLE/GROUP_CONCAT (SAMPLE
       = deterministic min; GROUP_CONCAT = sorted elements joined with
       "," or GROUP_CONCAT(?v, 'sep')); plain selected vars must be
       GROUP BY keys; SUM/AVG try_cast string bindings to double
       (non-numeric ignored — SPARQL's silent aggregation errors);
-      (expr AS ?alias) projection expressions use the BIND grammar,
-      evaluate at group end (SPARQL Extend) and cannot mix with
-      aggregates in one SELECT
+      (expr AS ?alias) projection expressions evaluate at group end
+      (SPARQL Extend) and cannot mix with aggregates in one SELECT
     ASK [WHERE] { ... }
     CONSTRUCT { template } WHERE { ... }
 
@@ -48,8 +47,10 @@ Inside ``WHERE { }``:
                                  groups with plain steps:
                                  ``(a|b)/c``, ``a/(b|c)+``; negated
                                  property sets ``!p`` / ``!(a|b)``
-                                 (no closure/sequence tail); nested
-                                 groups raise)
+                                 (no closure/sequence tail); an
+                                 alternation branch that is a group of
+                                 names flattens: ``(a|(b|c))`` is
+                                 ``a|b|c``)
     OPTIONAL { ... }             left-join block (triple patterns,
                                  plus inner FILTER expressions scoped
                                  to the left join per SPARQL — a
@@ -70,45 +71,13 @@ Inside ``WHERE { }``:
                                  independently, so an outer-variable
                                  filter would match nothing — raises
                                  loudly instead)
-    FILTER (?x > 3)              comparison filter (= == != < <= > >=;
-                                 unquoted numeric rhs → numeric
-                                 compare); also FILTER (?x != ?y);
-                                 connectives ! && || compose atoms
-                                 with SPARQL precedence (! tightest,
-                                 && over ||, parens group; whitespace
-                                 around && and || required) — Spark's
-                                 three-valued NULL logic reproduces
-                                 SPARQL's error-propagation table
-                                 (error||true=true, error&&x=error)
-    FILTER CONTAINS(?x, "s")     string predicates (CONTAINS,
-                                 STRSTARTS, STRENDS, REGEX — with an
-                                 optional flags argument, e.g.
-                                 REGEX(?x, 'ab', 'i'), folded into
-                                 the pattern as a (?i) inline group)
-    FILTER (?x IN ('a', 'b'))    inline literal membership (one In
-                                 predicate, pushed down; values
-                                 compare as stored strings); also
-                                 ?x NOT IN (...)
-    FILTER BOUND(?v)             matched-OPTIONAL test; !BOUND(?v)
-                                 keeps the UNmatched rows (the
-                                 absent-fact negation idiom; parens
-                                 optional)
-    BIND (expr AS ?v)            computed binding; expr: ?vars,
-                                 literals, numbers, CONCAT(...),
-                                 COALESCE(a, b, ...) (first non-NULL
-                                 — the OPTIONAL-default idiom),
-                                 IF(cond, then, else) (cond is any
-                                 FILTER boolean expression; NULL/error
-                                 takes else), UCASE/LCASE/STRLEN/
-                                 STR(x), SUBSTR(?x, start[, len])
-                                 (1-based), REPLACE(?x, pat, rep)
-                                 (regex), ABS/ROUND/FLOOR/CEIL(x)
-                                 (numeric over double try_casts; ROUND
-                                 half-up like SPARQL),
-                                 STRBEFORE/STRAFTER(?x, 'sep') ('' on
-                                 no match, per spec), and binary
-                                 + - * / over double try_casts
-                                 (whitespace around operators)
+    FILTER (expr)                a boolean expression; also a bare
+                                 builtin call (FILTER CONTAINS(?x, 's'),
+                                 FILTER BOUND(?v)) or FILTER !expr; a
+                                 bare comparison (FILTER ?x = 1) raises
+    BIND (expr AS ?v)            computed binding (a boolean expr
+                                 binds a boolean, arithmetic a double)
+
     { A } UNION { B }            bag union of plain-triple branches,
                                  one chain per group; it compiles to
                                  one binding-set leg over every
@@ -150,6 +119,31 @@ Inside ``WHERE { }``:
                                  (multi-hop closures would mix
                                  graphs)
 
+Expressions — one grammar for FILTER, HAVING, BIND, (expr AS ?v),
+ORDER BY keys and IF conditions, parsed into prefix ``(op, *args)``
+nodes over ``?var``, string and number leaves and compiled by
+``bgp._compile_expr``. Precedence, loosest first: ``||``, ``&&``, one
+relational operator (``= == != < <= > >=``, ``IN (lit ...)``, ``NOT IN
+(lit ...)``; IN values compare as stored strings), ``+ -``, ``* /``,
+unary ``!``, then a primary: ``(expr)``, a builtin call, a ?var, a
+quoted literal, a number or a bare word (a literal; one holding ``?``
+raises — there is no unary minus). Operators need surrounding
+whitespace. A comparison is numeric (both sides double
+try_casts; a non-numeric value drops the row) when either side is a
+number or a numeric expression (arithmetic, STRLEN, ABS, ROUND, FLOOR,
+CEIL); otherwise it compares strings. Spark's three-valued NULL logic
+reproduces SPARQL's error-propagation table (error||true=true,
+error&&x=error). Builtins: BOUND(?v) (matched-OPTIONAL test; !BOUND
+keeps the unmatched rows, the absent-fact idiom), CONTAINS, STRSTARTS,
+STRENDS, REGEX(?x, pat[, flags]) (flags fold into the pattern as a
+(?i)-style inline group), CONCAT, COALESCE (first non-NULL — the
+OPTIONAL-default idiom), IF(cond, then, else) (a NULL/error condition
+takes else), UCASE/LCASE/STRLEN/STR, SUBSTR(?x, start[, len])
+(1-based), REPLACE(?x, pat, rep) (regex), ABS/ROUND/FLOOR/CEIL (double
+try_casts; ROUND half-up like SPARQL), STRBEFORE/STRAFTER(?x, 'sep')
+('' on no match, per spec). Arithmetic runs over double try_casts; a
+zero divisor is an error (unbound), not an exception.
+
 Every nested group — each GRAPH block, the UNION chain, each subquery
 and each multi-var VALUES table — compiles to one binding-set leg in
 ``bgp_query(extra_legs=...)``; ``_common_kwargs`` is the one recursive
@@ -159,9 +153,10 @@ Not covered (use the programmatic API): nested non-subquery groups,
 nested GRAPH blocks, subqueries inside a GRAPH **?variable** block
 (a literal-graph block scopes its subqueries fine; a graph variable
 would need per-graph re-evaluation — the parser accepts it and the
-compiler raises), nested path groups (``(a|(b|c))``; quoted or not,
-they raise, as does an unmatched paren), and a possibly-unbound column
-of a nested group whose NAME something else in the group also binds: a
+compiler raises), path groups nested past one alternation branch
+(``(a|(b|(c|d)))``; quoted or not, they raise, as does an unmatched
+paren), and a possibly-unbound column of a nested group whose NAME
+something else in the group also binds: a
 UNION branch-private variable, a variable only a GRAPH block's or a
 subquery's OPTIONAL binds (at any depth of nesting — the set comes up
 with each leg — unless a pattern, a VALUES list or another leg always
@@ -174,6 +169,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from nametag3_spark.operators.bgp import _COMPARE, _EXPR_OPS, _is_var
 from nametag3_spark.session import local_frame
 
 
@@ -255,6 +251,11 @@ def _untag(tok: str) -> str:
 def _is_quoted(tok: str) -> bool:
     return tok.startswith("\x00")
 
+
+# the builtin call names: the expression operators spelled as words
+_CALLS = frozenset(op for op in _EXPR_OPS if op.isalpha()) - {
+    "and", "or", "not", "in",
+}
 
 _AGG_FNS = (
     "COUNT", "SUM", "AVG", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT",
@@ -585,7 +586,7 @@ class _Parser:
                     # disambiguate by lookahead: '( FUNC (' with an
                     # aggregate FUNC is an aggregate item, anything
                     # else is a projection expression '( expr AS ?a )'
-                    # — the BIND grammar verbatim
+                    # — the BIND clause verbatim
                     nxt = (
                         self.toks[self.pos + 1]
                         if self.pos + 1 < len(self.toks)
@@ -709,9 +710,10 @@ class _Parser:
         return (func, var, alias[1:])
 
     def modifiers(self) -> tuple[list[tuple[str, bool]], int | None, int | None]:
-        """Solution modifiers after the WHERE group: ORDER BY
-        (``?v`` | ``ASC(?v)`` | ``DESC(?v)``)..., LIMIT n, OFFSET n —
-        LIMIT/OFFSET accepted in either order."""
+        """Solution modifiers after the WHERE group: ORDER BY keys
+        (``?v``, a bracketed expression or builtin call, ``ASC(expr)``,
+        ``DESC(expr)``)..., LIMIT n, OFFSET n — LIMIT/OFFSET accepted
+        in either order."""
         order: list[tuple[str, bool]] = []
         limit: int | None = None
         offset: int | None = None
@@ -726,51 +728,34 @@ class _Parser:
                 raise SparqlSyntaxError(f"{what} must be non-negative")
             return v
 
-        _EXPR_LEADS = (
-            "CONCAT", "COALESCE", "UCASE", "LCASE", "STRLEN", "STR",
-            "SUBSTR", "REPLACE", "IF",
-        )
-
-        def _order_key(self=self):
-            """A sort key: a plain ``?var`` keeps the (name, asc) spec
-            shape; an expression (``STRLEN(?x)``, …) parses through
-            the BIND expression grammar into ``(("expr", node), asc)``."""
-            tok = self.peek()
-            if (
-                tok is not None
-                and not _is_quoted(tok)
-                and tok.startswith("?")
-                and len(tok) > 1
-            ):
-                return self.next()[1:]
-            return ("expr", self.expr())
-
         while True:
             if self.kw("ORDER"):
                 self.expect("BY")
                 saw = False
                 while True:
+                    # a key: ASC(expr) / DESC(expr), or a bare ?var,
+                    # bracketed expression or builtin call (ascending)
                     tok = self.peek()
                     if tok is None or _is_quoted(tok):
                         break
                     if tok.upper() in ("ASC", "DESC"):
                         asc = self.next().upper() == "ASC"
                         self.expect("(")
-                        key = _order_key()
+                        key = self.expr()
                         self.expect(")")
-                        order.append(
-                            (key if isinstance(key, tuple) else key.lstrip("?"),
-                             asc)
-                        )
-                        saw = True
-                    elif tok.startswith("?"):
-                        order.append((self.next()[1:], True))
-                        saw = True
-                    elif tok.upper() in _EXPR_LEADS:
-                        order.append((("expr", self.expr()), True))
-                        saw = True
+                    elif tok.startswith("?") or tok == "(" or (
+                        tok.lower() in _CALLS
+                    ):
+                        asc, key = True, self._primary()
                     else:
                         break
+                    # a plain ?var keeps the (name, asc) spec shape
+                    order.append((
+                        key[1:] if isinstance(key, str) and key.startswith("?")
+                        else ("expr", key),
+                        asc,
+                    ))
+                    saw = True
                 if not saw:
                     raise SparqlSyntaxError("ORDER BY needs at least one ?var")
             elif self.kw("LIMIT"):
@@ -782,8 +767,7 @@ class _Parser:
 
     def bind_clause(self) -> tuple:
         """``BIND ( expr AS ?alias )`` → an engine ``(expr, alias)``
-        pair. Expression terms need whitespace around arithmetic
-        operators (``?x + 1``, not ``?x+1``)."""
+        pair (``expr`` is the one expression grammar)."""
         self.expect("(")
         e = self.expr()
         self.expect("AS")
@@ -793,46 +777,110 @@ class _Parser:
         self.expect(")")
         return (e, alias[1:])
 
-    def expr(self):
-        """A BIND expression: term [op term] with op in + - * /."""
-        left = self.expr_term()
+    def _op(self, *ops: str) -> str | None:
+        """Consume and return the next token if it is one of the
+        unquoted operators ``ops``."""
         tok = self.peek()
-        if tok is not None and not _is_quoted(tok) and tok in ("+", "-", "*", "/"):
-            op = self.next()
-            return (op, left, self.expr_term())
-        return left
+        if tok is not None and not _is_quoted(tok) and tok in ops:
+            return self.next()
+        return None
 
-    def expr_term(self):
+    def expr(self):
+        """One expression (SPARQL 1.1 §17) → a prefix ``(op, *args)``
+        node over ``?var``, string and number leaves: FILTER, HAVING,
+        BIND, ``(expr AS ?v)``, ORDER BY keys and IF conditions all
+        parse here. Precedence, loosest first: ``||``, ``&&``, one
+        relational ``= == != < <= > >= IN NOT IN``, ``+ -``, ``* /``,
+        unary ``!``, then a primary (a bracketed expression, a builtin
+        call or a term). Operators need surrounding whitespace."""
+        return self._n_ary("or", "||", self._and)
+
+    def _n_ary(self, name: str, tok: str, operand):
+        parts = [operand()]
+        while self._op(tok):
+            parts.append(operand())
+        return parts[0] if len(parts) == 1 else (name, *parts)
+
+    def _and(self):
+        return self._n_ary("and", "&&", self._relational)
+
+    def _relational(self):
+        left = self._additive()
+        op = self._op(*_COMPARE)
+        if op:
+            return (op, left, self._additive())
+        negate = self.kw("NOT")
+        if not self.kw("IN"):
+            if negate:
+                raise SparqlSyntaxError("expected IN after NOT")
+            return left
+        self.expect("(")
+        lits: list[str] = []
+        while self.peek() is not None and self.peek() != ")":
+            lits.append(_untag(self.next()))  # numerics stay strings
+        self.expect(")")
+        if not lits:
+            raise SparqlSyntaxError("empty IN list")
+        node = ("in", left, tuple(lits))
+        return ("not", node) if negate else node
+
+    def _additive(self):
+        node = self._multiplicative()
+        while op := self._op("+", "-"):
+            node = (op, node, self._multiplicative())
+        return node
+
+    def _multiplicative(self):
+        node = self._unary()
+        while op := self._op("*", "/"):
+            node = (op, node, self._unary())
+        return node
+
+    def _unary(self):
+        if self._op("!"):
+            return ("not", self._unary())
+        return self._primary()
+
+    def _primary(self):
         tok = self.next()
         if _is_quoted(tok):
             return _untag(tok)
         if tok == "(":
-            e = self.expr()
+            node = self.expr()
             self.expect(")")
-            return e
-        up = tok.upper()
-        if up == "IF":
-            # IF(cond, then, else): the condition is a FILTER boolean
-            # expression (connectives/BOUND/comparisons all work)
-            self.expect("(")
-            cond = self._bool_or()
-            then_e = self.expr()
-            else_e = self.expr()
-            self.expect(")")
-            return ("if", cond, then_e, else_e)
-        if up in ("CONCAT", "COALESCE", "UCASE", "LCASE", "STRLEN",
-          "STR", "SUBSTR", "REPLACE", "ABS", "ROUND", "FLOOR", "CEIL",
-          "STRBEFORE", "STRAFTER"):
-            self.expect("(")
+            return node
+        name = tok.lower()
+        if name in _CALLS and self.peek() == "(":
+            self.next()
             args = []
             while self.peek() != ")":
                 if self.peek() is None:
                     raise SparqlSyntaxError("unterminated expression")
                 args.append(self.expr())
-            self.next()  # consume ')'
-            return (up.lower(), *args)
+            self.next()  # ')'
+            if name == "bound" and (len(args) != 1 or not _is_var(args[0])):
+                raise SparqlSyntaxError(f"BOUND needs a ?var, got {args!r}")
+            if name == "regex" and len(args) == 3:
+                # flags fold into a literal pattern as a Java inline group
+                pat, flags = args[1], args.pop()
+                if not (isinstance(flags, str) and set(flags or "-") <= set("ismx")):
+                    raise SparqlSyntaxError(f"unsupported REGEX flags: {flags!r}")
+                if not isinstance(pat, str) or _is_var(pat):
+                    raise SparqlSyntaxError(
+                        f"REGEX flags need a literal pattern, got {pat!r}"
+                    )
+                args[1] = f"(?{flags}){pat}"
+            return (name, *args)
+        if tok in ("{", "}", ".", ")"):
+            raise SparqlSyntaxError(f"expected an expression, got {tok!r}")
         if tok.startswith("?"):
             return tok
+        if "?" in tok:
+            # e.g. -?a: read as a literal it would silently match nothing
+            raise SparqlSyntaxError(
+                f"unsupported term {tok!r} (no unary minus: write 0 - ?a; "
+                "quote a literal holding '?')"
+            )
         try:
             return int(tok)
         except ValueError:
@@ -841,131 +889,20 @@ class _Parser:
             except ValueError:
                 return tok  # plain unquoted literal
 
-    def filter_expr(self) -> tuple:
-        """FILTER constraint → an engine filter node: an atom
-        ``(lhs, op, rhs)`` triple or a compound ``("and"|"or"|"not",
-        ...)`` tree. SPARQL shape: a bracketted boolean expression —
-        ``FILTER (?x > 3 && (CONTAINS(?n, 'a') || !BOUND(?w)))`` —
-        or a bare builtin call ``FILTER CONTAINS(?x, 'lit')`` /
-        ``FILTER BOUND(?v)`` / ``FILTER !BOUND(?v)``. Connectives
-        ``!  &&  ||`` follow SPARQL precedence (! binds tightest) and
-        need surrounding whitespace, like BIND arithmetic. Unquoted
-        numeric rhs tokens compare numerically."""
+    def filter_expr(self):
+        """A FILTER / HAVING constraint: SPARQL's bracketed expression
+        or builtin call — ``FILTER (?x > 3 && !BOUND(?w))``,
+        ``FILTER CONTAINS(?x, 'lit')`` — or a leading ``!``. A bare
+        comparison (``FILTER ?x = bob``) raises."""
         tok = self.peek()
-        if tok == "(":
-            self.next()
-            node = self._bool_or()
-            self.expect(")")
-            return node
-        if tok == "!":
-            return self._bool_unary()
-        # a bare (unbracketted) constraint must be a builtin call —
-        # SPARQL's FILTER grammar; plain comparisons need parens
-        if tok is None or _is_quoted(tok) or tok.upper() not in (
-            "BOUND", "CONTAINS", "STRSTARTS", "STRENDS", "REGEX",
+        if tok is None or _is_quoted(tok) or not (
+            tok in ("(", "!") or tok.lower() in _CALLS
         ):
             raise SparqlSyntaxError(
-                "FILTER needs (...), BOUND(...), or "
-                "CONTAINS/STRSTARTS/STRENDS/REGEX(...)"
+                "FILTER needs (...), a builtin call such as BOUND(...) or "
+                f"CONTAINS(...), or !...; got {tok!r}"
             )
-        return self._filter_atom()
-
-    def _bool_or(self):
-        parts = [self._bool_and()]
-        while self.peek() == "||":
-            self.next()
-            parts.append(self._bool_and())
-        return parts[0] if len(parts) == 1 else ("or", *parts)
-
-    def _bool_and(self):
-        parts = [self._bool_unary()]
-        while self.peek() == "&&":
-            self.next()
-            parts.append(self._bool_unary())
-        return parts[0] if len(parts) == 1 else ("and", *parts)
-
-    def _bool_unary(self):
-        if self.peek() == "!":
-            self.next()
-            inner = self._bool_unary()
-            if (
-                isinstance(inner, tuple)
-                and len(inner) == 3
-                and inner[1] == "bound"
-            ):
-                # !BOUND folds into the atom's dedicated engine shape
-                return (inner[0], "bound", not inner[2])
-            return ("not", inner)
-        if self.peek() == "(":
-            self.next()
-            node = self._bool_or()
-            self.expect(")")
-            return node
-        return self._filter_atom()
-
-    def _filter_atom(self) -> tuple:
-        """One comparison or builtin call → an ``(lhs, op, rhs)``
-        triple."""
-        tok = self.peek()
-        if tok is not None and not _is_quoted(tok) and tok.upper() == "BOUND":
-            self.next()
-            self.expect("(")
-            var = _untag(self.next())
-            if not var.startswith("?") or len(var) < 2:
-                raise SparqlSyntaxError(f"BOUND needs a ?var, got {var!r}")
-            self.expect(")")
-            return (var, "bound", True)
-        if (
-            tok is not None
-            and not _is_quoted(tok)
-            and tok.upper() in ("CONTAINS", "STRSTARTS", "STRENDS", "REGEX")
-        ):
-            fn = self.next().lower()
-            self.expect("(")
-            lhs = _untag(self.next())
-            rhs = _untag(self.next())
-            if fn == "regex" and self.peek() != ")":
-                flags = _untag(self.next())
-                if not flags or not set(flags) <= set("ismx"):
-                    raise SparqlSyntaxError(
-                        f"unsupported REGEX flags: {flags!r}"
-                    )
-                rhs = f"(?{flags}){rhs}"  # Java inline flag group
-            self.expect(")")
-            return (lhs, fn, rhs)
-        if tok is None or not _untag(tok).startswith("?"):
-            raise SparqlSyntaxError(
-                "FILTER needs (...), BOUND(...), or "
-                "CONTAINS/STRSTARTS/REGEX(...)"
-            )
-        lhs = _untag(self.next())
-        op = self.next()
-        if not _is_quoted(op) and op.upper() in ("IN", "NOT"):
-            negate = op.upper() == "NOT"
-            if negate and not self.kw("IN"):
-                raise SparqlSyntaxError("expected IN after NOT in FILTER")
-            self.expect("(")
-            lits: list[str] = []
-            while self.peek() is not None and self.peek() != ")":
-                lits.append(_untag(self.next()))
-            self.expect(")")
-            if not lits:
-                raise SparqlSyntaxError("empty IN list")
-            atom = (lhs, "in", tuple(lits))
-            return ("not", atom) if negate else atom
-        if _is_quoted(op) or op not in ("=", "==", "!=", "<", "<=", ">", ">="):
-            raise SparqlSyntaxError(f"unsupported FILTER operator: {op!r}")
-        rhs_tok = self.next()
-        rhs: object = _untag(rhs_tok)
-        if not _is_quoted(rhs_tok) and not rhs_tok.startswith("?"):
-            try:
-                rhs = int(rhs_tok)
-            except ValueError:
-                try:
-                    rhs = float(rhs_tok)
-                except ValueError:
-                    pass
-        return (lhs, op, rhs)
+        return self._unary()
 
 
 def parse(query: str) -> dict:

@@ -5,6 +5,8 @@ repeated-variable equality, and a pure-Python BFS differential."""
 
 from __future__ import annotations
 
+import operator
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -933,25 +935,23 @@ def test_bgp_filter_expressions(spark):
         ],
         "subj string, pred string, obj string",
     )
-    num = bgp_query(tri, [("?x", "age", "?a")], filters=[("?a", ">", 10)])
+    num = bgp_query(tri, [("?x", "age", "?a")], filters=[(">", "?a", 10)])
     assert [tuple(r) for r in num.collect()] == [("30", "a")]
     vv = bgp_query(
         tri,
         [("?x", "age", "?a"), ("?x", "name", "?m")],
-        filters=[("?m", "!=", "Bob")],
+        filters=[("!=", "?m", "Bob")],
         select=["x"],
     )
     assert [tuple(r) for r in vv.collect()] == [("a",)]
-    ss = bgp_query(tri, [("?x", "name", "?m")], filters=[("?m", "strstarts", "Al")])
+    ss = bgp_query(tri, [("?x", "name", "?m")], filters=[("strstarts", "?m", "Al")])
     assert [tuple(r) for r in ss.collect()] == [("Alice", "a")]
-    rx = bgp_query(tri, [("?x", "name", "?m")], filters=[("?m", "regex", "^B.b$")])
+    rx = bgp_query(tri, [("?x", "name", "?m")], filters=[("regex", "?m", "^B.b$")])
     assert [tuple(r) for r in rx.collect()] == [("Bob", "b")]
     with pytest.raises(ValueError, match="not bound"):
-        bgp_query(tri, [("?x", "age", "?a")], filters=[("?zz", ">", 1)])
+        bgp_query(tri, [("?x", "age", "?a")], filters=[(">", "?zz", 1)])
     with pytest.raises(ValueError, match="operator"):
-        bgp_query(tri, [("?x", "age", "?a")], filters=[("?a", "~", 1)])
-    with pytest.raises(ValueError, match="lhs"):
-        bgp_query(tri, [("?x", "age", "?a")], filters=[("age", ">", 1)])
+        bgp_query(tri, [("?x", "age", "?a")], filters=[("~", "?a", 1)])
 
 
 def test_bgp_aggregate(spark):
@@ -1096,7 +1096,7 @@ def test_bgp_bind_expressions(spark):
         tri,
         [("?x", "age", "?a")],
         binds=[(("+", "?a", 1), "next")],
-        filters=[("?next", ">", 10)],
+        filters=[(">", "?next", 10)],
         select=["x", "next"],
     )
     assert [tuple(r) for r in out2.collect()] == [("a", 31.0)]
@@ -1106,19 +1106,114 @@ def test_bgp_bind_expressions(spark):
         bgp_query(tri, [("?x", "age", "?a")], binds=[(("ucase", "?zz"), "u")])
 
 
+# generated FILTER trees over two variable slots (?0, ?1 — mapped onto
+# the pattern's variables): numeric comparisons over + - * / and STRLEN,
+# string comparisons, composed with && || !
+_SLOT = st.sampled_from(["?0", "?1"])
+_NUM_EXPR = st.recursive(
+    st.one_of(
+        _SLOT,
+        st.sampled_from([0, 2, 7.5]),
+        st.builds(lambda v: ("strlen", v), _SLOT),
+    ),
+    lambda kids: st.tuples(st.sampled_from(["+", "-", "*", "/"]), kids, kids),
+    max_leaves=4,
+)
+_CMP_OP = st.sampled_from(["<", ">", "=", "!="])
+_FILTER_TREE = st.recursive(
+    st.one_of(
+        st.tuples(_CMP_OP, _NUM_EXPR, _NUM_EXPR),
+        st.tuples(_CMP_OP, _SLOT, st.one_of(_SLOT, st.sampled_from(["a", "b"]))),
+    ),
+    lambda kids: st.one_of(
+        st.tuples(st.just("not"), kids),
+        st.builds(
+            lambda op, xs: (op, *xs),
+            st.sampled_from(["and", "or"]),
+            st.lists(kids, min_size=2, max_size=3),
+        ),
+    ),
+    max_leaves=4,
+)
+_NUMERIC_OPS = ("+", "-", "*", "/", "strlen")
+
+
+def _py_num(v):
+    """A double try_cast: None for a non-numeric value."""
+    try:
+        return float(v)
+    except (TypeError, ValueError):
+        return None
+
+
+def _py_eval(e, binding):
+    """Reference evaluation of an expression node over one binding, with
+    None for an error (SPARQL's type error; Spark's NULL)."""
+    if isinstance(e, str):
+        return binding[e[1:]] if e.startswith("?") else e
+    if not isinstance(e, tuple):
+        return e
+    op, *args = e
+    vals = [_py_eval(a, binding) for a in args]
+    if op == "not":
+        return None if vals[0] is None else not vals[0]
+    if op in ("and", "or"):
+        decides = op == "or"  # or: any True decides; and: any False
+        if decides in vals:
+            return decides
+        return None if None in vals else not decides
+    if op == "strlen":
+        return len(vals[0])
+    if op in ("+", "-", "*", "/"):
+        x, y = map(_py_num, vals)
+        if x is None or y is None or (op == "/" and y == 0):
+            return None
+        return {
+            "+": operator.add,
+            "-": operator.sub,
+            "*": operator.mul,
+            "/": operator.truediv,
+        }[op](x, y)
+    # a comparison: numeric when either operand is a number or a
+    # numeric node, else a string comparison (binary collation)
+    if any(
+        not isinstance(a, str) and (not isinstance(a, tuple) or a[0] in _NUMERIC_OPS)
+        for a in args
+    ):
+        vals = list(map(_py_num, vals))
+    x, y = vals
+    if x is None or y is None:
+        return None
+    return {"<": x < y, ">": x > y, "=": x == y, "!=": x != y}[op]
+
+
+def _fill_slots(e, vars_):
+    if isinstance(e, tuple):
+        return (e[0], *(_fill_slots(a, vars_) for a in e[1:]))
+    if isinstance(e, str) and e.startswith("?"):
+        return "?" + vars_[int(e[1:]) % len(vars_)]
+    return e
+
+
 @given(
-    triples=st.lists(_TRIPLE, min_size=1, max_size=8),
+    triples=st.lists(
+        st.tuples(_ENT, _PRED, st.sampled_from(["a", "b", "c", "7", "12", "0.5"])),
+        min_size=1,
+        max_size=8,
+    ),
     patterns=st.lists(_PATTERN, min_size=1, max_size=2),
     minus_pat=_PATTERN,
-    flt=st.tuples(
-        st.sampled_from(["<", ">", "=", "!="]), st.sampled_from(["a", "b", "c"])
-    ),
+    tree=_FILTER_TREE,
 )
-@settings(max_examples=10, deadline=None)
-def test_bgp_minus_filter_differential(spark, triples, patterns, minus_pat, flt):
-    """MINUS + FILTER vs an independent Python evaluation: MINUS drops
-    bindings compatible on the shared vars (no-op when disjoint);
-    string FILTER comparisons follow binary collation on both sides."""
+@settings(max_examples=15, deadline=None)
+def test_bgp_minus_filter_differential(spark, triples, patterns, minus_pat, tree):
+    """MINUS + a generated FILTER tree vs an independent Python
+    evaluation: MINUS drops bindings compatible on the shared vars
+    (no-op when disjoint); the FILTER keeps a row only when its tree is
+    true under SPARQL's three-valued logic (a non-numeric operand of
+    arithmetic or a numeric comparison, or a zero divisor, is an
+    error); string comparisons follow binary collation on both
+    sides."""
     from collections import Counter
 
     from hypothesis import assume
@@ -1132,8 +1227,7 @@ def test_bgp_minus_filter_differential(spark, triples, patterns, minus_pat, flt)
     df = spark.createDataFrame(tset, "subj string, pred string, obj string")
 
     vars_ = sorted({t[1:] for p in patterns for t in p if t.startswith("?")})
-    op, rhs = flt
-    fvar = vars_[0]
+    flt = _fill_slots(tree, vars_)
 
     base = _py_bgp(set(tset), patterns)
     mvars = {t[1:] for t in minus_pat if t.startswith("?")}
@@ -1144,14 +1238,8 @@ def test_bgp_minus_filter_differential(spark, triples, patterns, minus_pat, flt)
             for b in _py_bgp(set(tset), [minus_pat])
         }
         base = [b for b in base if tuple(b[v] for v in shared) not in mproj]
-    pyop = {
-        "<": lambda x: x < rhs,
-        ">": lambda x: x > rhs,
-        "=": lambda x: x == rhs,
-        "!=": lambda x: x != rhs,
-    }[op]
     want = Counter(
-        tuple(b[v] for v in vars_) for b in base if pyop(b[fvar])
+        tuple(b[v] for v in vars_) for b in base if _py_eval(flt, b) is True
     )
 
     got = Counter(
@@ -1160,7 +1248,7 @@ def test_bgp_minus_filter_differential(spark, triples, patterns, minus_pat, flt)
             df,
             list(patterns),
             minus=[[minus_pat]],
-            filters=[(f"?{fvar}", op, rhs)],
+            filters=[flt],
             select=vars_,
         ).collect()
     )
@@ -1199,6 +1287,7 @@ def test_bgp_stats_driven_join_order(spark):
             ("?x", "?p", "?y"),
             ("?x", "(a|b)+", "?y"),
             ("?x", "missing", "?y"),
+            ("?x", "a|a", "?y"),
         ],
         {"common": 100, "a": 10, "b": 20},
     )
@@ -1206,6 +1295,7 @@ def test_bgp_stats_driven_join_order(spark):
     assert got[1] == pytest.approx(130.0)   # whole store
     assert got[2] == pytest.approx(62.0)    # (10.5+20.5) * 2 closure
     assert got[3] == pytest.approx(0.5)     # unknown pred ~ empty
+    assert got[4] == pytest.approx(10.5)    # a repeated name counts once
 
 
 def test_bgp_negated_property_set(spark):
@@ -1482,6 +1572,8 @@ _STEP_FORMS = {
     "(a|b)|q": (False, False, "", ("a", "b", "q"), None),
     "p|(a|b)": (False, False, "", ("p", "a", "b"), None),
     "(p|(a|b))": (False, False, "", ("p", "a", "b"), None),
+    # a repeated name counts once, in first-seen order
+    "(a|b)|a": (False, False, "", ("a", "b"), None),
     "((a)|(b))+": (False, False, "+", ("a", "b"), None),
     "p+": (False, False, "+", ("p",), None),
     "p*": (False, False, "*", ("p",), None),

@@ -506,6 +506,32 @@ def test_per_block_graph_filters_push_into_scans(spark, tmp_path):
     assert "EqualTo(subj,e1)" in p
 
 
+def test_expression_filters_keep_their_plans(spark, tmp_path):
+    """Through the one expression compiler, ``?x IN (…)`` is still one
+    In predicate pushed into the parquet scan, and ``!BOUND(?w)`` after
+    an OPTIONAL still plans an ``isnull`` filter over the left join."""
+    from nametag3_spark.operators.sparql import execute
+
+    path = str(tmp_path / "triples")
+    spark.createDataFrame(
+        [("s1", "p", "a"), ("s2", "p", "c"), ("a", "q", "w1")],
+        "subj string, pred string, obj string",
+    ).write.parquet(path)
+    tri = spark.read.parquet(path)
+    p = plan_of(
+        execute(tri, "SELECT ?s WHERE { ?s p ?x . FILTER (?x IN ('a', 'b')) }")
+    )
+    assert "In(obj, [a,b])" in p
+    p = plan_of(
+        execute(
+            tri,
+            "SELECT ?s WHERE { ?s p ?x . OPTIONAL { ?x q ?w } "
+            "FILTER (!BOUND(?w)) }",
+        )
+    )
+    assert "isnull(w" in p and "NOT isnotnull" not in p
+
+
 def test_bm25_plan_shape(spark):
     """BM25: query-term In-list filtered BEFORE any shuffle, the df
     table broadcast onto tf, global top-k as TakeOrderedAndProject —

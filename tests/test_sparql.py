@@ -157,17 +157,17 @@ def test_parse_filter_expressions_and_minus():
            }"""
     )
     assert s["filters"] == [
-        ("?a", ">=", 7.5),
-        ("?x", "!=", "?y"),
-        ("?n", "contains", "li ce"),
-        ("?n", "strstarts", "Al"),
+        (">=", "?a", 7.5),
+        ("!=", "?x", "?y"),
+        ("contains", "?n", "li ce"),
+        ("strstarts", "?n", "Al"),
     ]
     assert s["minus"] == [[("?x", "knows", "bob")]]
     # quoted numerics stay strings; unquoted ints stay ints
     s2 = parse("SELECT ?x WHERE { ?x age ?a . FILTER (?a = '7') }")
-    assert s2["filters"] == [("?a", "=", "7")]
+    assert s2["filters"] == [("=", "?a", "7")]
     s3 = parse("SELECT ?x WHERE { ?x age ?a . FILTER (?a < -3) }")
-    assert s3["filters"] == [("?a", "<", -3)]
+    assert s3["filters"] == [("<", "?a", -3)]
 
 
 def test_parse_union_and_modifiers():
@@ -218,7 +218,7 @@ def test_execute_extensions_match_programmatic(spark):
         tri,
         [("?x", "works_at", "?w")],
         select=["x", "w"],
-        filters=[("?w", "!=", "globex")],
+        filters=[("!=", "?w", "globex")],
         minus=[[("?x", "knows", "carol")]],
     )
     assert sorted(map(tuple, got.collect())) == sorted(
@@ -642,16 +642,16 @@ def test_parse_bound_and_optional_filters():
     assert s["optional"] == [
         {
             "patterns": [("?y", "works_at", "?w")],
-            "filters": [("?w", "!=", "globex")],
+            "filters": [("!=", "?w", "globex")],
         }
     ]
-    assert s["filters"] == [("?w", "bound", False), ("?x", "bound", True)]
+    assert s["filters"] == [("not", ("bound", "?w")), ("bound", "?x")]
     # a filter-free OPTIONAL keeps the back-compatible list shape
     s2 = parse("SELECT ?x WHERE { ?x knows ?y . OPTIONAL { ?y p ?z } }")
     assert s2["optional"] == [[("?y", "p", "?z")]]
-    # general negation is a compound node (only !BOUND folds inline)
+    # negation is a compound node
     s3 = parse("SELECT ?x WHERE { ?x p ?y . FILTER (!CONTAINS(?y, 'a')) }")
-    assert s3["filters"] == [("not", ("?y", "contains", "a"))]
+    assert s3["filters"] == [("not", ("contains", "?y", "a"))]
     with pytest.raises(SparqlSyntaxError, match="needs a \\?var"):
         parse("SELECT ?x WHERE { ?x p ?y . FILTER BOUND(lit) }")
 
@@ -710,7 +710,7 @@ def test_execute_bound_and_optional_filter(spark):
             optional=[
                 {
                     "patterns": [("?y", "works_at", "?w")],
-                    "filters": [("?q", "=", "acme")],
+                    "filters": [("=", "?q", "acme")],
                 }
             ],
         )
@@ -727,16 +727,74 @@ def test_parse_filter_connectives():
            }"""
     )
     assert s["filters"] == [
-        ("and", ("?a", ">", 3), ("?a", "<", 9)),
-        ("or", ("?n", "contains", "li"), ("?n", "strstarts", "Bo"),
-         ("?a", "=", 7)),
-        ("and", ("not", ("?a", "=", 5)), ("?w", "bound", False)),
+        ("and", (">", "?a", 3), ("<", "?a", 9)),
+        ("or", ("contains", "?n", "li"), ("strstarts", "?n", "Bo"),
+         ("=", "?a", 7)),
+        ("and", ("not", ("=", "?a", 5)), ("not", ("bound", "?w"))),
         # SPARQL precedence: && binds tighter than ||
-        ("or", ("?a", ">", 1), ("and", ("?a", "<", 0), ("?n", "=", "x"))),
+        ("or", (">", "?a", 1), ("and", ("<", "?a", 0), ("=", "?n", "x"))),
     ]
     # bare comparisons still need brackets (SPARQL's FILTER grammar)
     with pytest.raises(SparqlSyntaxError, match="FILTER needs"):
         parse("SELECT ?x WHERE { ?x p ?y . FILTER ?y = bob && ?y != sam }")
+    # a bare word holding '?' is no literal (it would match nothing)
+    with pytest.raises(SparqlSyntaxError, match="unary minus"):
+        parse("SELECT ?x WHERE { ?x p ?a . FILTER (-?a < 3) }")
+
+
+# one expression grammar: calls and literals on either side of a
+# comparison, arithmetic chains with precedence, boolean BINDs and IF
+# conditions over any expression — (query, expected rows by hand)
+_EXPRESSION_QUERIES = [
+    ("SELECT ?x ?y WHERE { ?x knows ?y . FILTER (STRLEN(?y) > 3) }",
+     {("alice", "carol"), ("bob", "carol"), ("dave", "erin")}),
+    ("SELECT ?x WHERE { ?x works_at ?y . FILTER (LCASE(?y) = 'acme') }",
+     {("bob",), ("carol",)}),
+    ('SELECT ?x WHERE { ?x works_at ?y . FILTER ("acme" = ?y) }',
+     {("bob",), ("carol",)}),
+    # 5 + 7 > 10 only for alice/carol (alice/bob, bob/carol, dave/erin
+    # sum to 10)
+    ("SELECT ?x ?y WHERE { ?x knows ?y . BIND (STRLEN(?x) AS ?a) "
+     "BIND (STRLEN(?y) + 2 AS ?b) FILTER (?a + ?b > 10) }",
+     {("alice", "carol")}),
+    ("SELECT ?x WHERE { ?x works_at ?y . FILTER CONTAINS(LCASE(?y), 'ac') }",
+     {("bob",), ("carol",)}),
+    # * binds tighter than +: bob 3 * 2 + 1 = 7, not 3 * (2 + 1)
+    ("SELECT DISTINCT ?x ?v WHERE { ?s knows ?x . BIND (STRLEN(?x) AS ?y) "
+     "BIND (?y * 2 + 1 AS ?v) }",
+     {("bob", 7.0), ("carol", 11.0), ("erin", 9.0)}),
+    ("SELECT DISTINCT ?x ?v WHERE { ?s knows ?x . BIND (STRLEN(?x) AS ?y) "
+     "BIND (?y + 1 + 2 AS ?v) }",
+     {("bob", 6.0), ("carol", 8.0), ("erin", 7.0)}),
+    ("SELECT DISTINCT ?x ?f WHERE { ?s knows ?x . BIND (STRLEN(?x) AS ?y) "
+     "BIND (?y > 3 AS ?f) }",
+     {("bob", False), ("carol", True), ("erin", True)}),
+    ("SELECT DISTINCT ?y ?f WHERE { ?x knows ?y . "
+     "BIND (IF(STRLEN(?y) > 3, 'long', 'short') AS ?f) }",
+     {("bob", "short"), ("carol", "long"), ("erin", "long")}),
+]
+
+
+@pytest.mark.parametrize("query,rows", _EXPRESSION_QUERIES)
+def test_one_expression_grammar(spark, query, rows):
+    from nametag3_spark.operators.sparql import execute
+
+    assert {tuple(r) for r in execute(_tri(spark), query).collect()} == rows
+
+
+def test_filter_and_having_need_boolean_nodes(spark):
+    """FILTER and HAVING raise on a node that is not boolean-valued."""
+    from nametag3_spark.operators.sparql import execute
+
+    tri = _tri(spark)
+    with pytest.raises(ValueError, match="boolean"):
+        execute(tri, "SELECT ?x WHERE { ?x knows ?y . FILTER (STRLEN(?y)) }")
+    with pytest.raises(ValueError, match="boolean"):
+        execute(
+            tri,
+            "SELECT ?x (COUNT(?y) AS ?n) WHERE { ?x knows ?y } "
+            "GROUP BY ?x HAVING (?n + 1)",
+        )
 
 
 def test_execute_filter_connectives(spark):
@@ -804,14 +862,14 @@ def test_parse_if_and_coalesce():
     )
     assert s["binds"] == [
         (("coalesce", "?w", "none"), "org"),
-        (("if", ("?w", "bound", True), "hired", "free"), "v"),
+        (("if", ("bound", "?w"), "hired", "free"), "v"),
     ]
     s2 = parse(
         "SELECT ?v WHERE { ?x age ?a . "
         "BIND (IF(?a > 3 && ?a < 9, 'mid', 'edge') AS ?v) }"
     )
     assert s2["binds"] == [
-        (("if", ("and", ("?a", ">", 3), ("?a", "<", 9)), "mid", "edge"),
+        (("if", ("and", (">", "?a", 3), ("<", "?a", 9)), "mid", "edge"),
          "v"),
     ]
 
@@ -848,10 +906,10 @@ def test_parse_in_and_strends():
            }"""
     )
     assert s["filters"] == [
-        ("?w", "in", ("acme", "globex", "7")),  # numerics stay strings
-        ("not", ("?x", "in", ("dave",))),
-        ("?w", "strends", "ex"),
-        ("or", ("?w", "strends", "me"), ("?w", "in", ("x",))),
+        ("in", "?w", ("acme", "globex", "7")),  # numerics stay strings
+        ("not", ("in", "?x", ("dave",))),
+        ("strends", "?w", "ex"),
+        ("or", ("strends", "?w", "me"), ("in", "?w", ("x",))),
     ]
     with pytest.raises(SparqlSyntaxError, match="empty IN"):
         parse("SELECT ?x WHERE { ?x p ?y . FILTER (?y IN ()) }")
@@ -889,7 +947,7 @@ def test_parse_regex_flags_substr_replace():
              BIND (REPLACE(?n, '[aeiou]', '_') AS ?v)
            }"""
     )
-    assert s["filters"] == [("?n", "regex", "(?i)ali")]
+    assert s["filters"] == [("regex", "?n", "(?i)ali")]
     assert s["binds"] == [
         (("substr", "?n", 1, 3), "pre"),
         (("replace", "?n", "[aeiou]", "_"), "v"),
@@ -1579,15 +1637,15 @@ def test_parse_filtered_witness_blocks():
     )
     assert s["not_exists"] == [{
         "patterns": [("?x", "works_at", "?w")],
-        "filters": [("?w", "=", "globex")],
+        "filters": [("=", "?w", "globex")],
     }]
     assert s["exists"] == [{
         "patterns": [("?x", "knows", "?z")],
-        "filters": [("?z", "!=", "erin")],
+        "filters": [("!=", "?z", "erin")],
     }]
     assert s["minus"] == [{
         "patterns": [("?x", "works_at", "?w2")],
-        "filters": [("?w2", "contains", "cme")],
+        "filters": [("contains", "?w2", "cme")],
     }]
     with pytest.raises(SparqlSyntaxError, match="empty MINUS group"):
         parse("SELECT ?x WHERE { ?x knows ?y . MINUS { FILTER (?y = 'a') } }")
